@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** Host 1-minute load average (-1.0 when unavailable): the hot-box
     * witness stamped into the bench header at start and end. */
@@ -17,19 +16,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val loadStart = loadavg1m
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionTuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      // UTC pin: q02/q13 timestamp formatting must not depend on host TZ
-      // (the DuckDB oracle compares naive timestamps)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // no-op on current MICROS-annotated testdata — see Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = SessionTuning.local(cpus)
     // builder-side iteration only (the driver never sets it): restrict
     // to a comma-separated key list, e.g. SPARK_GRAFT_BENCH_ONLY=q18,q22
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -44,8 +32,7 @@ object Bench {
     // generated from) keep the min-of-two discipline. The header
     // stamps `passes` so readers can tell the regimes apart —
     // bench_compare.py already refuses cross-producer comparisons.
-    val passes = sys.env.get("SPARK_GRAFT_BENCH_PASSES").map(_.toInt)
-      .getOrElse(if (producer == "driver") 1 else 2)
+    val passes = if (producer == "driver") 1 else 2
     val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (k, _) => only.forall(_.contains(k)) }
     // warmup at smoke scale: JIT + codegen caches, so timings below
@@ -60,8 +47,7 @@ object Bench {
     // cold totals ~10% above warm (676s vs 613s measured).
     // The header stamps `warmup` so regimes can't be silently mixed
     // (bench_compare already refuses cross-producer comparisons).
-    val doWarmup = producer != "driver" ||
-      sys.env.contains("SPARK_GRAFT_FORCE_WARMUP")
+    val doWarmup = producer != "driver"
     if (doWarmup) {
       val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
         "/root/testdata/sf0.001")
@@ -133,7 +119,7 @@ object Bench {
     val startedAt = java.time.Instant.now().toString
     val loadEnd = loadavg1m
     val line =
-      s"""{"metric":"total","unit":"sec","sha":"$sha","producer":"$producer","passes":$passes,"warmup":$doWarmup,"started_at":"$startedAt","load_start":$loadStart,"load_end":$loadEnd,"cpus":${scala.util.Try(cpus.toInt).getOrElse(-1)},"sf":"$sfDir","queries":$qs,"value":$total}"""
+      s"""{"metric":"total","unit":"sec","sha":"$sha","producer":"$producer","passes":$passes,"warmup":$doWarmup,"started_at":"$startedAt","load_start":$loadStart,"load_end":$loadEnd,"cpus":$cpus,"sf":"$sfDir","queries":$qs,"value":$total}"""
     // Durable record: the driver keeps only a bounded tail of stdout, so
     // a growing registry silently loses head-of-line per-query figures.
     // Persist the full record to the repo (committed per round) and print

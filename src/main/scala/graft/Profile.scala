@@ -2,7 +2,6 @@ package graft
 
 import scala.collection.mutable
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Builder-side measurement harness (optimization guide §1): run a
   * comma-separated key list (args(0)) against a data dir (args(1),
@@ -63,16 +62,8 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val keys = args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionTuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     Seq("spark.sql.adaptive.enabled",
       "spark.sql.adaptive.coalescePartitions.enabled",
       "spark.sql.adaptive.coalescePartitions.parallelismFirst",
@@ -108,12 +99,11 @@ object Profile {
         f"${acc.jobTimeMs / 1e3}%7.2f $gap%7.2f $gc%6.2f " +
         f"${acc.shufWrite / 1e6}%9.1f ${acc.shufRead / 1e6}%9.1f " +
         f"${acc.inputBytes / 1e6}%8.1f")
-      if (sys.env.contains("SPARK_GRAFT_PROFILE_STAGES"))
-        acc.stageAgg.toSeq.sortBy(-_._2._3).take(8).foreach {
-          case (sid, (name, n, t)) =>
-            println(f"    stage $sid%5d $n%5d tasks ${t / 1e3}%8.2f s  " +
-              name.take(90))
-        }
+      acc.stageAgg.toSeq.sortBy(-_._2._3).take(8).foreach {
+        case (sid, (name, n, t)) =>
+          println(f"    stage $sid%5d $n%5d tasks ${t / 1e3}%8.2f s  " +
+            name.take(90))
+      }
     }
     spark.stop()
   }

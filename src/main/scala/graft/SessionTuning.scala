@@ -2,8 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Scale-adaptive session tuning shared by the CLI mains (Bench,
-  * Verify, Profile, Plans) — optimization guide §2.2/§6.
+/** The one place a graft Spark session is configured: [[tuned]] holds
+  * every setting that changes results or plans, [[local]] builds the
+  * local session every main (Bench, Verify, Profile, Plans) and the
+  * test fixture run on — optimization guide §2.2/§6.
   *
   * `canChangeCachedPlanOutputPartitioning=true` lets AQE's byte-based
   * partition coalescing see through `persist()`ed plans — above all
@@ -29,9 +31,6 @@ import org.apache.spark.sql.SparkSession
   * once partitions are large — at cluster scale the two settings
   * agree. File-count-wise the cache flag alone already collapses the
   * KB-scale merge batches to single-partition writes.
-  *
-  * Env overrides keep the knobs parameterised per deployment; the
-  * defaults are what the committed bench figures measure.
   */
 object SessionTuning {
   /** Match the streaming checkpoint manager to the checkpoint
@@ -49,25 +48,53 @@ object SessionTuning {
     * join drain drops 13.1→8.2 s (summed task time 266→99 s) with no
     * other change. HDFS/object-store deployments should override per
     * environment (that is exactly why Spark exposes the class as
-    * config). */
-  /** The local-FS default; `SPARK_GRAFT_CKPT_MANAGER` overrides per
-    * deployment (exposed for CheckpointManagerSpec's override-matrix
-    * pin). */
+    * config).
+    *
+    * This is the local-FS default; `SPARK_GRAFT_CKPT_MANAGER` overrides
+    * it per deployment (exposed for CheckpointManagerSpec's
+    * override-matrix pin). */
   private[graft] val defaultCheckpointManager =
     "org.apache.spark.sql.execution.streaming.checkpointing." +
       "FileSystemBasedCheckpointFileManager"
 
-  def tuned(b: SparkSession.Builder): SparkSession.Builder = b
-    .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-      sys.env.getOrElse("SPARK_GRAFT_AQE_CACHED_REPARTITION", "true"))
-    .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY_BYTES", "64m"))
-    .config("spark.sql.streaming.checkpointFileManagerClass",
-      sys.env.getOrElse("SPARK_GRAFT_CKPT_MANAGER",
-        defaultCheckpointManager))
+  /** Every setting that changes results or plans, as [[tuned]] applies
+    * them. */
+  private[graft] val settings: Seq[(String, String)] = Seq(
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64m",
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      sys.env.getOrElse("SPARK_GRAFT_CKPT_MANAGER", defaultCheckpointManager),
+    // UTC pin: timestamp formatting must not depend on host TZ (the
+    // DuckDB oracle compares naive timestamps)
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.extensions" -> "graft.GraftExtensions",
+    // no-op on current MICROS-annotated testdata; lets the LongType
+    // branch of Tables.events engage if NANOS-annotated data comes back
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
   // deliberately NOT set: spark.sql.streaming.checkpoint.fileChecksum
   // .enabled stays at its stock default (true) — disabling it buys a
   // further ~25% on the stateful-join drains (e10 8.2→6.2 s measured)
   // but trades away 4.1's checkpoint-corruption detection; that is an
   // operator's call per deployment, not a bench default.
+
+  /** [[settings]] on `b`. Callers add the master, parallelism and
+    * anything deployment-specific. */
+  def tuned(b: SparkSession.Builder): SparkSession.Builder =
+    settings.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }
+
+  /** The [[tuned]] session on `local[cpus]` with `cpus` shuffle
+    * partitions, no UI and WARN logging. Its catalog warehouse is a
+    * scratch dir of this JVM, so managed tables never land in the
+    * working directory and two runs side by side never share one. */
+  def local(cpus: Int): SparkSession = {
+    val s = tuned(SparkSession.builder())
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.warehouse.dir",
+        graft.util.Scratch.fresh("graft-warehouse-"))
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 }

@@ -974,8 +974,8 @@ object Dedup {
   /** (id, bucket) rows of the hashed unigram+bigram feature stream —
     * the gram string (not a tuple) is md5-hashed so any engine
     * reproduces the bucket ids. Extra columns in `docs` pass through. */
-  private def dsirBuckets(docs: DataFrame, idCol: String,
-      textCol: String, nBuckets: Int): DataFrame =
+  private def dsirBuckets(docs: DataFrame, textCol: String,
+      nBuckets: Int): DataFrame =
     docs.withColumn("_toks", TextAnalysis.tokens(col(textCol)))
       // drop the text BEFORE the explode: carrying it through would
       // replicate every document body once per gram
@@ -999,7 +999,7 @@ object Dedup {
       : (DataFrame, DataFrame) = {
     val grams = dsirBuckets(
       reference.select(col(idCol), isTarget.as("_tgt"), col(textCol)),
-      idCol, textCol, nBuckets)
+      textCol, nBuckets)
     val bucketStats = grams
       .groupBy("bucket")
       .agg(count(lit(1)).as("cq"),
@@ -1023,8 +1023,7 @@ object Dedup {
     // nBuckets MUST match the modulus the stats were trained with —
     // the scorer re-hashes grams, the model carries no raw grams
     val docBuckets =
-      dsirBuckets(docs.select(col(idCol), col(textCol)), idCol, textCol,
-        nBuckets)
+      dsirBuckets(docs.select(col(idCol), col(textCol)), textCol, nBuckets)
       .groupBy(col(idCol), col("bucket"))
       .agg(count(lit(1)).as("c"))
     val perDoc = docBuckets

@@ -33,7 +33,8 @@ object LoadMain {
     val a = parseArgs(args)
     def required(k: String): String = a.getOrElse(k,
       throw new IllegalArgumentException(s"missing required --$k"))
-    val spark = SparkSession.builder()
+    // the master comes from spark-submit
+    val spark = graft.SessionTuning.tuned(SparkSession.builder())
       .appName("graft-load-transactions")
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))

@@ -302,7 +302,7 @@ object Merge {
           toWrite.json)
         done = true
       } catch {
-        case e: java.io.IOException if attempts < 5 =>
+        case _: java.io.IOException if attempts < 5 =>
           attempts += 1
           val theirs = readSchemaMeta(spark, path)
           toWrite = theirs match {
@@ -2529,30 +2529,11 @@ object Merge {
 
   type Q = (SparkSession, String) => DataFrame
 
-  private val scratchDirs = scala.collection.mutable.ArrayBuffer[String]()
-
-  /** Scratch table location for a replay query — registered for removal
-    * at JVM exit (a bench process runs each replay three times; without
-    * the sweep every run leaves a table-sized temp dir behind). Not
-    * removed eagerly: the returned DataFrame's lineage reads the dir. */
-  private[graft] def scratchTable(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix).toString
-    // check-and-install under the SAME lock as the append: two threads
-    // racing first use must not both install the hook
-    synchronized {
-      if (scratchDirs.isEmpty)
-        Runtime.getRuntime.addShutdownHook(new Thread(() =>
-          synchronized(scratchDirs.toList).foreach { dir =>
-            def rm(f: java.io.File): Unit = {
-              if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-              f.delete(); ()
-            }
-            try rm(new java.io.File(dir)) catch { case _: Throwable => () }
-          }))
-      scratchDirs += d
-    }
-    d + "/table"
-  }
+  /** Scratch table location for a replay query, removed at JVM exit (a
+    * bench process runs each replay three times). Not removed eagerly:
+    * the returned DataFrame's lineage reads the dir. */
+  private[graft] def scratchTable(prefix: String): String =
+    graft.util.Scratch.fresh(prefix) + "/table"
 
   /** Deterministic replay batch `b` over the orders table: rows whose
     * o_orderkey ≡ b (mod 7), keyed (okey = o_orderkey % 500, status

@@ -710,7 +710,7 @@ object Similarity {
   def appendToIvfPqIndex(spark: SparkSession, path: String,
       batch: DataFrame): Unit = {
     val (cb, subspaces, subLen, _) = loadCodebooks(spark, path)
-    appendToIvfPqIndexLoaded(spark, path, batch,
+    appendToIvfPqIndexLoaded(path, batch,
       spark.read.parquet(path + "/centroids"), cb, subspaces, subLen)
   }
 
@@ -718,9 +718,9 @@ object Similarity {
     * loaded — the retrain-policy drain loads them once and runs both
     * the append and the drift statistic against the same relations
     * (one codebook collect per drain instead of two). */
-  private def appendToIvfPqIndexLoaded(spark: SparkSession, path: String,
-      batch: DataFrame, cents: DataFrame, cb: DataFrame,
-      subspaces: Int, subLen: Int): Unit = {
+  private def appendToIvfPqIndexLoaded(path: String, batch: DataFrame,
+      cents: DataFrame, cb: DataFrame, subspaces: Int,
+      subLen: Int): Unit = {
     val dims = subspaces * subLen
     val e = batch.select(col("vec_id"),
       col("embedding").cast("array<double>").as("v"))
@@ -1377,8 +1377,7 @@ object Similarity {
     // collects and a second centroid read per drain otherwise)
     val (cb, subspaces, subLen, _) = loadCodebooks(spark, path)
     val cents = spark.read.parquet(path + "/centroids")
-    appendToIvfPqIndexLoaded(spark, path, batch, cents, cb, subspaces,
-      subLen)
+    appendToIvfPqIndexLoaded(path, batch, cents, cb, subspaces, subLen)
     val touched = assign(
       batch.select(col("vec_id"),
         col("embedding").cast("array<double>").as("v")), cents)

@@ -49,7 +49,7 @@ class GraftSource extends RelationProvider with SchemaRelationProvider
 
   override def shortName(): String = "graft"
 
-  import GraftSource.{cols, opt, pathOf}
+  import GraftSource.pathOf
 
   /** `spark.readStream.format("graft")` — the NATIVE incremental
     * streaming read, the [[GraftSink]]'s mirror: offsets are COMMIT

@@ -74,33 +74,11 @@ object GraftTableFunctions {
     * what these functions always did. Resolution-time cost is
     * filesystem metadata only (marker-file existence, delta listing) —
     * never a Spark job — so the EXPLAIN-stays-lazy contract of
-    * [[dupSpansBuilder]]/[[gopherBuilder]] holds on every branch.
-    *
-    * A MOR table with LIVE deltas additionally resolves `persist`ed:
-    * the snapshot there is a base ∪ delta window merge, and the
-    * span/decon algebras reference their corpus several times — x50's
-    * committed plan showed THREE copies of the base+delta merge
-    * subtree, each re-listing and re-merging the same files per run
-    * (guide §5: cache when a relation is reused and recomputing it is
-    * the expensive part). `persist` keeps resolution fully lazy (the
-    * spec's EXPLAIN-runs-0-jobs pin; a lazy `localCheckpoint` was
-    * tried first and rejected — under AQE its `toRdd` materializes the
-    * query stages AT RESOLUTION, 2 jobs from a bare EXPLAIN) while
-    * every reference inside the statement reads the one cached
-    * materialization. Freshness is safe by construction: the cache
-    * entry is keyed on the resolved plan INCLUDING the listed
-    * base/delta files, so any later commit to the table produces a
-    * different plan and re-resolves — a stale hit would need the same
-    * path with the same files, which is exactly the snapshot it
-    * caches. */
+    * [[dupSpansBuilder]]/[[gopherBuilder]] holds on every branch. */
   private[sql] def resolveCorpus(spark: SparkSession, path: String)
       : org.apache.spark.sql.DataFrame =
-    if (graft.merge.MorTable.isMor(spark, path)) {
-      val snap = graft.merge.MorTable.read(spark, path)
-      if (graft.merge.MorTable.hasLiveDeltas(spark, path))
-        snap.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else snap
-    }
+    if (graft.merge.MorTable.isMor(spark, path))
+      graft.merge.MorTable.read(spark, path)
     else if (Merge.recordedSchema(spark, path).isDefined)
       Merge.readTable(spark, path)
     else spark.read.parquet(path)

@@ -2,8 +2,9 @@ package graft.util
 
 /** JVM-scoped scratch directories for driver keys that must materialize
   * an intermediate table (x16's hive-partitioned fact copy, x17's
-  * format("graft") table). Two lifetimes, both swept by ONE shutdown
-  * hook so repeated bench/verify runs leave /tmp flat:
+  * format("graft") table, the merge replay tables) and for the local
+  * session's catalog warehouse. Two lifetimes, both swept by ONE
+  * shutdown hook so repeated bench/verify runs leave /tmp flat:
   *
   *  - [[cached]]: the content is a deterministic function of the key
   *    (e.g. the source sfDir), so repeated invocations in one JVM

@@ -7,8 +7,9 @@ import org.scalatest.BeforeAndAfterAll
 /** Shared local SparkSession fixture for all engine specs.
   *
   * One session per suite (getOrCreate reuses the JVM-wide session, so the
-  * whole `sbt test` run shares a single SparkContext). UTC + fixed small
-  * shuffle partitions keep results deterministic and fast on test data.
+  * whole `sbt test` run shares a single SparkContext). It is the session
+  * the mains build ([[SessionTuning.local]]) on 4 cores, so the specs
+  * run the configuration that ships.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
@@ -21,18 +22,5 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // no-op on current MICROS-annotated testdata — see Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = SessionTuning.local(4)
 }

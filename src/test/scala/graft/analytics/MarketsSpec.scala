@@ -4,7 +4,6 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 class MarketsSpec extends SparkSpec {
-  import spark.implicits._
 
   test("vwap: bounded by min/max fill price, volumes positive") {
     val out = Markets.vwap(spark, sfDir).cache()

@@ -22,7 +22,6 @@ class OccSpec extends SparkSpec {
 
   test("SQL race on the SAME partition: both land serialized, or the " +
       "loser aborts loudly — never silent corruption") {
-    import org.apache.spark.sql.functions._
     val t = tmpDir("occ_sql") + "/table"
     graft.Tables.lineitem(spark, sfDir)
       .createOrReplaceTempView("occ_li")

@@ -56,14 +56,6 @@ class ScaleSpec extends SparkSpec {
   test("bucketed-by-key tables join with zero shuffle") {
     spark.sql("DROP TABLE IF EXISTS b_lineitem")
     spark.sql("DROP TABLE IF EXISTS b_orders")
-    // a previously-failed run can leave the managed location behind
-    Seq("b_lineitem", "b_orders").foreach { t =>
-      val loc = new java.io.File(s"spark-warehouse/$t")
-      if (loc.exists()) {
-        import scala.reflect.io.Directory
-        new Directory(loc).deleteRecursively()
-      }
-    }
     Scale.writeBucketed(
       Tables.lineitem(spark, sfDir).select("l_orderkey", "l_quantity"),
       "b_lineitem", Seq("l_orderkey"), 4)
@@ -95,11 +87,6 @@ class ScaleSpec extends SparkSpec {
     // bucket key reads the hash distribution from the bucket layout,
     // so the aggregation runs exchange-free too
     spark.sql("DROP TABLE IF EXISTS b_agg")
-    val loc = new java.io.File("spark-warehouse/b_agg")
-    if (loc.exists()) {
-      import scala.reflect.io.Directory
-      new Directory(loc).deleteRecursively()
-    }
     Scale.writeBucketed(
       Tables.lineitem(spark, sfDir).select("l_orderkey", "l_quantity"),
       "b_agg", Seq("l_orderkey"), 4)

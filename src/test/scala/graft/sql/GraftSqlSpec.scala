@@ -462,7 +462,6 @@ class GraftSqlSpec extends SparkSpec {
 
   test("graft_zorder procedure: layout rewritten, content invariant, " +
       "honest stats row") {
-    import spark.implicits._
     val path = freshTable("sql_zorder")
     val rows = Tables.lineitem(spark, sfDir).select(
       col("l_orderkey").as("okey"), col("l_linenumber").as("lnum"),
@@ -1106,6 +1105,33 @@ class GraftSqlSpec extends SparkSpec {
       assert(jobs === 0,
         s"EXPLAIN over a MOR-backed curation function ran $jobs jobs")
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("resolveCorpus after a commit: a MOR table with live deltas " +
+      "resolves to the new snapshot and leaves nothing cached") {
+    import spark.implicits._
+    val path = freshTable("sql_corpus_fresh")
+    def commit(rows: (Long, String, Long)*): Unit =
+      graft.merge.MorTable.upsert(spark,
+        rows.toDF("doc_id", "text", "ver"), path, Seq("doc_id"), "ver",
+        Seq.empty)
+    commit((1L, "one", 1L), (2L, "two", 1L))
+    commit((1L, "one again", 2L))
+    assert(graft.merge.MorTable.hasLiveDeltas(spark, path))
+    spark.catalog.clearCache()
+    def docs(): Seq[(Long, String)] =
+      GraftTableFunctions.resolveCorpus(spark, path)
+        .select($"doc_id", $"text").as[(Long, String)].collect()
+        .toSeq.sorted
+    assert(docs() === Seq((1L, "one again"), (2L, "two")))
+    // a later delta rewrites doc 2 and adds doc 3
+    commit((2L, "two rewritten", 3L), (3L, "three", 3L))
+    assert(docs() ===
+      Seq((1L, "one again"), (2L, "two rewritten"), (3L, "three")))
+    assert(spark.sql(s"SELECT doc_id FROM graft_gopher_rules('$path')")
+      .as[Long].collect().sorted.toSeq === Seq(1L, 2L, 3L))
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "resolving the corpus left an InMemoryRelation in the cache")
   }
 
   test("graft_refresh_view/graft_read_view: the IVM console — EXPLAIN " +

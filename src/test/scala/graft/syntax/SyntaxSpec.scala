@@ -1,7 +1,6 @@
 package graft.syntax
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class SyntaxSpec extends SparkSpec {
   import spark.implicits._
