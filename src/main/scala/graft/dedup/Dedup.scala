@@ -647,7 +647,7 @@ object Dedup {
     * surfaces here as a shortfall row, not as a silently skewed
     * training mix afterwards. One groupBy shuffle; the arithmetic is
     * literal double products floored to longs, bit-portable. */
-  def mixturePlan(docs: DataFrame, idCol: String, textCol: String,
+  def mixturePlan(docs: DataFrame, textCol: String,
       strataCol: String, budgetTokens: Long, weights: Map[String, Double],
       default: Double): DataFrame = {
     require(budgetTokens >= 0, "budgetTokens must be >= 0")
@@ -1453,7 +1453,7 @@ object Dedup {
     // per-language availability (shortfalls surface at small SFs where
     // the corpus can't fill its share; larger corpora fill it)
     "d18_mixture_plan" -> ((s, dir) =>
-      mixturePlan(Tables.documents(s, dir), "doc_id", "text", "lang",
+      mixturePlan(Tables.documents(s, dir), "text", "lang",
         budgetTokens = 60000, Map("en" -> 0.5, "de" -> 0.2),
         default = 0.1)
         .orderBy("lang")),

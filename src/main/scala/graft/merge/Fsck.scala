@@ -51,24 +51,10 @@ object Fsck {
     val staging =
       ("staging", if (leaks == 0) "ok" else "warn", s"leaks=$leaks")
 
-    val cdir = Merge.commitsDirPath(path)
-    val entries =
-      if (!fs.exists(cdir)) Nil
-      else fs.listStatus(cdir).toSeq.map(_.getPath.getName)
-    val recordedIds = entries.collect {
-      case Merge.commitEntryRe(id, "json") => id.toLong
-    }.toSet
-    val inflight = entries.count {
-      case Merge.commitEntryRe(_, "inflight") => true
-      case _ => false
-    }
-    // `.plan` siblings are part of a recorded commit's format, and
-    // '.'-prefixed names are filesystem metadata (checksum siblings on
-    // local fs) — neither is junk
-    val foreign = entries.count {
-      case Merge.commitEntryRe(_, _) => false
-      case n => !n.endsWith(".plan") && !n.startsWith(".")
-    }
+    val listing = Timeline.list(spark, path)
+    val recordedIds = listing.recorded.map(_.id).toSet
+    val inflight = listing.inflight
+    val foreign = listing.foreign
     val timeline = ("commit_timeline",
       if (inflight == 0 && foreign == 0) "ok" else "warn",
       s"recorded=${recordedIds.size} inflight=$inflight foreign=$foreign")
@@ -97,7 +83,7 @@ object Fsck {
       else {
         val live = Merge.listDataStatuses(fs,
           MorTable.deltaRoot(spark, path)).size
-        val unrecorded = MorTable.unrecordedIds(spark, path).size
+        val unrecorded = listing.unrecorded.size
         ("mor_deltas", if (unrecorded == 0) "ok" else "warn",
           s"live=$live unrecorded=$unrecorded")
       }

@@ -42,8 +42,6 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
   */
 object IncrementalStream {
 
-  private val commitSchema = "commit_ts LONG, n_rows LONG, partitions STRING"
-
   /** The commit timeline as an unbounded stream: one row per recorded
     * commit, as commits land. Foreign junk in `_graft_commits/` (the
     * timeline tolerates it) streams as all-null rows and is filtered;
@@ -51,12 +49,12 @@ object IncrementalStream {
     * The table (and so its `_graft_commits/` dir) must exist — a
     * streaming source cannot start on a nonexistent path. */
   def commitStream(spark: SparkSession, path: String): DataFrame = {
-    val dir = Merge.commitsDirPath(path)
+    val dir = Timeline.dir(path)
     require(Merge.fsFor(spark, path).exists(dir),
       s"no commit timeline at $dir — the table has no versioned commits " +
         "yet (write one with upsertVersioned before tailing it)")
     spark.readStream
-      .schema(commitSchema)
+      .schema(Timeline.recordSchema)
       .option("pathGlobFilter", "*.json")
       .json(dir.toString)
       .filter(col("commit_ts").isNotNull && col("n_rows").isNotNull)

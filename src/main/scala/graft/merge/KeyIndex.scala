@@ -78,8 +78,9 @@ object KeyIndex {
     * ~64 files the scan's task count is trivial at any file size. The
     * build side mirrors the gate (see [[recordCommit]]): entries nobody
     * would probe are not worth a footer-read + agg job per commit.
-    * Operational knob; specs set it to 0 to force both. */
-  @volatile var minFilesToProbe: Int = 64
+    * A table that needs other economics records its own gates
+    * ([[setProbeGates]]). */
+  val minFilesToProbe: Int = 64
 
   /** …and more data BYTES than this. File count alone is the wrong
     * break-even variable: the key scan's real cost is reading the key
@@ -90,22 +91,20 @@ object KeyIndex {
     * default (4 GiB per touched-partition set) is a rough break-even:
     * below it the column-pruned key scan is seconds of one small job
     * even on a single node; above it the fixed-cost probe starts
-    * winning, and keeps winning by more as partitions grow to TBs.
-    * Specs set 0 to force probing/building at toy scale. */
-  @volatile var minBytesToProbe: Long = 4L << 30
+    * winning, and keeps winning by more as partitions grow to TBs. */
+  val minBytesToProbe: Long = 4L << 30
 
   private def gatesPath(path: String) =
     new Path(path, "_graft_index_gates.json")
 
-  /** Record PER-TABLE probe/build gate overrides. The JVM-wide vars
+  /** Record PER-TABLE probe/build gate overrides. The constants
     * above are defaults; a table whose indexing economics are known —
     * a hot dimension point-looked-up constantly (gates 0/0: always
     * index, always probe) or a tiny config table (gates maxed: never
     * pay the index) — pins its own policy in table metadata, visible
     * to every session that touches it. Also what bench/spec keys use
-    * to force the index arms at toy scale WITHOUT mutating the shared
-    * vars (the r10 advice finding: a JVM-global flip inside one query
-    * leaks into any concurrently running merge). */
+    * to force the index arms at toy scale — a per-table policy cannot
+    * leak into a concurrently running merge on another table. */
   def setProbeGates(spark: SparkSession, path: String,
       minFiles: Int, minBytes: Long): Unit = {
     val fs = Merge.fsFor(spark, path)
@@ -115,8 +114,8 @@ object KeyIndex {
   }
 
   /** Effective (minFiles, minBytes) gates for `path`: the table's
-    * recorded override when present and readable, else the JVM
-    * defaults. Unreadable override ⇒ defaults + a warning (the index
+    * recorded override when present and readable, else the defaults.
+    * Unreadable override ⇒ defaults + a warning (the index
     * is advisory; policy metadata must never fail an operation). */
   private[merge] def gatesFor(spark: SparkSession, path: String)
       : (Int, Long) = {
@@ -131,7 +130,7 @@ object KeyIndex {
     } catch {
       case e: Exception =>
         System.err.println(s"[graft.merge] WARN: unreadable index gate " +
-          s"override at $p (${e.getMessage}); using JVM defaults")
+          s"override at $p (${e.getMessage}); using the defaults")
         (minFilesToProbe, minBytesToProbe)
     }
   }
@@ -229,8 +228,11 @@ object KeyIndex {
     * stats per added file — filters sized from the largest file's
     * footer row count (driver IO), built in ONE column-pruned
     * aggregation job over only the newly written files — plus `rm`
-    * tombstones for the superseded files. No-op when the table has no
-    * key spec. `schema` is the committed write's schema (what the
+    * tombstones for the superseded files. Tombstones are written only
+    * into an existing index: file names are never reused, so before
+    * the first `add` line there is nothing for them to cancel (and a
+    * tombstone-only log would cost every compaction a fold job).
+    * No-op when the table has no key spec. `schema` is the committed write's schema (what the
     * added files contain). */
   private[merge] def recordCommit(
       spark: SparkSession,
@@ -304,8 +306,9 @@ object KeyIndex {
             s""""b":${Merge.jsonQuote(b64)}}"""
         }
       }
-    val rmLines = removed.map(f =>
-      s"""{"op":"rm","f":${Merge.jsonQuote(f)}}""")
+    val rmLines =
+      if (!fs.exists(indexDir(path))) Nil
+      else removed.map(f => s"""{"op":"rm","f":${Merge.jsonQuote(f)}}""")
     val lines = addLines ++ rmLines
     if (lines.isEmpty) return
     fs.mkdirs(indexDir(path))

@@ -75,9 +75,9 @@ object Merge {
   /** The physical outcome of one durable commit: table-relative file
     * lists recorded in the commit metadata (rollback reverses exactly
     * these), plus the staging dir the caller sweeps after the commit
-    * record lands. */
+    * record lands (none for a metadata-only adoption). */
   private[merge] final case class CommitResult(
-      added: Seq[String], removed: Seq[String], staging: String)
+      added: Seq[String], removed: Seq[String], staging: Option[String])
 
   /** O4: within-batch dedup keeping the max-precombine row per key.
     * `tieBreak` makes the choice total when precombine itself ties (Hudi
@@ -207,7 +207,8 @@ object Merge {
     } finally in.close()
   }
 
-  private def writeSmallFile(fs: FileSystem, p: Path, body: String): Unit = {
+  private[merge] def writeSmallFile(fs: FileSystem, p: Path, body: String)
+      : Unit = {
     val out = fs.create(p, true)
     try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
@@ -499,31 +500,12 @@ object Merge {
       dropEmptied: Boolean,
       cts: Option[Long] = None): CommitResult = {
     val fs = fsFor(spark, path)
-    val staging = path.stripSuffix("/") + s"_staging_${System.nanoTime()}"
-    merged.write.partitionBy(partitionCols: _*).mode(SaveMode.Overwrite)
-      .parquet(staging)
-    val stagingRoot = fs.makeQualified(new Path(staging))
     val tableRoot = fs.makeQualified(new Path(path))
-    // a merge that leaves NO survivors stages zero data files — the
-    // publish step is then a no-op and only the retire step acts
-    val moves = listDataFiles(fs, stagingRoot).map { src =>
-      (src, new Path(tableRoot, relativize(stagingRoot, src)))
-    }
-    val added = moves.map { case (_, dest) => relativize(tableRoot, dest) }
     val removed = supersededFiles
       .map(f => relativize(tableRoot, fs.makeQualified(new Path(f))))
+    val Staged(staging, moves, added) = stage(spark, merged, path,
+      partitionCols, "_staging_", "", cts, removed)
     val rb = cts.map(c => rollbackDir(path, c))
-    // versioned: the full plan lands in the marker's plan SIBLING
-    // (complete-or-absent via temp+rename) BEFORE any mutation, so
-    // rollback() after any crash below is mechanical. The inflight
-    // marker itself is never rewritten — the claim stays the original
-    // exclusive-create through every crash window.
-    cts.foreach { c =>
-      val body = s"""{"commit_ts":$c,"staging":${jsonQuote(staging)},""" +
-        s""""files_added":${jsonArray(added)},""" +
-        s""""files_removed":${jsonArray(removed)}}"""
-      replaceSmallFile(fs, planFile(path, c), body)
-    }
     try {
       supersededFiles.foreach { f =>
         val p = new Path(f)
@@ -553,11 +535,7 @@ object Merge {
             cts.map(c => s"; rollback(path, $c) restores the table")
               .getOrElse(""), e)
     }
-    try moves.foreach { case (src, dest) =>
-      fs.mkdirs(dest.getParent)
-      if (!fs.rename(src, dest))
-        throw new java.io.IOException(s"failed to publish $src to $dest")
-    } catch {
+    try publish(fs, moves) catch {
       // a publish that dies mid-way has landed SOME replacement files —
       // the un-published remainder is still in staging, so the commit
       // can be completed (move the rest in) or reversed (rollback)
@@ -602,7 +580,70 @@ object Merge {
           "are unindexed until the next KeyIndex.compactIndex/compact")
     }
     if (cts.isEmpty) sweepCommitScratch(fs, staging, None)
-    CommitResult(added, removed, staging)
+    CommitResult(added, removed, Some(staging))
+  }
+
+  /** A staged write: its staging sibling and, per staged file, the
+    * move that publishes it plus its table-relative final name. */
+  private[merge] final case class Staged(staging: String,
+      moves: Seq[(Path, Path)], added: Seq[String])
+
+  /** STAGE (and PLAN, for versioned commits): write `rows` once,
+    * hive-partitioned, into a fresh staging sibling
+    * `<table><tag><nanos>`. The staged file names are the final names
+    * (under `destRel` inside the table), so the full plan is known
+    * before any mutation; for versioned commits it lands in the
+    * timeline's plan SIBLING of the claim (complete-or-absent via
+    * temp+rename), so rollback() after any later crash is mechanical.
+    * The claim marker itself is never rewritten — it stays the original
+    * exclusive-create through every crash window. */
+  private[merge] def stage(spark: SparkSession, rows: DataFrame,
+      path: String, partitionCols: Seq[String], tag: String,
+      destRel: String, cts: Option[Long], removed: Seq[String]): Staged = {
+    val fs = fsFor(spark, path)
+    val staging = path.stripSuffix("/") + s"$tag${System.nanoTime()}"
+    rows.write.partitionBy(partitionCols: _*).mode(SaveMode.Overwrite)
+      .parquet(staging)
+    val stagingRoot = fs.makeQualified(new Path(staging))
+    val tableRoot = fs.makeQualified(new Path(path))
+    val destRoot =
+      if (destRel.isEmpty) tableRoot else new Path(tableRoot, destRel)
+    // a merge that leaves NO survivors stages zero data files — the
+    // publish step is then a no-op and only the retire step acts
+    val moves = listDataFiles(fs, stagingRoot).map { src =>
+      (src, new Path(destRoot, relativize(stagingRoot, src)))
+    }
+    val added = moves.map { case (_, dest) => relativize(tableRoot, dest) }
+    cts.foreach(c => Timeline.writePlan(fs, path, c,
+      Timeline.Plan(staging, added, removed)))
+    Staged(staging, moves, added)
+  }
+
+  /** PUBLISH: rename each staged file into its final place. */
+  private[merge] def publish(fs: FileSystem, moves: Seq[(Path, Path)])
+      : Unit =
+    moves.foreach { case (src, dest) =>
+      fs.mkdirs(dest.getParent)
+      if (!fs.rename(src, dest))
+        throw new java.io.IOException(s"failed to publish $src to $dest")
+    }
+
+  /** The one versioned-commit envelope: claim the next commit id, run
+    * `op` under it (stamping, staging, planning and publishing through
+    * [[commitFiles]]), record the commit, and only then retire its
+    * scratch — the staging sibling is swept and the retired-file copy
+    * becomes the commit's time-travel history. A crash anywhere inside
+    * `op` leaves the claim (and, once written, the plan) for
+    * [[rollback]]; a crash after the record leaves only scratch.
+    * Returns the commit id. */
+  private[merge] def versioned(spark: SparkSession, path: String)(
+      op: Long => (MergeStats, Option[CommitResult])): Long = {
+    val cts = Timeline.claim(spark, path)
+    val (stats, commit) = op(cts)
+    Timeline.record(spark, path, cts, stats, commit)
+    commit.foreach(c =>
+      retireToHistory(fsFor(spark, path), path, cts, c.staging))
+    cts
   }
 
   /** O2: plain append (insert — combine-before-insert defaults off in
@@ -705,7 +746,7 @@ object Merge {
       precombine: String,
       partitionCols: Seq[String]): Unit = {
     upsertImpl(spark, batch, path, keyCols, precombine, partitionCols,
-      needStats = false, cts = None, ordered = false)
+      cts = None, ordered = false)
     voidHistory(spark, path)
   }
 
@@ -727,7 +768,7 @@ object Merge {
       precombine: String,
       partitionCols: Seq[String]): Unit = {
     upsertImpl(spark, batch, path, keyCols, precombine, partitionCols,
-      needStats = false, cts = None, ordered = true)
+      cts = None, ordered = true)
     voidHistory(spark, path)
   }
 
@@ -830,46 +871,62 @@ object Merge {
     } finally { deduped.unpersist(); () }
   }
 
-  /** Stats (deduped row count) are only materialized on the versioned
-    * path — the count is one extra job per commit, and the plain-upsert
-    * callers (streaming micro-batches, batch loads) all discard it. */
-  private def upsertImpl(
+  /** What a keyed write (upsert / insertOverwrite) plans its rewrite
+    * against: the persisted deduped batch, its touched partitions, the
+    * stored table, the target schema (stored columns plus the batch's
+    * additive ones), the key spec, and `newRows` — the batch aligned to
+    * the target and, on the versioned path, observed for the
+    * timeline's row count. */
+  private final case class KeyedWrite(deduped: DataFrame,
+      parts: Seq[Seq[Any]], stored: DataFrame,
+      target: Seq[(String, DataType)], spec: KeySpec, indexActive: Boolean,
+      newRows: DataFrame)
+
+  /** The shared frame of the keyed writes: precombine-dedup the batch,
+    * record the key spec, take the staged first write on a new table,
+    * no-op on an empty batch, enforce the additive-evolution contract,
+    * then commit the rows `plan` returns in place of the stored files
+    * it supersedes. The timeline's stats (deduped row count) are only
+    * observed on the versioned path (`cts` set) — the plain callers
+    * (streaming micro-batches, batch loads) all discard them. */
+  private def keyedWrite(
       spark: SparkSession,
       batch: DataFrame,
       path: String,
       keyCols: Seq[String],
       precombine: String,
       partitionCols: Seq[String],
-      needStats: Boolean,
       cts: Option[Long],
-      ordered: Boolean): (MergeStats, Option[CommitResult]) = {
-    val scopedKeys = keyCols ++ partitionCols
+      op: String)(
+      plan: KeyedWrite => (DataFrame, Seq[String]))
+      : (MergeStats, Option[CommitResult]) = {
+    val spec = KeySpec(keyCols, partitionCols)
     // persisted: the deduped batch feeds the partition collect, the key
     // join build side, the merged union AND the stats count — one
     // materialization instead of four replays of the batch lineage
-    val deduped = precombineDedup(batch, scopedKeys, precombine)
+    val deduped = precombineDedup(batch, spec.scoped, precombine)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       // record the table's key spec (first keyed write wins) so every
       // commit — including table services that take no keys — can
       // maintain the file-level key index
-      val spec = KeySpec(keyCols, partitionCols)
       val indexActive = KeyIndex.ensureSpec(spark, path, spec)
+      // n_rows for the timeline is observed on the batch branch of the
+      // write plan itself (Observation metrics count only successful
+      // tasks) — no separate count job per commit
+      val obs = cts.map(_ => org.apache.spark.sql.Observation())
+      def observed(df: DataFrame): DataFrame =
+        obs.fold(df)(o => df.observe(o, count(lit(1)).as("n")))
+      def stats(parts: Seq[String]): MergeStats =
+        MergeStats(obs.map(_.get("n").asInstanceOf[Long]).getOrElse(0L), parts)
       if (!tableExists(spark, path)) {
         // initial write: the same staged commit as every other write —
         // the staging + rename publish knows its added-file plan before
-        // any file lands, so even a FIRST versioned commit rolls back.
-        // The timeline's n_rows rides the write itself as an observed
-        // metric — no separate count job per commit.
-        val obs = if (needStats) Some(org.apache.spark.sql.Observation())
-          else None
-        val body = obs.fold(deduped)(o =>
-          deduped.observe(o, count(lit(1)).as("n")))
-        val res = commitFiles(spark, body, path, partitionCols,
+        // any file lands, so even a FIRST versioned commit rolls back
+        val res = commitFiles(spark, observed(deduped), path, partitionCols,
           supersededFiles = Nil, touched = Nil, dropEmptied = false, cts)
-        return (MergeStats(
-          obs.map(_.get("n").asInstanceOf[Long]).getOrElse(0L),
-          if (needStats)
+        return (stats(
+          if (cts.isDefined)
             touchedPartitions(deduped, partitionCols).map(renderPartition)
           else Nil), Some(res))
       }
@@ -882,78 +939,103 @@ object Merge {
       // a table built by upsertVersioned) from every rewritten file
       val missing = stored.columns.toSet -- deduped.columns.toSet
       require(missing.isEmpty,
-        s"upsert batch schema mismatch vs stored table at $path: " +
+        s"$op batch schema mismatch vs stored table at $path: " +
           s"batch lacks ${missing.mkString(",")} " +
-          "(a versioned table must be written via upsertVersioned)")
+          s"(a versioned table must be written via ${op}Versioned)")
       val extra = deduped.columns.filterNot(stored.columns.contains)
       val target: Seq[(String, DataType)] =
         stored.schema.fields.map(f => f.name -> f.dataType).toIndexedSeq ++
           deduped.schema.fields.filter(f => extra.contains(f.name))
             .map(f => f.name -> f.dataType)
-      // file-group pruning: column-pruned key scan of the touched
-      // partitions, semi-joined (broadcast) against the batch keys →
-      // the files that actually contain matched keys. Null-safe <=>:
-      // a null key component / null partition must still match.
-      // The matched-file list is driver-resident — bounded by the
-      // batch's key count (≤ one path per matched key in the worst
-      // case), the same driver-side COW write planning Hudi does.
-      // Before the scan, the file-level key index (when active) prunes
-      // the candidate set: only files whose bloom may contain a batch
-      // key — plus unindexed files — are read at all, so per-commit
-      // scan cost tracks the matched file count, not partition size.
-      val batchKeys = deduped.select(scopedKeys.map(col): _*).distinct()
-      val fs = fsFor(spark, path)
-      val tableRoot = fs.makeQualified(new Path(path))
-      val candidates: Option[Seq[String]] =
-        if (!indexActive) None
-        else {
-          val storedType = target.toMap
-          // probe at the STORED column types — the index build hashes
-          // values as read back from the committed files
-          val typedKeys = deduped.select(scopedKeys.map(c =>
-            col(c).cast(storedType(c)).as(c)): _*).distinct()
-          val touchedDirs = parts.map(t => partitionRelDir(partitionCols, t))
-          val statuses = touchedDirs.flatMap(d =>
-            listDataStatuses(fs, new Path(tableRoot, d)))
-          val allFiles = statuses.map(st =>
-            relativize(tableRoot, st.getPath))
-          KeyIndex.candidateFiles(spark, path, spec, touchedDirs, allFiles,
-            statuses.map(_.getLen).sum, typedKeys)
-        }
-      val keySource = candidates match {
-        case Some(cand) if cand.isEmpty => None // no file can match
-        case Some(cand) => Some(spark.read.schema(stored.schema)
-          .option("basePath", path)
-          .parquet(cand.map(f => new Path(tableRoot, f).toString): _*))
-        case None => Some(stored.filter(partitionIn(partitionCols, parts)))
+      val (rows, superseded) = plan(KeyedWrite(deduped, parts, stored,
+        target, spec, indexActive, observed(alignTo(deduped, target))))
+      val res = commitFiles(spark, rows, path, partitionCols, superseded,
+        parts, dropEmptied = false, cts)
+      (stats(parts.map(renderPartition)), Some(res))
+    } finally deduped.unpersist()
+  }
+
+  /** The data files of the touched partitions that hold at least one of
+    * `keys` (distinct scoped keys): a column-pruned key scan of the
+    * touched partitions, semi-joined (broadcast) against the keys.
+    * Null-safe <=>: a null key component / null partition must still
+    * match. The list is driver-resident — bounded by the key count (≤
+    * one path per matched key in the worst case), the same driver-side
+    * COW write planning Hudi does. Before the scan, the file-level key
+    * index (when active) prunes the candidate set: only files whose
+    * bloom may contain a key — plus unindexed files — are read at all,
+    * so per-commit scan cost tracks the matched file count, not
+    * partition size. */
+  private def matchedFiles(
+      spark: SparkSession,
+      path: String,
+      stored: DataFrame,
+      spec: KeySpec,
+      indexActive: Boolean,
+      parts: Seq[Seq[Any]],
+      keys: DataFrame): IndexedSeq[String] = {
+    val fs = fsFor(spark, path)
+    val tableRoot = fs.makeQualified(new Path(path))
+    val candidates: Option[Seq[String]] =
+      if (!indexActive) None
+      else {
+        // probe at the STORED column types — the index build hashes
+        // values as read back from the committed files
+        val typedKeys = keys.select(spec.scoped.map(c =>
+          col(c).cast(stored.schema(c).dataType).as(c)): _*).distinct()
+        val touchedDirs = parts.map(t => partitionRelDir(spec.partitionCols, t))
+        val statuses = touchedDirs.flatMap(d =>
+          listDataStatuses(fs, new Path(tableRoot, d)))
+        val allFiles = statuses.map(st =>
+          relativize(tableRoot, st.getPath))
+        KeyIndex.candidateFiles(spark, path, spec, touchedDirs, allFiles,
+          statuses.map(_.getLen).sum, typedKeys)
       }
-      val matchedFiles = keySource match {
-        case None => IndexedSeq.empty[String]
-        case Some(src) =>
-          val keyScan = src
-            .select(scopedKeys.map(col) :+ input_file_name().as("_file"): _*)
-          val matchCond = scopedKeys.map(c => keyScan(c) <=> batchKeys(c))
-            .reduce(_ && _)
-          keyScan.join(broadcast(batchKeys), matchCond, "left_semi")
-            .select("_file").distinct().collect()
-            .map(r => decodeFileName(r.getString(0))).toIndexedSeq
-      }
-      // n_rows for the timeline is observed on the batch branch of the
-      // write plan itself (Observation metrics count only successful
-      // tasks) — the versioned path previously paid a separate count()
-      // job per commit for it
-      val obs = if (needStats) Some(org.apache.spark.sql.Observation())
-        else None
-      val newRows0 = alignTo(deduped, target)
-      val newRows = obs.fold(newRows0)(o =>
-        newRows0.observe(o, count(lit(1)).as("n")))
+    val keySource = candidates match {
+      case Some(cand) if cand.isEmpty => None // no file can match
+      case Some(cand) => Some(spark.read.schema(stored.schema)
+        .option("basePath", path)
+        .parquet(cand.map(f => new Path(tableRoot, f).toString): _*))
+      case None => Some(stored.filter(partitionIn(spec.partitionCols, parts)))
+    }
+    keySource match {
+      case None => IndexedSeq.empty[String]
+      case Some(src) =>
+        val keyScan = src
+          .select(spec.scoped.map(col) :+ input_file_name().as("_file"): _*)
+        val matchCond = spec.scoped.map(c => keyScan(c) <=> keys(c))
+          .reduce(_ && _)
+        keyScan.join(broadcast(keys), matchCond, "left_semi")
+          .select("_file").distinct().collect()
+          .map(r => decodeFileName(r.getString(0))).toIndexedSeq
+    }
+  }
+
+  /** O1 at file-group granularity: only the files holding a batch key
+    * are read back and rewritten; a batch that matches no stored key
+    * is a pure insert. */
+  private def upsertImpl(
+      spark: SparkSession,
+      batch: DataFrame,
+      path: String,
+      keyCols: Seq[String],
+      precombine: String,
+      partitionCols: Seq[String],
+      cts: Option[Long],
+      ordered: Boolean): (MergeStats, Option[CommitResult]) =
+    keyedWrite(spark, batch, path, keyCols, precombine, partitionCols, cts,
+        "upsert") { w =>
+      val scopedKeys = w.spec.scoped
+      val batchKeys = w.deduped.select(scopedKeys.map(col): _*).distinct()
+      val matched = matchedFiles(spark, path, w.stored, w.spec,
+        w.indexActive, w.parts, batchKeys)
       val merged =
-        if (matchedFiles.isEmpty) newRows // pure insert: nothing to rewrite
+        if (matched.isEmpty) w.newRows // pure insert: nothing to rewrite
         else {
           // read ONLY the matched files; explicit schema (no footer
           // reads), basePath recovers the partition column from paths
-          val matchedRows = spark.read.schema(stored.schema)
-            .option("basePath", path).parquet(matchedFiles: _*)
+          val matchedRows = spark.read.schema(w.stored.schema)
+            .option("basePath", path).parquet(matched: _*)
           if (ordered) {
             // ordered payload (DefaultHoodieRecordPayload): per key the
             // max-precombine row wins across stored ∪ batch, ties to
@@ -964,8 +1046,8 @@ object Merge {
             // `_commit_ts` stamp — untouched, so incremental pulls
             // never see a key a late batch failed to advance.
             precombineDedup(
-              newRows.withColumn("_graft_src", lit(1))
-                .unionByName(alignTo(matchedRows, target)
+              w.newRows.withColumn("_graft_src", lit(1))
+                .unionByName(alignTo(matchedRows, w.target)
                   .withColumn("_graft_src", lit(0))),
               scopedKeys, precombine, tieBreak = Seq("_graft_src"))
               .drop("_graft_src")
@@ -977,15 +1059,11 @@ object Merge {
               .reduce(_ && _)
             val survivors = matchedRows.join(broadcast(batchKeys), survCond,
               "left_anti")
-            newRows.unionByName(alignTo(survivors, target))
+            w.newRows.unionByName(alignTo(survivors, w.target))
           }
         }
-      val res = commitFiles(spark, merged, path, partitionCols, matchedFiles,
-        parts, dropEmptied = false, cts)
-      (MergeStats(obs.map(_.get("n").asInstanceOf[Long]).getOrElse(0L),
-        parts.map(renderPartition)), Some(res))
-    } finally deduped.unpersist()
-  }
+      (merged, matched)
+    }
 
   /** Metadata-only adoption of an existing PLAIN parquet layout into
     * the commit timeline — Hudi's METADATA_ONLY bootstrap: not one data
@@ -1009,7 +1087,7 @@ object Merge {
     val tableRoot = fs.makeQualified(new Path(path))
     require(tableExists(spark, path),
       s"no data files at $path — nothing to bootstrap")
-    require(!fs.exists(commitsDir(path)),
+    require(!fs.exists(Timeline.dir(path)),
       s"$path already has a commit timeline — bootstrap adopts plain " +
         "layouts only")
     val files = listDataStatuses(fs, tableRoot)
@@ -1021,11 +1099,10 @@ object Merge {
     // commit record leaves only harmless metadata (and a tombstonable
     // inflight marker)
     updateSchemaMeta(spark, path, df.schema)
-    val cts = claimCommitId(spark, path)
-    val parts = touchedPartitions(df, partitionCols).map(renderPartition)
-    recordCommit(spark, path, cts, MergeStats(df.count(), parts),
-      Some(CommitResult(files, Nil, "")))
-    cts
+    versioned(spark, path) { _ =>
+      val parts = touchedPartitions(df, partitionCols).map(renderPartition)
+      (MergeStats(df.count(), parts), Some(CommitResult(files, Nil, None)))
+    }
   }
 
   /** Partition replace — Hudi's INSERT_OVERWRITE, the backfill
@@ -1056,7 +1133,7 @@ object Merge {
       precombine: String,
       partitionCols: Seq[String]): Unit = {
     insertOverwriteImpl(spark, batch, path, keyCols, precombine,
-      partitionCols, needStats = false, cts = None)
+      partitionCols, cts = None)
     ()
   }
 
@@ -1072,16 +1149,10 @@ object Merge {
       path: String,
       keyCols: Seq[String],
       precombine: String,
-      partitionCols: Seq[String]): Long = {
-    val cts = claimCommitId(spark, path)
-    val (stats, commit) = insertOverwriteImpl(spark,
+      partitionCols: Seq[String]): Long =
+    versioned(spark, path)(cts => insertOverwriteImpl(spark,
       batch.withColumn(commitCol, lit(cts)), path, keyCols, precombine,
-      partitionCols, needStats = true, cts = Some(cts))
-    recordCommit(spark, path, cts, stats, commit)
-    commit.foreach(c => retireToHistory(fsFor(spark, path), path, cts,
-      c.staging))
-    cts
-  }
+      partitionCols, Some(cts)))
 
   private def insertOverwriteImpl(
       spark: SparkSession,
@@ -1090,59 +1161,17 @@ object Merge {
       keyCols: Seq[String],
       precombine: String,
       partitionCols: Seq[String],
-      needStats: Boolean,
-      cts: Option[Long]): (MergeStats, Option[CommitResult]) = {
-    val scopedKeys = keyCols ++ partitionCols
-    val deduped = precombineDedup(batch, scopedKeys, precombine)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val spec = KeySpec(keyCols, partitionCols)
-      KeyIndex.ensureSpec(spark, path, spec)
-      val obs = if (needStats) Some(org.apache.spark.sql.Observation())
-        else None
-      if (!tableExists(spark, path)) {
-        // overwrite of nothing = the same staged initial write as upsert
-        val body = obs.fold(deduped)(o =>
-          deduped.observe(o, count(lit(1)).as("n")))
-        val res = commitFiles(spark, body, path, partitionCols,
-          supersededFiles = Nil, touched = Nil, dropEmptied = false, cts)
-        return (MergeStats(
-          obs.map(_.get("n").asInstanceOf[Long]).getOrElse(0L),
-          if (needStats)
-            touchedPartitions(deduped, partitionCols).map(renderPartition)
-          else Nil), Some(res))
-      }
-      val parts = touchedPartitionsProbed(deduped, partitionCols)
-      if (parts.isEmpty) return (MergeStats(0L, Nil), None)
-      val stored = readTable(spark, path)
-      // the same additive-evolution contract as upsert: a batch may add
-      // columns, never silently drop stored ones
-      val missing = stored.columns.toSet -- deduped.columns.toSet
-      require(missing.isEmpty,
-        s"insertOverwrite batch schema mismatch vs stored table at " +
-          s"$path: batch lacks ${missing.mkString(",")} " +
-          "(a versioned table must be written via " +
-          "insertOverwriteVersioned)")
-      val extra = deduped.columns.filterNot(stored.columns.contains)
-      val target: Seq[(String, DataType)] =
-        stored.schema.fields.map(f => f.name -> f.dataType).toIndexedSeq ++
-          deduped.schema.fields.filter(f => extra.contains(f.name))
-            .map(f => f.name -> f.dataType)
+      cts: Option[Long]): (MergeStats, Option[CommitResult]) =
+    keyedWrite(spark, batch, path, keyCols, precombine, partitionCols, cts,
+        "insertOverwrite") { w =>
       // EVERY data file in a touched partition is superseded — this is
       // a metadata listing, not a scan
       val fs = fsFor(spark, path)
       val tableRoot = fs.makeQualified(new Path(path))
-      val superseded = parts.flatMap(t => listDataStatuses(fs,
-        new Path(tableRoot, partitionRelDir(partitionCols, t)))
+      (w.newRows, w.parts.flatMap(t => listDataStatuses(fs,
+        new Path(tableRoot, partitionRelDir(partitionCols, t))))
         .map(_.getPath.toString))
-      val body0 = alignTo(deduped, target)
-      val body = obs.fold(body0)(o => body0.observe(o, count(lit(1)).as("n")))
-      val res = commitFiles(spark, body, path, partitionCols, superseded,
-        parts, dropEmptied = false, cts)
-      (MergeStats(obs.map(_.get("n").asInstanceOf[Long]).getOrElse(0L),
-        parts.map(renderPartition)), Some(res))
-    } finally deduped.unpersist()
-  }
+    }
 
   /** O3: delete by key — file-group rewrite of only the parquet files
     * that contain a matched key; emptied partition dirs are dropped. */
@@ -1176,8 +1205,8 @@ object Merge {
     // key scope includes the partition path (Hudi ComplexKeyGenerator
     // semantics): a delete key only removes rows in ITS partition, never
     // a same-keyed row in another touched partition
-    val delKeys = keyCols ++ partitionCols
-    val delDistinct = keys.select(delKeys.map(col): _*).distinct()
+    val spec = KeySpec(keyCols, partitionCols)
+    val delDistinct = keys.select(spec.scoped.map(col): _*).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val parts = touchedPartitionsProbed(delDistinct, partitionCols)
@@ -1185,53 +1214,19 @@ object Merge {
       val stored = readTable(spark, path)
       // same index-pruned candidate discovery as upsert (delete keys
       // are partition-scoped, i.e. exactly the indexed scoped key)
-      val spec = KeySpec(keyCols, partitionCols)
       val indexActive = KeyIndex.ensureSpec(spark, path, spec)
-      val fs = fsFor(spark, path)
-      val tableRoot = fs.makeQualified(new Path(path))
-      val candidates: Option[Seq[String]] =
-        if (!indexActive) None
-        else {
-          val storedType = stored.schema.fields
-            .map(f => f.name -> f.dataType).toMap
-          val typedKeys = delDistinct.select(delKeys.map(c =>
-            col(c).cast(storedType(c)).as(c)): _*).distinct()
-          val touchedDirs = parts.map(t => partitionRelDir(partitionCols, t))
-          val statuses = touchedDirs.flatMap(d =>
-            listDataStatuses(fs, new Path(tableRoot, d)))
-          val allFiles = statuses.map(st =>
-            relativize(tableRoot, st.getPath))
-          KeyIndex.candidateFiles(spark, path, spec, touchedDirs, allFiles,
-            statuses.map(_.getLen).sum, typedKeys)
-        }
-      val keySource = candidates match {
-        case Some(cand) if cand.isEmpty => None // no file holds a del key
-        case Some(cand) => Some(spark.read.schema(stored.schema)
-          .option("basePath", path)
-          .parquet(cand.map(f => new Path(tableRoot, f).toString): _*))
-        case None => Some(stored.filter(partitionIn(partitionCols, parts)))
-      }
-      val matchedFiles = keySource match {
-        case None => IndexedSeq.empty[String]
-        case Some(src) =>
-          val keyScan = src
-            .select(delKeys.map(col) :+ input_file_name().as("_file"): _*)
-          val matchCond = delKeys.map(c => keyScan(c) <=> delDistinct(c))
-            .reduce(_ && _)
-          keyScan.join(broadcast(delDistinct), matchCond, "left_semi")
-            .select("_file").distinct().collect()
-            .map(r => decodeFileName(r.getString(0))).toIndexedSeq
-      }
-      if (matchedFiles.isEmpty)
+      val matched = matchedFiles(spark, path, stored, spec, indexActive,
+        parts, delDistinct)
+      if (matched.isEmpty)
         return (MergeStats(0L, parts.map(renderPartition)), None)
       val matchedRows = spark.read.schema(stored.schema)
-        .option("basePath", path).parquet(matchedFiles: _*)
-      val survCond = delKeys.map(c => matchedRows(c) <=> delDistinct(c))
+        .option("basePath", path).parquet(matched: _*)
+      val survCond = spec.scoped.map(c => matchedRows(c) <=> delDistinct(c))
         .reduce(_ && _)
       val remaining = matchedRows.join(broadcast(delDistinct), survCond,
         "left_anti")
       val res = commitFiles(spark, remaining, path, partitionCols,
-        matchedFiles, parts, dropEmptied = true, cts)
+        matched, parts, dropEmptied = true, cts)
       // a delete commit WRITES no rows (n_rows 0 in the timeline); its
       // effect is rows vanishing from every later read
       (MergeStats(0L, parts.map(renderPartition)), Some(res))
@@ -1268,22 +1263,39 @@ object Merge {
       partitionCols: Seq[String],
       keyCols: Seq[String],
       targetFileBytes: Long,
-      maxFiles: Int): Long = {
+      maxFiles: Int): Long =
+    compactImpl(spark, path, partitionCols, keyCols, targetFileBytes,
+      maxFiles, recorded = false)
+
+  private def compactImpl(
+      spark: SparkSession,
+      path: String,
+      partitionCols: Seq[String],
+      keyCols: Seq[String],
+      targetFileBytes: Long,
+      maxFiles: Int,
+      recorded: Boolean): Long = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
     require(maxFiles >= 1, "maxFiles must be >= 1")
     if (!tableExists(spark, path)) return 0L
+    if (recorded) require(readSchemaMeta(spark, path)
+        .exists(_.fieldNames.contains(commitCol)),
+      s"$path carries no $commitCol stamps (no versioned write yet) — " +
+        "there is no history to preserve; use compact")
     val fs = fsFor(spark, path)
     val (files, totalBytes) =
       compactionCandidates(fs, path, partitionCols, targetFileBytes)
     if (files.isEmpty) return 0L
     val stored = readTable(spark, path)
+    // stamps ride along untouched: the read schema includes commitCol,
+    // and no column is rewritten — preservation IS the no-CDC contract
     val rows = spark.read.schema(stored.schema)
       .option("basePath", path).parquet(files: _*)
     val nFiles = math.min(totalBytes / targetFileBytes + 1, maxFiles.toLong)
       .toInt
     val layout = (partitionCols.map(col) ++ keyCols.map(col)).toIndexedSeq
     commitRewrite(spark, path, partitionCols,
-      rows.repartitionByRange(nFiles, layout: _*), files, versioned = false)
+      rows.repartitionByRange(nFiles, layout: _*), files, recorded)
   }
 
   /** Shared tail of every layout rewrite (compaction / clustering):
@@ -1304,24 +1316,20 @@ object Merge {
       partitionCols: Seq[String],
       rewritten: DataFrame,
       files: IndexedSeq[String],
-      versioned: Boolean): Long = {
-    if (versioned) {
-      val cts = claimCommitId(spark, path)
-      val res = commitFiles(spark, rewritten, path, partitionCols, files,
-        touched = Nil, dropEmptied = false, Some(cts))
-      recordCommit(spark, path, cts, MergeStats(0L, Nil), Some(res))
-      retireToHistory(fsFor(spark, path), path, cts, res.staging)
-    } else {
-      commitFiles(spark, rewritten, path, partitionCols, files,
-        touched = Nil, dropEmptied = false)
+      recorded: Boolean): Long = {
+    if (recorded) versioned(spark, path) { cts =>
+      (MergeStats(0L, Nil), Some(commitFiles(spark, rewritten, path,
+        partitionCols, files, touched = Nil, dropEmptied = false, Some(cts))))
     }
+    else commitFiles(spark, rewritten, path, partitionCols, files,
+      touched = Nil, dropEmptied = false)
     try KeyIndex.compactIndex(spark, path)
     catch {
       case e: Exception => System.err.println(
         s"[graft.merge] WARN: key-index fold failed at $path " +
           s"(${e.getMessage}); the entry log keeps working, just longer")
     }
-    if (!versioned) voidHistory(spark, path)
+    if (!recorded) voidHistory(spark, path)
     files.length.toLong
   }
 
@@ -1377,29 +1385,9 @@ object Merge {
       partitionCols: Seq[String],
       keyCols: Seq[String] = Nil,
       targetFileBytes: Long = 128L * 1024 * 1024,
-      maxFiles: Int = 1 << 20): Long = {
-    require(targetFileBytes > 0, "targetFileBytes must be positive")
-    require(maxFiles >= 1, "maxFiles must be >= 1")
-    if (!tableExists(spark, path)) return 0L
-    require(readSchemaMeta(spark, path)
-        .exists(_.fieldNames.contains(commitCol)),
-      s"$path carries no $commitCol stamps (no versioned write yet) — " +
-        "there is no history to preserve; use compact")
-    val fs = fsFor(spark, path)
-    val (files, totalBytes) =
-      compactionCandidates(fs, path, partitionCols, targetFileBytes)
-    if (files.isEmpty) return 0L
-    val stored = readTable(spark, path)
-    // stamps ride along untouched: the read schema includes commitCol,
-    // and no column is rewritten — preservation IS the no-CDC contract
-    val rows = spark.read.schema(stored.schema)
-      .option("basePath", path).parquet(files: _*)
-    val nFiles = math.min(totalBytes / targetFileBytes + 1, maxFiles.toLong)
-      .toInt
-    val layout = (partitionCols.map(col) ++ keyCols.map(col)).toIndexedSeq
-    commitRewrite(spark, path, partitionCols,
-      rows.repartitionByRange(nFiles, layout: _*), files, versioned = true)
-  }
+      maxFiles: Int = 1 << 20): Long =
+    compactImpl(spark, path, partitionCols, keyCols, targetFileBytes,
+      maxFiles, recorded = true)
 
   /** Z-order clustering — the multi-column analogue of [[compact]]'s
     * linear key layout, and the clustering table service Hudi shipped
@@ -1434,7 +1422,7 @@ object Merge {
       targetFileBytes: Long = 128L * 1024 * 1024,
       maxFiles: Int = 1 << 20): Long =
     clusterZOrderImpl(spark, path, partitionCols, zCols, targetFileBytes,
-      maxFiles, versioned = false)
+      maxFiles, recorded = false)
 
   /** [[clusterZOrder]] recorded on the commit timeline — clustering as
     * a table service with the same contract as [[compactVersioned]]:
@@ -1456,7 +1444,7 @@ object Merge {
       s"$path carries no $commitCol stamps (no versioned write yet) — " +
         "there is no history to preserve; use clusterZOrder")
     clusterZOrderImpl(spark, path, partitionCols, zCols, targetFileBytes,
-      maxFiles, versioned = true)
+      maxFiles, recorded = true)
   }
 
   private def clusterZOrderImpl(
@@ -1466,7 +1454,7 @@ object Merge {
       zCols: Seq[String],
       targetFileBytes: Long,
       maxFiles: Int,
-      versioned: Boolean): Long = {
+      recorded: Boolean): Long = {
     require(zCols.size >= 2,
       "z-order needs >= 2 columns (one column is a plain sort — use " +
         "compact's key layout for that)")
@@ -1507,7 +1495,7 @@ object Merge {
       .repartitionByRange(nFiles, layout: _*)
       .sortWithinPartitions(layout: _*)
       .select(rows.columns.toIndexedSeq.map(col): _*)
-    commitRewrite(spark, path, partitionCols, clustered, files, versioned)
+    commitRewrite(spark, path, partitionCols, clustered, files, recorded)
   }
 
   /** Remove leaked staging siblings — the table-sized recovery copies a
@@ -1546,180 +1534,11 @@ object Merge {
     * `glue/interactive.sh:21-23`). */
   val commitCol = "_commit_ts"
 
-  private[merge] def commitsDir(path: String) = new Path(path, "_graft_commits")
-
-  /** The timeline directory (for the incremental commit stream). */
-  private[merge] def commitsDirPath(path: String): Path = commitsDir(path)
-
-  /** Timeline entry names: `<zero-padded id>.json` (recorded commit),
-    * `.inflight` (issued, data possibly landing), `.rolledback`
-    * (reversed — tombstoned so the id is never reissued). Strictly
-    * numeric stems: any other file in `_graft_commits/` (editor backup,
-    * `.crc` sibling on checksum filesystems) is FOREIGN and ignored —
-    * one junk entry must not brick every later versioned write. */
-  private[merge] val commitEntryRe = """^(\d+)\.(json|inflight|rolledback)$""".r
-
-  /** Every id the timeline has ever ISSUED — recorded commits, inflight
-    * markers left by crashed runs, and rolled-back tombstones. All
-    * count: an id whose data may have been visible, even transiently,
-    * must never be reissued. */
-  private def listIssuedIds(spark: SparkSession, path: String): Seq[Long] = {
-    val fs = fsFor(spark, path)
-    val p = commitsDir(path)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).map(_.getPath.getName).toSeq.collect {
-      case commitEntryRe(id, _) => id.toLong
-    }
-  }
-
-  /** Next monotonic commit id. The timeline metadata (one tiny file per
-    * issued commit under `_graft_commits/`) is the source of truth: it
-    * never regresses, even when a delete() removes every surviving row
-    * of the latest commit — a data-only max would then REUSE that
-    * commit id and an incremental consumer tracking `readSince(last)`
-    * would silently miss the reused commit's rows (Hudi's timeline
-    * never regresses either). Because an id is marked `.inflight`
-    * BEFORE its data lands (Hudi's requested→inflight→commit shape), a
-    * crash mid-commit can't cause reuse — and a metadata-managed table
-    * never needs a data scan here, which at 100 TB would otherwise be a
-    * full stamp-column read per commit. The scan remains only as the
-    * one-time floor for tables stamped before the timeline existed. */
-  private def nextCommit(spark: SparkSession, path: String): Long = {
-    val issued = listIssuedIds(spark, path)
-    if (issued.nonEmpty) return issued.max + 1L
-    val dataMax =
-      if (!tableExists(spark, path)) 0L
-      else {
-        val t = readTable(spark, path)
-        if (!t.columns.contains(commitCol)) 0L
-        else t.agg(coalesce(max(col(commitCol)), lit(0L))).head().getLong(0)
-      }
-    dataMax + 1L
-  }
-
   private[merge] def jsonQuote(s: String): String =
     "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
 
   private[merge] def jsonArray(xs: Seq[String]): String =
     xs.map(jsonQuote).mkString("[", ",", "]")
-
-  private def inflightMarker(path: String, cts: Long) =
-    new Path(commitsDir(path), f"$cts%020d.inflight")
-
-  /** Sibling of the inflight marker holding the full commit plan (what
-    * [[rollback]] replays). Kept SEPARATE from the marker so the claim
-    * file is never rewritten after its exclusive create: the plan lands
-    * complete-or-absent via [[replaceSmallFile]]'s temp+rename, and a
-    * crash mid-write can never corrupt (or momentarily drop) the claim
-    * itself. `.plan` is not matched by [[commitEntryRe]], so these are
-    * foreign to timeline listings and swept with their commit. */
-  private[merge] def planFile(path: String, cts: Long) =
-    new Path(commitsDir(path), f"$cts%020d.plan")
-
-  /** Claim the next commit id by creating its inflight marker with
-    * `overwrite = false` — an EXCLUSIVE create, atomic on HDFS-like
-    * stores. Of two racing versioned writers exactly one owns each id;
-    * the loser observes the collision and claims the next id, so two
-    * batches can never land stamped with the same commit. (This
-    * serializes id allocation only — concurrent DATA commits remain
-    * excluded by the single-writer contract, see the object scaladoc.)
-    *
-    * Object-store caveat: S3A's `create(path, overwrite = false)` is a
-    * check-then-write, not an atomic exclusive create, so on S3 the
-    * claim degrades to best-effort — serialize versioned writers
-    * externally there (the reference pipeline does exactly that via its
-    * single-concurrency job setting). */
-  private[merge] def claimCommitId(spark: SparkSession, path: String): Long = {
-    fsFor(spark, path).mkdirs(commitsDir(path))
-    claimFrom(spark, path, nextCommit(spark, path))
-  }
-
-  /** Atomic exclusive create of an empty claim marker. Hadoop's local
-    * `create(path, overwrite = false)` is CHECK-THEN-TRUNCATE — two
-    * racing claimants can both pass the exists check and both
-    * "succeed" (the second truncates the first), sharing a commit id.
-    * On local filesystems go through POSIX O_EXCL (`Files.createFile`),
-    * which the kernel makes genuinely atomic; HDFS `create` is atomic
-    * at the namenode already. The S3A degradation stays as documented
-    * on [[claimCommitId]]. */
-  private def createExclusive(fs: FileSystem, p: Path): Unit = fs match {
-    case _: org.apache.hadoop.fs.LocalFileSystem |
-        _: org.apache.hadoop.fs.RawLocalFileSystem =>
-      val local = java.nio.file.Paths.get(p.toUri.getPath)
-      java.nio.file.Files.createDirectories(local.getParent)
-      java.nio.file.Files.createFile(local)
-      ()
-    case _ => fs.create(p, false).close()
-  }
-
-  /** The claim loop from a given candidate id (split out so specs can
-    * drive the collision path deterministically). A failed exclusive
-    * create counts as a collision whenever the id is provably ISSUED —
-    * its marker, recorded entry, OR rolled-back tombstone exists — not
-    * merely when the marker survives: the winning writer may complete
-    * its commit and delete its marker between our failed create and
-    * the check, and aborting then would misreport a healthy race as an
-    * IO failure. */
-  private[merge] def claimFrom(
-      spark: SparkSession, path: String, start: Long): Long = {
-    val fs = fsFor(spark, path)
-    var cts = start
-    var claimed = false
-    while (!claimed) {
-      val stem = f"$cts%020d"
-      // "retired" = this id completed (recorded) or died (tombstoned);
-      // either way it has no marker left and must never be claimed —
-      // a bare exclusive create would RESURRECT it
-      def retired = fs.exists(new Path(commitsDir(path), s"$stem.json")) ||
-        fs.exists(new Path(commitsDir(path), s"$stem.rolledback"))
-      if (retired) cts += 1
-      else {
-        val marker = inflightMarker(path, cts)
-        try {
-          createExclusive(fs, marker)
-          // a racing writer may have recorded/tombstoned this id between
-          // the check and our create (rollback drops its marker AFTER
-          // tombstoning): release the stale claim rather than keep a
-          // dead id alive
-          if (retired) {
-            fs.delete(marker, false)
-            cts += 1
-          } else claimed = true
-        } catch {
-          // a collision and a genuine IO failure both surface as plain
-          // IOException on some filesystems — any surviving trace of the
-          // id having been issued proves another writer took it
-          case e: java.io.IOException =>
-            if (fs.exists(marker) || retired) cts += 1 else throw e
-        }
-      }
-    }
-    cts
-  }
-
-  private[merge] def recordCommit(spark: SparkSession, path: String, cts: Long,
-      stats: MergeStats, files: Option[CommitResult]): Unit = {
-    val fs = fsFor(spark, path)
-    fs.mkdirs(commitsDir(path))
-    val parts = stats.partitions.sorted.mkString(",")
-    // wall_ms: the commit's RECORD wall-clock, written once here and
-    // never rewritten — what `TIMESTAMP AS OF` resolves against
-    // ([[commitAtWallClock]]). Subject to writer clock skew (documented
-    // there); commit ids stay the only ordering the engine trusts.
-    val body = s"""{"commit_ts":$cts,"n_rows":${stats.nRows},""" +
-      s""""wall_ms":${System.currentTimeMillis()},""" +
-      s""""partitions":${jsonQuote(parts)},""" +
-      s""""files_added":${jsonArray(files.map(_.added).getOrElse(Nil))},""" +
-      s""""files_removed":${jsonArray(files.map(_.removed).getOrElse(Nil))}}"""
-    // complete-or-absent (temp + rename): a commit record is the unit a
-    // CONCURRENT incremental stream tails (IncrementalStream), so a
-    // half-written record must never be observable — the dot-prefixed
-    // temp sibling is invisible to both the timeline listing and the
-    // stream's glob
-    replaceSmallFile(fs, new Path(commitsDir(path), f"$cts%020d.json"), body)
-    fs.delete(planFile(path, cts), false)
-    fs.delete(inflightMarker(path, cts), false)
-  }
 
   /** Mechanically reverse a crashed (inflight) versioned commit from
     * the plan recorded in the marker's `.plan` sibling: un-publish the
@@ -1733,13 +1552,11 @@ object Merge {
     * midway can simply be re-run. */
   def rollback(spark: SparkSession, path: String, cts: Long): Unit = {
     val fs = fsFor(spark, path)
-    val marker = inflightMarker(path, cts)
-    val recorded = new Path(commitsDir(path), f"$cts%020d.json")
-    if (fs.exists(recorded))
+    if (fs.exists(Timeline.recordFile(path, cts)))
       throw new IllegalStateException(
         s"commit $cts at $path is RECORDED — a completed commit cannot be " +
           "rolled back (incremental consumers may already depend on it)")
-    if (!fs.exists(marker))
+    if (!fs.exists(Timeline.claimFile(path, cts)))
       throw new IllegalArgumentException(
         s"no inflight commit $cts at $path — nothing to roll back")
     val tableRoot = fs.makeQualified(new Path(path))
@@ -1749,7 +1566,6 @@ object Merge {
     // (crash before the index write) = no-op; orphaned stats for the
     // restored files just mean they are key-scanned until re-indexed.
     KeyIndex.dropEntry(spark, path, cts)
-    val plan = planFile(path, cts)
     // the plan lives in the `.plan` sibling; earlier engine revisions
     // wrote it into the marker BODY itself — honor both, or a crashed
     // commit from an old-format table would be tombstoned as
@@ -1758,18 +1574,10 @@ object Merge {
     // either place = crash before the plan landed: nothing was touched
     // (the plan is written before any mutation), so only the claim
     // needs tombstoning.
-    val planSource: Option[(String, Path)] =
-      if (fs.exists(plan)) Some((readSmallFile(fs, plan), plan))
-      else Some(readSmallFile(fs, marker)).filter(_.nonEmpty).map((_, marker))
-    planSource.foreach { case (body, src) =>
-      val (added, removed, staging) =
-        try {
-          implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
-          val j = org.json4s.jackson.JsonMethods.parse(body)
-          ((j \ "files_added").extract[Seq[String]],
-            (j \ "files_removed").extract[Seq[String]],
-            (j \ "staging").extract[String])
-        } catch {
+    Timeline.planSource(fs, path, cts).foreach { case (body, src) =>
+      val Timeline.Plan(staging, added, removed) =
+        try Timeline.parsePlan(body)
+        catch {
           case e: Exception =>
             // the plan is written complete-or-absent (temp+rename), so
             // an unparseable body means external damage — name the
@@ -1780,7 +1588,7 @@ object Merge {
             // invariant). Plan sibling → delete it; legacy marker-body
             // plan → truncate the marker back to the bare claim.
             val clearStep =
-              if (src == plan) s"delete $src"
+              if (src == Timeline.planFile(path, cts)) s"delete $src"
               else s"truncate $src to empty (the bare claim — do NOT " +
                 "delete it)"
             throw new IllegalStateException(
@@ -1816,11 +1624,7 @@ object Merge {
       }
       sweepCommitScratch(fs, staging, Some(rb))
     }
-    // tombstone BEFORE dropping the plan and marker: the id stays
-    // issued through every crash window, so it can never be reused
-    writeSmallFile(fs, new Path(commitsDir(path), f"$cts%020d.rolledback"), "")
-    fs.delete(plan, false)
-    fs.delete(marker, false)
+    Timeline.tombstone(fs, path, cts)
   }
 
   /** O1 with a commit timeline: the batch is stamped with a fresh
@@ -1851,19 +1655,10 @@ object Merge {
       path: String,
       keyCols: Seq[String],
       precombine: String,
-      partitionCols: Seq[String]): Long = {
-    val cts = claimCommitId(spark, path)
-    val (stats, commit) = upsertImpl(spark,
+      partitionCols: Seq[String]): Long =
+    versioned(spark, path)(cts => upsertImpl(spark,
       batch.withColumn(commitCol, lit(cts)), path, keyCols, precombine,
-      partitionCols, needStats = true, cts = Some(cts), ordered = false)
-    recordCommit(spark, path, cts, stats, commit)
-    // the commit record is durable — only now does the scratch stop
-    // being a recovery asset: the staging sibling is swept and the
-    // retired-file copy becomes this commit's time-travel history
-    commit.foreach(c => retireToHistory(fsFor(spark, path), path, cts,
-      c.staging))
-    cts
-  }
+      partitionCols, Some(cts), ordered = false))
 
   /** [[upsertVersioned]] with ordered-payload semantics (see
     * [[upsertOrdered]]). */
@@ -1873,16 +1668,10 @@ object Merge {
       path: String,
       keyCols: Seq[String],
       precombine: String,
-      partitionCols: Seq[String]): Long = {
-    val cts = claimCommitId(spark, path)
-    val (stats, commit) = upsertImpl(spark,
+      partitionCols: Seq[String]): Long =
+    versioned(spark, path)(cts => upsertImpl(spark,
       batch.withColumn(commitCol, lit(cts)), path, keyCols, precombine,
-      partitionCols, needStats = true, cts = Some(cts), ordered = true)
-    recordCommit(spark, path, cts, stats, commit)
-    commit.foreach(c => retireToHistory(fsFor(spark, path), path, cts,
-      c.staging))
-    cts
-  }
+      partitionCols, Some(cts), ordered = true))
 
   /** Versioned delete — [[delete]] recorded as a timeline event: the
     * commit metadata names the files it rewrote or removed, and the
@@ -1897,15 +1686,9 @@ object Merge {
       keys: DataFrame,
       path: String,
       keyCols: Seq[String],
-      partitionCols: Seq[String]): Long = {
-    val cts = claimCommitId(spark, path)
-    val (stats, commit) = deleteImpl(spark, keys, path, keyCols,
-      partitionCols, cts = Some(cts))
-    recordCommit(spark, path, cts, stats, commit)
-    commit.foreach(c => retireToHistory(fsFor(spark, path), path, cts,
-      c.staging))
-    cts
-  }
+      partitionCols: Seq[String]): Long =
+    versioned(spark, path)(cts => deleteImpl(spark, keys, path, keyCols,
+      partitionCols, Some(cts)))
 
   /** The commit timeline as a DataFrame: one row per recorded commit —
     * (commit_ts, n_rows written, comma-joined sorted partition list).
@@ -1915,25 +1698,15 @@ object Merge {
     * (they version no rows); their effect is visible as rows vanishing
     * from every subsequent read. */
   def commits(spark: SparkSession, path: String): DataFrame = {
-    val schema = "commit_ts LONG, n_rows LONG, partitions STRING"
-    val fs = fsFor(spark, path)
-    // RECORDED entries only, selected by the same strict numeric-stem
-    // rule the id issuer uses (commitEntryRe): inflight markers, `.plan`
-    // siblings (which carry a commit_ts and would surface as phantom
-    // rows), rolled-back tombstones, AND foreign junk — even junk that
-    // happens to end in .json — are all non-commits. The listing is
-    // metadata-sized (one tiny file per commit), not a data scan.
-    val recorded =
-      if (!fs.exists(commitsDir(path))) Nil
-      else fs.listStatus(commitsDir(path)).toSeq.map(_.getPath)
-        .filter(_.getName match {
-          case commitEntryRe(_, "json") => true
-          case _ => false
-        })
+    // RECORDED entries only: inflight markers, `.plan` siblings (which
+    // carry a commit_ts and would surface as phantom rows), rolled-back
+    // tombstones, AND foreign junk — even junk that happens to end in
+    // .json — are all non-commits
+    val recorded = Timeline.list(spark, path).recorded
+    val reader = spark.read.schema(Timeline.recordSchema)
     if (recorded.isEmpty)
-      spark.read.schema(schema).json(spark.emptyDataset(
-        org.apache.spark.sql.Encoders.STRING))
-    else spark.read.schema(schema).json(recorded.map(_.toString): _*)
+      reader.json(spark.emptyDataset(org.apache.spark.sql.Encoders.STRING))
+    else reader.json(recorded.map(_.file.toString): _*)
   }
 
   /** Resolve a wall-clock instant to a commit id: the LATEST recorded
@@ -1942,7 +1715,7 @@ object Merge {
     * release that accepts timestamps) on this timeline. Driver-side
     * metadata read (one tiny JSON per commit), no Spark job.
     *
-    * Honesty notes, matching the [[recordCommit]] caveat: `wall_ms` is
+    * Honesty notes, matching the [[Timeline.record]] caveat: `wall_ms` is
     * the RECORDING writer's clock — multi-writer clock skew can make
     * wall-clock order disagree with commit-id order, in which case the
     * resolution still returns the max commit ID among those recorded
@@ -1953,23 +1726,9 @@ object Merge {
     * legacy commit rather than refusing. */
   def commitAtWallClock(spark: SparkSession, path: String,
       epochMs: Long): Long = {
-    val fs = fsFor(spark, path)
-    val entries =
-      if (!fs.exists(commitsDir(path))) Nil
-      else fs.listStatus(commitsDir(path)).toSeq.map(_.getPath)
-        .filter(_.getName match {
-          case commitEntryRe(_, "json") => true
-          case _ => false
-        })
-    require(entries.nonEmpty, s"no commit timeline at $path")
-    val wallRe = """"wall_ms"\s*:\s*(\d+)""".r
-    val ctsRe = """"commit_ts"\s*:\s*(\d+)""".r
-    val eligible = entries.flatMap { p =>
-      val body = readSmallFile(fs, p)
-      val cts = ctsRe.findFirstMatchIn(body).map(_.group(1).toLong)
-      val wall = wallRe.findFirstMatchIn(body).map(_.group(1).toLong)
-      cts.filter(_ => wall.forall(_ <= epochMs))
-    }
+    val records = Timeline.records(spark, path)
+    require(records.nonEmpty, s"no commit timeline at $path")
+    val eligible = records.filter(_.wallMs.forall(_ <= epochMs)).map(_.cts)
     require(eligible.nonEmpty,
       s"no commit at $path recorded at or before epoch ms $epochMs " +
         s"(earliest recorded commit is later) — use VERSION AS OF, or a " +
@@ -1981,13 +1740,8 @@ object Merge {
     * carries one (commits predating the field don't). Metadata read of
     * one tiny file. */
   def commitWallClock(spark: SparkSession, path: String,
-      cts: Long): Option[Long] = {
-    val fs = fsFor(spark, path)
-    val p = new Path(commitsDir(path), f"$cts%020d.json")
-    if (!fs.exists(p)) None
-    else """"wall_ms"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(readSmallFile(fs, p)).map(_.group(1).toLong)
-  }
+      cts: Long): Option[Long] =
+    Timeline.recordOf(spark, path, cts).flatMap(_.wallMs)
 
   /** Incremental pull: rows last written by a commit AFTER `sinceTs`
     * (Hudi incremental-query semantics — deleted rows simply stop
@@ -1998,14 +1752,8 @@ object Merge {
     * calls every trigger. None when the table has no recorded commits.
     * Same strict numeric-stem rule as [[commits]]: inflight markers,
     * `.plan` siblings, tombstones and foreign junk never count. */
-  def latestCommit(spark: SparkSession, path: String): Option[Long] = {
-    val fs = fsFor(spark, path)
-    val dir = commitsDir(path)
-    if (!fs.exists(dir)) None
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName).collect {
-      case commitEntryRe(stem, "json") => stem.toLong
-    }.maxOption
-  }
+  def latestCommit(spark: SparkSession, path: String): Option[Long] =
+    Timeline.list(spark, path).recorded.map(_.id).maxOption
 
   def readSince(spark: SparkSession, path: String, sinceTs: Long): DataFrame =
     readTable(spark, path).filter(col(commitCol) > sinceTs)
@@ -2063,7 +1811,7 @@ object Merge {
     * HDFS-like stores), then sweep the staging sibling. Pure-insert
     * commits retire nothing and leave no history dir. */
   private[merge] def retireToHistory(fs: FileSystem, path: String, cts: Long,
-      staging: String): Unit = {
+      staging: Option[String]): Unit = {
     val rb = rollbackDir(path, cts)
     if (fs.exists(rb)) {
       fs.mkdirs(historyRoot(path))
@@ -2072,7 +1820,7 @@ object Merge {
           s"[graft.merge] WARN: failed to move retired files $rb into " +
             s"history; commit $cts is not time-travelable past")
     }
-    sweepCommitScratch(fs, staging, None)
+    staging.foreach(sweepCommitScratch(fs, _, None))
   }
 
   /** Unversioned mutations (plain upsert/delete, insert, bulkInsert,
@@ -2085,8 +1833,7 @@ object Merge {
     * file written). */
   private[merge] def voidHistory(spark: SparkSession, path: String): Unit = {
     val fs = fsFor(spark, path)
-    if (!fs.exists(commitsDir(path))) return
-    val issued = listIssuedIds(spark, path)
+    val issued = Timeline.list(spark, path).issued
     if (issued.isEmpty) return
     raiseFloor(fs, path, issued.max + 1)
     val root = historyRoot(path)
@@ -2111,7 +1858,7 @@ object Merge {
     * guarantees retention, not immunity from unrecorded rewrites. */
   def savepoint(spark: SparkSession, path: String, cts: Long): Unit = {
     val fs = fsFor(spark, path)
-    require(fs.exists(new Path(commitsDir(path), f"$cts%020d.json")),
+    require(fs.exists(Timeline.recordFile(path, cts)),
       s"commit $cts is not recorded at $path — only recorded commits " +
         "can be savepointed")
     val floor = historyFloor(spark, path)
@@ -2143,31 +1890,6 @@ object Merge {
     }.sorted
   }
 
-  /** One recorded commit's file plan, parsed from its timeline entry. */
-  private[merge] final case class RecordedCommit(
-      cts: Long, added: Seq[String], removed: Seq[String])
-
-  /** Recorded commits with id > `after`, parsed from the timeline.
-    * Listing is metadata-sized; only the entries AFTER the as-of point
-    * are ever read (the stems carry the id), so a deep timeline costs
-    * nothing to travel near its head. */
-  private[merge] def recordedCommitsAfter(spark: SparkSession, path: String,
-      after: Long): Seq[RecordedCommit] = {
-    val fs = fsFor(spark, path)
-    val dir = commitsDir(path)
-    if (!fs.exists(dir)) return Nil
-    implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
-    fs.listStatus(dir).toSeq.map(_.getPath).flatMap { p =>
-      p.getName match {
-        case commitEntryRe(id, "json") if id.toLong > after =>
-          val j = org.json4s.jackson.JsonMethods.parse(readSmallFile(fs, p))
-          Some(RecordedCommit(id.toLong,
-            (j \ "files_added").extractOrElse[Seq[String]](Nil),
-            (j \ "files_removed").extractOrElse[Seq[String]](Nil)))
-        case _ => None
-      }
-    }.sortBy(_.cts)
-  }
 
   /** Time-travel read: the table exactly as of commit `asOf` (the
     * state AFTER that commit landed). Pure metadata reconstruction —
@@ -2205,7 +1927,7 @@ object Merge {
       asOf: Long, initial: Seq[String]): Map[String, Option[Long]] = {
     var files: Map[String, Option[Long]] =
       initial.map(_ -> (None: Option[Long])).toMap
-    recordedCommitsAfter(spark, path, asOf).sortBy(-_.cts).foreach { c =>
+    Timeline.records(spark, path, asOf).reverse.foreach { c =>
       files = files -- c.added
       files ++= c.removed.map(_ -> (Some(c.cts): Option[Long]))
     }
@@ -2311,7 +2033,7 @@ object Merge {
           "by an unversioned mutation — see readAsOf)")
     val fs = fsFor(spark, path)
     val tableRoot = fs.makeQualified(new Path(path))
-    val all = recordedCommitsAfter(spark, path, afterTs)
+    val all = Timeline.records(spark, path, afterTs)
     val inRange = all.filter(_.cts <= untilTs)
     val schema = readSchemaMeta(spark, path).getOrElse(
       readTable(spark, path).schema)
@@ -2448,7 +2170,7 @@ object Merge {
           "(see readAsOf — the revert range is no longer reconstructable)")
     val fs = fsFor(spark, path)
     val tableRoot = fs.makeQualified(new Path(path))
-    val later = recordedCommitsAfter(spark, path, toTs).sortBy(-_.cts)
+    val later = Timeline.records(spark, path, toTs).reverse
     // pre-validate the WHOLE range before any mutation: missing history
     // or a still-inflight commit must abort a zero-file-touched restore
     later.filter(_.removed.nonEmpty).foreach { c =>
@@ -2457,8 +2179,8 @@ object Merge {
           s"cannot restore $path to commit $toTs: commit ${c.cts}'s " +
             s"retired files are missing from ${historyDir(path, c.cts)}")
     }
-    listIssuedIds(spark, path).filter(_ > toTs).foreach { id =>
-      if (fs.exists(inflightMarker(path, id)))
+    Timeline.list(spark, path).issued.filter(_ > toTs).foreach { id =>
+      if (fs.exists(Timeline.claimFile(path, id)))
         throw new IllegalStateException(
           s"cannot restore $path to commit $toTs: commit $id is still " +
             s"inflight — rollback(path, $id) it first")
@@ -2485,11 +2207,7 @@ object Merge {
       }
       // the reverted commit's index entry points at files just removed
       KeyIndex.dropEntry(spark, path, c.cts)
-      // tombstone BEFORE dropping the record: the id stays issued
-      // through every crash window (same order rollback uses)
-      writeSmallFile(fs,
-        new Path(commitsDir(path), f"${c.cts}%020d.rolledback"), "")
-      fs.delete(new Path(commitsDir(path), f"${c.cts}%020d.json"), false)
+      Timeline.tombstone(fs, path, c.cts)
       if (fs.exists(h)) fs.delete(h, true) // drained above; drop the husk
     }
   }
@@ -2504,11 +2222,7 @@ object Merge {
   def clean(spark: SparkSession, path: String, retainLast: Int): Long = {
     require(retainLast >= 1, "retainLast must be >= 1")
     val fs = fsFor(spark, path)
-    val dir = commitsDir(path)
-    if (!fs.exists(dir)) return 0L
-    val recorded = fs.listStatus(dir).toSeq.map(_.getPath.getName).collect {
-      case commitEntryRe(id, "json") => id.toLong
-    }.sorted
+    val recorded = Timeline.list(spark, path).recorded.map(_.id).sorted
     if (recorded.size <= retainLast) return 0L
     // a savepoint caps the floor: clean retains AT LEAST the retention
     // window, and never sweeps a pinned snapshot

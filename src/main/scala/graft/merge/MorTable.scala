@@ -1,7 +1,7 @@
 package graft.merge
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, DataType}
@@ -229,17 +229,18 @@ object MorTable {
       s"MOR spec mismatch at $path: table is $stored, caller passed $sp")
     val scoped = keyCols ++ partitionCols
     val deduped = Merge.precombineDedup(batch, scoped, precombine)
-    val cts = Merge.claimCommitId(spark, path)
-    val stamped = deduped.withColumn(Merge.commitCol, lit(cts))
-    // widen the recorded schema BEFORE aligning, so a new column in
-    // this batch survives the alignment and old rows null-fill
-    Merge.updateSchemaMeta(spark, path, stamped.schema)
-    val target = targetSchema(spark, path)
-    val body = Merge.alignTo(stamped, target)
-      .withColumn(deletedCol, lit(false))
-    publishDeltas(spark, path, body, stored, cts,
-      Merge.touchedPartitions(deduped, partitionCols)
-        .map(Merge.renderPartition))
+    Merge.versioned(spark, path) { cts =>
+      val stamped = deduped.withColumn(Merge.commitCol, lit(cts))
+      // widen the recorded schema BEFORE aligning, so a new column in
+      // this batch survives the alignment and old rows null-fill
+      Merge.updateSchemaMeta(spark, path, stamped.schema)
+      val target = targetSchema(spark, path)
+      val body = Merge.alignTo(stamped, target)
+        .withColumn(deletedCol, lit(false))
+      publishDeltas(spark, path, body, stored, cts,
+        Merge.touchedPartitions(deduped, partitionCols)
+          .map(Merge.renderPartition))
+    }
   }
 
   /** [[upsert]] over a single-column partition layout. */
@@ -272,13 +273,14 @@ object MorTable {
           keys.select((scoped :+ sp.precombine).map(col): _*),
           scoped, sp.precombine)
       else keys.select(scoped.map(col): _*).distinct()
-    val cts = Merge.claimCommitId(spark, path)
-    val target = targetSchema(spark, path)
-    val body = Merge.alignTo(k.withColumn(Merge.commitCol, lit(cts)), target)
-      .withColumn(deletedCol, lit(true))
-    publishDeltas(spark, path, body, sp, cts,
-      Merge.touchedPartitions(k, sp.partitionCols)
-        .map(Merge.renderPartition))
+    Merge.versioned(spark, path) { cts =>
+      val target = targetSchema(spark, path)
+      val body = Merge.alignTo(k.withColumn(Merge.commitCol, lit(cts)),
+        target).withColumn(deletedCol, lit(true))
+      publishDeltas(spark, path, body, sp, cts,
+        Merge.touchedPartitions(k, sp.partitionCols)
+          .map(Merge.renderPartition))
+    }
   }
 
   /** Recorded schema as (name, type) pairs — always includes
@@ -292,63 +294,30 @@ object MorTable {
     s.fields.map(f => (f.name, f.dataType)).toSeq
   }
 
-  /** Stage → plan → publish → record, the delta-path instance of the
-    * [[Merge.commitFiles]] discipline. The staged file names are final,
-    * so the plan (added under `_graft_deltas/`, nothing removed) is
-    * known before any mutation and [[Merge.rollback]] can reverse any
-    * crash window; the timeline record is the commit point — until it
-    * lands, [[read]]'s recorded-id filter keeps the rows invisible. */
+  /** Stage → plan → publish, the delta-path instance of the
+    * [[Merge.commitFiles]] discipline, run inside the
+    * [[Merge.versioned]] envelope (which records the commit). The
+    * staged file names are final, so the plan (added under
+    * `_graft_deltas/`, nothing removed) is known before any mutation
+    * and [[Merge.rollback]] can reverse any crash window; the timeline
+    * record is the commit point — until it lands, [[read]]'s
+    * recorded-id filter keeps the rows invisible. A delta publish is a
+    * pure ADD in the recorded plan — the as-of replay sees through it,
+    * so history stays valid (no voiding). */
   private def publishDeltas(
       spark: SparkSession,
       path: String,
       body: DataFrame,
       sp: MorSpec,
       cts: Long,
-      partsRendered: Seq[String]): Long = {
-    val fs = Merge.fsFor(spark, path)
-    val staging = path.stripSuffix("/") + s"_mor_staging_${System.nanoTime()}"
+      partsRendered: Seq[String])
+      : (Merge.MergeStats, Option[Merge.CommitResult]) = {
     val obs = org.apache.spark.sql.Observation()
-    body.observe(obs, count(lit(1)).as("n"))
-      .write.partitionBy(sp.partitionCols: _*)
-      .mode(SaveMode.Overwrite).parquet(staging)
-    val stagingRoot = fs.makeQualified(new Path(staging))
-    val tableRoot = fs.makeQualified(new Path(path))
-    val dRoot = new Path(tableRoot, deltaRel)
-    val moves = Merge.listDataStatuses(fs, stagingRoot).map { st =>
-      (st.getPath,
-        new Path(dRoot, Merge.relativize(stagingRoot, st.getPath)))
-    }
-    val added = moves.map { case (_, d) => Merge.relativize(tableRoot, d) }
-    val planBody = s"""{"commit_ts":$cts,""" +
-      s""""staging":${Merge.jsonQuote(staging)},""" +
-      s""""files_added":${Merge.jsonArray(added)},"files_removed":[]}"""
-    Merge.replaceSmallFile(fs, Merge.planFile(path, cts), planBody)
-    moves.foreach { case (src, dest) =>
-      fs.mkdirs(dest.getParent)
-      if (!fs.rename(src, dest))
-        throw new java.io.IOException(
-          s"MOR delta publish: failed to move $src to $dest")
-    }
-    val n = obs.get("n").asInstanceOf[Long]
-    Merge.recordCommit(spark, path, cts,
-      Merge.MergeStats(n, partsRendered),
-      Some(Merge.CommitResult(added, Nil, staging)))
-    Merge.sweepCommitScratch(fs, staging, None)
-    // a delta publish is a pure ADD in the recorded plan — the as-of
-    // replay sees through it, so history stays valid (no voiding)
-    cts
-  }
-
-  /** Commit ids that were ISSUED but never recorded (inflight markers
-    * and rollback tombstones). Metadata-sized listing; these are the
-    * ids whose delta rows must never surface. */
-  private[merge] def unrecordedIds(spark: SparkSession, path: String): Seq[Long] = {
-    val fs = Merge.fsFor(spark, path)
-    val dir = Merge.commitsDirPath(path)
-    if (!fs.exists(dir)) Nil
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName).collect {
-      case Merge.commitEntryRe(id, ext) if ext != "json" => id.toLong
-    }
+    val staged = Merge.stage(spark, body.observe(obs, count(lit(1)).as("n")),
+      path, sp.partitionCols, "_mor_staging_", deltaRel, Some(cts), Nil)
+    Merge.publish(Merge.fsFor(spark, path), staged.moves)
+    (Merge.MergeStats(obs.get("n").asInstanceOf[Long], partsRendered),
+      Some(Merge.CommitResult(staged.added, Nil, Some(staged.staging))))
   }
 
   /** Snapshot view (Hudi `_rt`): base ∪ live deltas, one per-key argmax
@@ -374,7 +343,7 @@ object MorTable {
         org.apache.spark.sql.types.StructField(deletedCol, BooleanType))
     val rawDeltas = spark.read.schema(deltaSchema)
       .option("basePath", dRoot.toString).parquet(dRoot.toString)
-    val bad = unrecordedIds(spark, path)
+    val bad = Timeline.list(spark, path).unrecorded
     val deltas =
       if (bad.isEmpty) rawDeltas
       else rawDeltas.filter(!col(Merge.commitCol).isin(bad: _*))
@@ -456,7 +425,7 @@ object MorTable {
       }.reduce(_.unionByName(_))
     // defensive row filters on top of the file replay: crash residue
     // (unrecorded ids) and any rows stamped past the as-of point
-    val bad = unrecordedIds(spark, path)
+    val bad = Timeline.list(spark, path).unrecorded
     val deltas = deltas0.filter(col(Merge.commitCol) <= asOf &&
       (if (bad.isEmpty) lit(true) else !col(Merge.commitCol).isin(bad: _*)))
     mergeSnapshot(base, deltas, sp, target)
@@ -501,7 +470,7 @@ object MorTable {
         org.apache.spark.sql.types.StructField(deletedCol, BooleanType))
     val rawDeltas = spark.read.schema(deltaSchema)
       .option("basePath", dRoot.toString).parquet(dRoot.toString)
-    val bad = unrecordedIds(spark, path)
+    val bad = Timeline.list(spark, path).unrecorded
     val deltas =
       if (bad.isEmpty) rawDeltas
       else rawDeltas.filter(!col(Merge.commitCol).isin(bad: _*))
@@ -534,14 +503,13 @@ object MorTable {
     val superseded = touchedDirs
       .flatMap(d => Merge.listDataStatuses(fs, new Path(tableRoot, d)))
       .map(_.getPath.toString) ++ deltaFiles.map(_.getPath.toString)
-    val cts = Merge.claimCommitId(spark, path)
-    val res = Merge.commitFiles(spark, merged, path, sp.partitionCols,
-      superseded, touched, dropEmptied = true, Some(cts))
-    // compaction owns no rows (stamps pass through) — n_rows 0, like a
-    // delete commit
-    Merge.recordCommit(spark, path, cts,
-      Merge.MergeStats(0L, touched.map(Merge.renderPartition)), Some(res))
-    Merge.retireToHistory(fs, path, cts, res.staging)
+    Merge.versioned(spark, path) { cts =>
+      // compaction owns no rows (stamps pass through) — n_rows 0, like
+      // a delete commit
+      (Merge.MergeStats(0L, touched.map(Merge.renderPartition)),
+        Some(Merge.commitFiles(spark, merged, path, sp.partitionCols,
+          superseded, touched, dropEmptied = true, Some(cts))))
+    }
     // the retires left empty delta hive dirs behind — cosmetic sweep
     deltaFiles.foreach { st =>
       Merge.dropEmptiedDirs(fs, st.getPath.getParent,

@@ -82,39 +82,51 @@ object IngestDedup {
       .agg(min(col("_cid")).as("dup_of"),
         countDistinct(col("_cid")).as("n_matches"))
 
-  /** True iff partition `ingest_batch=b` of `table` is already
-    * registered — the landed-replay probe, answered from the session
-    * catalog's partition metadata (what the pruned scan consulted
-    * anyway) with NO Spark job; the chains run one probe per ingest
-    * and each `isEmpty` probe cost a scheduled job's latency. */
+  /** True iff partition `ingest_batch=b` of `table` already landed —
+    * the landed-replay probe. A table that tracks its partitions in
+    * the catalog answers from the catalog's partition metadata (what
+    * the pruned scan consults anyway) with NO Spark job; the chains run
+    * one probe per ingest and each data probe costs a scheduled job's
+    * latency. A table that does not (`manageFilesourcePartitions`
+    * off) registers no partitions at all, so the partition-pruned data
+    * probe answers instead. */
   private def partitionLanded(spark: SparkSession, table: String,
-      b: Int): Boolean =
-    spark.sessionState.catalog
-      .listPartitionNames(
-        org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .contains(s"ingest_batch=$b")
-
-  /** Append ingest `b`'s bands to the bucketed state table, SKIPPING
-    * when partition ingest_batch=b already landed (a replayed
-    * micro-batch must not double-append). Returns whether the append
-    * ran. The landed check is catalog metadata ([[partitionLanded]]). */
-  private[pipeline] def appendBands(bands: DataFrame, table: String,
       b: Int): Boolean = {
-    val spark = bands.sparkSession
+    val id = org.apache.spark.sql.catalyst.TableIdentifier(table)
+    val catalog = spark.sessionState.catalog
+    if (catalog.getTableMetadata(id).tracksPartitionsInCatalog)
+      catalog.listPartitionNames(id).contains(s"ingest_batch=$b")
+    else !spark.table(table).where(col("ingest_batch") === b).isEmpty
+  }
+
+  /** Append ingest `b`'s rows to a state table partitioned by
+    * `ingest_batch` and bucketed (and sorted) on `keys`, SKIPPING when
+    * partition ingest_batch=b already landed ([[partitionLanded]]) — a
+    * replayed micro-batch must not double-append. Returns whether the
+    * append ran. */
+  private def appendOnce(rows: DataFrame, table: String, b: Int,
+      buckets: Int, keys: Seq[String]): Boolean = {
+    val spark = rows.sparkSession
     val exists = spark.catalog.tableExists(table)
     if (exists && partitionLanded(spark, table, b)) false
     else {
-      bands.withColumn("ingest_batch", lit(b))
+      rows.withColumn("ingest_batch", lit(b))
         .write
         .partitionBy("ingest_batch")
-        .bucketBy(stateBuckets, "band", "bkey")
-        .sortBy("band", "bkey")
+        .bucketBy(buckets, keys.head, keys.tail: _*)
+        .sortBy(keys.head, keys.tail: _*)
         .mode(if (exists) SaveMode.Append else SaveMode.ErrorIfExists)
         .format("parquet")
         .saveAsTable(table)
       true
     }
   }
+
+  /** Append ingest `b`'s bands to the band-state table, bucketed on the
+    * screen's join key (band, bkey). */
+  private[pipeline] def appendBands(bands: DataFrame, table: String,
+      b: Int): Boolean =
+    appendOnce(bands, table, b, stateBuckets, Seq("band", "bkey"))
 
   /** One complete ingest — the unit BOTH the batch chain and the
     * streaming loop run, so batch/stream parity holds by construction:
@@ -435,22 +447,8 @@ object IngestDedup {
     * rank 1), and the landed-partition skip keeps replays from
     * double-appending. Returns whether the append ran. */
   private[pipeline] def appendGrams(newGrams: DataFrame, table: String,
-      b: Int): Boolean = {
-    val spark = newGrams.sparkSession
-    val exists = spark.catalog.tableExists(table)
-    if (exists && partitionLanded(spark, table, b)) false
-    else {
-      newGrams.withColumn("ingest_batch", lit(b))
-        .write
-        .partitionBy("ingest_batch")
-        .bucketBy(gramBuckets, "g")
-        .sortBy("g")
-        .mode(if (exists) SaveMode.Append else SaveMode.ErrorIfExists)
-        .format("parquet")
-        .saveAsTable(table)
-      true
-    }
-  }
+      b: Int): Boolean =
+    appendOnce(newGrams, table, b, gramBuckets, Seq("g"))
 
   /** Per-batch flag dirs folded into one ordered relation with the
     * given columns — shared by the report and scrub collectors. */

@@ -273,7 +273,7 @@ object TextAnalysis {
     * and partial sketches merge by cell-wise addition — precisely one
     * groupBy shuffle on (row, bucket), a fixed depth×width cells
     * regardless of corpus size. */
-  def countMinSketch(docs: DataFrame, idCol: String, textCol: String,
+  def countMinSketch(docs: DataFrame, textCol: String,
       depth: Int = 4, width: Int = 1024): DataFrame = {
     val tok = docs
       .select(explode(tokens(col(textCol))).as("tok"))
@@ -722,7 +722,7 @@ object TextAnalysis {
         budget = 512, strataCol = "lang", buckets = 8)
         .orderBy("lang", "doc_id")),
     "t10_countmin" -> ((s, dir) =>
-      countMinSketch(Tables.documents(s, dir), "doc_id", "text")
+      countMinSketch(Tables.documents(s, dir), "text")
         .orderBy("d", "bucket")),
     "t14_span_scrub" -> ((s, dir) =>
       scrubDuplicateSpans(Tables.documents(s, dir), "doc_id", "text",

@@ -288,7 +288,7 @@ class IncrementalStreamSpec extends SparkSpec {
     Merge.upsertVersioned(spark, rows(0 until 5, "a", "v1"), path,
       keyCols, "v", "part")
     // claim id 2, crash before any plan lands, roll it back
-    assert(Merge.claimCommitId(spark, path) === 2L)
+    assert(Timeline.claim(spark, path) === 2L)
     Merge.rollback(spark, path, 2L)
     Merge.upsertVersioned(spark, rows(5 until 9, "a", "v2"), path,
       keyCols, "v", "part")

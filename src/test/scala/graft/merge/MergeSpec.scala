@@ -553,7 +553,7 @@ class MergeSpec extends SparkSpec {
     // replaying commitFiles' own mechanical steps: claim the id, record
     // the plan, retire a superseded file into the rollback dir, land
     // one of two replacement files, leave the other in staging
-    assert(Merge.claimCommitId(spark, path) === 3L)
+    assert(Timeline.claim(spark, path) === 3L)
     val retired = snapshot.keys.find(_.startsWith("pair=ADAGBP/")).get
     val rbDir = s"$path/_graft_rollback/00000000000000000003"
     new java.io.File(s"$rbDir/pair=ADAGBP").mkdirs()
@@ -599,7 +599,7 @@ class MergeSpec extends SparkSpec {
     intercept[IllegalArgumentException](Merge.rollback(spark, path, 9L))
     // a claim that crashed before its plan landed touched nothing:
     // rollback only tombstones the id
-    assert(Merge.claimCommitId(spark, path) === 2L)
+    assert(Timeline.claim(spark, path) === 2L)
     val before = tableState(path)
     Merge.rollback(spark, path, 2L)
     assert(tableState(path) === before)
@@ -612,7 +612,7 @@ class MergeSpec extends SparkSpec {
     val path = tmpDir("rollcorrupt")
     Merge.upsertVersioned(spark, tx(("T1", "c1", "ADAGBP", 1.0)),
       path, keyCols, "price", "pair")
-    assert(Merge.claimCommitId(spark, path) === 2L)
+    assert(Timeline.claim(spark, path) === 2L)
     java.nio.file.Files.writeString(
       commitsFile(path, "00000000000000000002.plan").toPath,
       """{"commit_ts":2,"staging":""") // truncated mid-write
@@ -632,7 +632,7 @@ class MergeSpec extends SparkSpec {
     // legacy-format corruption: the plan IS the marker body, so the
     // remedy must warn against deleting the marker (the id's last
     // issued-trace) and direct truncation instead
-    assert(Merge.claimCommitId(spark, path) === 3L)
+    assert(Timeline.claim(spark, path) === 3L)
     // the claim went through Hadoop's checksummed local FS; raw writes
     // below bypass it, so drop the stale .crc sibling or reads fail on
     // the checksum, not the corruption under test
@@ -663,7 +663,7 @@ class MergeSpec extends SparkSpec {
     // the claim loop walks the collision chain: 2 collides, 3 is
     // tombstoned (nextCommit skips it, but claimFrom starting AT it
     // must too — the create itself succeeds only for unissued stems)
-    assert(Merge.claimFrom(spark, path, 2L) === 4L)
+    assert(Timeline.claimFrom(spark, path, 2L) === 4L)
     assert(commitsFile(path, "00000000000000000004.inflight").exists())
   }
 
@@ -719,7 +719,7 @@ class MergeSpec extends SparkSpec {
     val path = tmpDir("rollfirst") + "/table"
     // the very first versioned commit crashes mid-publish: one file (and
     // its partition dir) landed, the plan is recorded, nothing to retire
-    assert(Merge.claimCommitId(spark, path) === 1L)
+    assert(Timeline.claim(spark, path) === 1L)
     val published = "pair=ADAGBP/part-00000-crash.c000.snappy.parquet"
     new java.io.File(s"$path/pair=ADAGBP").mkdirs()
     java.nio.file.Files.writeString(
@@ -805,7 +805,7 @@ class MergeSpec extends SparkSpec {
 
   test("claim ids stay unique under a many-way race from one candidate") {
     val path = tmpDir("claimrace") + "/table"
-    Merge.fsFor(spark, path).mkdirs(Merge.commitsDirPath(path))
+    Merge.fsFor(spark, path).mkdirs(Timeline.dir(path))
     // 16 claimants all starting at candidate 1 — maximal contention on
     // the exclusive create; every id must be claimed by exactly one
     // (this is the test that catches a check-then-truncate "exclusive"
@@ -814,7 +814,7 @@ class MergeSpec extends SparkSpec {
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
     val ids = Await.result(Future.sequence(
-      (1 to 16).toList.map(_ => Future(Merge.claimFrom(spark, path, 1L)))),
+      (1 to 16).toList.map(_ => Future(Timeline.claimFrom(spark, path, 1L)))),
       120.seconds)
     assert(ids.distinct.size === 16, s"shared ids in ${ids.sorted}")
     assert(ids.sorted === (1L to 16L).toList)

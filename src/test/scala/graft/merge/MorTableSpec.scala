@@ -137,7 +137,7 @@ class MorTableSpec extends SparkSpec {
     // simulate a writer that crashed after publishing delta files but
     // before the timeline record: claim an id (marker stays), drop a
     // stamped delta file in place, never record
-    val cts = Merge.claimCommitId(spark, path)
+    val cts = Timeline.claim(spark, path)
     tx(("T1", "c1", "ADAGBP", 666.0))
       .withColumn(Merge.commitCol, lit(cts))
       .withColumn(MorTable.deletedCol, lit(false))

@@ -428,7 +428,7 @@ class TimeTravelSpec extends SparkSpec {
     val path = tmpDir("ttrestore3") + "/table"
     val (_, c2, _) = build3(path)
     // simulate a crashed writer holding commit 4 inflight
-    val claimed = Merge.claimCommitId(spark, path)
+    val claimed = Timeline.claim(spark, path)
     val e = intercept[IllegalStateException](Merge.restoreTo(spark, path, c2))
     assert(e.getMessage.contains("inflight"))
     Merge.rollback(spark, path, claimed)

@@ -384,4 +384,48 @@ class IngestDedupSpec extends SparkSpec {
       }
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
   }
+
+  test("replayed ingests do not double-append when the catalog does not " +
+      "track partitions") {
+    import graft.scale.Scale
+    val conf = "spark.sql.hive.manageFilesourcePartitions"
+    val prev = spark.conf.getOption(conf)
+    spark.conf.set(conf, "false")
+    try {
+      val bands = "test_p08_untracked"
+      val grams = "test_p10_untracked"
+      Scale.dropBucketedTable(spark, bands)
+      Scale.dropBucketedTable(spark, grams)
+      val flags = graft.util.Scratch.fresh("graft_untracked_") + "/flags"
+      IngestDedup.ingestStep(docs.filter(col("doc_id") % 2 === 0),
+        "doc_id", "text", bands, s"$flags/bands", 0)
+      IngestDedup.spanStep(spanDocs.filter(col("doc_id") % 2 === 0),
+        "doc_id", "text", grams, s"$flags/grams", 0, 8)
+      // the premise: these tables keep no partitions in the catalog
+      Seq(bands, grams).foreach { t =>
+        assert(!spark.sessionState.catalog.getTableMetadata(
+          org.apache.spark.sql.catalyst.TableIdentifier(t))
+          .tracksPartitionsInCatalog)
+      }
+      def count(t: String) =
+        spark.table(t).where(col("ingest_batch") === 1).count()
+      IngestDedup.ingestStep(docs.filter(col("doc_id") % 2 === 1),
+        "doc_id", "text", bands, s"$flags/bands", 1)
+      IngestDedup.spanStep(spanDocs.filter(col("doc_id") % 2 === 1),
+        "doc_id", "text", grams, s"$flags/grams", 1, 8)
+      val once = (count(bands), count(grams))
+      assert(once._1 > 0 && once._2 > 0, "batch 1 appended nothing")
+      // replay batch 1 twice — at-least-once delivery
+      (1 to 2).foreach { _ =>
+        IngestDedup.ingestStep(docs.filter(col("doc_id") % 2 === 1),
+          "doc_id", "text", bands, s"$flags/bands", 1)
+        IngestDedup.spanStep(spanDocs.filter(col("doc_id") % 2 === 1),
+          "doc_id", "text", grams, s"$flags/grams", 1, 8)
+      }
+      assert((count(bands), count(grams)) === once)
+    } finally prev match {
+      case Some(v) => spark.conf.set(conf, v)
+      case None => spark.conf.unset(conf)
+    }
+  }
 }

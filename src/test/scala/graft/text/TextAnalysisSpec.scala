@@ -114,7 +114,7 @@ class TextAnalysisSpec extends SparkSpec {
       (1L, "alpha alpha alpha beta gamma"),
       (2L, "alpha beta delta delta"),
       (3L, "epsilon zeta eta theta")).toDF("doc_id", "text")
-    val sketch = TextAnalysis.countMinSketch(docs, "doc_id", "text")
+    val sketch = TextAnalysis.countMinSketch(docs, "text")
       .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
     val exact = Map("alpha" -> 4L, "beta" -> 2L, "delta" -> 2L,
       "gamma" -> 1L, "zeta" -> 1L)
