@@ -113,7 +113,7 @@ object LoadTransactions {
     val loc = tablePath.replace("'", "''")
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
     spark.sql(s"DROP TABLE IF EXISTS $qualified")
-    Merge.recordedSchema(spark, tablePath) match {
+    graft.merge.TableState.load(spark, tablePath).schema match {
       case Some(s) if s.fieldNames.contains(partitionCol) =>
         val dataCols = s.fields.filterNot(_.name == partitionCol)
           .map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")

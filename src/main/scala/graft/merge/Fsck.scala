@@ -6,7 +6,9 @@ import org.apache.spark.sql.SparkSession
 /** Read-only table integrity REPORT — the `graft_fsck` procedure's
   * engine (Delta's `FSCK`/Hudi's `metadata validate` shape, scoped to
   * what this format can actually get wrong). One row per check,
-  * `(check_name, status, detail)`, statuses `ok` / `warn` / `skip`.
+  * `(check_name, status, detail)`, statuses `ok` / `warn` / `skip` /
+  * `fail` (a metadata file the table cannot be read without is
+  * unreadable).
   * Strictly metadata-priced: directory listings, timeline entries, the
   * key/schema/savepoint records, and parquet FOOTERS — never a data
   * scan, so an operator can fsck a 100 TB table for pennies. Strictly
@@ -23,13 +25,15 @@ import org.apache.spark.sql.SparkSession
   *    `_graft_commits/`. An `.inflight` marker is an issued id whose
   *    commit never recorded — rollback's target; foreign entries are
   *    non-timeline junk the id issuer ignores.
-  *  - `key_spec`: the recorded `_graft_keys.json` every keyed write
+  *  - `key_spec`: the key spec ([[TableState]]) every keyed write
   *    lands (procedures derive partition/key columns from it).
   *  - `schema_meta`: the recorded logical schema (what lets evolved
   *    tables read old files null-filled).
   *  - `savepoints`: every pin references a recorded commit id.
   *  - `mor_deltas`: on MOR, live delta files and UNRECORDED delta ids
-  *    (crash residue the snapshot read filters; compaction clears).
+  *    (crash residue the snapshot read filters; compaction clears);
+  *    `fail` when the MOR spec is unreadable (every MOR read and write
+  *    refuses until it is repaired).
   *  - `footer_row_count`: the table's exact footer-summed row count —
   *    informational on COW (the driver oracle cross-checks it against
   *    the relational count), `skip` on a MOR table with live deltas
@@ -59,15 +63,15 @@ object Fsck {
       if (inflight == 0 && foreign == 0) "ok" else "warn",
       s"recorded=${recordedIds.size} inflight=$inflight foreign=$foreign")
 
-    val spec = KeyIndex.readSpec(spark, path)
-    val keySpec = spec match {
+    val (st, corruptMor) = TableState.loadChecked(spark, path)
+    val keySpec = st.keySpec match {
       case Some(sp) => ("key_spec", "ok",
         s"partition=${sp.partitionCols.mkString(",")} " +
           s"keys=${sp.keyCols.mkString(",")}")
       case None => ("key_spec", "warn", "absent — no keyed write recorded")
     }
 
-    val schemaMeta = Merge.recordedSchema(spark, path) match {
+    val schemaMeta = st.schema match {
       case Some(_) => ("schema_meta", "ok", "recorded")
       case None => ("schema_meta", "warn", "absent")
     }
@@ -79,17 +83,21 @@ object Fsck {
       s"pinned=${sps.size} unrecorded=${unrecordedSps.size}")
 
     val mor =
-      if (!MorTable.isMor(spark, path)) ("mor_deltas", "ok", "cow table")
+      if (corruptMor.nonEmpty)
+        ("mor_deltas", "fail", corruptMor.get.getMessage)
+      else if (st.mor.isEmpty) ("mor_deltas", "ok", "cow table")
       else {
-        val live = Merge.listDataStatuses(fs,
-          MorTable.deltaRoot(spark, path)).size
+        val live = MorTable.liveDeltas(st).size
         val unrecorded = listing.unrecorded.size
         ("mor_deltas", if (unrecorded == 0) "ok" else "warn",
           s"live=$live unrecorded=$unrecorded")
       }
 
     val footer =
-      if (MorTable.hasLiveDeltas(spark, path))
+      if (corruptMor.nonEmpty)
+        ("footer_row_count", "skip",
+          "unreadable MOR spec — base footers may be incomplete")
+      else if (MorTable.liveDeltas(st).nonEmpty)
         ("footer_row_count", "skip",
           "mor with live deltas — base footers incomplete")
       else {

@@ -250,10 +250,8 @@ object IncrementalStream {
           // delta files — pull increments from the SNAPSHOT view there
           // (winners stamped by their last writer, same ownership
           // contract), or a delta commit's rows would never stream
-          val source =
-            if (MorTable.isMor(spark, path)) MorTable.read(spark, path)
-            else Merge.readTable(spark, path)
-          val rows = source.filter(col(Merge.commitCol).isin(ids: _*))
+          val rows = Merge.readState(spark, TableState.load(spark, path),
+            None).filter(col(Merge.commitCol).isin(ids: _*))
           f(rows, ids, batchId)
         }
       }

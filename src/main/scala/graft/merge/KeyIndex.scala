@@ -8,8 +8,8 @@ import org.apache.spark.sql.types.StructType
 import graft.functions.{BloomBits, BloomFunctions}
 
 /** The record-key columns a merge table is keyed by — recorded once in
-  * `_graft_keys.json` (Hudi's `hoodie.properties` record-key config
-  * analogue) so table services that don't take key arguments
+  * the table state ([[TableState]]; Hudi's `hoodie.properties` record-key
+  * config analogue) so table services that don't take key arguments
   * (compaction, clustering) can still maintain the key index. */
 case class KeySpec(keyCols: Seq[String], partitionCols: Seq[String]) {
   def scoped: Seq[String] = keyCols ++ partitionCols
@@ -65,7 +65,6 @@ case class KeySpec(keyCols: Seq[String], partitionCols: Seq[String]) {
   */
 object KeyIndex {
 
-  private def keysPath(path: String) = new Path(path, "_graft_keys.json")
   private def indexDir(path: String) = new Path(path, "_graft_index")
 
   private val entrySchema =
@@ -94,9 +93,6 @@ object KeyIndex {
     * winning, and keeps winning by more as partitions grow to TBs. */
   val minBytesToProbe: Long = 4L << 30
 
-  private def gatesPath(path: String) =
-    new Path(path, "_graft_index_gates.json")
-
   /** Record PER-TABLE probe/build gate overrides. The constants
     * above are defaults; a table whose indexing economics are known —
     * a hot dimension point-looked-up constantly (gates 0/0: always
@@ -106,92 +102,41 @@ object KeyIndex {
     * to force the index arms at toy scale — a per-table policy cannot
     * leak into a concurrently running merge on another table. */
   def setProbeGates(spark: SparkSession, path: String,
-      minFiles: Int, minBytes: Long): Unit = {
-    val fs = Merge.fsFor(spark, path)
-    Merge.replaceSmallFile(fs, gatesPath(path),
-      s"""{"min_files_to_probe":$minFiles,""" +
-        s""""min_bytes_to_probe":$minBytes}""")
-  }
-
-  /** Effective (minFiles, minBytes) gates for `path`: the table's
-    * recorded override when present and readable, else the defaults.
-    * Unreadable override ⇒ defaults + a warning (the index
-    * is advisory; policy metadata must never fail an operation). */
-  private[merge] def gatesFor(spark: SparkSession, path: String)
-      : (Int, Long) = {
-    val fs = Merge.fsFor(spark, path)
-    val p = gatesPath(path)
-    if (!fs.exists(p)) (minFilesToProbe, minBytesToProbe)
-    else try {
-      implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
-      val j = org.json4s.jackson.JsonMethods.parse(Merge.readSmallFile(fs, p))
-      ((j \ "min_files_to_probe").extract[Int],
-        (j \ "min_bytes_to_probe").extract[Long])
-    } catch {
-      case e: Exception =>
-        System.err.println(s"[graft.merge] WARN: unreadable index gate " +
-          s"override at $p (${e.getMessage}); using the defaults")
-        (minFilesToProbe, minBytesToProbe)
-    }
-  }
-
-  def readSpec(spark: SparkSession, path: String): Option[KeySpec] = {
-    val fs = Merge.fsFor(spark, path)
-    val p = keysPath(path)
-    if (!fs.exists(p)) None
-    else try {
-      // driver-side parse: this runs on EVERY merge operation (and
-      // again per commit record) — a spark.read.json here would cost a
-      // whole Spark job each time just to read one tiny metadata file
-      implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
-      val j = org.json4s.jackson.JsonMethods.parse(Merge.readSmallFile(fs, p))
-      Some(KeySpec(
-        (j \ "key_cols").extract[String].split(',').toSeq.filter(_.nonEmpty),
-        (j \ "partition_cols").extract[String].split(',').toSeq
-          .filter(_.nonEmpty)))
-    } catch {
-      case e: Exception =>
-        System.err.println(s"[graft.merge] WARN: unreadable key spec at " +
-          s"$p (${e.getMessage}); key index disabled for this operation")
-        None
-    }
-  }
+      minFiles: Int, minBytes: Long): Unit =
+    TableState.writeGates(spark, path, minFiles, minBytes)
 
   /** Record `spec` on the table's first keyed write; on a later keyed
     * write with a DIFFERENT spec, drop the whole index (unindexed
-    * tables stay correct — they just scan) and say so. Returns whether
-    * the index is active for this spec. Column names containing commas
-    * cannot be recorded (the spec file is comma-joined) — such tables
-    * simply run unindexed. */
-  def ensureSpec(spark: SparkSession, path: String, spec: KeySpec): Boolean = {
-    if (spec.scoped.exists(_.contains(","))) return false
-    readSpec(spark, path) match {
-      case Some(existing) if existing == spec => true
+    * tables stay correct — they just scan) and say so. Returns the
+    * state with what is recorded now, and whether the index is active
+    * for this spec. Column names containing commas cannot be recorded
+    * (the spec is stored comma-joined) — such tables simply run
+    * unindexed. */
+  private[merge] def ensureSpec(st: TableState,
+      spec: KeySpec): (TableState, Boolean) = {
+    if (spec.scoped.exists(_.contains(","))) return (st, false)
+    st.keySpec match {
+      case Some(existing) if existing == spec => (st, true)
       case Some(existing) =>
         System.err.println(s"[graft.merge] WARN: key spec changed on " +
-          s"$path (recorded ${existing.scoped.mkString("+")}, write uses " +
-          s"${spec.scoped.mkString("+")}); dropping the key index — " +
+          s"${st.path} (recorded ${existing.scoped.mkString("+")}, write " +
+          s"uses ${spec.scoped.mkString("+")}); dropping the key index — " +
           "merges stay correct via full key scans")
-        drop(spark, path)
-        false
-      case None =>
-        val fs = Merge.fsFor(spark, path)
-        val body = s"""{"key_cols":${Merge.jsonQuote(
-          spec.keyCols.mkString(","))},"partition_cols":${Merge.jsonQuote(
-          spec.partitionCols.mkString(","))}}"""
-        Merge.replaceSmallFile(fs, keysPath(path), body)
-        true
+        (dropIndex(st), false)
+      case None => (TableState.writeKeySpec(st, spec), true)
     }
   }
 
   /** Remove the key spec and every index entry (the table reverts to
     * full key scans — always correct). */
   def drop(spark: SparkSession, path: String): Unit = {
-    val fs = Merge.fsFor(spark, path)
-    fs.delete(indexDir(path), true)
-    fs.delete(keysPath(path), false)
-    fs.delete(gatesPath(path), false)
+    dropIndex(TableState.load(spark, path))
     ()
+  }
+
+  private def dropIndex(st: TableState): TableState = {
+    st.fs.delete(indexDir(st.path), true)
+    TableState.dropKeySpec(st)
   }
 
   private def entryName(cts: Option[Long]): String = cts match {
@@ -236,20 +181,19 @@ object KeyIndex {
     * added files contain). */
   private[merge] def recordCommit(
       spark: SparkSession,
-      path: String,
+      st: TableState,
       schema: StructType,
       cts: Option[Long],
       added: Seq[String],
       removed: Seq[String]): Unit = {
-    val spec = readSpec(spark, path).getOrElse(return)
+    val (fs, path, tableRoot) = (st.fs, st.path, st.root)
+    val spec = st.keySpec.getOrElse(return)
     if (!spec.scoped.forall(schema.fieldNames.contains)) {
       System.err.println(s"[graft.merge] WARN: commit schema on $path " +
         s"lacks key-spec columns ${spec.scoped.mkString("+")}; added " +
         "files left unindexed (they will be key-scanned)")
       if (removed.isEmpty) return
     }
-    val fs = Merge.fsFor(spark, path)
-    val tableRoot = fs.makeQualified(new Path(path))
     // Build blooms only when the touched partitions clear BOTH probe
     // gates ([[minFilesToProbe]] file count AND [[minBytesToProbe]]
     // data bytes) — below them, candidateFiles never consults the
@@ -264,15 +208,9 @@ object KeyIndex {
         case i => rel.substring(0, i)
       }
     }.distinct
-    val touchedStatuses = touchedDirs.flatMap { d =>
-      val dir = if (d.isEmpty) tableRoot else new Path(tableRoot, d)
-      if (!fs.exists(dir)) Nil
-      else fs.listStatus(dir).toSeq.filter { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
-    }
-    val (gateFiles, gateBytes) = gatesFor(spark, path)
+    val touchedStatuses = touchedDirs.flatMap(d => Merge.listDataStatuses(fs,
+      if (d.isEmpty) tableRoot else new Path(tableRoot, d)))
+    val (gateFiles, gateBytes) = st.gates
     val gatesOpen = touchedStatuses.size > gateFiles &&
       touchedStatuses.map(_.getLen).sum > gateBytes
     val addLines: Seq[String] =
@@ -348,13 +286,13 @@ object KeyIndex {
     * are dropped (phantom ⇒ never read). */
   private[merge] def candidateFiles(
       spark: SparkSession,
-      path: String,
+      st: TableState,
       spec: KeySpec,
       touchedDirs: Seq[String],
       allFiles: Seq[String],
       allBytes: Long,
       probe: DataFrame): Option[Seq[String]] = {
-    val (gateFiles, gateBytes) = gatesFor(spark, path)
+    val (path, (gateFiles, gateBytes)) = (st.path, st.gates)
     if (allFiles.size <= gateFiles || allBytes <= gateBytes)
       return None
     val live = liveEntries(spark, path).getOrElse(return None)
@@ -395,14 +333,14 @@ object KeyIndex {
     * table opens only the bloom-matched file groups. */
   def lookupFiles(spark: SparkSession, path: String,
       values: Map[String, Any]): Option[(Seq[String], Int)] = {
-    val spec = readSpec(spark, path).getOrElse(return None)
+    val st = TableState.load(spark, path)
+    val spec = st.keySpec.getOrElse(return None)
     if (spec.partitionCols.isEmpty) return None
     if (!spec.scoped.forall(values.contains)) return None
-    val schema = Merge.recordedSchema(spark, path).getOrElse(return None)
+    val schema = st.schema.getOrElse(return None)
     val fieldType = schema.fields.map(f => f.name -> f.dataType).toMap
     if (!spec.scoped.forall(fieldType.contains)) return None
-    val fs = Merge.fsFor(spark, path)
-    val root = fs.makeQualified(new Path(path))
+    val (fs, root) = (st.fs, st.root)
     val dir = Merge.partitionRelDir(spec.partitionCols,
       spec.partitionCols.map(values))
     val statuses = Merge.listDataStatuses(fs, new Path(root, dir))
@@ -410,7 +348,7 @@ object KeyIndex {
     // probe at the STORED types — hash parity with the build side
     val probe = spark.range(1).select(spec.scoped.map(c =>
       lit(values(c)).cast(fieldType(c)).as(c)): _*)
-    candidateFiles(spark, path, spec, Seq(dir), allFiles,
+    candidateFiles(spark, st, spec, Seq(dir), allFiles,
       statuses.map(_.getLen).sum, probe)
       .map(kept =>
         (kept.map(f => new Path(root, f).toString), allFiles.size))

@@ -181,25 +181,7 @@ object Merge {
   private[merge] def fsFor(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** "Exists" means HAS DATA: metadata entries (`_graft_commits/`,
-    * `_graft_schema.json`, `_SUCCESS`) don't count — an inflight
-    * timeline marker may be created before the first batch lands. */
-  private[merge] def tableExists(spark: SparkSession, path: String): Boolean = {
-    val p = new Path(path)
-    val fs = fsFor(spark, path)
-    fs.exists(p) && fs.listStatus(p).exists { st =>
-      val n = st.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
-  }
-
-  // ---- table schema metadata ----
-  // Spark's file listing skips paths starting with '_' or '.', so both
-  // metadata locations below are invisible to plain `read.parquet(path)`.
-
-  private def schemaMetaPath(path: String) = new Path(path, "_graft_schema.json")
-
-  private[merge] def readSmallFile(fs: FileSystem, p: Path): String = {
+  private[graft] def readSmallFile(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)
     try {
       val src = scala.io.Source.fromInputStream(in, "UTF-8")
@@ -220,7 +202,7 @@ object Merge {
     * with the swap, the worst crash window leaves the file momentarily
     * absent, which readers treat as "no metadata" and degrade
     * gracefully (footer-merge fallback). */
-  private[merge] def replaceSmallFile(fs: FileSystem, p: Path,
+  private[graft] def replaceSmallFile(fs: FileSystem, p: Path,
       body: String): Unit = {
     val tmp = new Path(p.getParent, s".${p.getName}.tmp${System.nanoTime()}")
     writeSmallFile(fs, tmp, body)
@@ -229,32 +211,17 @@ object Merge {
       throw new java.io.IOException(s"failed to move $tmp into place at $p")
   }
 
-  /** Authoritative table schema, recorded at every write. Makes the
-    * read side O(1) after additive evolution — without it a mixed-schema
-    * table needs a footer-merge over every file (`mergeSchema`), which
-    * at 100 TB is a full listing + footer job per read. */
-  private def readSchemaMeta(spark: SparkSession, path: String)
-      : Option[StructType] = {
-    val fs = fsFor(spark, path)
-    val p = schemaMetaPath(path)
-    if (!fs.exists(p)) None
-    else try {
-      Some(DataType.fromJson(readSmallFile(fs, p)).asInstanceOf[StructType])
-    } catch {
-      case e: Exception =>
-        // a corrupt metadata file must not brick the table: fall back to
-        // the footer-merge read path (correct, just slower) and say so
-        System.err.println(s"[graft.merge] WARN: unreadable schema " +
-          s"metadata at $p (${e.getMessage}); falling back to footer merge")
-        None
-    }
-  }
-
   /** Additive union of the recorded schema and this write's schema (a
     * field's FIRST recorded type wins — evolution adds columns, never
-    * retypes them). */
-  private[merge] def updateSchemaMeta(spark: SparkSession, path: String,
-      schema: StructType): Unit = {
+    * retypes them). The recorded schema only grows, so a write that adds
+    * no field to the loaded one leaves the file alone. A write that does
+    * add one unions with the file as it is NOW, not as loaded: a
+    * concurrent writer may have recorded a column since this operation
+    * began. Returns the state carrying what is recorded now. */
+  private[merge] def updateSchemaMeta(spark: SparkSession, st: TableState,
+      schema: StructType): TableState = {
+    if (st.schema.exists(s => schema.fieldNames.forall(s.fieldNames.contains)))
+      return st
     // when the recorded schema is missing OR unreadable, the base must
     // come from the actual files (footer merge), NOT the batch alone —
     // otherwise one plain insert after a metadata corruption would
@@ -265,23 +232,15 @@ object Merge {
     // inferred int for a numeric-LOOKING string partition would
     // permanently retype it (first-recorded-type-wins); instead the
     // partition column joins from the incoming schema, which carries
-    // its true type.
-    val base = readSchemaMeta(spark, path).orElse {
-      val fs = fsFor(spark, path)
-      val root = new Path(path)
-      if (!fs.exists(root)) None
-      else {
-        val dataFiles = fs.listStatus(root).toSeq
-          .filter(st => st.isDirectory && !st.getPath.getName.startsWith("_")
-            && !st.getPath.getName.startsWith("."))
-          .flatMap(d => fs.listStatus(d.getPath).toSeq)
-          .filter(st => st.isFile && !st.getPath.getName.startsWith("_")
-            && !st.getPath.getName.startsWith("."))
-          .map(_.getPath.toString)
-        if (dataFiles.isEmpty) None
-        else Some(spark.read.option("mergeSchema", "true")
-          .parquet(dataFiles: _*).schema)
-      }
+    // its true type. A table that had no data before this operation
+    // holds only this write's files, whose schema is `schema`.
+    val base = TableState.rereadSchema(st).orElse {
+      val dataFiles =
+        if (!st.hasData) Nil
+        else listDataStatuses(st.fs, st.root).map(_.getPath.toString)
+      if (dataFiles.isEmpty) None
+      else Some(spark.read.option("mergeSchema", "true")
+        .parquet(dataFiles: _*).schema)
     }
     val merged = base match {
       case None => schema
@@ -295,17 +254,14 @@ object Merge {
     // re-read the winner's union and fold ours in (additive unions
     // commute, so any interleaving converges to the same field set).
     var attempts = 0
-    var done = false
+    var done: Option[TableState] = None
     var toWrite = merged
-    while (!done) {
-      try {
-        replaceSmallFile(fsFor(spark, path), schemaMetaPath(path),
-          toWrite.json)
-        done = true
-      } catch {
+    while (done.isEmpty) {
+      try done = Some(TableState.writeSchema(st, toWrite))
+      catch {
         case _: java.io.IOException if attempts < 5 =>
           attempts += 1
-          val theirs = readSchemaMeta(spark, path)
+          val theirs = TableState.rereadSchema(st)
           toWrite = theirs match {
             case None => toWrite
             case Some(t) => StructType(t.fields ++
@@ -313,14 +269,8 @@ object Merge {
           }
       }
     }
+    done.get
   }
-
-  /** The recorded authoritative schema, if this table has one — the
-    * catalog-sync path needs it to register evolved columns explicitly
-    * (a footer-inferred catalog table would miss columns that only
-    * newer files carry). */
-  def recordedSchema(spark: SparkSession, path: String): Option[StructType] =
-    readSchemaMeta(spark, path)
 
   /** Create an EMPTY table: directory + recorded schema, no data files
     * (the `CREATE TABLE (cols...) USING graft` DDL shape — reads
@@ -328,7 +278,8 @@ object Merge {
   def createEmptyTable(spark: SparkSession, path: String,
       schema: StructType): Unit = {
     fsFor(spark, path).mkdirs(new Path(path))
-    updateSchemaMeta(spark, path, schema)
+    updateSchemaMeta(spark, TableState.load(spark, path), schema)
+    ()
   }
 
   /** Additive schema evolution as an explicit DDL operation (the
@@ -340,7 +291,8 @@ object Merge {
     * already-evolved. */
   def addColumns(spark: SparkSession, path: String,
       newCols: StructType): Unit = {
-    val existing = recordedSchema(spark, path).getOrElse(
+    val st = TableState.load(spark, path)
+    val existing = st.schema.getOrElse(
       throw new IllegalArgumentException(
         s"ALTER TABLE ADD COLUMNS: no graft table recorded at $path"))
     val resolver = spark.sessionState.conf.resolver
@@ -349,7 +301,8 @@ object Merge {
         s"ALTER TABLE ADD COLUMNS: column '${f.name}' already exists " +
           s"in ${existing.simpleString}")
     }
-    updateSchemaMeta(spark, path, StructType(existing.fields ++ newCols.fields))
+    updateSchemaMeta(spark, st, StructType(existing.fields ++ newCols.fields))
+    ()
   }
 
   /** Read a merge-managed table. Prefers the recorded schema (exact
@@ -358,13 +311,27 @@ object Merge {
     * code. Plain `spark.read.parquet(path)` stays correct for tables
     * that never evolved — this is the general entry point. */
   def readTable(spark: SparkSession, path: String): DataFrame =
-    readSchemaMeta(spark, path) match {
-      case Some(s) => spark.read.schema(s).parquet(path)
-      case None => spark.read.option("mergeSchema", "true").parquet(path)
+    readTable(spark, TableState.load(spark, path))
+
+  private[merge] def readTable(spark: SparkSession, st: TableState)
+      : DataFrame =
+    st.schema match {
+      case Some(s) => spark.read.schema(s).parquet(st.path)
+      case None => spark.read.option("mergeSchema", "true").parquet(st.path)
     }
 
-  /** Project `df` onto `target` columns: cast where present, null-fill
-    * where absent (the read-side half of additive evolution). */
+  /** The one COW/MOR read dispatch: the current snapshot (`asOf` None)
+    * or the snapshot as of a recorded commit. A MOR table merges its
+    * live (or as-of) delta files over the base; a COW table reads its
+    * base namespace. */
+  private[graft] def readState(spark: SparkSession, st: TableState,
+      asOf: Option[Long]): DataFrame = (st.mor, asOf) match {
+    case (Some(_), None) => MorTable.read(spark, st)
+    case (Some(_), Some(c)) => MorTable.readAsOf(spark, st, c)
+    case (None, None) => readTable(spark, st)
+    case (None, Some(c)) => snapshotAt(spark, st, c)
+  }
+
   /** `input_file_name()` yields the URL-ENCODED path (a literal '%' in
     * a hive-escaped dir name arrives as "%25") and neither Path(String)
     * nor DataFrameReader decodes it — decode exactly once via the URI
@@ -373,6 +340,8 @@ object Merge {
   private[merge] def decodeFileName(urlEncoded: String): String =
     new Path(new java.net.URI(urlEncoded)).toString
 
+  /** Project `df` onto `target` columns: cast where present, null-fill
+    * where absent (the read-side half of additive evolution). */
   private[merge] def alignTo(df: DataFrame, target: Seq[(String, DataType)])
       : DataFrame =
     df.select(target.map { case (n, t) =>
@@ -492,15 +461,14 @@ object Merge {
     * lands, so every crash window stays reversible. */
   private[merge] def commitFiles(
       spark: SparkSession,
+      st: TableState,
       merged: DataFrame,
-      path: String,
       partitionCols: Seq[String],
       supersededFiles: Seq[String],
       touched: Seq[Seq[Any]],
       dropEmptied: Boolean,
       cts: Option[Long] = None): CommitResult = {
-    val fs = fsFor(spark, path)
-    val tableRoot = fs.makeQualified(new Path(path))
+    val (fs, path, tableRoot) = (st.fs, st.path, st.root)
     val removed = supersededFiles
       .map(f => relativize(tableRoot, fs.makeQualified(new Path(f))))
     val Staged(staging, moves, added) = stage(spark, merged, path,
@@ -547,7 +515,7 @@ object Merge {
               .getOrElse("") +
             "moving the remaining staged files into place completes it", e)
     }
-    try {
+    val recorded = try {
       if (dropEmptied) {
         touched.foreach { tuple =>
           // hive path escaping (and the null-partition dir name) must
@@ -560,7 +528,7 @@ object Merge {
             partitionCols.size)
         }
       }
-      updateSchemaMeta(spark, path, merged.schema)
+      updateSchemaMeta(spark, st, merged.schema)
     } catch {
       case e: Throwable =>
         throw new RuntimeException(
@@ -572,7 +540,8 @@ object Merge {
     // fail a DURABLY COMMITTED data change — new files simply stay
     // unindexed (always key-scanned) and stale entries are dropped at
     // probe time by the listing intersect, so a warn suffices.
-    try KeyIndex.recordCommit(spark, path, merged.schema, cts, added, removed)
+    try KeyIndex.recordCommit(spark, recorded, merged.schema, cts, added,
+      removed)
     catch {
       case e: Throwable =>
         System.err.println("[graft.merge] WARN: key-index update failed " +
@@ -657,9 +626,10 @@ object Merge {
   def insert(batch: DataFrame, path: String, partitionCols: Seq[String],
       keyCols: Seq[String], precombine: String,
       dedup: Boolean): Unit = {
+    val st = TableState.load(batch.sparkSession, path)
     val b = if (dedup) precombineDedup(batch, keyCols, precombine) else batch
     b.write.partitionBy(partitionCols: _*).mode(SaveMode.Append).parquet(path)
-    updateSchemaMeta(batch.sparkSession, path, batch.schema)
+    updateSchemaMeta(batch.sparkSession, st, batch.schema)
     voidHistory(batch.sparkSession, path)
   }
 
@@ -697,22 +667,23 @@ object Merge {
     // us which files this append created. The pre-listing is a no-op on
     // the usual fresh table; on an existing table it is one metadata
     // listing — the same magnitude as the write's own file operations.
-    val indexed = keyCols.nonEmpty &&
-      KeyIndex.ensureSpec(spark, path, KeySpec(keyCols, partitionCols))
-    val fs = fsFor(spark, path)
-    val tableRoot = fs.makeQualified(new Path(path))
+    val (st, indexed) =
+      if (keyCols.isEmpty) (TableState.load(spark, path), false)
+      else KeyIndex.ensureSpec(TableState.load(spark, path),
+        KeySpec(keyCols, partitionCols))
+    val (fs, tableRoot) = (st.fs, st.root)
     val before: Set[String] =
-      if (indexed && tableExists(spark, path))
+      if (indexed && st.hasData)
         listDataFiles(fs, tableRoot).map(p => relativize(tableRoot, p)).toSet
       else Set.empty
     batch.repartitionByRange(nFiles, layout: _*)
       .write.partitionBy(partitionCols: _*).mode(SaveMode.Append).parquet(path)
-    updateSchemaMeta(spark, path, batch.schema)
+    val recorded = updateSchemaMeta(spark, st, batch.schema)
     if (indexed) {
       try {
         val added = listDataFiles(fs, tableRoot)
           .map(p => relativize(tableRoot, p)).filterNot(before)
-        KeyIndex.recordCommit(spark, path, batch.schema, None, added, Nil)
+        KeyIndex.recordCommit(spark, recorded, batch.schema, None, added, Nil)
       } catch {
         case e: Exception => System.err.println(
           s"[graft.merge] WARN: key-index update failed after bulkInsert " +
@@ -822,7 +793,8 @@ object Merge {
     val deduped = precombineDedup(batch, scopedKeys, precombine)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      if (!tableExists(spark, path)) {
+      val st = TableState.load(spark, path)
+      if (!st.hasData) {
         // nothing can match: the merge degenerates to conditional insert
         val ins = whenNotMatchedInsert
           .map(c => deduped.alias("s").filter(c)).getOrElse(deduped)
@@ -831,7 +803,7 @@ object Merge {
         return
       }
       val parts = touchedPartitions(deduped, partitionCols)
-      val target = readTable(spark, path)
+      val target = readTable(spark, st)
         .filter(partitionIn(partitionCols, parts))
       val s = deduped.alias("s")
       val t = target.alias("t")
@@ -877,7 +849,7 @@ object Merge {
     * additive ones), the key spec, and `newRows` — the batch aligned to
     * the target and, on the versioned path, observed for the
     * timeline's row count. */
-  private final case class KeyedWrite(deduped: DataFrame,
+  private final case class KeyedWrite(st: TableState, deduped: DataFrame,
       parts: Seq[Seq[Any]], stored: DataFrame,
       target: Seq[(String, DataType)], spec: KeySpec, indexActive: Boolean,
       newRows: DataFrame)
@@ -910,7 +882,8 @@ object Merge {
       // record the table's key spec (first keyed write wins) so every
       // commit — including table services that take no keys — can
       // maintain the file-level key index
-      val indexActive = KeyIndex.ensureSpec(spark, path, spec)
+      val (st, indexActive) =
+        KeyIndex.ensureSpec(TableState.load(spark, path), spec)
       // n_rows for the timeline is observed on the batch branch of the
       // write plan itself (Observation metrics count only successful
       // tasks) — no separate count job per commit
@@ -919,11 +892,11 @@ object Merge {
         obs.fold(df)(o => df.observe(o, count(lit(1)).as("n")))
       def stats(parts: Seq[String]): MergeStats =
         MergeStats(obs.map(_.get("n").asInstanceOf[Long]).getOrElse(0L), parts)
-      if (!tableExists(spark, path)) {
+      if (!st.hasData) {
         // initial write: the same staged commit as every other write —
         // the staging + rename publish knows its added-file plan before
         // any file lands, so even a FIRST versioned commit rolls back
-        val res = commitFiles(spark, observed(deduped), path, partitionCols,
+        val res = commitFiles(spark, st, observed(deduped), partitionCols,
           supersededFiles = Nil, touched = Nil, dropEmptied = false, cts)
         return (stats(
           if (cts.isDefined)
@@ -932,7 +905,7 @@ object Merge {
       }
       val parts = touchedPartitionsProbed(deduped, partitionCols)
       if (parts.isEmpty) return (MergeStats(0L, Nil), None)
-      val stored = readTable(spark, path)
+      val stored = readTable(spark, st)
       // a batch may ADD columns (additive evolution) but never DROP
       // them: silently selecting the batch's columns out of a wider
       // stored schema would STRIP the extra columns (e.g. _commit_ts on
@@ -947,9 +920,9 @@ object Merge {
         stored.schema.fields.map(f => f.name -> f.dataType).toIndexedSeq ++
           deduped.schema.fields.filter(f => extra.contains(f.name))
             .map(f => f.name -> f.dataType)
-      val (rows, superseded) = plan(KeyedWrite(deduped, parts, stored,
+      val (rows, superseded) = plan(KeyedWrite(st, deduped, parts, stored,
         target, spec, indexActive, observed(alignTo(deduped, target))))
-      val res = commitFiles(spark, rows, path, partitionCols, superseded,
+      val res = commitFiles(spark, st, rows, partitionCols, superseded,
         parts, dropEmptied = false, cts)
       (stats(parts.map(renderPartition)), Some(res))
     } finally deduped.unpersist()
@@ -968,14 +941,13 @@ object Merge {
     * partition size. */
   private def matchedFiles(
       spark: SparkSession,
-      path: String,
+      st: TableState,
       stored: DataFrame,
       spec: KeySpec,
       indexActive: Boolean,
       parts: Seq[Seq[Any]],
       keys: DataFrame): IndexedSeq[String] = {
-    val fs = fsFor(spark, path)
-    val tableRoot = fs.makeQualified(new Path(path))
+    val (fs, path, tableRoot) = (st.fs, st.path, st.root)
     val candidates: Option[Seq[String]] =
       if (!indexActive) None
       else {
@@ -988,7 +960,7 @@ object Merge {
           listDataStatuses(fs, new Path(tableRoot, d)))
         val allFiles = statuses.map(st =>
           relativize(tableRoot, st.getPath))
-        KeyIndex.candidateFiles(spark, path, spec, touchedDirs, allFiles,
+        KeyIndex.candidateFiles(spark, st, spec, touchedDirs, allFiles,
           statuses.map(_.getLen).sum, typedKeys)
       }
     val keySource = candidates match {
@@ -1027,7 +999,7 @@ object Merge {
         "upsert") { w =>
       val scopedKeys = w.spec.scoped
       val batchKeys = w.deduped.select(scopedKeys.map(col): _*).distinct()
-      val matched = matchedFiles(spark, path, w.stored, w.spec,
+      val matched = matchedFiles(spark, w.st, w.stored, w.spec,
         w.indexActive, w.parts, batchKeys)
       val merged =
         if (matched.isEmpty) w.newRows // pure insert: nothing to rewrite
@@ -1083,22 +1055,21 @@ object Merge {
     * Returns the adoption commit id. */
   def bootstrap(spark: SparkSession, path: String,
       partitionCols: Seq[String]): Long = {
-    val fs = fsFor(spark, path)
-    val tableRoot = fs.makeQualified(new Path(path))
-    require(tableExists(spark, path),
-      s"no data files at $path — nothing to bootstrap")
+    val st = TableState.load(spark, path)
+    val (fs, tableRoot) = (st.fs, st.root)
+    require(st.hasData, s"no data files at $path — nothing to bootstrap")
     require(!fs.exists(Timeline.dir(path)),
       s"$path already has a commit timeline — bootstrap adopts plain " +
         "layouts only")
     val files = listDataStatuses(fs, tableRoot)
       .map(st => relativize(tableRoot, st.getPath))
-    val df = readTable(spark, path)
+    val df = readTable(spark, st)
     partitionCols.foreach(c => require(df.columns.contains(c),
       s"partition column $c not present in the layout at $path"))
     // declare the schema first: even a crash between here and the
     // commit record leaves only harmless metadata (and a tombstonable
     // inflight marker)
-    updateSchemaMeta(spark, path, df.schema)
+    updateSchemaMeta(spark, st, df.schema)
     versioned(spark, path) { _ =>
       val parts = touchedPartitions(df, partitionCols).map(renderPartition)
       (MergeStats(df.count(), parts), Some(CommitResult(files, Nil, None)))
@@ -1166,10 +1137,8 @@ object Merge {
         "insertOverwrite") { w =>
       // EVERY data file in a touched partition is superseded — this is
       // a metadata listing, not a scan
-      val fs = fsFor(spark, path)
-      val tableRoot = fs.makeQualified(new Path(path))
-      (w.newRows, w.parts.flatMap(t => listDataStatuses(fs,
-        new Path(tableRoot, partitionRelDir(partitionCols, t))))
+      (w.newRows, w.parts.flatMap(t => listDataStatuses(w.st.fs,
+        new Path(w.st.root, partitionRelDir(partitionCols, t))))
         .map(_.getPath.toString))
     }
 
@@ -1201,7 +1170,8 @@ object Merge {
       keyCols: Seq[String],
       partitionCols: Seq[String],
       cts: Option[Long]): (MergeStats, Option[CommitResult]) = {
-    if (!tableExists(spark, path)) return (MergeStats(0L, Nil), None)
+    val loaded = TableState.load(spark, path)
+    if (!loaded.hasData) return (MergeStats(0L, Nil), None)
     // key scope includes the partition path (Hudi ComplexKeyGenerator
     // semantics): a delete key only removes rows in ITS partition, never
     // a same-keyed row in another touched partition
@@ -1211,11 +1181,11 @@ object Merge {
     try {
       val parts = touchedPartitionsProbed(delDistinct, partitionCols)
       if (parts.isEmpty) return (MergeStats(0L, Nil), None)
-      val stored = readTable(spark, path)
+      val stored = readTable(spark, loaded)
       // same index-pruned candidate discovery as upsert (delete keys
       // are partition-scoped, i.e. exactly the indexed scoped key)
-      val indexActive = KeyIndex.ensureSpec(spark, path, spec)
-      val matched = matchedFiles(spark, path, stored, spec, indexActive,
+      val (st, indexActive) = KeyIndex.ensureSpec(loaded, spec)
+      val matched = matchedFiles(spark, st, stored, spec, indexActive,
         parts, delDistinct)
       if (matched.isEmpty)
         return (MergeStats(0L, parts.map(renderPartition)), None)
@@ -1225,7 +1195,7 @@ object Merge {
         .reduce(_ && _)
       val remaining = matchedRows.join(broadcast(delDistinct), survCond,
         "left_anti")
-      val res = commitFiles(spark, remaining, path, partitionCols,
+      val res = commitFiles(spark, st, remaining, partitionCols,
         matched, parts, dropEmptied = true, cts)
       // a delete commit WRITES no rows (n_rows 0 in the timeline); its
       // effect is rows vanishing from every later read
@@ -1277,16 +1247,13 @@ object Merge {
       recorded: Boolean): Long = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
     require(maxFiles >= 1, "maxFiles must be >= 1")
-    if (!tableExists(spark, path)) return 0L
-    if (recorded) require(readSchemaMeta(spark, path)
-        .exists(_.fieldNames.contains(commitCol)),
-      s"$path carries no $commitCol stamps (no versioned write yet) — " +
-        "there is no history to preserve; use compact")
-    val fs = fsFor(spark, path)
+    val st = TableState.load(spark, path)
+    if (!st.hasData) return 0L
+    if (recorded) requireStamped(st, "compact")
     val (files, totalBytes) =
-      compactionCandidates(fs, path, partitionCols, targetFileBytes)
+      compactionCandidates(st.fs, path, partitionCols, targetFileBytes)
     if (files.isEmpty) return 0L
-    val stored = readTable(spark, path)
+    val stored = readTable(spark, st)
     // stamps ride along untouched: the read schema includes commitCol,
     // and no column is rewritten — preservation IS the no-CDC contract
     val rows = spark.read.schema(stored.schema)
@@ -1294,9 +1261,16 @@ object Merge {
     val nFiles = math.min(totalBytes / targetFileBytes + 1, maxFiles.toLong)
       .toInt
     val layout = (partitionCols.map(col) ++ keyCols.map(col)).toIndexedSeq
-    commitRewrite(spark, path, partitionCols,
+    commitRewrite(spark, st, partitionCols,
       rows.repartitionByRange(nFiles, layout: _*), files, recorded)
   }
+
+  /** The versioned table services preserve history, so the table must
+    * have some: a recorded schema carrying the stamp column. */
+  private def requireStamped(st: TableState, plain: String): Unit =
+    require(st.schema.exists(_.fieldNames.contains(commitCol)),
+      s"${st.path} carries no $commitCol stamps (no versioned write yet) " +
+        s"— there is no history to preserve; use $plain")
 
   /** Shared tail of every layout rewrite (compaction / clustering):
     * stage + publish the rewritten rows superseding `files`, then run
@@ -1312,16 +1286,17 @@ object Merge {
     * through commitFiles. */
   private def commitRewrite(
       spark: SparkSession,
-      path: String,
+      st: TableState,
       partitionCols: Seq[String],
       rewritten: DataFrame,
       files: IndexedSeq[String],
       recorded: Boolean): Long = {
+    val path = st.path
     if (recorded) versioned(spark, path) { cts =>
-      (MergeStats(0L, Nil), Some(commitFiles(spark, rewritten, path,
+      (MergeStats(0L, Nil), Some(commitFiles(spark, st, rewritten,
         partitionCols, files, touched = Nil, dropEmptied = false, Some(cts))))
     }
-    else commitFiles(spark, rewritten, path, partitionCols, files,
+    else commitFiles(spark, st, rewritten, partitionCols, files,
       touched = Nil, dropEmptied = false)
     try KeyIndex.compactIndex(spark, path)
     catch {
@@ -1438,14 +1413,9 @@ object Merge {
       partitionCols: Seq[String],
       zCols: Seq[String],
       targetFileBytes: Long = 128L * 1024 * 1024,
-      maxFiles: Int = 1 << 20): Long = {
-    require(readSchemaMeta(spark, path)
-        .exists(_.fieldNames.contains(commitCol)),
-      s"$path carries no $commitCol stamps (no versioned write yet) — " +
-        "there is no history to preserve; use clusterZOrder")
+      maxFiles: Int = 1 << 20): Long =
     clusterZOrderImpl(spark, path, partitionCols, zCols, targetFileBytes,
       maxFiles, recorded = true)
-  }
 
   private def clusterZOrderImpl(
       spark: SparkSession,
@@ -1460,13 +1430,14 @@ object Merge {
         "compact's key layout for that)")
     require(targetFileBytes > 0, "targetFileBytes must be positive")
     require(maxFiles >= 1, "maxFiles must be >= 1")
-    if (!tableExists(spark, path)) return 0L
-    val fs = fsFor(spark, path)
-    val files = listDataFiles(fs, fs.makeQualified(new Path(path)))
-      .map(_.toString).toIndexedSeq
+    val st = TableState.load(spark, path)
+    if (recorded) requireStamped(st, "clusterZOrder")
+    if (!st.hasData) return 0L
+    val fs = st.fs
+    val files = listDataFiles(fs, st.root).map(_.toString).toIndexedSeq
     if (files.isEmpty) return 0L
     val totalBytes = files.map(f => fs.getFileStatus(new Path(f)).getLen).sum
-    val stored = readTable(spark, path)
+    val stored = readTable(spark, st)
     val rows = spark.read.schema(stored.schema)
       .option("basePath", path).parquet(files: _*)
     val bits = math.min(16, 63 / zCols.size)
@@ -1495,7 +1466,7 @@ object Merge {
       .repartitionByRange(nFiles, layout: _*)
       .sortWithinPartitions(layout: _*)
       .select(rows.columns.toIndexedSeq.map(col): _*)
-    commitRewrite(spark, path, partitionCols, clustered, files, recorded)
+    commitRewrite(spark, st, partitionCols, clustered, files, recorded)
   }
 
   /** Remove leaked staging siblings — the table-sized recovery copies a
@@ -1600,31 +1571,41 @@ object Merge {
                 s"commits, then $clearStep and re-run rollback to " +
                 "tombstone the id", e)
         }
-      added.foreach { rel =>
-        val p = new Path(tableRoot, rel)
-        if (fs.exists(p) && !fs.delete(p, false))
-          throw new java.io.IOException(s"rollback: failed to un-publish $p")
-      }
       val rb = rollbackDir(path, cts)
-      removed.foreach { rel =>
-        val src = new Path(rb, rel) // absent = this file was never retired
-        if (fs.exists(src)) {
-          val dest = new Path(tableRoot, rel)
-          fs.mkdirs(dest.getParent)
-          if (!fs.rename(src, dest))
-            throw new java.io.IOException(s"rollback: failed to restore $dest")
-        }
-      }
-      // un-publishing may leave behind the partition directories publish
-      // created (restores above repopulate shared ones) — sweep them via
-      // the shared husk-prevention rule
-      added.foreach { rel =>
-        dropEmptiedDirs(fs, new Path(tableRoot, rel).getParent,
-          rel.count(_ == '/')) // partition dirs below the root
-      }
+      reverseFiles(fs, tableRoot, added, removed, rb, "rollback")
       sweepCommitScratch(fs, staging, Some(rb))
     }
     Timeline.tombstone(fs, path, cts)
+  }
+
+  /** Reverse one commit's file movements: un-publish the files it
+    * `added`, move the files it `removed` back from `retired` (absent =
+    * never retired, or already restored by an earlier run), then sweep
+    * the partition directories the un-publish emptied (restores
+    * repopulate shared ones) via the shared husk-prevention rule. Every
+    * step checks before acting, so a reversal that dies midway can be
+    * re-run. */
+  private def reverseFiles(fs: FileSystem, tableRoot: Path,
+      added: Seq[String], removed: Seq[String], retired: Path,
+      op: String): Unit = {
+    added.foreach { rel =>
+      val p = new Path(tableRoot, rel)
+      if (fs.exists(p) && !fs.delete(p, false))
+        throw new java.io.IOException(s"$op: failed to un-publish $p")
+    }
+    removed.foreach { rel =>
+      val src = new Path(retired, rel)
+      if (fs.exists(src)) {
+        val dest = new Path(tableRoot, rel)
+        fs.mkdirs(dest.getParent)
+        if (!fs.rename(src, dest))
+          throw new java.io.IOException(s"$op: failed to restore $dest")
+      }
+    }
+    added.foreach { rel =>
+      dropEmptiedDirs(fs, new Path(tableRoot, rel).getParent,
+        rel.count(_ == '/')) // partition dirs below the root
+    }
   }
 
   /** O1 with a commit timeline: the batch is stamped with a fresh
@@ -1743,10 +1724,6 @@ object Merge {
       cts: Long): Option[Long] =
     Timeline.recordOf(spark, path, cts).flatMap(_.wallMs)
 
-  /** Incremental pull: rows last written by a commit AFTER `sinceTs`
-    * (Hudi incremental-query semantics — deleted rows simply stop
-    * appearing, as in Hudi's COW read-optimized view). Partition/stat
-    * pruning applies: the stamp predicate is pushed to the scan. */
   /** Latest RECORDED commit id, driver-side (one dir listing, no Spark
     * job) — the polling primitive a streaming source's `getOffset`
     * calls every trigger. None when the table has no recorded commits.
@@ -1755,8 +1732,20 @@ object Merge {
   def latestCommit(spark: SparkSession, path: String): Option[Long] =
     Timeline.list(spark, path).recorded.map(_.id).maxOption
 
+  /** Incremental pull: rows last written by a commit AFTER `sinceTs`
+    * (Hudi incremental-query semantics — deleted rows simply stop
+    * appearing). On a MOR table the pull runs over the merged snapshot,
+    * so rows whose winning version sits in a delta file count.
+    * Partition/stat pruning applies: the stamp predicate is pushed to
+    * the scan. */
   def readSince(spark: SparkSession, path: String, sinceTs: Long): DataFrame =
-    readTable(spark, path).filter(col(commitCol) > sinceTs)
+    readSince(spark, TableState.load(spark, path), sinceTs)
+
+  /** The one since-filter behind both public pulls and
+    * `format("graft")`'s `sinceCommit`. */
+  private[graft] def readSince(spark: SparkSession, st: TableState,
+      sinceTs: Long): DataFrame =
+    readState(spark, st, None).filter(col(commitCol) > sinceTs)
 
   /** Incremental pull between two commits: rows last written by a
     * commit in (afterTs, untilTs]. */
@@ -1790,21 +1779,19 @@ object Merge {
 
   /** The oldest commit id [[readAsOf]] can still serve (0 = the full
     * recorded timeline is travelable). */
-  def historyFloor(spark: SparkSession, path: String): Long = {
-    val fs = fsFor(spark, path)
+  def historyFloor(spark: SparkSession, path: String): Long =
+    readFloor(fsFor(spark, path), path)
+
+  private def readFloor(fs: FileSystem, path: String): Long = {
     val p = floorFile(path)
-    if (!fs.exists(p)) 0L
-    else readSmallFile(fs, p).trim.toLong
+    if (!fs.exists(p)) 0L else readSmallFile(fs, p).trim.toLong
   }
 
-  private def raiseFloor(fs: FileSystem, path: String, to: Long): Unit = {
-    val p = floorFile(path)
-    val cur = if (fs.exists(p)) readSmallFile(fs, p).trim.toLong else 0L
-    if (to > cur) {
+  private def raiseFloor(fs: FileSystem, path: String, to: Long): Unit =
+    if (to > readFloor(fs, path)) {
       fs.mkdirs(historyRoot(path))
-      replaceSmallFile(fs, p, to.toString)
+      replaceSmallFile(fs, floorFile(path), to.toString)
     }
-  }
 
   /** Move a versioned commit's retired-file copy from the rollback
     * scratch into durable history (a rename — metadata-priced on
@@ -1909,10 +1896,11 @@ object Merge {
     * predates [[historyFloor]] (history cleaned past it, or voided by
     * an unversioned mutation). */
   def readAsOf(spark: SparkSession, path: String, asOf: Long): DataFrame = {
-    require(!MorTable.isMor(spark, path),
+    val st = TableState.load(spark, path)
+    require(st.mor.isEmpty,
       s"$path is a MERGE_ON_READ table — use MorTable.readAsOf (the " +
         "snapshot must merge base AND delta files at the as-of point)")
-    snapshotAt(spark, path, asOf)
+    snapshotAt(spark, st, asOf)
   }
 
   /** Replay the recorded file movements backwards from `initial`
@@ -1952,41 +1940,56 @@ object Merge {
     * re-introduces are filtered back out, so on a MOR table this is
     * exactly the BASE at `asOf` (MorTable.readAsOf merges the delta
     * side on top). */
-  private[merge] def snapshotAt(spark: SparkSession, path: String,
+  private[merge] def snapshotAt(spark: SparkSession, st: TableState,
       asOf: Long): DataFrame = {
+    val (fs, path, tableRoot) = (st.fs, st.path, st.root)
     requireAboveFloor(spark, path, asOf)
-    val fs = fsFor(spark, path)
-    val tableRoot = fs.makeQualified(new Path(path))
     // replay backwards: location = None → resident in the table,
     // Some(c) → retired by commit c, resident in its history dir
     val files = replayFileMap(spark, path, asOf,
       listDataFiles(fs, tableRoot).map(relativize(tableRoot, _)))
       .filter { case (rel, _) => !rel.startsWith("_") }
-    val schema = readSchemaMeta(spark, path).getOrElse(
-      readTable(spark, path).schema)
+    val schema = st.schema.getOrElse(readTable(spark, st).schema)
     if (files.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    // one read per resident base (table + each contributing history
-    // dir): basePath recovers the partition column from the preserved
-    // hive layout; explicit schema, no footer reads
-    val groups = files.toSeq.groupBy(_._2).toSeq.sortBy(_._1.getOrElse(-1L))
-    groups.map { case (loc, fs2) =>
-      val base = loc match {
-        case None => tableRoot
-        case Some(c) =>
-          val h = historyDir(path, c)
-          if (!fs.exists(h))
-            throw new IllegalStateException(
-              s"cannot time-travel to commit $asOf at $path: commit $c's " +
-                s"retired files are missing from $h (history damaged — " +
-                "was the directory removed manually?)")
-          fs.makeQualified(h)
-      }
+    // basePath recovers the partition column from the preserved hive
+    // layout; explicit schema, no footer reads
+    residentGroups(st, asOf, files, "").map { case (base, paths) =>
       spark.read.schema(schema).option("basePath", base.toString)
-        .parquet(fs2.map { case (rel, _) => new Path(base, rel).toString }: _*)
+        .parquet(paths: _*)
     }.reduce(_.unionByName(_))
   }
+
+  /** The root a replayed file lives under now: the table (`None`), or
+    * the history dir of the commit that retired it — which must still
+    * exist. */
+  private[merge] def residentRoot(st: TableState, retiredBy: Option[Long],
+      what: String): Path = retiredBy match {
+    case None => st.root
+    case Some(c) =>
+      val h = historyDir(st.path, c)
+      if (!st.fs.exists(h))
+        throw new IllegalStateException(
+          s"cannot $what at ${st.path}: commit $c's retired files are " +
+            s"missing from $h (history damaged — was the directory " +
+            "removed manually?)")
+      st.fs.makeQualified(h)
+  }
+
+  /** A replayed file map ([[replayFileMap]]) as one read per resident
+    * root (the table, then each contributing history dir): the
+    * `basePath` of namespace `ns` under that root, and the absolute
+    * file paths. */
+  private[merge] def residentGroups(st: TableState, asOf: Long,
+      files: Map[String, Option[Long]], ns: String)
+      : Seq[(Path, Seq[String])] =
+    files.toSeq.groupBy(_._2).toSeq.sortBy(_._1.getOrElse(-1L))
+      .map { case (loc, grp) =>
+        val root = residentRoot(st, loc, s"time-travel to commit $asOf")
+        (if (ns.isEmpty) root else new Path(root, ns),
+          grp.map { case (rel, _) => new Path(root, rel).toString })
+      }
 
   /** Change-data-capture read: every row-level change applied by the
     * recorded commits in (afterTs, untilTs] — the Delta-CDF / Hudi
@@ -2018,7 +2021,8 @@ object Merge {
     * path when deletes and pre-images don't matter. */
   def readChanges(spark: SparkSession, path: String, afterTs: Long,
       untilTs: Long, keyCols: Seq[String]): DataFrame = {
-    require(!MorTable.isMor(spark, path),
+    val st = TableState.load(spark, path)
+    require(st.mor.isEmpty,
       s"$path is a MERGE_ON_READ table — change capture is not " +
         "supported on MOR (a delta commit's rows are merge inputs, not " +
         "post-images; compact to fold deltas into base first)")
@@ -2031,12 +2035,10 @@ object Merge {
         s"cannot read changes after commit $afterTs at $path: history " +
           s"floor is $floor (older pre-images were cleaned, or voided " +
           "by an unversioned mutation — see readAsOf)")
-    val fs = fsFor(spark, path)
-    val tableRoot = fs.makeQualified(new Path(path))
+    val (fs, tableRoot) = (st.fs, st.root)
     val all = Timeline.records(spark, path, afterTs)
     val inRange = all.filter(_.cts <= untilTs)
-    val schema = readSchemaMeta(spark, path).getOrElse(
-      readTable(spark, path).schema)
+    val schema = st.schema.getOrElse(readTable(spark, st).schema)
     val payloadCols = schema.fields.map(_.name).filterNot(_ == commitCol)
     keyCols.foreach(k => require(payloadCols.contains(k),
       s"key column $k not in table schema ${payloadCols.mkString(",")}"))
@@ -2046,15 +2048,8 @@ object Merge {
     // history is still present)
     val retiredBy: Map[String, Long] =
       all.flatMap(c => c.removed.map(_ -> c.cts)).toMap
-    def histDirChecked(c: Long): Path = {
-      val h = historyDir(path, c)
-      if (!fs.exists(h))
-        throw new IllegalStateException(
-          s"cannot read changes at $path: commit $c's retired files " +
-            s"are missing from $h (history damaged — was the " +
-            "directory removed manually?)")
-      fs.makeQualified(h)
-    }
+    def histDirChecked(c: Long): Path =
+      residentRoot(st, Some(c), "read changes")
     def readRels(rels: Seq[String], locate: String => Path): DataFrame =
       if (rels.isEmpty)
         spark.createDataFrame(
@@ -2186,25 +2181,8 @@ object Merge {
             s"inflight — rollback(path, $id) it first")
     }
     later.foreach { c =>
-      c.added.foreach { rel =>
-        val p = new Path(tableRoot, rel)
-        if (fs.exists(p) && !fs.delete(p, false))
-          throw new java.io.IOException(s"restore: failed to un-publish $p")
-      }
       val h = historyDir(path, c.cts)
-      c.removed.foreach { rel =>
-        val src = new Path(h, rel) // absent = already restored (re-run)
-        if (fs.exists(src)) {
-          val dest = new Path(tableRoot, rel)
-          fs.mkdirs(dest.getParent)
-          if (!fs.rename(src, dest))
-            throw new java.io.IOException(s"restore: failed to restore $dest")
-        }
-      }
-      c.added.foreach { rel =>
-        dropEmptiedDirs(fs, new Path(tableRoot, rel).getParent,
-          rel.count(_ == '/'))
-      }
+      reverseFiles(fs, tableRoot, c.added, c.removed, h, "restore")
       // the reverted commit's index entry points at files just removed
       KeyIndex.dropEntry(spark, path, c.cts)
       Timeline.tombstone(fs, path, c.cts)
@@ -2249,12 +2227,6 @@ object Merge {
   private[graft] def scratchTable(prefix: String): String =
     graft.util.Scratch.fresh(prefix) + "/table"
 
-  /** Deterministic replay batch `b` over the orders table: rows whose
-    * o_orderkey ≡ b (mod 7), keyed (okey = o_orderkey % 500, status
-    * partition) with precombine o_orderkey. The % 500 fold makes ~4
-    * same-key rows per batch, so within-batch precombine dedup (O4) is
-    * genuinely exercised; precombine is unique (o_orderkey), so the
-    * winner is total — no tie-break dependence. */
   /** Run `body` with AQE's post-shuffle partition coalescing OFF,
     * restoring the session value after. The compaction driver keys
     * (x12/x12w) use this around their SETUP commits: their subject is
@@ -2276,6 +2248,12 @@ object Merge {
     }
   }
 
+  /** Deterministic replay batch `b` over the orders table: rows whose
+    * o_orderkey ≡ b (mod 7), keyed (okey = o_orderkey % 500, status
+    * partition) with precombine o_orderkey. The % 500 fold makes ~4
+    * same-key rows per batch, so within-batch precombine dedup (O4) is
+    * genuinely exercised; precombine is unique (o_orderkey), so the
+    * winner is total — no tie-break dependence. */
   private[graft] def replayBatch(spark: SparkSession, dir: String, b: Int,
       keyMod: Int = 500): DataFrame =
     graft.Tables.orders(spark, dir)
@@ -3167,20 +3145,13 @@ object Merge {
 
   /** DuckDB replay of the same algebra: per-batch dedup by max
     * precombine, batch-wins-over-stored merge, distinct-key anti-join
-    * delete — each window/join mirrors one Merge stage. */
-  /** The q18 replay algebra at the classic %500 key space. The
-    * compaction keys (q23/x34) share [[replaySqlMod]](50000) instead:
+    * delete — each window/join mirrors one Merge stage. This is the
+    * q18 replay algebra at the classic %500 key space. The compaction
+    * keys (q23/x34) share [[replaySqlMod]](50000) instead:
     * content-invariance is the same law at any key width, and only the
     * wide space survives sf1 density (see q18w). */
   private[merge] val replaySql = replaySqlMod(500)
 
-  /** The q18 replay algebra over `o_orderkey % mod` keys. mod=500 is
-    * the classic scenario; mod=50000 (q18w/x07w) keeps the scenario
-    * meaningful at 10x+ scale — with dense 1.5M-key data the %500
-    * compression packs ~300 orders behind every (okey, part), the %3
-    * delete then covers every pair and the final table is EMPTY (the
-    * r10 verdict's vacuous-sf1-evidence finding); the wide key space
-    * keeps survivor density scale-stable. */
   /** The two-batch merge snapshot (the q25/x12 as-of state — the replay
     * algebra BEFORE the delete) at key space `okey = o_orderkey % mod`. */
   private[merge] def twoBatchSqlMod(mod: Int): String =
@@ -3203,6 +3174,13 @@ object Merge {
       |  WHERE b2.pre IS NULL)
       |ORDER BY part, okey""".stripMargin
 
+  /** The q18 replay algebra over `o_orderkey % mod` keys. mod=500 is
+    * the classic scenario; mod=50000 (q18w/x07w) keeps the scenario
+    * meaningful at 10x+ scale — with dense 1.5M-key data the %500
+    * compression packs ~300 orders behind every (okey, part), the %3
+    * delete then covers every pair and the final table is EMPTY (the
+    * r10 verdict's vacuous-sf1-evidence finding); the wide key space
+    * keeps survivor density scale-stable. */
   private[graft] def replaySqlMod(mod: Int): String =
     s"""WITH raw AS (SELECT o_orderkey % $mod AS okey, o_orderstatus AS part,
       |               o_totalprice AS price, o_orderkey AS pre
@@ -3534,65 +3512,11 @@ object Merge {
     // the versioned delete and the third upsert that q25 replays past
     // time travel across a RECORDED compaction lands on the same
     // 2-upsert snapshot as q25 — compaction moved bytes, not state
-    "x12_compact_versioned" ->
-      """WITH raw AS (SELECT o_orderkey % 500 AS okey, o_orderstatus AS part,
-        |               o_totalprice AS price, o_orderkey AS pre
-        |             FROM orders),
-        |b1 AS (SELECT okey, part, price, pre FROM (
-        |         SELECT *, row_number() OVER (PARTITION BY okey, part
-        |           ORDER BY pre DESC) AS rn
-        |         FROM raw WHERE pre % 7 = 0) WHERE rn = 1),
-        |b2 AS (SELECT okey, part, price, pre FROM (
-        |         SELECT *, row_number() OVER (PARTITION BY okey, part
-        |           ORDER BY pre DESC) AS rn
-        |         FROM raw WHERE pre % 7 = 1) WHERE rn = 1)
-        |SELECT okey, part, price, pre FROM (
-        |  SELECT * FROM b2
-        |  UNION ALL
-        |  SELECT b1.okey, b1.part, b1.price, b1.pre FROM b1
-        |  LEFT JOIN b2 ON b1.okey = b2.okey AND b1.part = b2.part
-        |  WHERE b2.pre IS NULL)
-        |ORDER BY part, okey""".stripMargin,
-    "q25_time_travel" ->
-      """WITH raw AS (SELECT o_orderkey % 500 AS okey, o_orderstatus AS part,
-        |               o_totalprice AS price, o_orderkey AS pre
-        |             FROM orders),
-        |b1 AS (SELECT okey, part, price, pre FROM (
-        |         SELECT *, row_number() OVER (PARTITION BY okey, part
-        |           ORDER BY pre DESC) AS rn
-        |         FROM raw WHERE pre % 7 = 0) WHERE rn = 1),
-        |b2 AS (SELECT okey, part, price, pre FROM (
-        |         SELECT *, row_number() OVER (PARTITION BY okey, part
-        |           ORDER BY pre DESC) AS rn
-        |         FROM raw WHERE pre % 7 = 1) WHERE rn = 1)
-        |SELECT okey, part, price, pre FROM (
-        |  SELECT * FROM b2
-        |  UNION ALL
-        |  SELECT b1.okey, b1.part, b1.price, b1.pre FROM b1
-        |  LEFT JOIN b2 ON b1.okey = b2.okey AND b1.part = b2.part
-        |  WHERE b2.pre IS NULL)
-        |ORDER BY part, okey""".stripMargin,
+    "x12_compact_versioned" -> twoBatchSqlMod(500),
+    "q25_time_travel" -> twoBatchSqlMod(500),
     // a restored table IS the as-of snapshot, read plainly — the same
     // two-batch merge state as q25
-    "q26_restore" ->
-      """WITH raw AS (SELECT o_orderkey % 500 AS okey, o_orderstatus AS part,
-        |               o_totalprice AS price, o_orderkey AS pre
-        |             FROM orders),
-        |b1 AS (SELECT okey, part, price, pre FROM (
-        |         SELECT *, row_number() OVER (PARTITION BY okey, part
-        |           ORDER BY pre DESC) AS rn
-        |         FROM raw WHERE pre % 7 = 0) WHERE rn = 1),
-        |b2 AS (SELECT okey, part, price, pre FROM (
-        |         SELECT *, row_number() OVER (PARTITION BY okey, part
-        |           ORDER BY pre DESC) AS rn
-        |         FROM raw WHERE pre % 7 = 1) WHERE rn = 1)
-        |SELECT okey, part, price, pre FROM (
-        |  SELECT * FROM b2
-        |  UNION ALL
-        |  SELECT b1.okey, b1.part, b1.price, b1.pre FROM b1
-        |  LEFT JOIN b2 ON b1.okey = b2.okey AND b1.part = b2.part
-        |  WHERE b2.pre IS NULL)
-        |ORDER BY part, okey""".stripMargin,
+    "q26_restore" -> twoBatchSqlMod(500),
     // the adopted raw batch-0 rows (duplicates preserved) anti-joined
     // by batch-1's deduped keys, plus the batch-1 winners
     "q35_bootstrap" ->

@@ -4,7 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, DataType}
+import org.apache.spark.sql.types.{BooleanType, DataType, StructField,
+  StructType}
 
 /** Merge-on-read table type — the OTHER Hudi table type
   * (`MERGE_ON_READ`; the reference pins `hudi-spark3-bundle_2.12:0.10.0`,
@@ -41,7 +42,7 @@ import org.apache.spark.sql.types.{BooleanType, DataType}
   *    delta commits interleave in one monotonic id sequence, so
   *    [[Merge.commits]] enumerates the full history and [[readSince]]
   *    pulls increments across both kinds;
-  *  - the key spec in `_graft_mor.json` (key columns, precombine
+  *  - the MOR spec in the table state (key columns, precombine
   *    column, partition columns), recorded at table creation so readers
   *    and table services need no out-of-band knowledge.
   *
@@ -97,32 +98,16 @@ object MorTable {
       keyCols: Seq[String], precombine: String, partitionCols: Seq[String],
       payload: String = "latest")
 
-  private def specFile(path: String) = new Path(path, "_graft_mor.json")
-
-  private[merge] def deltaRoot(spark: SparkSession, path: String): Path = {
-    val fs = Merge.fsFor(spark, path)
-    new Path(fs.makeQualified(new Path(path)), deltaRel)
-  }
-
-  /** Whether `path` is a MOR table (has a recorded `_graft_mor.json`).
-    * Cheap (one metadata existence check) — the dispatch consumers like
-    * [[IncrementalStream]] use to pick the right row source. */
-  def isMor(spark: SparkSession, path: String): Boolean =
-    Merge.fsFor(spark, path).exists(specFile(path))
-
   /** True iff `path` is a MOR table currently carrying delta files
     * under `_graft_deltas/` — the state in which a base-only answer
     * (footer row counts, footer column stats) is silently wrong,
     * because delta rows and tombstones are merge INPUTS the base
     * footers never see. Crash residue counts as live here:
     * conservative refusal beats a maybe-wrong answer, and [[compact]]
-    * clears both. Metadata-priced (one existence check + one delta
+    * clears both. Metadata-priced (the table-state load + one delta
     * listing), never a data scan. */
   def hasLiveDeltas(spark: SparkSession, path: String): Boolean =
-    isMor(spark, path) && {
-      val fs = Merge.fsFor(spark, path)
-      Merge.listDataStatuses(fs, deltaRoot(spark, path)).nonEmpty
-    }
+    liveDeltaFiles(spark, path).nonEmpty
 
   /** The live delta files as (qualified path, bytes) — the listing
     * complement of [[hasLiveDeltas]] for observability surfaces
@@ -130,39 +115,32 @@ object MorTable {
     * data of the table). Empty on a non-MOR path. */
   def liveDeltaFiles(spark: SparkSession, path: String)
       : Seq[(String, Long)] =
-    if (!isMor(spark, path)) Seq.empty
-    else {
-      val fs = Merge.fsFor(spark, path)
-      Merge.listDataStatuses(fs, deltaRoot(spark, path))
-        .map(st => (st.getPath.toString, st.getLen))
-    }
+    liveDeltas(TableState.load(spark, path))
+      .map(st => (st.getPath.toString, st.getLen))
 
-  /** The table's recorded key spec. Fails on a non-MOR path — a COW
-    * table has no `_graft_mor.json`. */
-  def spec(spark: SparkSession, path: String): MorSpec = {
-    val fs = Merge.fsFor(spark, path)
-    val f = specFile(path)
-    require(fs.exists(f),
-      s"$path is not a MOR table (no ${f.getName}) — Merge.* reads/writes " +
-        "COW tables, MorTable.* this format")
-    implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
-    val j = org.json4s.jackson.JsonMethods.parse(Merge.readSmallFile(fs, f))
-    MorSpec(
-      (j \ "key_cols").extract[Seq[String]],
-      (j \ "precombine").extract[String],
-      (j \ "partition_cols").extract[Seq[String]],
-      // absent in tables created before payloads existed = latest
-      (j \ "payload").extractOpt[String].getOrElse("latest"))
+  /** The live delta files (none on a COW table). */
+  private[merge] def liveDeltas(st: TableState)
+      : Seq[org.apache.hadoop.fs.FileStatus] =
+    if (st.mor.isEmpty) Nil
+    else Merge.listDataStatuses(st.fs, new Path(st.root, deltaRel))
+
+  /** The table's recorded MOR spec. Fails on a COW table. */
+  private def morSpec(st: TableState): MorSpec = {
+    require(st.mor.isDefined,
+      s"${st.path} is not a MOR table (no MOR spec recorded) — Merge.* " +
+        "reads/writes COW tables, MorTable.* this format")
+    st.mor.get
   }
 
-  private def writeSpec(spark: SparkSession, path: String, sp: MorSpec)
-      : Unit = {
-    val body = s"""{"key_cols":${Merge.jsonArray(sp.keyCols)},""" +
-      s""""precombine":${Merge.jsonQuote(sp.precombine)},""" +
-      s""""partition_cols":${Merge.jsonArray(sp.partitionCols)},""" +
-      s""""payload":${Merge.jsonQuote(sp.payload)}}"""
-    Merge.replaceSmallFile(Merge.fsFor(spark, path), specFile(path), body)
-  }
+  /** The recorded schema — always includes `_commit_ts` (the first
+    * write was versioned). */
+  private def recorded(st: TableState): StructType = st.schema.getOrElse(
+    throw new IllegalStateException(
+      s"MOR table ${st.path} has no recorded schema — was the base " +
+        "commit interrupted? rerun the first upsert"))
+
+  private def columns(s: StructType): Seq[(String, DataType)] =
+    s.fields.map(f => (f.name, f.dataType)).toSeq
 
   /** The snapshot merge order for one payload: `latest` picks the
     * newest commit; `ordered` picks the max precombine, ties to the
@@ -216,15 +194,16 @@ object MorTable {
       path: String,
       sp: MorSpec): Long = {
     val MorSpec(keyCols, precombine, partitionCols, _) = sp
-    if (!Merge.tableExists(spark, path)) {
-      // spec first: it is '_'-prefixed (invisible to tableExists), and a
-      // crash between it and the base commit leaves a retryable empty
-      // table, not a spec-less one
-      writeSpec(spark, path, sp)
+    val st = TableState.load(spark, path)
+    if (!st.hasData) {
+      // spec first: it is '_'-prefixed (no data), and a crash between it
+      // and the base commit leaves a retryable empty table, not a
+      // spec-less one
+      TableState.writeMor(st, sp)
       return Merge.upsertVersioned(spark, batch, path, keyCols, precombine,
         partitionCols)
     }
-    val stored = spec(spark, path)
+    val stored = morSpec(st)
     require(stored == sp,
       s"MOR spec mismatch at $path: table is $stored, caller passed $sp")
     val scoped = keyCols ++ partitionCols
@@ -233,8 +212,8 @@ object MorTable {
       val stamped = deduped.withColumn(Merge.commitCol, lit(cts))
       // widen the recorded schema BEFORE aligning, so a new column in
       // this batch survives the alignment and old rows null-fill
-      Merge.updateSchemaMeta(spark, path, stamped.schema)
-      val target = targetSchema(spark, path)
+      val target = columns(recorded(
+        Merge.updateSchemaMeta(spark, st, stamped.schema)))
       val body = Merge.alignTo(stamped, target)
         .withColumn(deletedCol, lit(false))
       publishDeltas(spark, path, body, stored, cts,
@@ -260,7 +239,8 @@ object MorTable {
     * Hudi-MOR's delete visibility split. `keys` must carry the spec's
     * key + partition columns. Returns the commit id. */
   def delete(spark: SparkSession, keys: DataFrame, path: String): Long = {
-    val sp = spec(spark, path)
+    val st = TableState.load(spark, path)
+    val sp = morSpec(st)
     val ordered = sp.payload == "ordered"
     if (ordered) require(keys.columns.contains(sp.precombine),
       s"ordered-payload MOR delete at $path needs the precombine column " +
@@ -274,24 +254,12 @@ object MorTable {
           scoped, sp.precombine)
       else keys.select(scoped.map(col): _*).distinct()
     Merge.versioned(spark, path) { cts =>
-      val target = targetSchema(spark, path)
       val body = Merge.alignTo(k.withColumn(Merge.commitCol, lit(cts)),
-        target).withColumn(deletedCol, lit(true))
+        columns(recorded(st))).withColumn(deletedCol, lit(true))
       publishDeltas(spark, path, body, sp, cts,
         Merge.touchedPartitions(k, sp.partitionCols)
           .map(Merge.renderPartition))
     }
-  }
-
-  /** Recorded schema as (name, type) pairs — always includes
-    * `_commit_ts` (the first write was versioned). */
-  private def targetSchema(spark: SparkSession, path: String)
-      : Seq[(String, DataType)] = {
-    val s = Merge.recordedSchema(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"MOR table $path has no recorded schema — was the base commit " +
-          "interrupted? rerun the first upsert"))
-    s.fields.map(f => (f.name, f.dataType)).toSeq
   }
 
   /** Stage → plan → publish, the delta-path instance of the
@@ -330,40 +298,61 @@ object MorTable {
     * filtered to ids with a recorded timeline entry (each delta file
     * holds one `_commit_ts` value, so parquet min/max stats prune whole
     * residue files, not rows). */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val sp = spec(spark, path)
-    val fs = Merge.fsFor(spark, path)
-    val base = Merge.readTable(spark, path)
-    val dRoot = deltaRoot(spark, path)
-    val deltaFiles = Merge.listDataStatuses(fs, dRoot)
-    if (deltaFiles.isEmpty) return base
-    val target = targetSchema(spark, path)
-    val deltaSchema = org.apache.spark.sql.types.StructType(
-      Merge.recordedSchema(spark, path).get.fields :+
-        org.apache.spark.sql.types.StructField(deletedCol, BooleanType))
-    val rawDeltas = spark.read.schema(deltaSchema)
-      .option("basePath", dRoot.toString).parquet(dRoot.toString)
-    val bad = Timeline.list(spark, path).unrecorded
-    val deltas =
-      if (bad.isEmpty) rawDeltas
-      else rawDeltas.filter(!col(Merge.commitCol).isin(bad: _*))
-    mergeSnapshot(base, deltas, sp, target)
+  def read(spark: SparkSession, path: String): DataFrame =
+    read(spark, TableState.load(spark, path))
+
+  private[merge] def read(spark: SparkSession, st: TableState): DataFrame = {
+    val sp = morSpec(st)
+    val base = Merge.readTable(spark, st)
+    if (liveDeltas(st).isEmpty) return base
+    val m = mergeWindow(base, liveDeltaRows(spark, st), sp, recorded(st))
+    m.untouched.unionByName(m.merged)
   }
 
+  /** Delta rows read at the recorded schema plus the tombstone flag,
+    * one read per resident root (`(delta namespace root, files)`),
+    * crash residue (unrecorded commit ids) filtered out — the one delta
+    * loader behind [[read]], [[readAsOf]] and [[compact]]. */
+  private def deltaRows(spark: SparkSession, st: TableState,
+      reads: Seq[(Path, Seq[String])]): DataFrame = {
+    val schema = StructType(recorded(st).fields :+
+      StructField(deletedCol, BooleanType))
+    if (reads.isEmpty)
+      return spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    val raw = reads.map { case (root, files) =>
+      spark.read.schema(schema).option("basePath", root.toString)
+        .parquet(files: _*)
+    }.reduce(_.unionByName(_))
+    val bad = Timeline.list(spark, st.path).unrecorded
+    if (bad.isEmpty) raw else raw.filter(!col(Merge.commitCol).isin(bad: _*))
+  }
+
+  /** Every live delta row (the whole delta namespace in one read). */
+  private def liveDeltaRows(spark: SparkSession, st: TableState): DataFrame = {
+    val dRoot = new Path(st.root, deltaRel).toString
+    deltaRows(spark, st, Seq(new Path(dRoot) -> Seq(dRoot)))
+  }
+
+  /** The partitions the deltas touch, the base rows outside them, and
+    * the per-key merge of the touched base rows with the deltas.
+    * `merged` carries no tombstone flag. */
+  private final case class Merged(touched: Seq[Seq[Any]],
+      untouched: DataFrame, merged: DataFrame)
+
   /** base ∪ deltas per-key argmax with tombstones filtered last — the
-    * snapshot merge shared by [[read]] and [[readAsOf]]. Only the
-    * delta-touched partitions shuffle; the rest of base unions
-    * straight through. */
-  private def mergeSnapshot(base: DataFrame, deltas: DataFrame,
-      sp: MorSpec, target: Seq[(String, DataType)]): DataFrame = {
-    val cols = target.map(_._1) :+ deletedCol
+    * one snapshot merge window, shared by [[read]], [[readAsOf]] and
+    * [[compact]]. Only the delta-touched partitions shuffle; the rest
+    * of base passes straight through. */
+  private def mergeWindow(base: DataFrame, deltas: DataFrame,
+      sp: MorSpec, target: StructType): Merged = {
+    val cols = target.fieldNames.toSeq :+ deletedCol
     val touched = Merge.touchedPartitions(
       deltas.select(sp.partitionCols.map(col): _*), sp.partitionCols)
     val touchedPred =
       coalesce(Merge.partitionIn(sp.partitionCols, touched), lit(false))
     val flagged = base.withColumn(deletedCol, lit(false))
       .select(cols.map(col): _*)
-    val untouched = flagged.filter(!touchedPred)
     val contested = flagged.filter(touchedPred)
       .unionByName(deltas.select(cols.map(col): _*))
     val w = Window
@@ -372,8 +361,8 @@ object MorTable {
     val merged = contested
       .withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1).drop("_rn")
-      .filter(!col(deletedCol))
-    untouched.unionByName(merged).drop(deletedCol)
+      .filter(!col(deletedCol)).drop(deletedCol)
+    Merged(touched, flagged.filter(!touchedPred).drop(deletedCol), merged)
   }
 
   /** MOR time travel: the snapshot as of recorded commit `asOf` —
@@ -383,52 +372,26 @@ object MorTable {
     * compaction read back from that compaction's history dir). Same
     * floor discipline as COW: [[Merge.clean]] bounds retention, and
     * any unversioned mutation voids honestly. */
-  def readAsOf(spark: SparkSession, path: String, asOf: Long): DataFrame = {
-    val sp = spec(spark, path)
-    val fs = Merge.fsFor(spark, path)
-    val tableRoot = fs.makeQualified(new Path(path))
-    val base = Merge.snapshotAt(spark, path, asOf)
-    val dRoot = deltaRoot(spark, path)
-    val initial = Merge.listDataStatuses(fs, dRoot)
-      .map(st => Merge.relativize(tableRoot, st.getPath))
+  def readAsOf(spark: SparkSession, path: String, asOf: Long): DataFrame =
+    readAsOf(spark, TableState.load(spark, path), asOf)
+
+  private[merge] def readAsOf(spark: SparkSession, st: TableState,
+      asOf: Long): DataFrame = {
+    val sp = morSpec(st)
+    val base = Merge.snapshotAt(spark, st, asOf)
+    val initial = liveDeltas(st)
+      .map(f => Merge.relativize(st.root, f.getPath))
     // the commit plans name base AND delta retirements in one removed
     // list — keep only this namespace's entries
-    val dmap = Merge.replayFileMap(spark, path, asOf, initial)
+    val dmap = Merge.replayFileMap(spark, st.path, asOf, initial)
       .filter { case (rel, _) => rel.startsWith(deltaRel + "/") }
-    val target = targetSchema(spark, path)
-    val deltaSchema = org.apache.spark.sql.types.StructType(
-      Merge.recordedSchema(spark, path).get.fields :+
-        org.apache.spark.sql.types.StructField(deletedCol, BooleanType))
-    if (dmap.isEmpty) return mergeSnapshot(base,
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], deltaSchema),
-      sp, target)
-    val deltas0 = dmap.toSeq.groupBy(_._2).toSeq
-      .sortBy(_._1.getOrElse(-1L))
-      .map { case (loc, grp) =>
-        val root = loc match {
-          case None => tableRoot
-          case Some(c) =>
-            val h = Merge.historyDir(path, c)
-            if (!fs.exists(h))
-              throw new IllegalStateException(
-                s"cannot time-travel to commit $asOf at $path: commit " +
-                  s"$c's retired delta files are missing from $h " +
-                  "(history damaged — was the directory removed " +
-                  "manually?)")
-            fs.makeQualified(h)
-        }
-        spark.read.schema(deltaSchema)
-          .option("basePath", new Path(root, deltaRel).toString)
-          .parquet(grp.map { case (rel, _) =>
-            new Path(root, rel).toString }: _*)
-      }.reduce(_.unionByName(_))
-    // defensive row filters on top of the file replay: crash residue
-    // (unrecorded ids) and any rows stamped past the as-of point
-    val bad = Timeline.list(spark, path).unrecorded
-    val deltas = deltas0.filter(col(Merge.commitCol) <= asOf &&
-      (if (bad.isEmpty) lit(true) else !col(Merge.commitCol).isin(bad: _*)))
-    mergeSnapshot(base, deltas, sp, target)
+    // defensive row filter on top of the file replay: any rows stamped
+    // past the as-of point
+    val deltas = deltaRows(spark, st,
+      Merge.residentGroups(st, asOf, dmap, deltaRel))
+      .filter(col(Merge.commitCol) <= asOf)
+    val m = mergeWindow(base, deltas, sp, recorded(st))
+    m.untouched.unionByName(m.merged)
   }
 
   /** Read-optimized view (Hudi `_ro`): base files only — columnar speed,
@@ -440,8 +403,12 @@ object MorTable {
   /** Incremental pull across base and delta commits: snapshot rows whose
     * winning version was written after `sinceTs` (same contract as
     * [[Merge.readSince]] — deleted keys simply stop appearing). */
-  def readSince(spark: SparkSession, path: String, sinceTs: Long): DataFrame =
-    read(spark, path).filter(col(Merge.commitCol) > sinceTs)
+  def readSince(spark: SparkSession, path: String, sinceTs: Long)
+      : DataFrame = {
+    val st = TableState.load(spark, path)
+    morSpec(st) // a COW table fails here, as in read
+    Merge.readSince(spark, st, sinceTs)
+  }
 
   /** Fold every live delta into base parquet — Hudi's MOR compaction.
     * Per delta-touched partition: compute the merged snapshot (stamps
@@ -458,43 +425,18 @@ object MorTable {
     * keeps pre-compaction snapshots ([[readAsOf]]) reconstructable.
     * Returns the number of delta files folded. */
   def compact(spark: SparkSession, path: String): Long = {
-    val sp = spec(spark, path)
-    val fs = Merge.fsFor(spark, path)
-    val dRoot = deltaRoot(spark, path)
-    val deltaFiles = Merge.listDataStatuses(fs, dRoot)
+    val st = TableState.load(spark, path)
+    val sp = morSpec(st)
+    val (fs, tableRoot) = (st.fs, st.root)
+    val deltaFiles = liveDeltas(st)
     if (deltaFiles.isEmpty) return 0L
-    val tableRoot = fs.makeQualified(new Path(path))
-    val target = targetSchema(spark, path)
-    val deltaSchema = org.apache.spark.sql.types.StructType(
-      Merge.recordedSchema(spark, path).get.fields :+
-        org.apache.spark.sql.types.StructField(deletedCol, BooleanType))
-    val rawDeltas = spark.read.schema(deltaSchema)
-      .option("basePath", dRoot.toString).parquet(dRoot.toString)
-    val bad = Timeline.list(spark, path).unrecorded
-    val deltas =
-      if (bad.isEmpty) rawDeltas
-      else rawDeltas.filter(!col(Merge.commitCol).isin(bad: _*))
-    val touched = Merge.touchedPartitions(
-      deltas.select(sp.partitionCols.map(col): _*), sp.partitionCols)
-    val touchedPred =
-      coalesce(Merge.partitionIn(sp.partitionCols, touched), lit(false))
-    val cols = target.map(_._1) :+ deletedCol
-    val contested = Merge.readTable(spark, path)
-      .withColumn(deletedCol, lit(false)).select(cols.map(col): _*)
-      .filter(touchedPred)
-      .unionByName(deltas.select(cols.map(col): _*))
-    val w = Window
-      .partitionBy((sp.partitionCols ++ sp.keyCols).map(col): _*)
-      .orderBy(mergeOrder(sp): _*)
-    val merged = contested
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1).drop("_rn")
-      .filter(!col(deletedCol)).drop(deletedCol)
-      // key-clustered layout within each rewritten partition, same as
-      // Merge.compact — keeps base parquet min/max stats selective
-      .sortWithinPartitions(
-        (sp.partitionCols ++ sp.keyCols).map(col): _*)
-    val touchedDirs = touched.map(t =>
+    val m = mergeWindow(Merge.readTable(spark, st), liveDeltaRows(spark, st),
+      sp, recorded(st))
+    // key-clustered layout within each rewritten partition, same as
+    // Merge.compact — keeps base parquet min/max stats selective
+    val merged = m.merged
+      .sortWithinPartitions((sp.partitionCols ++ sp.keyCols).map(col): _*)
+    val touchedDirs = m.touched.map(t =>
       Merge.partitionRelDir(sp.partitionCols, t))
     // consumed delta files are SUPERSEDED like the replaced base files:
     // they retire through the commit plan (crash → rollback restores
@@ -506,14 +448,14 @@ object MorTable {
     Merge.versioned(spark, path) { cts =>
       // compaction owns no rows (stamps pass through) — n_rows 0, like
       // a delete commit
-      (Merge.MergeStats(0L, touched.map(Merge.renderPartition)),
-        Some(Merge.commitFiles(spark, merged, path, sp.partitionCols,
-          superseded, touched, dropEmptied = true, Some(cts))))
+      (Merge.MergeStats(0L, m.touched.map(Merge.renderPartition)),
+        Some(Merge.commitFiles(spark, st, merged, sp.partitionCols,
+          superseded, m.touched, dropEmptied = true, Some(cts))))
     }
     // the retires left empty delta hive dirs behind — cosmetic sweep
-    deltaFiles.foreach { st =>
-      Merge.dropEmptiedDirs(fs, st.getPath.getParent,
-        Merge.relativize(tableRoot, st.getPath).count(_ == '/') - 1)
+    deltaFiles.foreach { f =>
+      Merge.dropEmptiedDirs(fs, f.getPath.getParent,
+        Merge.relativize(tableRoot, f.getPath).count(_ == '/') - 1)
     }
     deltaFiles.size.toLong
   }

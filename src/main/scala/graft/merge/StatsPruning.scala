@@ -291,9 +291,10 @@ object StatsPruning {
     * that re-apply their own exact filters (the DSv2 catalog scan). */
   def readKept(spark: SparkSession, path: String, kept: Seq[String])
       : DataFrame = {
-    val schema = Merge.recordedSchema(spark, path)
+    val st = TableState.load(spark, path)
+    val schema = st.schema
     if (kept.isEmpty) {
-      val s = schema.getOrElse(Merge.readTable(spark, path).schema)
+      val s = schema.getOrElse(Merge.readTable(spark, st).schema)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
     } else schema match {
@@ -460,10 +461,11 @@ object StatsPruning {
         }
     val fileSegs: Seq[(String, Seq[(String, String)])] =
       all.map(f => f -> segsOf(f))
-    val partitionCols = KeyIndex.readSpec(spark, path)
+    val st = TableState.load(spark, path)
+    val partitionCols = st.keySpec
       .map(_.partitionCols).getOrElse(
         fileSegs.flatMap(_._2.map(_._1)).distinct)
-    val tableSchema = Merge.readTable(spark, path).schema.fieldNames.toSet
+    val tableSchema = Merge.readTable(spark, st).schema.fieldNames.toSet
     val unknown = cols.filterNot(c =>
       tableSchema.contains(c) || partitionCols.contains(c))
     require(unknown.isEmpty,

@@ -133,10 +133,11 @@ private[merge] object Timeline {
   private def nextId(spark: SparkSession, path: String): Long = {
     val issued = list(spark, path).issued
     if (issued.nonEmpty) return issued.max + 1L
+    val st = TableState.load(spark, path)
     val dataMax =
-      if (!Merge.tableExists(spark, path)) 0L
+      if (!st.hasData) 0L
       else {
-        val t = Merge.readTable(spark, path)
+        val t = Merge.readTable(spark, st)
         if (!t.columns.contains(Merge.commitCol)) 0L
         else t.agg(coalesce(max(col(Merge.commitCol)), lit(0L)))
           .head().getLong(0)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
 
-import graft.merge.{Merge, MorTable}
+import graft.merge.{Merge, MorTable, TableState}
 
 /** `format("graft")` — the engine's versioned merge tables behind the
   * standard DataFrame read/write surface, the re-expression of the
@@ -100,7 +100,7 @@ class GraftSource extends RelationProvider with SchemaRelationProvider
       parameters: Map[String, String], schema: StructType): BaseRelation = {
     val spark = sqlContext.sparkSession
     val path = pathOf(parameters)
-    Merge.recordedSchema(spark, path) match {
+    TableState.load(spark, path).schema match {
       case None => Merge.createEmptyTable(spark, path, schema)
       case Some(rec) =>
         require(schema.fieldNames.forall(rec.fieldNames.contains),
@@ -156,7 +156,8 @@ object GraftSource {
   private[sources] def resolveView(spark: org.apache.spark.sql
       .SparkSession, parameters: Map[String, String]): DataFrame = {
     val path = pathOf(parameters)
-    val mor = MorTable.isMor(spark, path)
+    val st = TableState.load(spark, path)
+    val mor = st.mor.isDefined
     // `asOfTimestamp` (epoch millis OR an ISO-8601 instant) is the
     // API twin of SQL `TIMESTAMP AS OF`: resolved here to a commit id
     // via the recorded per-commit wall clock, then served by the same
@@ -182,9 +183,7 @@ object GraftSource {
     val since = opt(parameters, "sinceCommit").map(_.toLong)
     val changesAfter = opt(parameters, "changesAfter").map(_.toLong)
     (asOf, since, changesAfter) match {
-      case (Some(ts), _, _) =>
-        if (mor) MorTable.readAsOf(spark, path, ts)
-        else Merge.readAsOf(spark, path, ts)
+      case (Some(ts), _, _) => Merge.readState(spark, st, Some(ts))
       case (None, Some(s0), _) =>
         opt(parameters, "untilCommit").map(_.toLong) match {
           case Some(s1) =>
@@ -197,9 +196,7 @@ object GraftSource {
                 "miss rows in unmerged delta files (compact first, or " +
                 "use sinceCommit)")
             Merge.readBetween(spark, path, s0, s1)
-          case None =>
-            if (mor) MorTable.readSince(spark, path, s0)
-            else Merge.readSince(spark, path, s0)
+          case None => Merge.readSince(spark, st, s0)
         }
       case (None, None, Some(a)) =>
         if (mor) throw new IllegalArgumentException(
@@ -211,11 +208,9 @@ object GraftSource {
             "changesAfter requires changesUntil"))
         Merge.readChanges(spark, path, a, until, cols(parameters, "keys"))
       case _ =>
-        if (mor) {
-          if (opt(parameters, "optimized").exists(_.toBoolean))
-            MorTable.readOptimized(spark, path)
-          else MorTable.read(spark, path)
-        } else Merge.readTable(spark, path)
+        if (mor && opt(parameters, "optimized").exists(_.toBoolean))
+          MorTable.readOptimized(spark, path)
+        else Merge.readState(spark, st, None)
     }
   }
 
@@ -283,7 +278,7 @@ object GraftSource {
         // would turn ErrorIfExists into a silent append at cluster scale.
         val hPath = new org.apache.hadoop.fs.Path(path)
         val hFs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val exists = Merge.recordedSchema(spark, path).isDefined ||
+        val exists = TableState.load(spark, path).schema.isDefined ||
           hFs.exists(hPath)
         if (exists && mode == SaveMode.ErrorIfExists)
           throw new IllegalStateException(s"graft table already exists: $path")
@@ -294,23 +289,6 @@ object GraftSource {
   }
 }
 
-/** The v1 micro-batch [[Sink]] behind `writeStream.format("graft")` —
-  * the same provider seam Delta and Hudi shipped streaming writes
-  * through before DSv2 StreamingWrite existed, and the right fit here
-  * because graft's write path is a driver-orchestrated merge commit,
-  * not per-task row writers.
-  *
-  * At-least-once handling: Structured Streaming re-delivers the last
-  * micro-batch after a checkpoint recovery, so each committed batch id
-  * is recorded per QUERY id in a `_graft_stream_txn/` sidecar
-  * (complete-or-absent temp+rename, the recordCommit discipline) and
-  * replayed ids are SKIPPED — the x04 stamp-the-ingest-id recipe. The
-  * record lands after the write, so a crash exactly between the two
-  * re-applies one batch; with the keyed ops that window is still
-  * convergent (upsert re-applies the same per-key winners;
-  * `upsert_ordered` is argmax-invariant by construction — the x04
-  * contract), which is why the sink requires a keyed op and refuses
-  * blind appends (`op=insert` would duplicate rows on that window). */
 /** The v1 micro-batch [[org.apache.spark.sql.execution.streaming
   * .Source]] behind `readStream.format("graft")`.
   *
@@ -364,6 +342,23 @@ private[sources] class GraftStreamSource(sqlContext: SQLContext,
   override def stop(): Unit = ()
 }
 
+/** The v1 micro-batch [[Sink]] behind `writeStream.format("graft")` —
+  * the same provider seam Delta and Hudi shipped streaming writes
+  * through before DSv2 StreamingWrite existed, and the right fit here
+  * because graft's write path is a driver-orchestrated merge commit,
+  * not per-task row writers.
+  *
+  * At-least-once handling: Structured Streaming re-delivers the last
+  * micro-batch after a checkpoint recovery, so each committed batch id
+  * is recorded per QUERY id in a `_graft_stream_txn/` sidecar
+  * (complete-or-absent temp+rename, the recordCommit discipline) and
+  * replayed ids are SKIPPED — the x04 stamp-the-ingest-id recipe. The
+  * record lands after the write, so a crash exactly between the two
+  * re-applies one batch; with the keyed ops that window is still
+  * convergent (upsert re-applies the same per-key winners;
+  * `upsert_ordered` is argmax-invariant by construction — the x04
+  * contract), which is why the sink requires a keyed op and refuses
+  * blind appends (`op=insert` would duplicate rows on that window). */
 private[sources] class GraftSink(sqlContext: SQLContext,
     parameters: Map[String, String])
     extends org.apache.spark.sql.execution.streaming.Sink {
@@ -394,24 +389,14 @@ private[sources] class GraftSink(sqlContext: SQLContext,
     val f = fs(spark)
     val p = new Path(txnDir, qid)
     if (!f.exists(p)) None
-    else {
-      val buf = new Array[Byte](f.getFileStatus(p).getLen.toInt)
-      val in = f.open(p)
-      try in.readFully(buf) finally in.close()
-      Some(new String(buf, "UTF-8").trim.toLong)
-    }
+    else Some(Merge.readSmallFile(f, p).trim.toLong)
   }
 
   private def record(spark: org.apache.spark.sql.SparkSession,
       qid: String, batchId: Long): Unit = {
     val f = fs(spark)
     f.mkdirs(txnDir)
-    val tmp = new Path(txnDir, s".$qid.tmp")
-    val out = f.create(tmp, true)
-    try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-    f.delete(new Path(txnDir, qid), false)
-    f.rename(tmp, new Path(txnDir, qid))
-    ()
+    Merge.replaceSmallFile(f, new Path(txnDir, qid), batchId.toString)
   }
 
   override def addBatch(batchId: Long,
@@ -775,7 +760,7 @@ object GraftSourceQueries {
       graft.merge.Merge.bulkInsert(rows, path, "part",
         keyCols = Seq("okey"), targetFileBytes = 256L << 10)
       // declared keys must MATCH the key spec the bulkInsert above
-      // recorded in _graft_keys.json (keys=okey): the bloom arm reads
+      // recorded in the table state (keys=okey): the bloom arm reads
       // only the recorded spec, and a divergent declaration would mask
       // any future declared-vs-recorded validation (r10 advice)
       s.sql(
@@ -968,7 +953,7 @@ object GraftSourceQueries {
           col("o_orderkey").as("pre"),
           col("o_orderstatus").as("part"))
       // force both index arms at toy scale with a TABLE-SCOPED gate
-      // policy (recorded in _graft_index_gates.json before the first
+      // policy (recorded in the table state before the first
       // commit, so builds index and probes consult it) — not by
       // mutating the JVM-wide default vars, which would leak into any
       // concurrently running merge (the r10 advice finding)
@@ -1454,10 +1439,6 @@ class GraftRelation(override val sqlContext: SQLContext,
     GraftFilters.translate(f)
 }
 
-/** sources.Filter → Column for the standard predicate algebra; None
-  * for anything unknown (stays with the outer plan). Shared by the v1
-  * relation's buildScan and the DSv2 scan builder so both surfaces
-  * push exactly the same predicate set into the wrapped plan. */
 /** Plan-time file pruning for DSv2 catalog scans: when a pushed filter
   * conjunction bounds a column on BOTH sides (point lookup, BETWEEN,
   * `>= lo AND <= hi`), the plain-snapshot scan resolves to ONLY the
@@ -1493,7 +1474,7 @@ private[sources] object CatalogStatsPrune {
     if (params.keys.exists(k => travelKeys.contains(k.toLowerCase)))
       return None
     val path = GraftSource.pathOf(params)
-    if (graft.merge.MorTable.isMor(spark, path)) return None
+    if (TableState.load(spark, path).mor.isDefined) return None
     val los = scala.collection.mutable.Map.empty[String, Any]
     val his = scala.collection.mutable.Map.empty[String, Any]
     pushed.foreach {
@@ -1539,6 +1520,10 @@ private[sources] object CatalogStatsPrune {
   }
 }
 
+/** sources.Filter → Column for the standard predicate algebra; None
+  * for anything unknown (stays with the outer plan). Shared by the v1
+  * relation's buildScan and the DSv2 scan builder so both surfaces
+  * push exactly the same predicate set into the wrapped plan. */
 private[sources] object GraftFilters {
   def translate(f: Filter): Option[Column] = f match {
     case EqualTo(a, v) => Some(col(a) === lit(v))

@@ -20,7 +20,7 @@ import graft.merge.Merge
   * format), so [[ResolveGraftMerge]] swaps it for this command when the
   * target's provider is graft. Two metadata writes, zero data movement:
   *
-  *  1. the table's recorded schema (`_graft_schema.json`) gains the new
+  *  1. the table's recorded schema (in its table state) gains the new
   *     fields — rows in files written before the evolution read them as
   *     null ([[Merge.readTable]] null-fills via the recorded schema, no
   *     footer merge);

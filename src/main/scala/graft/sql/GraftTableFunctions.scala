@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.types.{BooleanType, DataType, IntegerType, LongType, ShortType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.merge.{KeyIndex, Merge}
+import graft.merge.{Merge, TableState}
 
 /** SQL table-valued functions over the engine's table metadata — the
   * Athena-shaped surface in two halves:
@@ -76,12 +76,11 @@ object GraftTableFunctions {
     * never a Spark job — so the EXPLAIN-stays-lazy contract of
     * [[dupSpansBuilder]]/[[gopherBuilder]] holds on every branch. */
   private[sql] def resolveCorpus(spark: SparkSession, path: String)
-      : org.apache.spark.sql.DataFrame =
-    if (graft.merge.MorTable.isMor(spark, path))
-      graft.merge.MorTable.read(spark, path)
-    else if (Merge.recordedSchema(spark, path).isDefined)
-      Merge.readTable(spark, path)
-    else spark.read.parquet(path)
+      : org.apache.spark.sql.DataFrame = {
+    val st = TableState.load(spark, path)
+    if (st.mor.isEmpty && st.schema.isEmpty) spark.read.parquet(path)
+    else Merge.readState(spark, st, None)
+  }
 
   private val intTypes: Seq[DataType] =
     Seq(IntegerType, LongType, ShortType)
@@ -95,8 +94,8 @@ object GraftTableFunctions {
 
   /** `SELECT * FROM graft_compact('<path>'[, target_file_bytes])` —
     * small-file compaction. Partition and key columns come from the
-    * table's recorded key spec (`_graft_keys.json`, written by every
-    * keyed op), so the analyst names only the table. Returns one row
+    * table's recorded key spec (written by every keyed op), so the
+    * analyst names only the table. Returns one row
     * of stats: (compacted_files, files_after). Idempotent: a second
     * run finds no small-file candidates and rewrites nothing
     * (compacted_files = 0). */
@@ -189,11 +188,9 @@ object GraftTableFunctions {
     val spark = SparkSession.active
     val df = exprs match {
       case Seq(p) => resolveCorpus(spark, strLit(p, usage))
-      case Seq(p, c) =>
-        val (path, asOf) = (strLit(p, usage), longLit(c, usage))
-        if (graft.merge.MorTable.isMor(spark, path))
-          graft.merge.MorTable.readAsOf(spark, path, asOf)
-        else Merge.readAsOf(spark, path, asOf)
+      case Seq(p, c) => Merge.readState(spark,
+        TableState.load(spark, strLit(p, usage)),
+        Some(longLit(c, usage)))
       case _ => throw new IllegalArgumentException(usage)
     }
     df.queryExecution.logical
@@ -428,7 +425,7 @@ object GraftTableFunctions {
     * integrity report ([[graft.merge.Fsck]]): staging leaks, timeline
     * residue, key/schema records, savepoint references, MOR delta
     * residue, footer row count — one `(check_name, status, detail)`
-    * row per check, statuses ok/warn/skip. Metadata-priced (listings
+    * row per check, statuses ok/warn/skip/fail. Metadata-priced (listings
     * + footers, no data scan) but still a distributed footer job on a
     * big table, so it defers to execution like graft_count; strictly
     * read-only — it NAMES what vacuum/rollback/compact would fix and
@@ -539,11 +536,11 @@ object GraftTableFunctions {
 
   private[sql] def specOrFail(spark: SparkSession, name: String,
       path: String): graft.merge.KeySpec =
-    KeyIndex.readSpec(spark, path).getOrElse(
+    TableState.load(spark, path).keySpec.getOrElse(
       throw new IllegalArgumentException(
         s"$name: no recorded key spec at $path — the procedure derives " +
-          "its partition/key columns from _graft_keys.json, which every " +
-          "keyed write records"))
+          "its partition/key columns from the key spec every keyed " +
+          "write records"))
 
   private[sql] def statsRow(names: (String, String)): Seq[Attribute] =
     Seq(AttributeReference(names._1, LongType, nullable = false)(),

@@ -95,12 +95,6 @@ object StreamLoader {
                   .write.mode("append").parquet(args.deadLetterDir)
                 false
             }
-          // T5 success half: one notification record per committed
-          // micro-batch (the reference's on-success SNS publish) — tiny
-          // control rows, not a copy of the data. OUTSIDE the merge
-          // try/catch: a failed notification must not dead-letter a batch
-          // the table already committed (replaying the DLQ would
-          // re-apply committed rows)
           // periodic maintenance AFTER the commit: a failed compaction
           // must neither dead-letter the batch (its data is committed)
           // nor stop the stream — the next pass retries naturally
@@ -118,6 +112,12 @@ object StreamLoader {
                   s"[stream-loader] compaction after batch $batchId failed: $e")
               }
           }
+          // T5 success half: one notification record per committed
+          // micro-batch (the reference's on-success SNS publish) — tiny
+          // control rows, not a copy of the data. OUTSIDE the merge
+          // try/catch: a failed notification must not dead-letter a batch
+          // the table already committed (replaying the DLQ would
+          // re-apply committed rows)
           if (committed) args.successDir.foreach { dir =>
             try df.agg(count(lit(1)).as("n_rows"),
                 concat_ws(",", sort_array(collect_set(col("pair"))))

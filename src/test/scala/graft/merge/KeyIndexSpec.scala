@@ -72,7 +72,7 @@ class KeyIndexSpec extends SparkSpec {
       "every live data file should carry an index entry")
     // candidate pruning: for EVERY key, the file that truly holds it
     // must be in the candidate set (no-false-negative, end to end)
-    val spec = KeyIndex.readSpec(spark, path).get
+    val spec = TableState.load(spark, path).keySpec.get
     val fs = Merge.fsFor(spark, path)
     val root = fs.makeQualified(new org.apache.hadoop.fs.Path(path))
     val all = listing(path).toSeq
@@ -82,7 +82,8 @@ class KeyIndexSpec extends SparkSpec {
     }.toMap
     for (k <- Seq(0L, 39L, 100L, 139L, 200L, 239L)) {
       val probe = Seq((k, "a")).toDF("k", "part")
-      val cand = KeyIndex.candidateFiles(spark, path, spec, Seq("part=a"),
+      val cand = KeyIndex.candidateFiles(spark,
+        TableState.load(spark, path), spec, Seq("part=a"),
         all, Long.MaxValue, probe).get.toSet
       val owners = truth.filter(_._2.contains(k)).keySet
       assert(owners.subsetOf(cand),
@@ -91,7 +92,8 @@ class KeyIndexSpec extends SparkSpec {
     // and pruning actually prunes: a key present in exactly one range
     // should not drag in all files (bloom fpp makes >1 possible, but
     // 6 tiny files at <1% fpp keeping ALL would mean no pruning)
-    val cand0 = KeyIndex.candidateFiles(spark, path, spec, Seq("part=a"),
+    val cand0 = KeyIndex.candidateFiles(spark,
+      TableState.load(spark, path), spec, Seq("part=a"),
       all, Long.MaxValue, Seq((0L, "a")).toDF("k", "part")).get
     assert(cand0.size < all.size)
   }
@@ -136,9 +138,10 @@ class KeyIndexSpec extends SparkSpec {
       .count(_.getName.endsWith(".json"))
     assert(idxFiles === 1, s"expected a folded index, got $idxFiles files")
     // fold is probe-invariant
-    val spec = KeyIndex.readSpec(spark, path).get
+    val spec = TableState.load(spark, path).keySpec.get
     val all = listing(path).toSeq
-    val cand = KeyIndex.candidateFiles(spark, path, spec, Seq("part=a"),
+    val cand = KeyIndex.candidateFiles(spark,
+      TableState.load(spark, path), spec, Seq("part=a"),
       all, Long.MaxValue, Seq((7L, "a")).toDF("k", "part")).get
     assert(cand.nonEmpty && cand.toSet.subsetOf(all.toSet))
   }
@@ -146,12 +149,13 @@ class KeyIndexSpec extends SparkSpec {
   test("phantom entries are ignored; unindexed files always scanned") {
     val path = probed("kix_phantom")
     Merge.upsert(spark, rows(0 until 30, "a"), path, keyCols, "v", "part")
-    val spec = KeyIndex.readSpec(spark, path).get
+    val spec = TableState.load(spark, path).keySpec.get
     // phantom: delete a data file from disk but leave its entry
     val victim = listing(path).head
     new java.io.File(s"$path/$victim").delete()
     val all = listing(path).toSeq
-    val cand = KeyIndex.candidateFiles(spark, path, spec, Seq("part=a"),
+    val cand = KeyIndex.candidateFiles(spark,
+      TableState.load(spark, path), spec, Seq("part=a"),
       all, Long.MaxValue, Seq((1L, "a")).toDF("k", "part"))
     cand.foreach(c => assert(!c.contains(victim),
       "a phantom index entry must never direct a read at a missing file"))
@@ -161,7 +165,7 @@ class KeyIndexSpec extends SparkSpec {
     Merge.upsert(spark, rows(0 until 30, "a"), fresh, keyCols, "v", "part")
     Merge.upsert(spark, rows(100 until 130, "a"), fresh, keyCols, "v",
       "part")
-    val fspec = KeyIndex.readSpec(spark, fresh).get
+    val fspec = TableState.load(spark, fresh).keySpec.get
     val fall = listing(fresh).toSeq
     val unindexed = fall.head
     // rewrite the index without that file's entry
@@ -176,7 +180,8 @@ class KeyIndexSpec extends SparkSpec {
       // out-of-band rewrite invalidated
       new java.io.File(dir, s".${f.getName}.crc").delete()
     }
-    val c2 = KeyIndex.candidateFiles(spark, fresh, fspec, Seq("part=a"),
+    val c2 = KeyIndex.candidateFiles(spark,
+      TableState.load(spark, fresh), fspec, Seq("part=a"),
       fall, Long.MaxValue, Seq((999999L, "a")).toDF("k", "part")).get
     assert(c2.contains(unindexed),
       "an unindexed data file must always be a candidate")
@@ -214,12 +219,12 @@ class KeyIndexSpec extends SparkSpec {
   test("a changed key spec drops the index and merges stay correct") {
     val path = probed("kix_spec")
     Merge.upsert(spark, rows(0 until 20, "a"), path, keyCols, "v", "part")
-    assert(KeyIndex.readSpec(spark, path).nonEmpty)
+    assert(TableState.load(spark, path).keySpec.nonEmpty)
     // same table, different record key → index must disable, not lie
     Merge.upsert(spark,
       Seq((100L, "a", "vx")).toDF("k", "part", "v"), path,
       Seq("v"), "k", "part")
-    assert(KeyIndex.readSpec(spark, path).isEmpty,
+    assert(TableState.load(spark, path).keySpec.isEmpty,
       "a conflicting key spec must drop the index")
     assert(!new java.io.File(s"$path/_graft_index").exists())
     assert(spark.read.parquet(path).count() === 21)
@@ -250,7 +255,7 @@ class KeyIndexSpec extends SparkSpec {
     Merge.upsert(spark, rows(100 until 120, "a"), path, keyCols, "v", "part")
     assert(Merge.compact(spark, path, "part", keyCols,
       targetFileBytes = 1L << 26) > 0)
-    assert(KeyIndex.readSpec(spark, path).nonEmpty)
+    assert(TableState.load(spark, path).keySpec.nonEmpty)
     assert(!new java.io.File(s"$path/_graft_index").exists(),
       "no file was ever indexed, so there is nothing to tombstone")
   }

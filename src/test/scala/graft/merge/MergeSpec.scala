@@ -436,6 +436,29 @@ class MergeSpec extends SparkSpec {
     assert(t.filter(col(Merge.commitCol) === 1L).count() === 1)
   }
 
+  // the footer-merge fallback must find the data files at any depth:
+  // unpartitioned tables keep them at the root, two-level layouts two
+  // directories down
+  Seq("unpartitioned" -> Seq.empty[String], "one-level" -> Seq("pair"),
+      "two-level" -> Seq("day", "pair")).foreach { case (layout, partCols) =>
+    test(s"missing schema metadata keeps evolved columns ($layout layout)") {
+      val path = tmpDir("schemafallback") + "/table"
+      def batch(ids: Seq[String]): DataFrame =
+        tx(ids.map(id => (id, "c1", "ADAGBP", 1.0)): _*)
+          .withColumn("day", lit("2024-01-01"))
+      def insert(df: DataFrame): Unit =
+        Merge.insert(df, path, partCols, Nil, null, dedup = false)
+      insert(batch(Seq("T1")))
+      insert(batch(Seq("T2")).withColumn("fee", lit(0.5)))
+      java.nio.file.Files.delete(
+        java.nio.file.Paths.get(path, "_graft_schema.json"))
+      insert(batch(Seq("T3")))
+      val t = Merge.readTable(spark, path)
+      assert(t.columns.contains("fee"), t.columns.mkString(","))
+      assert(t.filter(col("fee") === 0.5).count() === 1)
+    }
+  }
+
   test("vacuum removes leaked staging siblings, keeps the table and inflight markers") {
     val path = tmpDir("vacuum") + "/table"
     Merge.upsertVersioned(spark, tx(("T1", "c1", "ADAGBP", 1.0)),
@@ -828,8 +851,9 @@ class MergeSpec extends SparkSpec {
     // second writer violating the single-writer contract produces
     val ghost = s"$path/pair=ADAGBP/part-retired-by-other-writer.parquet"
     val e = intercept[RuntimeException] {
-      Merge.commitFiles(spark, tx(("T1", "c1", "ADAGBP", 2.0)), path,
-        Seq("pair"), supersededFiles = Seq(ghost), touched = Nil,
+      Merge.commitFiles(spark, TableState.load(spark, path),
+        tx(("T1", "c1", "ADAGBP", 2.0)), Seq("pair"),
+        supersededFiles = Seq(ghost), touched = Nil,
         dropEmptied = false)
     }
     // fails BEFORE any replacement lands, keeps the staged copy, and

@@ -218,6 +218,9 @@ class MorTableSpec extends SparkSpec {
       .select("transaction_id", "price").as[(String, Double)]
       .collect().toSeq.sorted
     assert(inc === Seq(("T1", 9.0)), "only commit-3's winner is newer than c2")
+    assert(Merge.readSince(spark, path, c2)
+      .select("transaction_id", "price").as[(String, Double)]
+      .collect().toSeq.sorted === inc, "Merge.readSince merges the deltas too")
     MorTable.compact(spark, path)
     assert(Merge.commits(spark, path).count() === 4,
       "compaction is a timeline event")

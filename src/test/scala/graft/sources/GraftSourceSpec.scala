@@ -259,6 +259,22 @@ class GraftSourceSpec extends SparkSpec {
     assert(e.getMessage.contains("replay-convergent"), e.getMessage)
   }
 
+  test("graft sink fails the batch when its replay record cannot land") {
+    import spark.implicits._
+    graft.FaultFs.install(spark)
+    val t = graft.FaultFs.tmpDir("graft_sink_txn_")
+    val sink = new GraftSink(spark.sqlContext, Map("path" -> t,
+      "op" -> "upsert", "keys" -> "id", "precombine" -> "pre",
+      "partition" -> "part"))
+    val e = intercept[java.io.IOException] {
+      graft.FaultFs.failing("rename", "/_graft_stream_txn/") {
+        sink.addBatch(0, Seq((1L, 10.0, "a", 1L)).toDF("id", "v", "part",
+          "pre"))
+      }
+    }
+    assert(e.getMessage.contains("_graft_stream_txn"), e.getMessage)
+  }
+
   test("readStream.format(graft): drained union = table state; a " +
       "resumed stream delivers only the NEW commit") {
     import spark.implicits._

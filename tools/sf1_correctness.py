@@ -35,9 +35,15 @@ def main():
             results[m.group(1)] = {"pass": False, "error": m.group(2)}
     sha = subprocess.run(["git", "rev-parse", "HEAD"],
                          capture_output=True, text=True).stdout.strip()[:12]
+    # the stamp names HEAD; "dirty" says whether the engine sources the
+    # Verify dump came from differ from it
+    dirty = bool(subprocess.run(
+        ["git", "status", "--porcelain", "--", "src", "build.sbt"],
+        capture_output=True, text=True).stdout.strip())
     artifact = {
         "sf_dir": sf_dir,
         "sha": sha,
+        "dirty": dirty,
         "generated_at": datetime.datetime.now(
             datetime.timezone.utc).isoformat(),
         "n_keys": len(results),
@@ -48,7 +54,8 @@ def main():
         json.dump(artifact, f, indent=1, sort_keys=True)
         f.write("\n")
     print(f"CORRECTNESS_sf1.json: {artifact['n_pass']}/"
-          f"{artifact['n_keys']} pass at {sf_dir} (sha {sha})")
+          f"{artifact['n_keys']} pass at {sf_dir} (sha {sha}, "
+          f"dirty {str(dirty).lower()})")
     sys.exit(0 if artifact["n_pass"] == artifact["n_keys"] else 1)
 
 
