@@ -108,22 +108,21 @@ object KeyIndex {
   /** Record `spec` on the table's first keyed write; on a later keyed
     * write with a DIFFERENT spec, drop the whole index (unindexed
     * tables stay correct — they just scan) and say so. Returns the
-    * state with what is recorded now, and whether the index is active
-    * for this spec. Column names containing commas cannot be recorded
-    * (the spec is stored comma-joined) — such tables simply run
-    * unindexed. */
-  private[merge] def ensureSpec(st: TableState,
-      spec: KeySpec): (TableState, Boolean) = {
-    if (spec.scoped.exists(_.contains(","))) return (st, false)
+    * state with what is recorded now: the index serves `spec` exactly
+    * when that state records it. Column names containing commas cannot
+    * be recorded (the spec is stored comma-joined) — such tables simply
+    * run unindexed. */
+  private[merge] def ensureSpec(st: TableState, spec: KeySpec): TableState = {
+    if (spec.scoped.exists(_.contains(","))) return st
     st.keySpec match {
-      case Some(existing) if existing == spec => (st, true)
+      case Some(existing) if existing == spec => st
       case Some(existing) =>
         System.err.println(s"[graft.merge] WARN: key spec changed on " +
           s"${st.path} (recorded ${existing.scoped.mkString("+")}, write " +
           s"uses ${spec.scoped.mkString("+")}); dropping the key index — " +
           "merges stay correct via full key scans")
-        (dropIndex(st), false)
-      case None => (TableState.writeKeySpec(st, spec), true)
+        dropIndex(st)
+      case None => TableState.writeKeySpec(st, spec)
     }
   }
 
@@ -293,8 +292,8 @@ object KeyIndex {
       allBytes: Long,
       probe: DataFrame): Option[Seq[String]] = {
     val (path, (gateFiles, gateBytes)) = (st.path, st.gates)
-    if (allFiles.size <= gateFiles || allBytes <= gateBytes)
-      return None
+    if (!st.keySpec.contains(spec) || allFiles.size <= gateFiles ||
+        allBytes <= gateBytes) return None
     val live = liveEntries(spark, path).getOrElse(return None)
       .filter(col("d").isin(touchedDirs: _*))
       .persist()
@@ -340,15 +339,15 @@ object KeyIndex {
     val schema = st.schema.getOrElse(return None)
     val fieldType = schema.fields.map(f => f.name -> f.dataType).toMap
     if (!spec.scoped.forall(fieldType.contains)) return None
-    val (fs, root) = (st.fs, st.root)
-    val dir = Merge.partitionRelDir(spec.partitionCols,
-      spec.partitionCols.map(values))
-    val statuses = Merge.listDataStatuses(fs, new Path(root, dir))
+    val root = st.root
+    val tuple = spec.partitionCols.map(values)
+    val statuses = Merge.touchedFiles(st, spec.partitionCols, Seq(tuple))
     val allFiles = statuses.map(st => Merge.relativize(root, st.getPath))
     // probe at the STORED types — hash parity with the build side
     val probe = spark.range(1).select(spec.scoped.map(c =>
       lit(values(c)).cast(fieldType(c)).as(c)): _*)
-    candidateFiles(spark, st, spec, Seq(dir), allFiles,
+    candidateFiles(spark, st, spec,
+      Seq(Merge.partitionRelDir(spec.partitionCols, tuple)), allFiles,
       statuses.map(_.getLen).sum, probe)
       .map(kept =>
         (kept.map(f => new Path(root, f).toString), allFiles.size))

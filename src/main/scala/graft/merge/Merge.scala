@@ -1,9 +1,15 @@
 package graft.merge
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SaveMode,
+  SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Predicate,
+  UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftSqlBridge
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.storage.StorageLevel
 
@@ -30,11 +36,12 @@ import org.apache.spark.storage.StorageLevel
   * Scale design (100 TB): a COW upsert must rewrite as little as
   * possible. Write amplification is bounded at FILE-GROUP granularity,
   * exactly like Hudi COW:
-  *  1. collect the batch's distinct partition values (low cardinality —
-  *     trading pairs) → the table read is a partition-pruned scan;
-  *  2. a column-pruned key scan over only those partitions joins against
-  *     the (broadcast) batch keys to find the parquet FILES that contain
-  *     matched keys;
+  *  1. collect the batch's scoped keys (bounded by the batch size):
+  *     they give the touched partitions, the empty-batch no-op and
+  *     whether the precombine window must run (a key repeats);
+  *  2. a column-pruned key scan of only the touched partition dirs,
+  *     filtered by membership in those keys, finds the parquet FILES
+  *     that contain matched keys;
   *  3. only those files are read back and reconciled; every other file —
   *     including files in the SAME partition whose key range the batch
   *     missed — is left physically untouched (a hot partition no longer
@@ -47,10 +54,10 @@ import org.apache.spark.storage.StorageLevel
   *     copy+delete: the publish step then re-copies the staged bytes
   *     and the partial-commit crash window widens accordingly (see
   *     [[commitFiles]]).
-  * The reconcile itself is broadcast-anti-join shaped (the batch is tiny
-  * vs the table), so the only table-sized cost is the key scan of the
-  * touched partitions — column-pruned to the key columns, which parquet
-  * serves from dictionary/stats pages.
+  * The reconcile itself is the same membership test negated, so the
+  * only table-sized cost is the key scan of the touched partitions —
+  * column-pruned to the key columns, which parquet serves from
+  * dictionary/stats pages. A write is three jobs: collect, probe, write.
   *
   * ==Single-writer contract==
   * A merge-managed table admits ONE writer at a time (the reference
@@ -107,25 +114,80 @@ object Merge {
       batch: DataFrame, partitionCols: Seq[String]): Seq[Seq[Any]] =
     // an unpartitioned table is one (empty-tuple) partition, always
     // touched — no job needed to know that (read-path planners like
-    // the MOR snapshot merge rely on this staying job-free; WRITE
-    // paths go through touchedPartitionsProbed)
+    // the MOR snapshot merge rely on this staying job-free; the COW
+    // keyed writes take theirs from [[BatchKeys]] instead)
     if (partitionCols.isEmpty) Seq(Seq.empty)
     else batch.select(partitionCols.map(col): _*).distinct().collect()
       .map(r => partitionCols.indices.map(r.get)).toSeq
 
-  /** [[touchedPartitions]] for the WRITE paths (upsert /
-    * insertOverwrite / delete): additionally probes an UNPARTITIONED
-    * batch for emptiness (one LIMIT-1 job — the partitioned branch
-    * already pays a distinct-collect job, so the layouts stay
-    * comparable) so that an empty batch yields ZERO touched partitions
-    * in both layouts and the callers' `parts.isEmpty` no-op guards
-    * fire identically — without it an empty write against an
-    * unpartitioned table ran a table-scoped merge and recorded a
-    * spurious timeline commit while the partitioned path no-opped. */
-  private[merge] def touchedPartitionsProbed(
-      batch: DataFrame, partitionCols: Seq[String]): Seq[Seq[Any]] =
-    if (partitionCols.isEmpty && batch.isEmpty) Seq.empty
-    else touchedPartitions(batch, partitionCols)
+  /** A collected value as Spark's grouping compares it under Scala
+    * `==`: binary by content, every NaN one value (-0.0 == 0.0 and
+    * null == null hold already; a column holds one type, so the NaN
+    * marker never meets a real string). */
+  private def groupingValue(v: Any): Any = v match {
+    case b: Array[Byte] => b.toSeq
+    case d: Double if d.isNaN => "NaN"
+    case f: Float if f.isNaN => "NaN"
+    case other => other
+  }
+
+  /** True where the struct `child` holds one of `keys` (field values as
+    * [[groupingValue]] gives them): a hash lookup built on the driver,
+    * so membership needs no join. The plan string counts the keys
+    * rather than rendering them. */
+  private final case class KeyIn(child: Expression, keys: Set[Seq[Any]])
+      extends UnaryExpression with Predicate with CodegenFallback {
+    @transient private lazy val types =
+      child.dataType.asInstanceOf[StructType].map(_.dataType)
+    override def nullable: Boolean = false
+    override def eval(input: InternalRow): Any = keys.contains(child
+      .eval(input).asInstanceOf[InternalRow].toSeq(types).map(groupingValue))
+    override def toString: String = s"$child IN ${keys.size} keys"
+    override def simpleString(maxFields: Int): String = toString
+    override def sql: String = toString
+    override protected def withNewChildInternal(c: Expression): KeyIn =
+      copy(child = c)
+  }
+
+  /** A keyed write's scoped keys, collected to the driver (bounded by
+    * the batch size: the bytes a broadcast of the keys held), with the
+    * touched partitions and whether a key repeats, compared as Spark
+    * groups. [[typed]] casts them to the stored types on the driver (a
+    * LocalRelation projection) and [[in]] tests against them in place,
+    * so neither runs a job. */
+  private final case class BatchKeys(spark: SparkSession, schema: StructType,
+      rows: Seq[Row], partitionCols: Seq[String]) {
+    private def cols = schema.fieldNames.toSeq
+    def parts: Seq[Seq[Any]] = rows.map(r => partitionCols.map(r.getAs[Any]))
+      .distinctBy(_.map(groupingValue))
+    def repeats: Boolean =
+      rows.distinctBy(_.toSeq.map(groupingValue)).size < rows.size
+    lazy val local: DataFrame = {
+      import scala.jdk.CollectionConverters._
+      spark.createDataFrame(rows.asJava, schema)
+    }
+    def typed(stored: StructType): BatchKeys =
+      if (cols.forall(c => schema(c).dataType == stored(c).dataType)) this
+      else {
+        val cast = local.select(
+          cols.map(c => col(c).cast(stored(c).dataType).as(c)): _*)
+        BatchKeys(spark, cast.schema, cast.collect().toSeq, partitionCols)
+      }
+    /** Null-safe membership of a row's scoped key in these keys. */
+    lazy val in: Column = {
+      val internal = CatalystTypeConverters.createToCatalystConverter(schema)
+      GraftSqlBridge.column(KeyIn(
+        GraftSqlBridge.expression(struct(cols.map(col): _*)),
+        rows.map(r => internal(r).asInstanceOf[InternalRow]
+          .toSeq(schema).map(groupingValue)).toSet))
+    }
+  }
+
+  private def batchKeys(batch: DataFrame, spec: KeySpec): BatchKeys = {
+    val keys = batch.select(spec.scoped.map(col): _*)
+    BatchKeys(batch.sparkSession, keys.schema, keys.collect().toSeq,
+      spec.partitionCols)
+  }
 
   /** Null-safe membership for the touched-partition filter: a plain
     * `isin` evaluates to NULL (= dropped) for null-partition rows, so a
@@ -157,19 +219,31 @@ object Merge {
           .reduceOption(_ && _).getOrElse(lit(true))
       }.reduceOption(_ || _).getOrElse(lit(false))
 
-  /** One hive path segment, escaped exactly as Spark's partitioned
-    * writes escape it (null → `__HIVE_DEFAULT_PARTITION__`). */
+  /** One hive path segment, rendered and escaped exactly as Spark's
+    * partitioned writes do it: the value cast to a string in the
+    * session time zone, null or empty → `__HIVE_DEFAULT_PARTITION__`. */
   private def partitionDirName(colName: String, v: Any): String = {
-    val dir = if (v == null) "__HIVE_DEFAULT_PARTITION__"
-      else org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .escapePathName(v.toString)
-    s"$colName=$dir"
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+    val rendered = Cast(Literal(v), org.apache.spark.sql.types.StringType,
+      Some(org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone))
+      .eval()
+    org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+      .getPartitionPathString(colName, Option(rendered).map(_.toString).orNull)
   }
 
   /** The table-relative directory of one partition tuple
-    * (`pair=ADAGBP` or `day=2024-01-01/pair=ADAGBP`). */
+    * (`pair=ADAGBP` or `day=2024-01-01/pair=ADAGBP`; "" for the empty
+    * tuple of an unpartitioned table). */
   private[merge] def partitionRelDir(cols: Seq[String], vals: Seq[Any]): String =
     cols.zip(vals).map { case (c, v) => partitionDirName(c, v) }.mkString("/")
+
+  /** The directory of one partition tuple under `root`; the empty tuple
+    * of an unpartitioned table is the root itself. */
+  private[merge] def partitionDir(root: Path, cols: Seq[String],
+      vals: Seq[Any]): Path = {
+    val rel = partitionRelDir(cols, vals)
+    if (rel.isEmpty) root else new Path(root, rel)
+  }
 
   /** Human-readable partition tuple for commit metadata: raw values
     * joined by '/' (single-column renders as the bare value, matching
@@ -518,13 +592,10 @@ object Merge {
     val recorded = try {
       if (dropEmptied) {
         touched.foreach { tuple =>
-          // hive path escaping (and the null-partition dir name) must
-          // match what the partitioned write produced; since the data
-          // files were already removed one by one, a surviving dir here
-          // is empty — cosmetic, but its absence is part of delete()'s
-          // contract.
-          dropEmptiedDirs(fs,
-            new Path(s"$path/${partitionRelDir(partitionCols, tuple)}"),
+          // the data files were already removed one by one, so a
+          // surviving dir here is empty — cosmetic, but its absence is
+          // part of delete()'s contract
+          dropEmptiedDirs(fs, partitionDir(tableRoot, partitionCols, tuple),
             partitionCols.size)
         }
       }
@@ -667,10 +738,10 @@ object Merge {
     // us which files this append created. The pre-listing is a no-op on
     // the usual fresh table; on an existing table it is one metadata
     // listing — the same magnitude as the write's own file operations.
-    val (st, indexed) =
-      if (keyCols.isEmpty) (TableState.load(spark, path), false)
-      else KeyIndex.ensureSpec(TableState.load(spark, path),
-        KeySpec(keyCols, partitionCols))
+    val spec = KeySpec(keyCols, partitionCols)
+    val st = if (keyCols.isEmpty) TableState.load(spark, path)
+      else KeyIndex.ensureSpec(TableState.load(spark, path), spec)
+    val indexed = keyCols.nonEmpty && st.keySpec.contains(spec)
     val (fs, tableRoot) = (st.fs, st.root)
     val before: Set[String] =
       if (indexed && st.hasData)
@@ -844,23 +915,22 @@ object Merge {
   }
 
   /** What a keyed write (upsert / insertOverwrite) plans its rewrite
-    * against: the persisted deduped batch, its touched partitions, the
-    * stored table, the target schema (stored columns plus the batch's
-    * additive ones), the key spec, and `newRows` — the batch aligned to
-    * the target and, on the versioned path, observed for the
-    * timeline's row count. */
-  private final case class KeyedWrite(st: TableState, deduped: DataFrame,
-      parts: Seq[Seq[Any]], stored: DataFrame,
-      target: Seq[(String, DataType)], spec: KeySpec, indexActive: Boolean,
+    * against: the batch keys at the stored types, the stored and target
+    * schemas (stored columns plus the batch's additive ones), and
+    * `newRows` — the deduped batch aligned to the target and, on the
+    * versioned path, observed for the timeline's row count. */
+  private final case class KeyedWrite(st: TableState, keys: BatchKeys,
+      stored: StructType, target: Seq[(String, DataType)], spec: KeySpec,
       newRows: DataFrame)
 
-  /** The shared frame of the keyed writes: precombine-dedup the batch,
-    * record the key spec, take the staged first write on a new table,
-    * no-op on an empty batch, enforce the additive-evolution contract,
-    * then commit the rows `plan` returns in place of the stored files
-    * it supersedes. The timeline's stats (deduped row count) are only
-    * observed on the versioned path (`cts` set) — the plain callers
-    * (streaming micro-batches, batch loads) all discard them. */
+  /** The shared frame of the keyed writes: record the key spec, collect
+    * the batch keys (job 1), precombine-dedup only when a key repeats,
+    * take the staged first write on a new table, no-op on an empty
+    * batch, enforce the additive-evolution contract, then commit the
+    * rows `plan` returns in place of the stored files it supersedes.
+    * The batch is read twice (keys, rows): it is cached unless the
+    * caller cached it, and only a cache made here is dropped here. The
+    * timeline's stats are only observed on the versioned path. */
   private def keyedWrite(
       spark: SparkSession,
       batch: DataFrame,
@@ -873,17 +943,16 @@ object Merge {
       plan: KeyedWrite => (DataFrame, Seq[String]))
       : (MergeStats, Option[CommitResult]) = {
     val spec = KeySpec(keyCols, partitionCols)
-    // persisted: the deduped batch feeds the partition collect, the key
-    // join build side, the merged union AND the stats count — one
-    // materialization instead of four replays of the batch lineage
-    val deduped = precombineDedup(batch, spec.scoped, precombine)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val owned = batch.storageLevel == StorageLevel.NONE
+    if (owned) batch.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       // record the table's key spec (first keyed write wins) so every
       // commit — including table services that take no keys — can
       // maintain the file-level key index
-      val (st, indexActive) =
-        KeyIndex.ensureSpec(TableState.load(spark, path), spec)
+      val st = KeyIndex.ensureSpec(TableState.load(spark, path), spec)
+      val keys = batchKeys(batch, spec)
+      val deduped = if (!keys.repeats) batch
+        else precombineDedup(batch, spec.scoped, precombine)
       // n_rows for the timeline is observed on the batch branch of the
       // write plan itself (Observation metrics count only successful
       // tasks) — no separate count job per commit
@@ -892,95 +961,79 @@ object Merge {
         obs.fold(df)(o => df.observe(o, count(lit(1)).as("n")))
       def stats(parts: Seq[String]): MergeStats =
         MergeStats(obs.map(_.get("n").asInstanceOf[Long]).getOrElse(0L), parts)
+      val rendered = keys.parts.map(renderPartition)
       if (!st.hasData) {
         // initial write: the same staged commit as every other write —
         // the staging + rename publish knows its added-file plan before
         // any file lands, so even a FIRST versioned commit rolls back
         val res = commitFiles(spark, st, observed(deduped), partitionCols,
           supersededFiles = Nil, touched = Nil, dropEmptied = false, cts)
-        return (stats(
-          if (cts.isDefined)
-            touchedPartitions(deduped, partitionCols).map(renderPartition)
-          else Nil), Some(res))
+        return (stats(rendered), Some(res))
       }
-      val parts = touchedPartitionsProbed(deduped, partitionCols)
-      if (parts.isEmpty) return (MergeStats(0L, Nil), None)
-      val stored = readTable(spark, st)
+      if (keys.rows.isEmpty) return (MergeStats(0L, Nil), None)
+      val stored = storedSchema(spark, st, partitionCols)
       // a batch may ADD columns (additive evolution) but never DROP
       // them: silently selecting the batch's columns out of a wider
       // stored schema would STRIP the extra columns (e.g. _commit_ts on
       // a table built by upsertVersioned) from every rewritten file
-      val missing = stored.columns.toSet -- deduped.columns.toSet
+      val missing = stored.fieldNames.toSet -- deduped.columns.toSet
       require(missing.isEmpty,
         s"$op batch schema mismatch vs stored table at $path: " +
           s"batch lacks ${missing.mkString(",")} " +
           s"(a versioned table must be written via ${op}Versioned)")
-      val extra = deduped.columns.filterNot(stored.columns.contains)
       val target: Seq[(String, DataType)] =
-        stored.schema.fields.map(f => f.name -> f.dataType).toIndexedSeq ++
-          deduped.schema.fields.filter(f => extra.contains(f.name))
-            .map(f => f.name -> f.dataType)
-      val (rows, superseded) = plan(KeyedWrite(st, deduped, parts, stored,
-        target, spec, indexActive, observed(alignTo(deduped, target))))
+        (stored.fields ++ deduped.schema.fields
+          .filterNot(f => stored.fieldNames.contains(f.name)))
+          .map(f => f.name -> f.dataType).toIndexedSeq
+      val typed = keys.typed(stored)
+      val (rows, superseded) = plan(KeyedWrite(st, typed, stored, target,
+        spec, observed(alignTo(deduped, target))))
       val res = commitFiles(spark, st, rows, partitionCols, superseded,
-        parts, dropEmptied = false, cts)
-      (stats(parts.map(renderPartition)), Some(res))
-    } finally deduped.unpersist()
+        typed.parts, dropEmptied = false, cts)
+      (stats(rendered), Some(res))
+    } finally if (owned) batch.unpersist()
   }
 
+  /** The stored schema without listing the table: the recorded one,
+    * nullable as a parquet read makes it; else read from the files. */
+  private def storedSchema(spark: SparkSession, st: TableState,
+      partitionCols: Seq[String]): StructType = GraftSqlBridge.asNullable(
+    st.schema.filter(s => partitionCols.forall(s.fieldNames.contains))
+      .getOrElse(readTable(spark, st).schema))
+
+  /** `files` (table-relative or absolute), read with the stored schema;
+    * `basePath` recovers the partition columns from the paths. */
+  private def readFiles(spark: SparkSession, st: TableState,
+      stored: StructType, files: Seq[String]): DataFrame =
+    spark.read.schema(stored).option("basePath", st.path)
+      .parquet(files.map(f => new Path(st.root, f).toString): _*)
+
+  private[merge] def touchedFiles(st: TableState, partitionCols: Seq[String],
+      parts: Seq[Seq[Any]]): Seq[org.apache.hadoop.fs.FileStatus] =
+    parts.flatMap(t =>
+      listDataStatuses(st.fs, partitionDir(st.root, partitionCols, t)))
+
   /** The data files of the touched partitions that hold at least one of
-    * `keys` (distinct scoped keys): a column-pruned key scan of the
-    * touched partitions, semi-joined (broadcast) against the keys.
-    * Null-safe <=>: a null key component / null partition must still
-    * match. The list is driver-resident — bounded by the key count (≤
-    * one path per matched key in the worst case), the same driver-side
-    * COW write planning Hudi does. Before the scan, the file-level key
-    * index (when active) prunes the candidate set: only files whose
-    * bloom may contain a key — plus unindexed files — are read at all,
-    * so per-commit scan cost tracks the matched file count, not
-    * partition size. */
-  private def matchedFiles(
-      spark: SparkSession,
-      st: TableState,
-      stored: DataFrame,
-      spec: KeySpec,
-      indexActive: Boolean,
-      parts: Seq[Seq[Any]],
-      keys: DataFrame): IndexedSeq[String] = {
-    val (fs, path, tableRoot) = (st.fs, st.path, st.root)
-    val candidates: Option[Seq[String]] =
-      if (!indexActive) None
-      else {
-        // probe at the STORED column types — the index build hashes
-        // values as read back from the committed files
-        val typedKeys = keys.select(spec.scoped.map(c =>
-          col(c).cast(stored.schema(c).dataType).as(c)): _*).distinct()
-        val touchedDirs = parts.map(t => partitionRelDir(spec.partitionCols, t))
-        val statuses = touchedDirs.flatMap(d =>
-          listDataStatuses(fs, new Path(tableRoot, d)))
-        val allFiles = statuses.map(st =>
-          relativize(tableRoot, st.getPath))
-        KeyIndex.candidateFiles(spark, st, spec, touchedDirs, allFiles,
-          statuses.map(_.getLen).sum, typedKeys)
-      }
-    val keySource = candidates match {
-      case Some(cand) if cand.isEmpty => None // no file can match
-      case Some(cand) => Some(spark.read.schema(stored.schema)
-        .option("basePath", path)
-        .parquet(cand.map(f => new Path(tableRoot, f).toString): _*))
-      case None => Some(stored.filter(partitionIn(spec.partitionCols, parts)))
-    }
-    keySource match {
-      case None => IndexedSeq.empty[String]
-      case Some(src) =>
-        val keyScan = src
-          .select(spec.scoped.map(col) :+ input_file_name().as("_file"): _*)
-        val matchCond = spec.scoped.map(c => keyScan(c) <=> keys(c))
-          .reduce(_ && _)
-        keyScan.join(broadcast(keys), matchCond, "left_semi")
-          .select("_file").distinct().collect()
-          .map(r => decodeFileName(r.getString(0))).toIndexedSeq
-    }
+    * `keys` (at the stored types): one job, a column-pruned key scan of
+    * only the touched partition directories filtered by null-safe key
+    * membership, each task returning its distinct file names (no
+    * broadcast, no shuffle). The list is driver-resident, bounded by the
+    * key count — the driver-side COW planning Hudi does. The file-level
+    * key index (when active) first prunes the candidates to the files
+    * whose bloom may hold a key, plus unindexed files. */
+  private def matchedFiles(spark: SparkSession, st: TableState,
+      stored: StructType, spec: KeySpec, keys: BatchKeys)
+      : IndexedSeq[String] = {
+    val statuses = touchedFiles(st, spec.partitionCols, keys.parts)
+    val allFiles = statuses.map(s => relativize(st.root, s.getPath))
+    val candidates = KeyIndex.candidateFiles(spark, st, spec,
+      keys.parts.map(partitionRelDir(spec.partitionCols, _)), allFiles,
+      statuses.map(_.getLen).sum, keys.local).getOrElse(allFiles)
+    if (candidates.isEmpty) IndexedSeq.empty
+    else readFiles(spark, st, stored, candidates).filter(keys.in)
+      .select(input_file_name()).as(Encoders.STRING)
+      .mapPartitions(_.distinct)(Encoders.STRING)
+      .collect().distinct.map(decodeFileName).toIndexedSeq
   }
 
   /** O1 at file-group granularity: only the files holding a batch key
@@ -997,17 +1050,13 @@ object Merge {
       ordered: Boolean): (MergeStats, Option[CommitResult]) =
     keyedWrite(spark, batch, path, keyCols, precombine, partitionCols, cts,
         "upsert") { w =>
-      val scopedKeys = w.spec.scoped
-      val batchKeys = w.deduped.select(scopedKeys.map(col): _*).distinct()
-      val matched = matchedFiles(spark, w.st, w.stored, w.spec,
-        w.indexActive, w.parts, batchKeys)
+      val matched = matchedFiles(spark, w.st, w.stored, w.spec, w.keys)
       val merged =
         if (matched.isEmpty) w.newRows // pure insert: nothing to rewrite
         else {
           // read ONLY the matched files; explicit schema (no footer
           // reads), basePath recovers the partition column from paths
-          val matchedRows = spark.read.schema(w.stored.schema)
-            .option("basePath", path).parquet(matched: _*)
+          val matchedRows = readFiles(spark, w.st, w.stored, matched)
           if (ordered) {
             // ordered payload (DefaultHoodieRecordPayload): per key the
             // max-precombine row wins across stored ∪ batch, ties to
@@ -1021,17 +1070,14 @@ object Merge {
               w.newRows.withColumn("_graft_src", lit(1))
                 .unionByName(alignTo(matchedRows, w.target)
                   .withColumn("_graft_src", lit(0))),
-              scopedKeys, precombine, tieBreak = Seq("_graft_src"))
+              w.spec.scoped, precombine, tieBreak = Seq("_graft_src"))
               .drop("_graft_src")
           } else {
             // batch wins over stored for the same key (Hudi upsert
             // semantics: incoming overwrites regardless of precombine
             // comparison vs stored)
-            val survCond = scopedKeys.map(c => matchedRows(c) <=> batchKeys(c))
-              .reduce(_ && _)
-            val survivors = matchedRows.join(broadcast(batchKeys), survCond,
-              "left_anti")
-            w.newRows.unionByName(alignTo(survivors, w.target))
+            w.newRows.unionByName(
+              alignTo(matchedRows.filter(!w.keys.in), w.target))
           }
         }
       (merged, matched)
@@ -1137,8 +1183,7 @@ object Merge {
         "insertOverwrite") { w =>
       // EVERY data file in a touched partition is superseded — this is
       // a metadata listing, not a scan
-      (w.newRows, w.parts.flatMap(t => listDataStatuses(w.st.fs,
-        new Path(w.st.root, partitionRelDir(partitionCols, t))))
+      (w.newRows, touchedFiles(w.st, partitionCols, w.keys.parts)
         .map(_.getPath.toString))
     }
 
@@ -1176,31 +1221,22 @@ object Merge {
     // semantics): a delete key only removes rows in ITS partition, never
     // a same-keyed row in another touched partition
     val spec = KeySpec(keyCols, partitionCols)
-    val delDistinct = keys.select(spec.scoped.map(col): _*).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val parts = touchedPartitionsProbed(delDistinct, partitionCols)
-      if (parts.isEmpty) return (MergeStats(0L, Nil), None)
-      val stored = readTable(spark, loaded)
-      // same index-pruned candidate discovery as upsert (delete keys
-      // are partition-scoped, i.e. exactly the indexed scoped key)
-      val (st, indexActive) = KeyIndex.ensureSpec(loaded, spec)
-      val matched = matchedFiles(spark, st, stored, spec, indexActive,
-        parts, delDistinct)
-      if (matched.isEmpty)
-        return (MergeStats(0L, parts.map(renderPartition)), None)
-      val matchedRows = spark.read.schema(stored.schema)
-        .option("basePath", path).parquet(matched: _*)
-      val survCond = spec.scoped.map(c => matchedRows(c) <=> delDistinct(c))
-        .reduce(_ && _)
-      val remaining = matchedRows.join(broadcast(delDistinct), survCond,
-        "left_anti")
-      val res = commitFiles(spark, st, remaining, partitionCols,
-        matched, parts, dropEmptied = true, cts)
-      // a delete commit WRITES no rows (n_rows 0 in the timeline); its
-      // effect is rows vanishing from every later read
-      (MergeStats(0L, parts.map(renderPartition)), Some(res))
-    } finally delDistinct.unpersist()
+    val collected = batchKeys(keys, spec)
+    if (collected.rows.isEmpty) return (MergeStats(0L, Nil), None)
+    val rendered = collected.parts.map(renderPartition)
+    // same index-pruned candidate discovery as upsert (delete keys
+    // are partition-scoped, i.e. exactly the indexed scoped key)
+    val st = KeyIndex.ensureSpec(loaded, spec)
+    val stored = storedSchema(spark, st, partitionCols)
+    val typed = collected.typed(stored)
+    val matched = matchedFiles(spark, st, stored, spec, typed)
+    if (matched.isEmpty) return (MergeStats(0L, rendered), None)
+    val remaining = readFiles(spark, st, stored, matched).filter(!typed.in)
+    val res = commitFiles(spark, st, remaining, partitionCols,
+      matched, typed.parts, dropEmptied = true, cts)
+    // a delete commit WRITES no rows (n_rows 0 in the timeline); its
+    // effect is rows vanishing from every later read
+    (MergeStats(0L, rendered), Some(res))
   }
 
   /** Small-file compaction — the Hudi clustering analogue, and the
@@ -1253,11 +1289,10 @@ object Merge {
     val (files, totalBytes) =
       compactionCandidates(st.fs, path, partitionCols, targetFileBytes)
     if (files.isEmpty) return 0L
-    val stored = readTable(spark, st)
     // stamps ride along untouched: the read schema includes commitCol,
     // and no column is rewritten — preservation IS the no-CDC contract
-    val rows = spark.read.schema(stored.schema)
-      .option("basePath", path).parquet(files: _*)
+    val rows = readFiles(spark, st, storedSchema(spark, st, partitionCols),
+      files)
     val nFiles = math.min(totalBytes / targetFileBytes + 1, maxFiles.toLong)
       .toInt
     val layout = (partitionCols.map(col) ++ keyCols.map(col)).toIndexedSeq
@@ -1437,9 +1472,7 @@ object Merge {
     val files = listDataFiles(fs, st.root).map(_.toString).toIndexedSeq
     if (files.isEmpty) return 0L
     val totalBytes = files.map(f => fs.getFileStatus(new Path(f)).getLen).sum
-    val stored = readTable(spark, st)
-    val rows = spark.read.schema(stored.schema)
-      .option("basePath", path).parquet(files: _*)
+    val rows = readFiles(spark, st, storedSchema(spark, st, Nil), files)
     val bits = math.min(16, 63 / zCols.size)
     val cells = (1L << bits) - 1
     val statAggs = zCols.flatMap(c => Seq(
@@ -3084,13 +3117,7 @@ object Merge {
     "x04_stream_upsert" -> ((s, dir) => {
       val path = scratchTable("graft_x04_")
       val inDir = scratchTable("graft_x04in_")
-      val rows = graft.Tables.orders(s, dir)
-        .filter(col("o_orderkey") % 7 <= 2)
-        .select(
-          (col("o_orderkey") % 500).as("okey"),
-          col("o_orderstatus").as("part"),
-          col("o_totalprice").as("price"),
-          col("o_orderkey").as("pre"))
+      val rows = (0 to 2).map(replayBatch(s, dir, _)).reduce(_ union _)
       rows.repartition(8).write.parquet(inDir)
       val q = graft.util.StreamTuning.startAdapted(s, inDir) {
         s.readStream.schema(rows.schema)
@@ -3115,13 +3142,7 @@ object Merge {
     "e18_stream_sink" -> ((s, dir) => {
       val path = scratchTable("graft_e18_")
       val inDir = scratchTable("graft_e18in_")
-      val rows = graft.Tables.orders(s, dir)
-        .filter(col("o_orderkey") % 7 <= 2)
-        .select(
-          (col("o_orderkey") % 500).as("okey"),
-          col("o_orderstatus").as("part"),
-          col("o_totalprice").as("price"),
-          col("o_orderkey").as("pre"))
+      val rows = (0 to 2).map(replayBatch(s, dir, _)).reduce(_ union _)
       rows.repartition(8).write.parquet(inDir)
       val q = graft.util.StreamTuning.startAdapted(s, inDir) {
         s.readStream.schema(rows.schema)

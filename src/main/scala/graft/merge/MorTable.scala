@@ -436,14 +436,11 @@ object MorTable {
     // Merge.compact — keeps base parquet min/max stats selective
     val merged = m.merged
       .sortWithinPartitions((sp.partitionCols ++ sp.keyCols).map(col): _*)
-    val touchedDirs = m.touched.map(t =>
-      Merge.partitionRelDir(sp.partitionCols, t))
     // consumed delta files are SUPERSEDED like the replaced base files:
     // they retire through the commit plan (crash → rollback restores
     // them; success → they move to this commit's history dir), which is
     // what keeps pre-compaction snapshots reconstructable
-    val superseded = touchedDirs
-      .flatMap(d => Merge.listDataStatuses(fs, new Path(tableRoot, d)))
+    val superseded = Merge.touchedFiles(st, sp.partitionCols, m.touched)
       .map(_.getPath.toString) ++ deltaFiles.map(_.getPath.toString)
     Merge.versioned(spark, path) { cts =>
       // compaction owns no rows (stamps pass through) — n_rows 0, like

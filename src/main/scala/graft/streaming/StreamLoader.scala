@@ -78,9 +78,9 @@ object StreamLoader {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // persisted for the batch's lifetime: the transform feeds the
-        // merge (several actions), the dead-letter write AND the success
-        // notification — without the cache each action would re-run the
-        // whole transform over the source files per micro-batch
+        // merge (key collect and write, both served by this cache), the
+        // dead-letter write AND the success notification — without it
+        // each action would re-run the transform over the source files
         val df = LoadTransactions.transform(batch, args.additionalColumns)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {

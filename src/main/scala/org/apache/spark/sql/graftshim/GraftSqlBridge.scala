@@ -3,9 +3,10 @@ package org.apache.spark.sql.graftshim
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
-/** Narrow bridge to two `private[sql]` seams the SQL command layer
+/** Narrow bridge to the `private[sql]` seams the SQL command layer
   * needs — the same seams every external Spark table format (Delta,
   * Hudi, Iceberg) reaches through a package-placed shim:
   *
@@ -52,4 +53,7 @@ object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
 
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** `s` with every field and nested element nullable. */
+  def asNullable(s: StructType): StructType = s.asNullable
 }

@@ -11,11 +11,14 @@ import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.SparkSession
 
 /** A local filesystem under its own scheme (`faultfs:///tmp/...`) that
-  * counts open / list / create / rename / delete per path and fails an
-  * op whose path matches a pattern the test set ([[FaultFs.failing]]).
-  * A failed rename or delete returns false (Hadoop's way of reporting
-  * those); a failed open, list or create throws. Rename is counted and
-  * matched by its destination.
+  * counts open / stat / list / create / mkdirs / rename / delete per
+  * path and fails an op whose path matches a pattern the test set
+  * ([[FaultFs.failing]]). A failed mkdirs, rename or delete returns
+  * false (Hadoop's way of reporting those); a failed open, stat, list or
+  * create throws. Rename is counted and matched by its destination.
+  * `stat` is `getFileStatus`: `exists` is one, and the local
+  * `listStatus` stats every child it returns, so a listing's metadata
+  * cost shows in the stat counts of the children.
   *
   * Installed per session through `fs.faultfs.impl`, the seam Spark's own
   * suites use for instrumented filesystems. The counters and the fault
@@ -28,6 +31,19 @@ final class FaultFs extends RawLocalFileSystem {
     FaultFs.throwIfFailing("open", f)
     super.open(f, bufferSize)
   }
+
+  override def getFileStatus(f: Path): FileStatus = {
+    FaultFs.throwIfFailing("stat", f)
+    super.getFileStatus(f)
+  }
+
+  // both overloads: the local filesystem implements each directly, and
+  // creates missing parents through the one-argument form
+  override def mkdirs(f: Path): Boolean =
+    !FaultFs.hit("mkdirs", f) && super.mkdirs(f)
+
+  override def mkdirs(f: Path, permission: FsPermission): Boolean =
+    !FaultFs.hit("mkdirs", f) && super.mkdirs(f, permission)
 
   override def listStatus(f: Path): Array[FileStatus] = {
     FaultFs.throwIfFailing("list", f)
