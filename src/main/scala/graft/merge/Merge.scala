@@ -4,9 +4,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SaveMode,
   SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Expression, Predicate,
-  UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression,
+  Predicate, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
+  ExprCode, FalseLiteral, GenerateUnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.GraftSqlBridge
@@ -114,54 +116,63 @@ object Merge {
       batch: DataFrame, partitionCols: Seq[String]): Seq[Seq[Any]] =
     // an unpartitioned table is one (empty-tuple) partition, always
     // touched — no job needed to know that (read-path planners like
-    // the MOR snapshot merge rely on this staying job-free; the COW
-    // keyed writes take theirs from [[BatchKeys]] instead)
+    // the MOR snapshot merge rely on this staying job-free; a COW
+    // keyed write past the table's first takes them from [[BatchKeys]])
     if (partitionCols.isEmpty) Seq(Seq.empty)
     else batch.select(partitionCols.map(col): _*).distinct().collect()
       .map(r => partitionCols.indices.map(r.get)).toSeq
 
-  /** A collected value as Spark's grouping compares it under Scala
-    * `==`: binary by content, every NaN one value (-0.0 == 0.0 and
-    * null == null hold already; a column holds one type, so the NaN
-    * marker never meets a real string). */
-  private def groupingValue(v: Any): Any = v match {
-    case b: Array[Byte] => b.toSeq
-    case d: Double if d.isNaN => "NaN"
-    case f: Float if f.isNaN => "NaN"
-    case other => other
-  }
+  /** The key expressions `keys` normalized as Spark's hash joins and
+    * aggregates normalize theirs (one NaN, -0.0 = 0.0); projected to an
+    * UnsafeRow they compare by bytes (binary by content, null = null). */
+  private def keyRow(keys: Seq[Expression]): Seq[Expression] =
+    keys.map(GraftSqlBridge.normalizeKey)
 
-  /** True where the struct `child` holds one of `keys` (field values as
-    * [[groupingValue]] gives them): a hash lookup built on the driver,
-    * so membership needs no join. The plan string counts the keys
-    * rather than rendering them. */
-  private final case class KeyIn(child: Expression, keys: Set[Seq[Any]])
-      extends UnaryExpression with Predicate with CodegenFallback {
-    @transient private lazy val types =
-      child.dataType.asInstanceOf[StructType].map(_.dataType)
+  /** True where the key columns `children` hold one of `keys` (rows of
+    * [[keyRow]] at the children's types): the build side of a hash join,
+    * made on the driver. A broadcast join of collected keys would cost
+    * one more job per use (the broadcast exchange collects even a
+    * LocalRelation with a job). The plan string counts the keys. */
+  private final case class KeyIn(children: Seq[Expression],
+      keys: Set[UnsafeRow]) extends Expression with Predicate {
+    @transient private lazy val project = UnsafeProjection.create(keyRow(children))
     override def nullable: Boolean = false
-    override def eval(input: InternalRow): Any = keys.contains(child
-      .eval(input).asInstanceOf[InternalRow].toSeq(types).map(groupingValue))
-    override def toString: String = s"$child IN ${keys.size} keys"
+    override def eval(input: InternalRow): Any = keys.contains(project(input))
+    override protected def doGenCode(ctx: CodegenContext,
+        ev: ExprCode): ExprCode = {
+      val row = GenerateUnsafeProjection.createCode(ctx, keyRow(children))
+      val set = ctx.addReferenceObj("keys", keys, "scala.collection.Set")
+      ev.copy(code = code"""${row.code}
+        |boolean ${ev.value} = $set.contains(${row.value});""".stripMargin,
+        isNull = FalseLiteral)
+    }
+    override def toString: String =
+      s"(${children.mkString(", ")}) IN ${keys.size} keys"
     override def simpleString(maxFields: Int): String = toString
     override def sql: String = toString
-    override protected def withNewChildInternal(c: Expression): KeyIn =
-      copy(child = c)
+    override protected def withNewChildrenInternal(
+        c: IndexedSeq[Expression]): KeyIn = copy(children = c)
   }
 
   /** A keyed write's scoped keys, collected to the driver (bounded by
     * the batch size: the bytes a broadcast of the keys held), with the
-    * touched partitions and whether a key repeats, compared as Spark
-    * groups. [[typed]] casts them to the stored types on the driver (a
-    * LocalRelation projection) and [[in]] tests against them in place,
-    * so neither runs a job. */
+    * touched partitions and whether a key repeats, compared as [[KeyIn]]
+    * compares them. [[typed]] casts them to the stored types on the
+    * driver (a LocalRelation projection) and [[in]] tests against them
+    * in place, so neither runs a job. */
   private final case class BatchKeys(spark: SparkSession, schema: StructType,
       rows: Seq[Row], partitionCols: Seq[String]) {
     private def cols = schema.fieldNames.toSeq
-    def parts: Seq[Seq[Any]] = rows.map(r => partitionCols.map(r.getAs[Any]))
-      .distinctBy(_.map(groupingValue))
-    def repeats: Boolean =
-      rows.distinctBy(_.toSeq.map(groupingValue)).size < rows.size
+    private def keyRows(of: Seq[String]): Seq[UnsafeRow] = {
+      val internal = CatalystTypeConverters.createToCatalystConverter(schema)
+      val project = UnsafeProjection.create(keyRow(of.map { c =>
+        BoundReference(schema.fieldIndex(c), schema(c).dataType, true) }))
+      rows.map(r => project(internal(r).asInstanceOf[InternalRow]).copy())
+    }
+    private lazy val scoped = keyRows(cols)
+    lazy val parts: Seq[Seq[Any]] = rows.zip(keyRows(partitionCols))
+      .distinctBy(_._2).map { case (r, _) => partitionCols.map(r.getAs[Any]) }
+    def repeats: Boolean = scoped.distinct.size < rows.size
     lazy val local: DataFrame = {
       import scala.jdk.CollectionConverters._
       spark.createDataFrame(rows.asJava, schema)
@@ -174,13 +185,9 @@ object Merge {
         BatchKeys(spark, cast.schema, cast.collect().toSeq, partitionCols)
       }
     /** Null-safe membership of a row's scoped key in these keys. */
-    lazy val in: Column = {
-      val internal = CatalystTypeConverters.createToCatalystConverter(schema)
-      GraftSqlBridge.column(KeyIn(
-        GraftSqlBridge.expression(struct(cols.map(col): _*)),
-        rows.map(r => internal(r).asInstanceOf[InternalRow]
-          .toSeq(schema).map(groupingValue)).toSet))
-    }
+    lazy val in: Column = GraftSqlBridge.column(KeyIn(cols.map(c =>
+      GraftSqlBridge.expression(col(c).cast(schema(c).dataType))),
+      scoped.toSet))
   }
 
   private def batchKeys(batch: DataFrame, spec: KeySpec): BatchKeys = {
@@ -923,10 +930,10 @@ object Merge {
       stored: StructType, target: Seq[(String, DataType)], spec: KeySpec,
       newRows: DataFrame)
 
-  /** The shared frame of the keyed writes: record the key spec, collect
-    * the batch keys (job 1), precombine-dedup only when a key repeats,
-    * take the staged first write on a new table, no-op on an empty
-    * batch, enforce the additive-evolution contract, then commit the
+  /** The shared frame of the keyed writes: record the key spec, take
+    * the staged first write on a new table, collect the batch keys (job
+    * 1), no-op on an empty batch, precombine-dedup only when a key
+    * repeats, enforce the additive-evolution contract, then commit the
     * rows `plan` returns in place of the stored files it supersedes.
     * The batch is read twice (keys, rows): it is cached unless the
     * caller cached it, and only a cache made here is dropped here. The
@@ -950,9 +957,6 @@ object Merge {
       // commit — including table services that take no keys — can
       // maintain the file-level key index
       val st = KeyIndex.ensureSpec(TableState.load(spark, path), spec)
-      val keys = batchKeys(batch, spec)
-      val deduped = if (!keys.repeats) batch
-        else precombineDedup(batch, spec.scoped, precombine)
       // n_rows for the timeline is observed on the batch branch of the
       // write plan itself (Observation metrics count only successful
       // tasks) — no separate count job per commit
@@ -961,16 +965,24 @@ object Merge {
         obs.fold(df)(o => df.observe(o, count(lit(1)).as("n")))
       def stats(parts: Seq[String]): MergeStats =
         MergeStats(obs.map(_.get("n").asInstanceOf[Long]).getOrElse(0L), parts)
-      val rendered = keys.parts.map(renderPartition)
       if (!st.hasData) {
         // initial write: the same staged commit as every other write —
         // the staging + rename publish knows its added-file plan before
-        // any file lands, so even a FIRST versioned commit rolls back
-        val res = commitFiles(spark, st, observed(deduped), partitionCols,
-          supersededFiles = Nil, touched = Nil, dropEmptied = false, cts)
-        return (stats(rendered), Some(res))
+        // any file lands, so even a FIRST versioned commit rolls back.
+        // No key collect: a bulk load's keys need not fit the driver,
+        // so the window always runs (dedup keeps every partition).
+        val res = commitFiles(spark, st,
+          observed(precombineDedup(batch, spec.scoped, precombine)),
+          partitionCols, supersededFiles = Nil, touched = Nil,
+          dropEmptied = false, cts)
+        return (stats(if (cts.isEmpty) Nil
+          else touchedPartitions(batch, partitionCols).map(renderPartition)),
+          Some(res))
       }
+      val keys = batchKeys(batch, spec)
       if (keys.rows.isEmpty) return (MergeStats(0L, Nil), None)
+      val deduped = if (!keys.repeats) batch
+        else precombineDedup(batch, spec.scoped, precombine)
       val stored = storedSchema(spark, st, partitionCols)
       // a batch may ADD columns (additive evolution) but never DROP
       // them: silently selecting the batch's columns out of a wider
@@ -990,7 +1002,7 @@ object Merge {
         spec, observed(alignTo(deduped, target))))
       val res = commitFiles(spark, st, rows, partitionCols, superseded,
         typed.parts, dropEmptied = false, cts)
-      (stats(rendered), Some(res))
+      (stats(keys.parts.map(renderPartition)), Some(res))
     } finally if (owned) batch.unpersist()
   }
 
@@ -3117,7 +3129,13 @@ object Merge {
     "x04_stream_upsert" -> ((s, dir) => {
       val path = scratchTable("graft_x04_")
       val inDir = scratchTable("graft_x04in_")
-      val rows = (0 to 2).map(replayBatch(s, dir, _)).reduce(_ union _)
+      val rows = graft.Tables.orders(s, dir)
+        .filter(col("o_orderkey") % 7 <= 2)
+        .select(
+          (col("o_orderkey") % 500).as("okey"),
+          col("o_orderstatus").as("part"),
+          col("o_totalprice").as("price"),
+          col("o_orderkey").as("pre"))
       rows.repartition(8).write.parquet(inDir)
       val q = graft.util.StreamTuning.startAdapted(s, inDir) {
         s.readStream.schema(rows.schema)
@@ -3142,7 +3160,13 @@ object Merge {
     "e18_stream_sink" -> ((s, dir) => {
       val path = scratchTable("graft_e18_")
       val inDir = scratchTable("graft_e18in_")
-      val rows = (0 to 2).map(replayBatch(s, dir, _)).reduce(_ union _)
+      val rows = graft.Tables.orders(s, dir)
+        .filter(col("o_orderkey") % 7 <= 2)
+        .select(
+          (col("o_orderkey") % 500).as("okey"),
+          col("o_orderstatus").as("part"),
+          col("o_totalprice").as("price"),
+          col("o_orderkey").as("pre"))
       rows.repartition(8).write.parquet(inDir)
       val q = graft.util.StreamTuning.startAdapted(s, inDir) {
         s.readStream.schema(rows.schema)

@@ -56,4 +56,10 @@ object GraftSqlBridge {
 
   /** `s` with every field and nested element nullable. */
   def asNullable(s: StructType): StructType = s.asNullable
+
+  /** `e` as Spark's hash joins and aggregates normalize a key (every
+    * NaN one value, -0.0 = 0.0). */
+  def normalizeKey(e: Expression): Expression =
+    org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers
+      .normalize(e)
 }

@@ -106,6 +106,16 @@ class KeyedWriteSpec extends SparkSpec {
       Array[Byte](), Array[Byte](), Array[Byte](3))),
     ("double", DoubleType, Seq(Double.NaN, nanBits, -0.0, 0.0, null, 1.5)))
 
+  private val generated = Map("spark.sql.codegen.fallback" -> "false",
+    "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
+  private val interpreted = Map("spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+
+  private def withConf(conf: Map[String, String])(body: => Unit): Unit = {
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally conf.keys.foreach(spark.conf.unset)
+  }
+
   repeatCases.foreach { case (name, dt, keys) =>
     test(s"repeated $name keys dedupe exactly as precombineDedup does, " +
         "and a second write replaces them") {
@@ -120,11 +130,18 @@ class KeyedWriteSpec extends SparkSpec {
       Merge.upsert(spark, batch(0), path, Seq("k"), "pre", Seq("part"))
       assert(rowsOf(Merge.readTable(spark, path).select("k", "part", "pre")) ===
         expected)
-      // the same keys again: the probe must find every stored key (no
-      // duplicate survives) and the batch wins
-      Merge.upsert(spark, batch(100), path, Seq("k"), "pre", Seq("part"))
-      assert(rowsOf(Merge.readTable(spark, path).select("k", "part", "pre")) ===
-        rowsOf(Merge.precombineDedup(batch(100), Seq("k", "part"), "pre")))
+      // the same keys again, through the generated key probe (with no
+      // fallback) and then the interpreted one: each must find every
+      // stored key (no duplicate survives) and the batch wins
+      Seq(generated, interpreted).zip(Seq(100L, 200L)).foreach {
+        case (conf, base) =>
+          withConf(conf) {
+            Merge.upsert(spark, batch(base), path, Seq("k"), "pre", Seq("part"))
+          }
+          assert(rowsOf(Merge.readTable(spark, path)
+            .select("k", "part", "pre")) === rowsOf(Merge.precombineDedup(
+            batch(base), Seq("k", "part"), "pre")), conf)
+      }
     }
   }
 
