@@ -1,6 +1,7 @@
 package graft.merge
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SaveMode,
   SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
@@ -129,25 +130,28 @@ object Merge {
     keys.map(GraftSqlBridge.normalizeKey)
 
   /** True where the key columns `children` hold one of `keys` (rows of
-    * [[keyRow]] at the children's types): the build side of a hash join,
-    * made on the driver. A broadcast join of collected keys would cost
-    * one more job per use (the broadcast exchange collects even a
-    * LocalRelation with a job). The plan string counts the keys. */
+    * [[keyRow]] at the children's types, `count` of them): the build side
+    * of a hash join, made on the driver and broadcast once, as a
+    * broadcast join's is. A broadcast join of the collected keys would
+    * cost one more job per use (the broadcast exchange collects even a
+    * LocalRelation with a job). */
   private final case class KeyIn(children: Seq[Expression],
-      keys: Set[UnsafeRow]) extends Expression with Predicate {
+      keys: Broadcast[Set[UnsafeRow]], count: Int)
+      extends Expression with Predicate {
     @transient private lazy val project = UnsafeProjection.create(keyRow(children))
     override def nullable: Boolean = false
-    override def eval(input: InternalRow): Any = keys.contains(project(input))
+    override def eval(input: InternalRow): Any = keys.value.contains(project(input))
     override protected def doGenCode(ctx: CodegenContext,
         ev: ExprCode): ExprCode = {
       val row = GenerateUnsafeProjection.createCode(ctx, keyRow(children))
-      val set = ctx.addReferenceObj("keys", keys, "scala.collection.Set")
+      val bc = ctx.addReferenceObj("keys", keys, classOf[Broadcast[_]].getName)
       ev.copy(code = code"""${row.code}
-        |boolean ${ev.value} = $set.contains(${row.value});""".stripMargin,
+        |boolean ${ev.value} = ((scala.collection.Set) $bc.value())
+        |  .contains(${row.value});""".stripMargin,
         isNull = FalseLiteral)
     }
     override def toString: String =
-      s"(${children.mkString(", ")}) IN ${keys.size} keys"
+      s"(${children.mkString(", ")}) IN $count keys"
     override def simpleString(maxFields: Int): String = toString
     override def sql: String = toString
     override protected def withNewChildrenInternal(
@@ -159,7 +163,7 @@ object Merge {
     * touched partitions and whether a key repeats, compared as [[KeyIn]]
     * compares them. [[typed]] casts them to the stored types on the
     * driver (a LocalRelation projection) and [[in]] tests against them
-    * in place, so neither runs a job. */
+    * through a broadcast of their set, so neither runs a job. */
   private final case class BatchKeys(spark: SparkSession, schema: StructType,
       rows: Seq[Row], partitionCols: Seq[String]) {
     private def cols = schema.fieldNames.toSeq
@@ -169,10 +173,10 @@ object Merge {
         BoundReference(schema.fieldIndex(c), schema(c).dataType, true) }))
       rows.map(r => project(internal(r).asInstanceOf[InternalRow]).copy())
     }
-    private lazy val scoped = keyRows(cols)
+    private lazy val scoped = keyRows(cols).toSet
     lazy val parts: Seq[Seq[Any]] = rows.zip(keyRows(partitionCols))
       .distinctBy(_._2).map { case (r, _) => partitionCols.map(r.getAs[Any]) }
-    def repeats: Boolean = scoped.distinct.size < rows.size
+    def repeats: Boolean = scoped.size < rows.size
     lazy val local: DataFrame = {
       import scala.jdk.CollectionConverters._
       spark.createDataFrame(rows.asJava, schema)
@@ -187,7 +191,7 @@ object Merge {
     /** Null-safe membership of a row's scoped key in these keys. */
     lazy val in: Column = GraftSqlBridge.column(KeyIn(cols.map(c =>
       GraftSqlBridge.expression(col(c).cast(schema(c).dataType))),
-      scoped.toSet))
+      spark.sparkContext.broadcast(scoped), scoped.size))
   }
 
   private def batchKeys(batch: DataFrame, spec: KeySpec): BatchKeys = {
