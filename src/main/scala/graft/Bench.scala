@@ -130,9 +130,11 @@ object Bench {
     // record lands under a regime-qualified name instead of silently
     // re-dirtying the committed builder record every round;
     // tools/gen_baseline.py additionally refuses a mis-regimed latest.
+    // A relative default resolves against the working directory: the
+    // checkout the bench runs from, never another one.
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL_OUT",
-      if (producer == "builder") "/root/repo/bench_full_latest.json"
-      else "/root/repo/bench_full_driver_latest.json")
+      if (producer == "builder") "bench_full_latest.json"
+      else "bench_full_driver_latest.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(out),
       (line + "\n").getBytes("UTF-8"))
     catch { case e: Throwable =>

@@ -2,19 +2,23 @@ package graft.merge
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SaveMode,
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SaveMode,
   SparkSession}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression,
-  Predicate, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast,
+  Expression, Predicate, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
   ExprCode, FalseLiteral, GenerateUnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.GraftSqlBridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.Platform
 
 /** Key-based table maintenance over a hive-partitioned parquet table —
   * the engine-native replacement for the reference's Hudi COPY_ON_WRITE
@@ -118,7 +122,8 @@ object Merge {
     // an unpartitioned table is one (empty-tuple) partition, always
     // touched — no job needed to know that (read-path planners like
     // the MOR snapshot merge rely on this staying job-free; a COW
-    // keyed write past the table's first takes them from [[BatchKeys]])
+    // keyed write past the table's first reads the distinct partition
+    // tuples off its collected key rows, [[BatchKeys.parts]])
     if (partitionCols.isEmpty) Seq(Seq.empty)
     else batch.select(partitionCols.map(col): _*).distinct().collect()
       .map(r => partitionCols.indices.map(r.get)).toSeq
@@ -130,14 +135,13 @@ object Merge {
     keys.map(GraftSqlBridge.normalizeKey)
 
   /** True where the key columns `children` hold one of `keys` (rows of
-    * [[keyRow]] at the children's types, `count` of them): the build side
-    * of a hash join, made on the driver and broadcast once, as a
-    * broadcast join's is. A broadcast join of the collected keys would
-    * cost one more job per use (the broadcast exchange collects even a
-    * LocalRelation with a job). */
+    * [[keyRow]] at the children's types): the build side of a hash join,
+    * made on the driver and broadcast once, as a broadcast join's is. A
+    * broadcast join of the collected keys would cost one more job per
+    * use (the broadcast exchange collects even a LocalRelation with a
+    * job). */
   private final case class KeyIn(children: Seq[Expression],
-      keys: Broadcast[Set[UnsafeRow]], count: Int)
-      extends Expression with Predicate {
+      keys: Broadcast[KeySet]) extends Expression with Predicate {
     @transient private lazy val project = UnsafeProjection.create(keyRow(children))
     override def nullable: Boolean = false
     override def eval(input: InternalRow): Any = keys.value.contains(project(input))
@@ -146,58 +150,97 @@ object Merge {
       val row = GenerateUnsafeProjection.createCode(ctx, keyRow(children))
       val bc = ctx.addReferenceObj("keys", keys, classOf[Broadcast[_]].getName)
       ev.copy(code = code"""${row.code}
-        |boolean ${ev.value} = ((scala.collection.Set) $bc.value())
+        |boolean ${ev.value} = ((${classOf[KeySet].getName}) $bc.value())
         |  .contains(${row.value});""".stripMargin,
         isNull = FalseLiteral)
     }
     override def toString: String =
-      s"(${children.mkString(", ")}) IN $count keys"
+      s"(${children.mkString(", ")}) IN ${keys.value.size} keys"
     override def simpleString(maxFields: Int): String = toString
     override def sql: String = toString
     override protected def withNewChildrenInternal(
         c: IndexedSeq[Expression]): KeyIn = copy(children = c)
   }
 
-  /** A keyed write's scoped keys, collected to the driver (bounded by
-    * the batch size: the bytes a broadcast of the keys held), with the
-    * touched partitions and whether a key repeats, compared as [[KeyIn]]
-    * compares them. [[typed]] casts them to the stored types on the
-    * driver (a LocalRelation projection) and [[in]] tests against them
-    * through a broadcast of their set, so neither runs a job. */
-  private final case class BatchKeys(spark: SparkSession, schema: StructType,
-      rows: Seq[Row], partitionCols: Seq[String]) {
-    private def cols = schema.fieldNames.toSeq
-    private def keyRows(of: Seq[String]): Seq[UnsafeRow] = {
-      val internal = CatalystTypeConverters.createToCatalystConverter(schema)
-      val project = UnsafeProjection.create(keyRow(of.map { c =>
-        BoundReference(schema.fieldIndex(c), schema(c).dataType, true) }))
-      rows.map(r => project(internal(r).asInstanceOf[InternalRow]).copy())
+  /** The key rows [[KeyIn]] broadcasts, packed into one array (each row
+    * as its 8-byte size, then its bytes), so any serializer writes one
+    * array: Java-serializing a set of 10⁶ rows, one object per key,
+    * took seconds. The set over the packed rows is built where it is
+    * first read. Not `private`: generated code names the class. */
+  private[merge] final class KeySet(numFields: Int, rows: Seq[UnsafeRow])
+      extends Serializable {
+    private val packed = new Array[Byte](
+      Math.toIntExact(rows.iterator.map(8L + _.getSizeInBytes).sum))
+    rows.foldLeft(Platform.BYTE_ARRAY_OFFSET.toLong) { (at, r) =>
+      Platform.putLong(packed, at, r.getSizeInBytes)
+      r.writeToMemory(packed, at + 8)
+      at + 8 + r.getSizeInBytes
     }
-    private lazy val scoped = keyRows(cols).toSet
-    lazy val parts: Seq[Seq[Any]] = rows.zip(keyRows(partitionCols))
-      .distinctBy(_._2).map { case (r, _) => partitionCols.map(r.getAs[Any]) }
-    def repeats: Boolean = scoped.size < rows.size
-    lazy val local: DataFrame = {
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(rows.asJava, schema)
+    @transient private lazy val set = {
+      val keys = new java.util.HashSet[UnsafeRow]()
+      var at = Platform.BYTE_ARRAY_OFFSET.toLong
+      while (at < Platform.BYTE_ARRAY_OFFSET + packed.length) {
+        val key = new UnsafeRow(numFields)
+        key.pointTo(packed, at + 8, Platform.getLong(packed, at).toInt)
+        keys.add(key)
+        at += 8 + key.getSizeInBytes
+      }
+      keys
+    }
+    def size: Int = set.size
+    def contains(key: UnsafeRow): Boolean = set.contains(key)
+  }
+
+  /** A keyed write's scoped keys in the one form [[KeyIn]] compares:
+    * one normalized key row per batch row, in batch order, collected
+    * once (bounded by the batch size). Whether a key repeats, the
+    * touched partitions and the broadcast key set all read these rows;
+    * only the distinct partition tuples become Scala values, for
+    * directory names and the timeline. [[typed]] casts the rows to the
+    * stored types on the driver, so neither it nor [[in]] runs a job. */
+  private final case class BatchKeys(spark: SparkSession, schema: StructType,
+      rows: Seq[UnsafeRow], partitionCols: Seq[String]) {
+    private def cols = schema.fieldNames.toSeq
+    private def ref(c: String): Expression =
+      BoundReference(schema.fieldIndex(c), schema(c).dataType, true)
+    private lazy val set = new KeySet(schema.size, rows)
+    def repeats: Boolean = set.size < rows.size
+    lazy val parts: Seq[Seq[Any]] = {
+      val project = UnsafeProjection.create(partitionCols.map(ref))
+      val distinct = scala.collection.mutable.LinkedHashSet.empty[UnsafeRow]
+      rows.foreach { r =>
+        val p = project(r)
+        if (!distinct.contains(p)) distinct += p.copy()
+      }
+      val toScala = ExpressionEncoder(StructType(partitionCols.map(schema(_))))
+        .resolveAndBind().createDeserializer()
+      distinct.toSeq.map(p => toScala(p).toSeq)
     }
     def typed(stored: StructType): BatchKeys =
       if (cols.forall(c => schema(c).dataType == stored(c).dataType)) this
       else {
-        val cast = local.select(
-          cols.map(c => col(c).cast(stored(c).dataType).as(c)): _*)
-        BatchKeys(spark, cast.schema, cast.collect().toSeq, partitionCols)
+        val tz = Some(SQLConf.get.sessionLocalTimeZone)
+        val cast = UnsafeProjection.create(keyRow(cols.map(c =>
+          Cast(ref(c), stored(c).dataType, tz))))
+        BatchKeys(spark, StructType(cols.map(stored(_))),
+          rows.map(r => cast(r).copy()), partitionCols)
       }
     /** Null-safe membership of a row's scoped key in these keys. */
     lazy val in: Column = GraftSqlBridge.column(KeyIn(cols.map(c =>
       GraftSqlBridge.expression(col(c).cast(schema(c).dataType))),
-      spark.sparkContext.broadcast(scoped), scoped.size))
+      spark.sparkContext.broadcast(set)))
   }
 
+  /** The batch's [[BatchKeys]]: its scoped key columns, normalized in
+    * the plan and collected as the plan's own UnsafeRows. */
   private def batchKeys(batch: DataFrame, spec: KeySpec): BatchKeys = {
     val keys = batch.select(spec.scoped.map(col): _*)
-    BatchKeys(batch.sparkSession, keys.schema, keys.collect().toSeq,
-      spec.partitionCols)
+    val qe = keys.select(keyRow(keys.queryExecution.analyzed.output)
+      .map(GraftSqlBridge.column): _*).queryExecution
+    val rows = SQLExecution.withNewExecutionId(qe, Some("collect"))(
+      qe.executedPlan.executeCollect())
+    BatchKeys(batch.sparkSession, keys.schema,
+      rows.toSeq.map(_.asInstanceOf[UnsafeRow]), spec.partitionCols)
   }
 
   /** Null-safe membership for the touched-partition filter: a plain
@@ -234,9 +277,9 @@ object Merge {
     * partitioned writes do it: the value cast to a string in the
     * session time zone, null or empty → `__HIVE_DEFAULT_PARTITION__`. */
   private def partitionDirName(colName: String, v: Any): String = {
-    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+    import org.apache.spark.sql.catalyst.expressions.Literal
     val rendered = Cast(Literal(v), org.apache.spark.sql.types.StringType,
-      Some(org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone))
+      Some(SQLConf.get.sessionLocalTimeZone))
       .eval()
     org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
       .getPartitionPathString(colName, Option(rendered).map(_.toString).orNull)
@@ -1044,7 +1087,9 @@ object Merge {
     val allFiles = statuses.map(s => relativize(st.root, s.getPath))
     val candidates = KeyIndex.candidateFiles(spark, st, spec,
       keys.parts.map(partitionRelDir(spec.partitionCols, _)), allFiles,
-      statuses.map(_.getLen).sum, keys.local).getOrElse(allFiles)
+      statuses.map(_.getLen).sum,
+      GraftSqlBridge.localRelation(spark, keys.schema, keys.rows))
+      .getOrElse(allFiles)
     if (candidates.isEmpty) IndexedSeq.empty
     else readFiles(spark, st, stored, candidates).filter(keys.in)
       .select(input_file_name()).as(Encoders.STRING)

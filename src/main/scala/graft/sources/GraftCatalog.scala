@@ -108,7 +108,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
         s"graft catalog tables support identity partitioning only " +
           s"(PARTITIONED BY (col, ...)), got: $t")
     } match {
-      case Nil => splitCols(opts.getOrElse("partition", ""))
+      case Nil => GraftSource.cols(opts, "partition")
       case fromTransforms => fromTransforms
     }
     require(partCols.nonEmpty,
@@ -349,9 +349,6 @@ object GraftCatalog {
       case (k, v) if !Reserved.contains(k) => k -> v
     }
 
-  private def splitCols(s: String): Seq[String] =
-    s.split(",").map(_.trim).filter(_.nonEmpty).toIndexedSeq
-
   private def writeMarker(out: org.apache.hadoop.fs.FSDataOutputStream,
       props: Map[String, String]): Unit = {
     val body = props.toSeq.sortBy(_._1)
@@ -361,16 +358,7 @@ object GraftCatalog {
 
   private def readMarker(f: org.apache.hadoop.fs.FileSystem,
       marker: Path): Map[String, String] = {
-    val in = f.open(marker)
-    val body =
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val chunk = new Array[Byte](8192)
-        var n = in.read(chunk)
-        while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        buf.toString("UTF-8")
-      } finally in.close()
-    body.linesIterator.filter(_.contains("="))
+    Merge.readSmallFile(f, marker).linesIterator.filter(_.contains("="))
       .map { line =>
         val i = line.indexOf('=')
         line.substring(0, i) -> line.substring(i + 1)
@@ -431,9 +419,8 @@ class GraftTable(val path: String, tableName: String,
     else Array.empty
 
   override def partitioning(): Array[Transform] =
-    tableProps.get("partition").toArray
-      .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
-      .map(Expressions.identity)
+    GraftSource.cols(tableProps, "partition").map(Expressions.identity)
+      .toArray
 
   override def properties(): util.Map[String, String] =
     tableProps.asJava
@@ -550,8 +537,7 @@ private[sources] class GraftWriteBuilder(parameters: Map[String, String])
   private var pins: Seq[(String, Any)] = Nil
 
   private def partitionCols: Set[String] =
-    parameters.getOrElse("partition", "").split(",")
-      .map(_.trim.toLowerCase).filter(_.nonEmpty).toSet
+    GraftSource.cols(parameters, "partition").map(_.toLowerCase).toSet
 
   override def truncate(): WriteBuilder = { overwrite = true; this }
 

@@ -132,13 +132,16 @@ class GraftSource extends RelationProvider with SchemaRelationProvider
 }
 
 object GraftSource {
-  private def opt(parameters: Map[String, String], name: String)
+  /** The graft options' one reader: `name` looked up case-insensitively
+    * (the v1 source, the catalog tables and the SQL commands share it). */
+  private[graft] def opt(parameters: Map[String, String], name: String)
       : Option[String] =
     parameters.collectFirst {
       case (k, v) if k.equalsIgnoreCase(name) => v
     }
 
-  private[sources] def cols(parameters: Map[String, String], name: String)
+  /** A comma-separated column-list option, trimmed; empty if absent. */
+  private[graft] def cols(parameters: Map[String, String], name: String)
       : Seq[String] =
     opt(parameters, name).toSeq.flatMap(_.split(",")).map(_.trim)
       .filter(_.nonEmpty)

@@ -8,6 +8,7 @@ import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.merge.Merge
+import graft.sources.GraftSource
 
 /** `ALTER TABLE ... ADD COLUMNS` for catalog-registered graft tables —
   * the DDL half of additive schema evolution (the write half happens
@@ -37,9 +38,8 @@ case class GraftAddColumnsCommand(ident: TableIdentifier,
   override def run(spark: SparkSession): Seq[Row] = {
     val catalog = spark.sessionState.catalog
     val meta = catalog.getTableMetadata(ident)
-    val path = meta.storage.properties.collectFirst {
-      case (k, v) if k.equalsIgnoreCase("path") => v
-    }.orElse(meta.storage.locationUri.map(CatalogUtils.URIToString))
+    val path = GraftSource.opt(meta.storage.properties, "path")
+      .orElse(meta.storage.locationUri.map(CatalogUtils.URIToString))
       .getOrElse(throw new IllegalArgumentException(
         s"graft ALTER TABLE: $ident has no recorded path"))
     Merge.addColumns(spark, path, StructType(colsToAdd))
@@ -47,8 +47,8 @@ case class GraftAddColumnsCommand(ident: TableIdentifier,
     // hive-layout partition columns LAST in a parquet read, so the new
     // columns slot in before them — a catalog order that disagreed with
     // the relation would fail resolution's schema-equality check
-    val partCols = GraftSqlCommands.colsOf(meta.storage.properties,
-      "partition").map(_.toLowerCase).toSet
+    val partCols = GraftSource.cols(meta.storage.properties, "partition")
+      .map(_.toLowerCase).toSet
     val (dataC, partC) = meta.dataSchema.fields.partition(f =>
       !partCols.contains(f.name.toLowerCase))
     catalog.alterTableDataSchema(ident,

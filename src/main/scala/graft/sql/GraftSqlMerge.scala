@@ -1,6 +1,6 @@
 package graft.sql
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, EqualTo, Expression}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.graftshim.GraftSqlBridge.{column, ofRows}
 import org.apache.spark.sql.types.LongType
 
-import graft.merge.Merge
-import graft.sources.GraftRelation
+import graft.sources.{GraftRelation, GraftSource}
+import graft.sources.GraftSource.{cols, opt}
 
 /** `MERGE INTO` for graft tables at the SQL surface — the write half of
   * the Athena-shaped contract the reference hive-syncs its Hudi tables
@@ -21,7 +21,7 @@ import graft.sources.GraftRelation
   * post-hoc resolution rule intercepts the analyzer-resolved
   * [[MergeIntoTable]] whose target is a graft relation and replaces it
   * with a runnable command that executes through the engine's own merge
-  * machinery ([[Merge.upsert]]/[[Merge.delete]]).
+  * machinery ([[graft.merge.Merge.upsert]]/[[graft.merge.Merge.delete]]).
   *
   * Semantics (Hudi-faithful):
   *  - The ON condition must equality-constrain EVERY record-key column
@@ -54,16 +54,11 @@ case class GraftMergeCommand(
     notMatchedActions: Seq[MergeAction],
     notMatchedBySourceActions: Seq[MergeAction],
     options: Map[String, String]) extends LeafRunnableCommand {
+  import GraftSqlCommands._
 
   override val output: Seq[Attribute] = Seq(
     AttributeReference("num_upserted", LongType)(),
     AttributeReference("num_deleted", LongType)())
-
-  private def optCI(name: String): Option[String] =
-    options.collectFirst { case (k, v) if k.equalsIgnoreCase(name) => v }
-
-  private def colsOf(name: String): Seq[String] =
-    optCI(name).toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
 
   private def conjuncts(e: Expression): Seq[Expression] = e match {
     case And(l, r) => conjuncts(l) ++ conjuncts(r)
@@ -71,18 +66,12 @@ case class GraftMergeCommand(
   }
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val path = optCI("path").getOrElse(throw new IllegalArgumentException(
-      "graft MERGE target has no recorded path option"))
-    val keys = colsOf("keys")
-    val parts = colsOf("partition")
+    val keys = cols(options, "keys")
+    val parts = cols(options, "partition")
     require(keys.nonEmpty && parts.nonEmpty,
       "MERGE INTO a graft table requires its keys + partition options " +
         "(declare them in CREATE TABLE ... USING graft OPTIONS (...))")
     val tCols = target.output
-    def targetAttr(name: String): Attribute =
-      tCols.find(a => spark.sessionState.conf.resolver(a.name, name))
-        .getOrElse(throw new IllegalArgumentException(
-          s"graft MERGE: option column '$name' is not in the target schema"))
 
     // Hudi's rule: the ON clause must pin every record key with an
     // equality whose other side is source-only — key-scoped actions are
@@ -95,7 +84,7 @@ case class GraftMergeCommand(
           if targetIds.contains(a) && other.references.subsetOf(source.outputSet) => a
     }
     keys.foreach { k =>
-      val ka = targetAttr(k)
+      val ka = targetAttr(spark, tCols, k)
       require(eqConstrained.exists(_.exprId == ka.exprId),
         s"MERGE INTO a graft table must equality-constrain record key " +
           s"'$k' in the ON clause (got: ${condition.sql})")
@@ -104,12 +93,13 @@ case class GraftMergeCommand(
     val targetDf = ofRows(spark, target)
     val sourceDf = ofRows(spark, source)
     val cond = column(condition)
-    val idCols = (keys ++ parts).map(targetAttr)
+    val idCols = (keys ++ parts).map(targetAttr(spark, tCols, _))
 
     // ANSI cardinality guard: >1 source row per matched target row.
     // One extra aggregation over the matched join; disable by option.
     if (matchedActions.nonEmpty &&
-        !optCI("mergeCardinalityCheck").exists(_.equalsIgnoreCase("false"))) {
+        !opt(options, "mergeCardinalityCheck")
+          .exists(_.equalsIgnoreCase("false"))) {
       val dup = targetDf.join(sourceDf, cond, "inner")
         .groupBy(idCols.map(column): _*).count()
         .filter(col("count") > 1).limit(1)
@@ -190,59 +180,20 @@ case class GraftMergeCommand(
     val deletes = (deleteFrames ++ nmbsDeleteFrames)
       .reduceOption(_ unionAll _)
 
-    // Stage both payloads BEFORE mutating: their plans scan the target's
-    // CURRENT files, which the first commit rewrites — executing them
-    // lazily afterwards would read files the commit already retired.
-    // (Same reason Delta materializes the merge source.) Staged files
-    // are payload-sized, land in scratch, and are swept on JVM exit.
-    def staged(df: Option[DataFrame], name: String): Option[DataFrame] =
-      df.flatMap { d =>
-        val dir = graft.util.Scratch.fresh("graft_merge_stage_") + s"/$name"
-        d.write.parquet(dir)
-        val back = spark.read.parquet(dir)
-        if (back.isEmpty) None else Some(back)
-      }
-
     // BOTH payloads must be staged before EITHER commit runs: the
     // lazily-resolved relation re-reads the current snapshot per scan,
     // so a delete payload planned after the upsert commit would see the
     // just-inserted rows and capture them in its WHEN clauses.
-    val stagedUpserts = staged(upserts, "upserts")
-    val stagedDeletes = staged(deletes, "deletes")
-
-    val versioned = optCI("versioned").exists(_.toBoolean)
-    val nUp = stagedUpserts.map { payload =>
-      val precombine = optCI("precombine").getOrElse(
-        throw new IllegalArgumentException(
-          "MERGE with UPDATE/INSERT clauses requires the table's " +
-            "precombine option"))
-      if (versioned)
-        Merge.upsertVersioned(spark, payload, path, keys, precombine, parts)
-      else Merge.upsert(spark, payload, path, keys, precombine, parts)
-      payload.count()
-    }.getOrElse(0L)
-    val nDel = stagedDeletes.map { ks =>
-      if (versioned) Merge.deleteVersioned(spark, ks, path, keys, parts)
-      else Merge.delete(spark, ks, path, keys, parts)
-      ks.count()
-    }.getOrElse(0L)
+    val stagedUpserts = staged(spark, upserts, "upserts")
+    val stagedDeletes = staged(spark, deletes, "deletes")
+    val nUp = commit(spark, options, "upsert", stagedUpserts)
+    val nDel = commit(spark, options, "delete", stagedDeletes)
     Seq(Row(nUp, nDel))
   }
 }
 
 /** Shared helpers for the SQL row-level commands. */
 private[sql] object GraftSqlCommands {
-  def optCI(options: Map[String, String], name: String): Option[String] =
-    options.collectFirst { case (k, v) if k.equalsIgnoreCase(name) => v }
-
-  def colsOf(options: Map[String, String], name: String): Seq[String] =
-    optCI(options, name).toSeq.flatMap(_.split(",")).map(_.trim)
-      .filter(_.nonEmpty)
-
-  def pathOf(options: Map[String, String]): String =
-    optCI(options, "path").getOrElse(throw new IllegalArgumentException(
-      "graft SQL command: target has no recorded path option"))
-
   def targetAttr(spark: SparkSession, tCols: Seq[Attribute], name: String)
       : Attribute =
     tCols.find(a => spark.sessionState.conf.resolver(a.name, name))
@@ -250,9 +201,12 @@ private[sql] object GraftSqlCommands {
         s"graft SQL command: option column '$name' is not in the " +
           "target schema"))
 
-  /** Stage a payload to scratch parquet before any table mutation —
-    * its plan scans the target's current files, which the commit
-    * retires; see the MERGE staging note. None when empty. */
+  /** Stage a payload to scratch parquet before any table mutation: its
+    * plan scans the target's CURRENT files, which the first commit
+    * retires, so executing it lazily afterwards would read files the
+    * commit already retired (the reason Delta materializes the merge
+    * source). Staged files are payload-sized, land in scratch, and are
+    * swept on JVM exit. None when empty. */
   def staged(spark: SparkSession, df: Option[DataFrame], name: String)
       : Option[DataFrame] =
     df.flatMap { d =>
@@ -261,6 +215,18 @@ private[sql] object GraftSqlCommands {
       val back = spark.read.parquet(dir)
       if (back.isEmpty) None else Some(back)
     }
+
+  /** Commit a staged payload as `op` (`upsert` or `delete`) through the
+    * shared write dispatch [[GraftSource.write]], which takes the
+    * versioned form when the table's options say so; returns the
+    * payload's row count (0 for no payload). */
+  def commit(spark: SparkSession, options: Map[String, String], op: String,
+      payload: Option[DataFrame]): Long =
+    payload.map { p =>
+      GraftSource.write(spark.sqlContext, SaveMode.Append,
+        options.filterNot(_._1.equalsIgnoreCase("op")) + ("op" -> op), p)
+      p.count()
+    }.getOrElse(0L)
 }
 
 /** SQL `UPDATE t SET ... [WHERE ...]` on a graft table: the matching
@@ -280,12 +246,10 @@ case class GraftUpdateCommand(
     Seq(AttributeReference("num_updated", LongType)())
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val path = pathOf(options)
-    val keys = colsOf(options, "keys")
-    val parts = colsOf(options, "partition")
-    val precombine = optCI(options, "precombine").getOrElse(
-      throw new IllegalArgumentException(
-        "UPDATE on a graft table requires its precombine option"))
+    val keys = cols(options, "keys")
+    val parts = cols(options, "partition")
+    require(opt(options, "precombine").isDefined,
+      "UPDATE on a graft table requires its precombine option")
     require(keys.nonEmpty && parts.nonEmpty,
       "UPDATE on a graft table requires its keys + partition options")
     val tCols = table.output
@@ -309,13 +273,8 @@ case class GraftUpdateCommand(
         byId.get(tc.exprId).map(v => column(v).cast(tc.dataType))
           .getOrElse(column(tc)).as(tc.name)
       }: _*)
-    val n = staged(spark, Some(payload), "updates").map { p =>
-      if (optCI(options, "versioned").exists(_.toBoolean))
-        Merge.upsertVersioned(spark, p, path, keys, precombine, parts)
-      else Merge.upsert(spark, p, path, keys, precombine, parts)
-      p.count()
-    }.getOrElse(0L)
-    Seq(Row(n))
+    Seq(Row(commit(spark, options, "upsert",
+      staged(spark, Some(payload), "updates"))))
   }
 }
 
@@ -333,9 +292,8 @@ case class GraftDeleteCommand(
     Seq(AttributeReference("num_deleted", LongType)())
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val path = pathOf(options)
-    val keys = colsOf(options, "keys")
-    val parts = colsOf(options, "partition")
+    val keys = cols(options, "keys")
+    val parts = cols(options, "partition")
     require(keys.nonEmpty && parts.nonEmpty,
       "DELETE on a graft table requires its keys + partition options")
     val tCols = table.output
@@ -344,13 +302,8 @@ case class GraftDeleteCommand(
     val ks = condition.map(c => targetDf.filter(column(c)))
       .getOrElse(targetDf)
       .select(idCols.map(a => column(a).as(a.name)): _*)
-    val n = staged(spark, Some(ks), "deletes").map { p =>
-      if (optCI(options, "versioned").exists(_.toBoolean))
-        Merge.deleteVersioned(spark, p, path, keys, parts)
-      else Merge.delete(spark, p, path, keys, parts)
-      p.count()
-    }.getOrElse(0L)
-    Seq(Row(n))
+    Seq(Row(commit(spark, options, "delete",
+      staged(spark, Some(ks), "deletes"))))
   }
 }
 

@@ -1,7 +1,9 @@
 package org.apache.spark.sql.graftshim
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -49,6 +51,12 @@ object GraftSqlBridge {
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession]
       .internalCreateDataFrame(rows, schema, isStreaming = true)
+
+  /** `rows` of `schema` as a DataFrame over a LocalRelation: built
+    * without a job and without converting the rows. */
+  def localRelation(spark: SparkSession, schema: StructType,
+      rows: Seq[InternalRow]): DataFrame =
+    ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(schema), rows))
 
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
 

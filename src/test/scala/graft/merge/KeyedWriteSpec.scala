@@ -6,17 +6,23 @@ import scala.jdk.CollectionConverters._
 
 import graft.{FaultFs, SparkSpec}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.serializer.{JavaSerializer, KryoSerializer}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The keyed COW write plan: one key collect, one probe of only the
   * touched partition directories, one staged write. Pins its job count,
   * its listing footprint, its driver-side key equality against
-  * Spark's grouping, its empty-batch no-op and its cache ownership; and
-  * every keyed operation on an unpartitioned table against the same
-  * operation on a one-partition table. */
+  * Spark's grouping, its empty-batch no-op, its cache ownership, a
+  * batch typed unlike the table and the serialized form of its
+  * broadcast key set; and every keyed operation on an
+  * unpartitioned table against the same operation on a one-partition
+  * table. */
 class KeyedWriteSpec extends SparkSpec {
   import spark.implicits._
 
@@ -205,6 +211,50 @@ class KeyedWriteSpec extends SparkSpec {
     Merge.upsert(spark, batch(2.0), path, Seq("k"), "v", Seq("ts"))
     assert(Merge.readTable(spark, path).select("v").as[Double].collect()
       .toSeq === Seq(2.0))
+  }
+
+  test("a batch whose key and partition types differ from the table's " +
+      "upserts and deletes at the stored types in at most 3 jobs") {
+    val path = tmpDir("keyed_typed_")
+    val at = "2024-01-01 10:30:00"
+    // stored: a long key and a string partition
+    Merge.upsertVersioned(spark, Seq((1L, at, 1.0), (2L, at, 2.0))
+      .toDF("k", "d", "v"), path, Seq("k"), "v", Seq("d"))
+    // the batch: an int key and the same partition as a timestamp
+    def batch(k: Int, v: Double): DataFrame =
+      Seq((k, at, v)).toDF("k", "d", "v").withColumn("d", to_timestamp($"d"))
+    def stored: Seq[(Long, String, Double)] = Merge.readTable(spark, path)
+      .select("k", "d", "v").as[(Long, String, Double)].collect().toSeq
+      .sortBy(_._1)
+    val jobs = jobsOf(Merge.upsertVersioned(spark, batch(1, 10.0), path,
+      Seq("k"), "v", Seq("d")))
+    assert(jobs <= 3, s"a one-row retyped upsert ran $jobs jobs")
+    assert(stored === Seq((1L, at, 10.0), (2L, at, 2.0)))
+    Merge.deleteVersioned(spark, batch(2, 0.0).select("k", "d"), path,
+      Seq("k"), Seq("d"))
+    assert(stored === Seq((1L, at, 10.0)))
+    // a keyed write records its partitions as the batch's values render
+    val rendered = batch(0, 0.0).select("d").as[java.sql.Timestamp].head()
+      .toString
+    assert(Timeline.records(spark, path).map(_.partitions) ===
+      Seq(at, rendered, rendered))
+  }
+
+  test("the broadcast key set answers the same after Java and Kryo " +
+      "serialization") {
+    val project = UnsafeProjection.create(Array[DataType](LongType, StringType))
+    def key(k: Long, p: String): UnsafeRow =
+      project(InternalRow(k, Option(p).map(UTF8String.fromString).orNull))
+        .copy()
+    val keys = new Merge.KeySet(2, Seq(key(1, "a"), key(2, null), key(1, "a")))
+    val conf = spark.sparkContext.getConf
+    Seq(new JavaSerializer(conf), new KryoSerializer(conf)).foreach { s =>
+      val ser = s.newInstance()
+      val back = ser.deserialize[Merge.KeySet](ser.serialize(keys))
+      assert(back.size === 2, s)
+      assert(back.contains(key(1, "a")) && back.contains(key(2, null)), s)
+      assert(!back.contains(key(1, "b")) && !back.contains(key(2, "")), s)
+    }
   }
 
   test("an injected stat or mkdirs fault fails the upsert before the " +
