@@ -1,7 +1,10 @@
 package graft
 
 import scala.collection.mutable
+import org.apache.spark.SparkContext
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Builder-side measurement harness (optimization guide §1): run a
   * comma-separated key list (args(0)) against a data dir (args(1),
@@ -27,9 +30,25 @@ object Profile {
     // per-stage rollup: stageId -> (name, tasks, taskTimeMs)
     val stageAgg = mutable.Map[Int, (String, Int, Long)]()
     private val stageName = mutable.Map[Int, String]()
+    // SQL execution id -> the engine frame that started it
+    private val execSite = mutable.Map[Long, String]()
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart => synchronized {
+        execSite(s.executionId) = engineFrame(s.details)
+          .getOrElse(s.description)
+      }
+      case _ => ()
+    }
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
       jobs += 1; jobStart(e.jobId) = e.time
-      e.stageInfos.foreach(si => stageName(si.stageId) = si.name)
+      // AQE submits a query's stages from a thread pool, so a stage's
+      // own call site names the pool; the job's SQL execution names
+      // the engine step
+      val site = Option(e.properties)
+        .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+        .flatMap(id => execSite.get(id.toLong))
+      e.stageInfos.foreach(si =>
+        stageName(si.stageId) = site.getOrElse(si.name))
     }
     override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
       jobStart.remove(e.jobId).foreach(t0 => jobTimeMs += e.time - t0)
@@ -50,6 +69,20 @@ object Profile {
         stageAgg(sid) = (n, c + 1, t + m.executorRunTime)
       }
     }
+  }
+
+  /** The first graft frame of a call site's long form: the engine step
+    * that started a SQL execution. */
+  private def engineFrame(longForm: String): Option[String] =
+    longForm.linesIterator.find(_.startsWith("graft."))
+
+  /** Block until every event already posted to the listener bus has
+    * reached its listeners (`waitUntilEmpty` is `private[spark]`, public
+    * in bytecode). */
+  private[graft] def drainListenerBus(sc: SparkContext): Unit = {
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    ()
   }
 
   /** Cumulative JVM GC millis (driver == executors in local mode). */
@@ -90,8 +123,7 @@ object Profile {
         .write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
       val gc = (gcMs - gc0) / 1e3
-      // listener bus is async; give late task-end events a moment to land
-      Thread.sleep(800)
+      drainListenerBus(spark.sparkContext)
       spark.sparkContext.removeSparkListener(acc)
       val gap = wall - acc.jobTimeMs / 1e3
       println(f"$k%-28s $wall%8.2f ${acc.jobs}%5d ${acc.stages}%6d " +

@@ -6,8 +6,9 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, SaveMode,
   SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast,
-  Expression, Predicate, UnsafeProjection, UnsafeRow}
+  Expression, Literal, Predicate, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
   ExprCode, FalseLiteral, GenerateUnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
@@ -16,7 +17,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.GraftSqlBridge
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, StringType, StructType}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.Platform
 
@@ -45,7 +46,9 @@ import org.apache.spark.unsafe.Platform
   * exactly like Hudi COW:
   *  1. collect the batch's scoped keys (bounded by the batch size):
   *     they give the touched partitions, the empty-batch no-op and
-  *     whether the precombine window must run (a key repeats);
+  *     whether the precombine window must run (a key repeats). A write
+  *     that collects no keys takes its partitions from the hive paths
+  *     of the files it holds ([[partitionsOf]]), never from a job;
   *  2. a column-pruned key scan of only the touched partition dirs,
   *     filtered by membership in those keys, finds the parquet FILES
   *     that contain matched keys;
@@ -81,7 +84,7 @@ import org.apache.spark.unsafe.Platform
 object Merge {
 
   /** What a merge wrote: deduped batch row count + touched partition
-    * values rendered as hive-relative strings (`a=1/b=x` for multi-level
+    * tuples as [[renderPartition]] renders them (`1/x` for multi-level
     * partitioning, the bare value for the single-column common case) —
     * the commit-metadata payload for [[upsertVersioned]]. */
   final case class MergeStats(nRows: Long, partitions: Seq[String])
@@ -111,22 +114,6 @@ object Merge {
   /** O5: ComplexKeyGenerator-style composite record key. */
   def compositeKey(keyCols: Seq[String]): Column =
     concat_ws(":", keyCols.map(col): _*)
-
-  /** Predicate selecting only the table partitions the batch touches.
-    * The distinct-value collect is a driver round-trip over
-    * low-cardinality partition columns — cheap at any table size, and it
-    * turns the table read into a partition-pruned scan. Each element is
-    * one partition tuple in `partitionCols` order. */
-  private[merge] def touchedPartitions(
-      batch: DataFrame, partitionCols: Seq[String]): Seq[Seq[Any]] =
-    // an unpartitioned table is one (empty-tuple) partition, always
-    // touched — no job needed to know that (read-path planners like
-    // the MOR snapshot merge rely on this staying job-free; a COW
-    // keyed write past the table's first reads the distinct partition
-    // tuples off its collected key rows, [[BatchKeys.parts]])
-    if (partitionCols.isEmpty) Seq(Seq.empty)
-    else batch.select(partitionCols.map(col): _*).distinct().collect()
-      .map(r => partitionCols.indices.map(r.get)).toSeq
 
   /** The key expressions `keys` normalized as Spark's hash joins and
     * aggregates normalize theirs (one NaN, -0.0 = 0.0); projected to an
@@ -212,9 +199,8 @@ object Merge {
         val p = project(r)
         if (!distinct.contains(p)) distinct += p.copy()
       }
-      val toScala = ExpressionEncoder(StructType(partitionCols.map(schema(_))))
-        .resolveAndBind().createDeserializer()
-      distinct.toSeq.map(p => toScala(p).toSeq)
+      val toScala = scalaValues(StructType(partitionCols.map(schema(_))))
+      distinct.toSeq.map(toScala)
     }
     def typed(stored: StructType): BatchKeys =
       if (cols.forall(c => schema(c).dataType == stored(c).dataType)) this
@@ -273,16 +259,25 @@ object Merge {
           .reduceOption(_ && _).getOrElse(lit(true))
       }.reduceOption(_ || _).getOrElse(lit(false))
 
+  /** The Scala values `collect` returns for a row of `schema`. */
+  private def scalaValues(schema: StructType): InternalRow => Seq[Any] =
+    ExpressionEncoder(schema).resolveAndBind().createDeserializer()
+      .andThen(_.toSeq)
+
+  // The hive partition path, both halves: a partition tuple renders to
+  // `c=v` directories as Spark's partitioned writes render them, and a
+  // file path parses back to the tuple Spark's partition discovery
+  // reads from it.
+
   /** One hive path segment, rendered and escaped exactly as Spark's
     * partitioned writes do it: the value cast to a string in the
     * session time zone, null or empty → `__HIVE_DEFAULT_PARTITION__`. */
   private def partitionDirName(colName: String, v: Any): String = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    val rendered = Cast(Literal(v), org.apache.spark.sql.types.StringType,
+    val rendered = Cast(Literal(v), StringType,
       Some(SQLConf.get.sessionLocalTimeZone))
       .eval()
-    org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-      .getPartitionPathString(colName, Option(rendered).map(_.toString).orNull)
+    ExternalCatalogUtils.getPartitionPathString(colName,
+      Option(rendered).map(_.toString).orNull)
   }
 
   /** The table-relative directory of one partition tuple
@@ -290,6 +285,38 @@ object Merge {
     * tuple of an unpartitioned table). */
   private[merge] def partitionRelDir(cols: Seq[String], vals: Seq[Any]): String =
     cols.zip(vals).map { case (c, v) => partitionDirName(c, v) }.mkString("/")
+
+  /** The `c=v` directories of a relative file path as (column, value)
+    * strings, unescaped as Spark's partition discovery unescapes them;
+    * the `__HIVE_DEFAULT_PARTITION__` sentinel is null. The file name
+    * and segments without `=` (`_graft_deltas`) are skipped. */
+  private[merge] def partitionSegments(relPath: String): Seq[(String, String)] =
+    relPath.split('/').dropRight(1).toSeq.filter(_.indexOf('=') > 0)
+      .map { seg =>
+        val Array(c, v) =
+          seg.split("=", 2).map(ExternalCatalogUtils.unescapePathName)
+        c -> (if (v == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null else v)
+      }
+
+  /** The distinct partition tuples of `files` (table-relative paths) in
+    * `partitionCols` order: each directory value cast to its column's
+    * type in `schema` in the session time zone, as the Scala value
+    * `collect` returns — what a distinct collect of the files' partition
+    * columns gives, without the job. An unpartitioned table is one
+    * (empty-tuple) partition, touched whatever the files. */
+  private[merge] def partitionsOf(files: Seq[String],
+      partitionCols: Seq[String], schema: StructType): Seq[Seq[Any]] =
+    if (partitionCols.isEmpty) Seq(Seq.empty)
+    else {
+      val tz = Some(SQLConf.get.sessionLocalTimeZone)
+      val toScala = scalaValues(StructType(partitionCols.map(schema(_))))
+      files.map(partitionSegments(_).toMap).distinct.map { segs =>
+        toScala(InternalRow.fromSeq(partitionCols.map { c =>
+          require(segs.contains(c), s"no $c= directory in a path with $segs")
+          Cast(Literal(segs(c)), schema(c).dataType, tz).eval()
+        }))
+      }.distinct
+    }
 
   /** The directory of one partition tuple under `root`; the empty tuple
     * of an unpartitioned table is the root itself. */
@@ -927,7 +954,7 @@ object Merge {
         upsert(spark, ins, path, keyCols, precombine, partitionCols)
         return
       }
-      val parts = touchedPartitions(deduped, partitionCols)
+      val parts = batchKeys(deduped, KeySpec(keyCols, partitionCols)).parts
       val target = readTable(spark, st)
         .filter(partitionIn(partitionCols, parts))
       val s = deduped.alias("s")
@@ -1023,8 +1050,8 @@ object Merge {
           partitionCols, supersededFiles = Nil, touched = Nil,
           dropEmptied = false, cts)
         return (stats(if (cts.isEmpty) Nil
-          else touchedPartitions(batch, partitionCols).map(renderPartition)),
-          Some(res))
+          else partitionsOf(res.added, partitionCols, batch.schema)
+            .map(renderPartition)), Some(res))
       }
       val keys = batchKeys(batch, spec)
       if (keys.rows.isEmpty) return (MergeStats(0L, Nil), None)
@@ -1150,8 +1177,8 @@ object Merge {
     * current data file as added, so versioned upserts/deletes, time
     * travel back to the adoption point, CDC and the incremental
     * streams all work from here on. The one-time cost is a single
-    * column-pruned count (the timeline's n_rows) and a partition-value
-    * distinct — both deliberate: adoption happens once per table.
+    * column-pruned count (the timeline's n_rows), deliberate: adoption
+    * happens once per table. The partitions come from the listing.
     *
     * Bootstrapped rows carry NO `_commit_ts` stamp (their files predate
     * the timeline; after the first versioned write the column appears
@@ -1173,12 +1200,13 @@ object Merge {
     val df = readTable(spark, st)
     partitionCols.foreach(c => require(df.columns.contains(c),
       s"partition column $c not present in the layout at $path"))
+    val parts = partitionsOf(files, partitionCols, df.schema)
+      .map(renderPartition)
     // declare the schema first: even a crash between here and the
     // commit record leaves only harmless metadata (and a tombstonable
     // inflight marker)
     updateSchemaMeta(spark, st, df.schema)
     versioned(spark, path) { _ =>
-      val parts = touchedPartitions(df, partitionCols).map(renderPartition)
       (MergeStats(df.count(), parts), Some(CommitResult(files, Nil, None)))
     }
   }

@@ -28,6 +28,8 @@ import org.apache.spark.sql.types.{BooleanType, DataType, StructField,
   * delta-touched partitions through one per-key window. Partitions with
   * no deltas are read with ZERO overhead (they bypass the merge
   * entirely), and a freshly compacted table reads exactly like COW.
+  * The delta-touched partitions are the hive directories of the delta
+  * files ([[Merge.partitionsOf]]): learning them runs no job.
   *
   * Physical layout (all metadata '_'-prefixed, so invisible to plain
   * parquet reads of the table root):
@@ -216,9 +218,7 @@ object MorTable {
         Merge.updateSchemaMeta(spark, st, stamped.schema)))
       val body = Merge.alignTo(stamped, target)
         .withColumn(deletedCol, lit(false))
-      publishDeltas(spark, path, body, stored, cts,
-        Merge.touchedPartitions(deduped, partitionCols)
-          .map(Merge.renderPartition))
+      publishDeltas(spark, path, body, stored, cts)
     }
   }
 
@@ -256,9 +256,7 @@ object MorTable {
     Merge.versioned(spark, path) { cts =>
       val body = Merge.alignTo(k.withColumn(Merge.commitCol, lit(cts)),
         columns(recorded(st))).withColumn(deletedCol, lit(true))
-      publishDeltas(spark, path, body, sp, cts,
-        Merge.touchedPartitions(k, sp.partitionCols)
-          .map(Merge.renderPartition))
+      publishDeltas(spark, path, body, sp, cts)
     }
   }
 
@@ -271,41 +269,43 @@ object MorTable {
     * record is the commit point — until it lands, [[read]]'s
     * recorded-id filter keeps the rows invisible. A delta publish is a
     * pure ADD in the recorded plan — the as-of replay sees through it,
-    * so history stays valid (no voiding). */
+    * so history stays valid (no voiding). The touched partitions the
+    * timeline records are the hive directories of the staged files. */
   private def publishDeltas(
       spark: SparkSession,
       path: String,
       body: DataFrame,
       sp: MorSpec,
-      cts: Long,
-      partsRendered: Seq[String])
+      cts: Long)
       : (Merge.MergeStats, Option[Merge.CommitResult]) = {
     val obs = org.apache.spark.sql.Observation()
     val staged = Merge.stage(spark, body.observe(obs, count(lit(1)).as("n")),
       path, sp.partitionCols, "_mor_staging_", deltaRel, Some(cts), Nil)
     Merge.publish(Merge.fsFor(spark, path), staged.moves)
-    (Merge.MergeStats(obs.get("n").asInstanceOf[Long], partsRendered),
+    (Merge.MergeStats(obs.get("n").asInstanceOf[Long], Merge.partitionsOf(
+      staged.added, sp.partitionCols, body.schema).map(Merge.renderPartition)),
       Some(Merge.CommitResult(staged.added, Nil, Some(staged.staging))))
   }
 
   /** Snapshot view (Hudi `_rt`): base ∪ live deltas, one per-key argmax
-    * over `_commit_ts`, tombstones filtered last. Scale shape: the
-    * merge window shuffles ONLY the delta-touched partitions — base
-    * rows in untouched partitions (the overwhelming majority of a
-    * 100 TB table between compactions) union straight through with no
-    * shuffle, and a table with no live deltas short-circuits to the
-    * plain base read. Crash residue never surfaces: delta rows are
-    * filtered to ids with a recorded timeline entry (each delta file
-    * holds one `_commit_ts` value, so parquet min/max stats prune whole
-    * residue files, not rows). */
+    * over `_commit_ts`, tombstones filtered last; building it runs no
+    * job. Scale shape: the merge window shuffles ONLY the
+    * delta-touched partitions — base rows in untouched partitions (the
+    * overwhelming majority of a 100 TB table between compactions)
+    * union straight through with no shuffle, and a table with no live
+    * deltas short-circuits to the plain base read. Crash residue never
+    * surfaces: delta rows are filtered to ids with a recorded timeline
+    * entry (each delta file holds one `_commit_ts` value, so parquet
+    * min/max stats prune whole residue files, not rows). */
   def read(spark: SparkSession, path: String): DataFrame =
     read(spark, TableState.load(spark, path))
 
   private[merge] def read(spark: SparkSession, st: TableState): DataFrame = {
     val sp = morSpec(st)
     val base = Merge.readTable(spark, st)
-    if (liveDeltas(st).isEmpty) return base
-    val m = mergeWindow(base, liveDeltaRows(spark, st), sp, recorded(st))
+    val files = liveDeltas(st).map(f => Merge.relativize(st.root, f.getPath))
+    if (files.isEmpty) return base
+    val m = mergeWindow(base, liveDeltaRows(spark, st), files, sp, recorded(st))
     m.untouched.unionByName(m.merged)
   }
 
@@ -343,12 +343,15 @@ object MorTable {
   /** base ∪ deltas per-key argmax with tombstones filtered last — the
     * one snapshot merge window, shared by [[read]], [[readAsOf]] and
     * [[compact]]. Only the delta-touched partitions shuffle; the rest
-    * of base passes straight through. */
+    * of base passes straight through. The touched partitions are the
+    * hive directories of `deltaFiles` (table-relative), the files
+    * `deltas` reads, so planning the window runs no job. A partition
+    * only crash residue touches counts as touched: its base rows pass
+    * through the window unchanged. */
   private def mergeWindow(base: DataFrame, deltas: DataFrame,
-      sp: MorSpec, target: StructType): Merged = {
+      deltaFiles: Seq[String], sp: MorSpec, target: StructType): Merged = {
     val cols = target.fieldNames.toSeq :+ deletedCol
-    val touched = Merge.touchedPartitions(
-      deltas.select(sp.partitionCols.map(col): _*), sp.partitionCols)
+    val touched = Merge.partitionsOf(deltaFiles, sp.partitionCols, target)
     val touchedPred =
       coalesce(Merge.partitionIn(sp.partitionCols, touched), lit(false))
     val flagged = base.withColumn(deletedCol, lit(false))
@@ -390,7 +393,7 @@ object MorTable {
     val deltas = deltaRows(spark, st,
       Merge.residentGroups(st, asOf, dmap, deltaRel))
       .filter(col(Merge.commitCol) <= asOf)
-    val m = mergeWindow(base, deltas, sp, recorded(st))
+    val m = mergeWindow(base, deltas, dmap.keys.toSeq, sp, recorded(st))
     m.untouched.unionByName(m.merged)
   }
 
@@ -431,7 +434,8 @@ object MorTable {
     val deltaFiles = liveDeltas(st)
     if (deltaFiles.isEmpty) return 0L
     val m = mergeWindow(Merge.readTable(spark, st), liveDeltaRows(spark, st),
-      sp, recorded(st))
+      deltaFiles.map(f => Merge.relativize(tableRoot, f.getPath)), sp,
+      recorded(st))
     // key-clustered layout within each rewritten partition, same as
     // Merge.compact — keeps base parquet min/max stats selective
     val merged = m.merged

@@ -397,24 +397,6 @@ object StatsPruning {
     case StrB(s) => s
   }
 
-  /** Spark writes hive partition dir names with %xx escapes for
-    * reserved path chars; undo just those (URLDecoder would also eat
-    * '+', which Spark does NOT escape). */
-  private def unescapePath(s: String): String = {
-    val sb = new java.lang.StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val ch = s.charAt(i)
-      if (ch == '%' && i + 2 < s.length) {
-        try {
-          sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
-          i += 3
-        } catch { case _: NumberFormatException => sb.append(ch); i += 1 }
-      } else { sb.append(ch); i += 1 }
-    }
-    sb.toString
-  }
-
   /** EXACT per-column (rows, nulls, min, max) for the table at `path`,
     * from parquet footer metadata alone — zero data IO (the
     * `graft_stats` surface; ANALYZE-grade answers at metadata price).
@@ -451,16 +433,9 @@ object StatsPruning {
     val rootStr = fs.makeQualified(root).toString.stripSuffix("/") + "/"
     // `k=v` directory segments per file (decoded exactly once — see
     // the partition-value comment below for why NOT java.net.URI)
-    def segsOf(f: String): Seq[(String, String)] =
-      (if (f.startsWith(rootStr)) f.drop(rootStr.length) else f)
-        .split('/').dropRight(1).toSeq
-        .flatMap { seg =>
-          val i = seg.indexOf('=')
-          if (i <= 0) None
-          else Some(seg.take(i) -> unescapePath(seg.drop(i + 1)))
-        }
     val fileSegs: Seq[(String, Seq[(String, String)])] =
-      all.map(f => f -> segsOf(f))
+      all.map(f => f -> Merge.partitionSegments(
+        if (f.startsWith(rootStr)) f.drop(rootStr.length) else f))
     val st = TableState.load(spark, path)
     val partitionCols = st.keySpec
       .map(_.partitionCols).getOrElse(
@@ -508,23 +483,24 @@ object StatsPruning {
     // the root come from Hadoop Path.toString (the decoded form), so
     // the stripped segments carry the ON-DISK names — raw spaces
     // intact, Spark's %xx escapes intact, decoded exactly once by
-    // unescapePath. Parsing the decoded string as a URI would throw
-    // on URI-illegal chars (a space in a partition value is legal on
-    // disk — Spark's escapePathName leaves it raw).
-    val hiveNull = "__HIVE_DEFAULT_PARTITION__"
+    // Merge.partitionSegments (Spark's own unescapePathName). Parsing
+    // the decoded string as a URI would throw on URI-illegal chars (a
+    // space in a partition value is legal on disk — Spark's
+    // escapePathName leaves it raw).
     val partValues: Map[String, Seq[String]] =
       if (partCols.isEmpty) Map.empty
       else fileSegs.flatMap(_._2).groupBy(_._1).map { case (k, vs) =>
-        // the sentinel is the writer's encoding of NULL, not a value:
-        // it must never surface as a literal bound
-        k -> vs.map(_._2).filter(_ != hiveNull).distinct.sorted
+        // the __HIVE_DEFAULT_PARTITION__ sentinel (null here) is the
+        // writer's encoding of NULL, not a value: it must never
+        // surface as a literal bound
+        k -> vs.map(_._2).filter(_ != null).distinct.sorted
       }
     // exact null counts for partition columns: the rows under each
     // column's null-sentinel dirs, from one footer pass over JUST
     // those files (normally zero — graft writers never emit one)
     val partNulls: Map[String, Long] = partCols.map { c =>
       val nullFiles = fileSegs.collect {
-        case (f, segs) if segs.contains((c, hiveNull)) => f
+        case (f, segs) if segs.contains((c, null)) => f
       }
       c -> nullFiles.map(f => fileColumnStats(conf, f, Nil)._1).sum
     }.toMap

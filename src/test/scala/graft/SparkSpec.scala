@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -9,7 +12,9 @@ import org.scalatest.BeforeAndAfterAll
   * One session per suite (getOrCreate reuses the JVM-wide session, so the
   * whole `sbt test` run shares a single SparkContext). It is the session
   * the mains build ([[SessionTuning.local]]) on 4 cores, so the specs
-  * run the configuration that ships.
+  * run the configuration that ships — with one addition: codegen does
+  * not fall back to the interpreted path, so an engine expression whose
+  * generated code does not compile fails its spec instead of logging.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
@@ -19,8 +24,33 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** The Spark jobs that start, on any thread, while `body` runs. The
+    * listener bus is drained before the listener joins (no earlier job
+    * is counted) and before the count is read (no late event is
+    * missed). */
+  def jobsOf(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    Profile.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      Profile.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SessionTuning.local(4)
+  lazy val session: SparkSession = {
+    val s = SessionTuning.local(4)
+    s.conf.set("spark.sql.codegen.fallback", "false")
+    s
+  }
 }

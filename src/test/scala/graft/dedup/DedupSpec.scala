@@ -603,27 +603,14 @@ class DedupSpec extends SparkSpec {
     val corpus = Seq((10L, v(2.0)), (11L, v(0.7, 0.7)))
       .toDF("vec_id", "embedding")
     val emptyBench = corpus.filter(lit(false))
-    @volatile var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val flagged =
-      try {
-        val df = Dedup.semanticContaminationFlags(corpus, emptyBench,
-          "vec_id", "embedding", minCos = 0.5)
-        df.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExtendedMode)
-        val sc = spark.sparkContext
-        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-        bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-        assert(jobs === 0,
-          "constructing/EXPLAINing the report launched a job — the " +
-            "lazy-transformation contract broke")
-        df
-      } finally spark.sparkContext.removeSparkListener(listener)
+    // built inside the counted body: its first use forces it
+    lazy val flagged = Dedup.semanticContaminationFlags(corpus, emptyBench,
+      "vec_id", "embedding", minCos = 0.5)
+    val jobs = jobsOf(flagged.queryExecution.explainString(
+      org.apache.spark.sql.execution.ExtendedMode))
+    assert(jobs === 0,
+      "constructing/EXPLAINing the report launched a job — the " +
+        "lazy-transformation contract broke")
     val e = intercept[Exception] { flagged.collect() }
     def msgs(t: Throwable): Seq[String] =
       if (t == null) Nil

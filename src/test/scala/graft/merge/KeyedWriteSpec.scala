@@ -1,11 +1,8 @@
 package graft.merge
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import scala.jdk.CollectionConverters._
 
 import graft.{FaultFs, SparkSpec}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.serializer.{JavaSerializer, KryoSerializer}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -39,30 +36,6 @@ class KeyedWriteSpec extends SparkSpec {
   /** A 4-partition table with a recorded key spec. */
   private def fourPartitions(path: String): Unit =
     Merge.upsert(spark, orders(0 until 40), path, keyCols, "price", "pair")
-
-  /** Spark jobs `body` starts on this thread (its own job group). */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"keyedwrite-${System.nanoTime()}"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties)
-            .exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "keyed write under test")
-    try {
-      body
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-    jobs.get
-  }
 
   private def rowsOf(df: DataFrame): Seq[String] =
     df.collect().toSeq.map(_.toSeq.map {
@@ -118,8 +91,12 @@ class KeyedWriteSpec extends SparkSpec {
     "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
 
   private def withConf(conf: Map[String, String])(body: => Unit): Unit = {
+    val prior = conf.keys.map(k => k -> spark.conf.getOption(k))
     conf.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally conf.keys.foreach(spark.conf.unset)
+    try body finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   repeatCases.foreach { case (name, dt, keys) =>

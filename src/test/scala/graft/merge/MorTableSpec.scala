@@ -147,6 +147,30 @@ class MorTableSpec extends SparkSpec {
     MorTable.compact(spark, path)
     assert(deltaFiles(path).isEmpty, "compaction sweeps crash residue too")
     assert(snap(MorTable.read(spark, path)) === Seq(("T1", "c1", "ADAGBP", 1.0)))
+    // residue is the only delta of a partition with base rows (BTCUSD)
+    // and of one with none (ETHUSD): both partitions count as touched,
+    // and their base rows pass through the merge window unchanged
+    val c2 = MorTable.upsert(spark, tx(("T2", "c1", "BTCUSD", 2.0)),
+      path, keyCols, "price", "pair")
+    MorTable.compact(spark, path)
+    val c4 = MorTable.upsert(spark, tx(("T3", "c1", "ADAGBP", 3.0)),
+      path, keyCols, "price", "pair")
+    val residue = Timeline.claim(spark, path)
+    Seq("BTCUSD" -> tx(("T2", "c1", "BTCUSD", 666.0)),
+      "ETHUSD" -> tx(("T9", "c1", "ETHUSD", 666.0))).foreach { case (p, df) =>
+      df.withColumn(Merge.commitCol, lit(residue))
+        .withColumn(MorTable.deletedCol, lit(false))
+        .write.mode("append").parquet(path + s"/_graft_deltas/pair=$p")
+    }
+    val live = Seq(("T1", "c1", "ADAGBP", 1.0), ("T2", "c1", "BTCUSD", 2.0),
+      ("T3", "c1", "ADAGBP", 3.0))
+    assert(snap(MorTable.read(spark, path)) === live)
+    assert(snap(MorTable.readAsOf(spark, path, c4)) === live)
+    assert(snap(MorTable.readAsOf(spark, path, c2)) === live.take(2))
+    MorTable.compact(spark, path)
+    assert(deltaFiles(path).isEmpty, "compaction sweeps that residue too")
+    assert(snap(MorTable.read(spark, path)) === live)
+    assert(snap(MorTable.readOptimized(spark, path)) === live)
   }
 
   test("interrupted compaction (deltas not yet consumed) stays correct") {

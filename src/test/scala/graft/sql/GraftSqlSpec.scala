@@ -891,23 +891,13 @@ class GraftSqlSpec extends SparkSpec {
       graft.similarity.Similarity.ivfPqDriftStats(spark, pq)
         .collect().map(_.toSeq).toSeq)
     // command nodes: EXPLAIN must not run the probe/means jobs
-    @volatile var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val jobs = jobsOf {
       spark.sql(s"EXPLAIN SELECT * FROM graft_ann_topk('$ivf', " +
         s"'$qDir/q', 10, 4)").collect()
       spark.sql(s"EXPLAIN SELECT * FROM graft_ann_drift('$ivf')")
         .collect()
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      assert(jobs === 0, "EXPLAIN over the ANN surface ran a job")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs === 0, "EXPLAIN over the ANN surface ran a job")
     val e = intercept[Exception] {
       spark.sql(s"SELECT * FROM graft_ann_topk('$ivf', 10)").collect()
     }
@@ -972,30 +962,16 @@ class GraftSqlSpec extends SparkSpec {
     // schema inference (one bounded metadata job per statement, the
     // same price graft_snapshot resolution pays) — never the
     // corpus-sized gram shuffle, whose stages only run at execution
-    @volatile var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    def drain(): Unit = {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val jobs = jobsOf {
       spark.sql(s"EXPLAIN SELECT * FROM graft_dup_spans('$dir')").collect()
       spark.sql(s"EXPLAIN SELECT * FROM graft_gopher_rules('$dir')")
         .collect()
-      drain()
-      assert(jobs <= 2,
-        s"EXPLAIN ran $jobs jobs — more than schema inference")
-      val atExplain = jobs
-      spark.sql(s"SELECT * FROM graft_dup_spans('$dir')").collect()
-      drain()
-      assert(jobs > atExplain, "execution never ran the span stages")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs <= 2,
+      s"EXPLAIN ran $jobs jobs — more than schema inference")
+    val executed = jobsOf(
+      spark.sql(s"SELECT * FROM graft_dup_spans('$dir')").collect())
+    assert(executed > 0, "execution never ran the span stages")
     val e = intercept[Exception] {
       spark.sql(s"SELECT * FROM graft_dup_spans('$dir', 8, 'id')")
         .collect()
@@ -1082,29 +1058,16 @@ class GraftSqlSpec extends SparkSpec {
       graft.merge.MorTable.readAsOf(spark, path, c1)
         .orderBy("doc_id").collect().toSeq)
     // the snapshot resolution is still LAZY: EXPLAIN launches no jobs
-    // on this unpartitioned table (recorded schema = no parquet
-    // inference; empty partition cols = no touched-partition job).
-    // A PARTITIONED MOR table additionally pays one distinct job over
-    // its live DELTA files at plan time — delta-metadata-sized,
-    // bounded by compaction cadence, never a base scan.
-    @volatile var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    // (recorded schema = no parquet inference; the touched partitions
+    // come from the delta file paths, partitioned or not)
+    val jobs = jobsOf {
       spark.sql(s"EXPLAIN SELECT * FROM graft_dup_spans('$path')")
         .collect()
       spark.sql(s"EXPLAIN SELECT * FROM graft_gopher_rules('$path')")
         .collect()
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      assert(jobs === 0,
-        s"EXPLAIN over a MOR-backed curation function ran $jobs jobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs === 0,
+      s"EXPLAIN over a MOR-backed curation function ran $jobs jobs")
   }
 
   test("resolveCorpus after a commit: a MOR table with live deltas " +
@@ -1239,34 +1202,20 @@ class GraftSqlSpec extends SparkSpec {
     // must not launch the distributed metadata job — force the
     // distributed arm so a reintroduced eager resolve can't hide in the
     // driver-side path
-    @volatile var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    def drainListenerBus(): Unit = {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    }
     val prev = graft.merge.StatsPruning.distributeFooterReadsAbove
     graft.merge.StatsPruning.distributeFooterReadsAbove = 0
-    spark.sparkContext.addSparkListener(listener)
     try {
-      spark.sql(s"EXPLAIN SELECT * FROM graft_count('$path')").collect()
-      spark.sql(s"EXPLAIN SELECT * FROM graft_stats('$path', 'okey')")
-        .collect()
-      drainListenerBus()
+      val jobs = jobsOf {
+        spark.sql(s"EXPLAIN SELECT * FROM graft_count('$path')").collect()
+        spark.sql(s"EXPLAIN SELECT * FROM graft_stats('$path', 'okey')")
+          .collect()
+      }
       assert(jobs === 0, "EXPLAIN must not launch the footer sweep")
       // the same statements EXECUTED do run the distributed sweep
-      assert(spark.sql(s"SELECT n_rows FROM graft_count('$path')")
-        .as[Long].head() === exact)
-      drainListenerBus()
-      assert(jobs > 0, "listener never observed the executed sweep")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      graft.merge.StatsPruning.distributeFooterReadsAbove = prev
-    }
+      val executed = jobsOf(
+        assert(spark.sql(s"SELECT n_rows FROM graft_count('$path')")
+          .as[Long].head() === exact))
+      assert(executed > 0, "listener never observed the executed sweep")
+    } finally graft.merge.StatsPruning.distributeFooterReadsAbove = prev
   }
 }

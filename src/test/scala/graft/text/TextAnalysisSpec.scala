@@ -236,34 +236,18 @@ class TextAnalysisSpec extends SparkSpec {
   test("tfidfTopTerms derives N in-plan: construction runs no job") {
     val docs = Seq((1L, "alpha beta"), (2L, "beta gamma"))
       .toDF("doc_id", "text")
-    @volatile var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    // listener events are delivered async; LiveListenerBus.waitUntilEmpty
-    // drains them deterministically (it is private[spark] — public in
-    // bytecode — hence reflection), so a reintroduced eager action can't
-    // slip past the zero-jobs assertion on a loaded box
-    def drainListenerBus(): Unit = {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = TextAnalysis.tfidfTopTerms(docs, "doc_id", "text")
-      out.queryExecution.executedPlan // even physical planning is job-free
-      drainListenerBus()
-      assert(jobs === 0, "building the tfidf query must not run a job")
-      // the in-plan N is the real corpus size (2 docs): beta has df=2
+    // built inside the counted body: its first use forces it
+    lazy val out = TextAnalysis.tfidfTopTerms(docs, "doc_id", "text")
+    // even physical planning is job-free
+    val jobs = jobsOf(out.queryExecution.executedPlan)
+    assert(jobs === 0, "building the tfidf query must not run a job")
+    // the in-plan N is the real corpus size (2 docs): beta has df=2
+    val executed = jobsOf {
       val beta = out.filter($"term" === "beta" && $"doc_id" === 1L)
         .select("tfidf").as[Double].head()
       assert(beta === 1.0 * 2 / 2)
-      drainListenerBus()
-      assert(jobs > 0, "listener never observed the action's jobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(executed > 0, "listener never observed the action's jobs")
   }
 
   test("gopherRules: clean prose keeps, short/stopless/numeric docs drop, " +
