@@ -954,6 +954,8 @@ object Merge {
         upsert(spark, ins, path, keyCols, precombine, partitionCols)
         return
       }
+      // holds every batch key on the driver for one job; the writes
+      // below collect keys of the same batch in turn
       val parts = batchKeys(deduped, KeySpec(keyCols, partitionCols)).parts
       val target = readTable(spark, st)
         .filter(partitionIn(partitionCols, parts))

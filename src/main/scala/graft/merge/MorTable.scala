@@ -218,7 +218,7 @@ object MorTable {
         Merge.updateSchemaMeta(spark, st, stamped.schema)))
       val body = Merge.alignTo(stamped, target)
         .withColumn(deletedCol, lit(false))
-      publishDeltas(spark, path, body, stored, cts)
+      publishDeltas(spark, path, body, stored, cts, deduped.schema)
     }
   }
 
@@ -256,7 +256,7 @@ object MorTable {
     Merge.versioned(spark, path) { cts =>
       val body = Merge.alignTo(k.withColumn(Merge.commitCol, lit(cts)),
         columns(recorded(st))).withColumn(deletedCol, lit(true))
-      publishDeltas(spark, path, body, sp, cts)
+      publishDeltas(spark, path, body, sp, cts, k.schema)
     }
   }
 
@@ -270,20 +270,23 @@ object MorTable {
     * recorded-id filter keeps the rows invisible. A delta publish is a
     * pure ADD in the recorded plan — the as-of replay sees through it,
     * so history stays valid (no voiding). The touched partitions the
-    * timeline records are the hive directories of the staged files. */
+    * timeline records are the hive directories of the staged files,
+    * read at the types of the caller's batch (`batch`), as a collect of
+    * the batch renders them. */
   private def publishDeltas(
       spark: SparkSession,
       path: String,
       body: DataFrame,
       sp: MorSpec,
-      cts: Long)
+      cts: Long,
+      batch: StructType)
       : (Merge.MergeStats, Option[Merge.CommitResult]) = {
     val obs = org.apache.spark.sql.Observation()
     val staged = Merge.stage(spark, body.observe(obs, count(lit(1)).as("n")),
       path, sp.partitionCols, "_mor_staging_", deltaRel, Some(cts), Nil)
     Merge.publish(Merge.fsFor(spark, path), staged.moves)
     (Merge.MergeStats(obs.get("n").asInstanceOf[Long], Merge.partitionsOf(
-      staged.added, sp.partitionCols, body.schema).map(Merge.renderPartition)),
+      staged.added, sp.partitionCols, batch).map(Merge.renderPartition)),
       Some(Merge.CommitResult(staged.added, Nil, Some(staged.staging))))
   }
 

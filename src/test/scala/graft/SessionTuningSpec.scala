@@ -17,6 +17,12 @@ class SessionTuningSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.shuffle.partitions") === "4")
   }
 
+  test("every session of the test JVM runs without codegen fallback, " +
+      "newSession()s included") {
+    Seq(spark, spark.newSession()).foreach(s =>
+      assert(s.conf.get("spark.sql.codegen.fallback") === "false"))
+  }
+
   test("the catalog warehouse lies outside the working directory") {
     val wh = new java.io.File(new org.apache.hadoop.fs.Path(
       spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath)

@@ -12,9 +12,10 @@ import org.scalatest.BeforeAndAfterAll
   * One session per suite (getOrCreate reuses the JVM-wide session, so the
   * whole `sbt test` run shares a single SparkContext). It is the session
   * the mains build ([[SessionTuning.local]]) on 4 cores, so the specs
-  * run the configuration that ships — with one addition: codegen does
-  * not fall back to the interpreted path, so an engine expression whose
-  * generated code does not compile fails its spec instead of logging.
+  * run the configuration that ships — with one addition: in every
+  * session of the test JVM codegen does not fall back to the
+  * interpreted path, so an engine expression whose generated code does
+  * not compile fails its spec instead of logging.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
@@ -49,8 +50,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SessionTuning.local(4)
-    s.conf.set("spark.sql.codegen.fallback", "false")
-    s
+    // as a JVM property it reaches the SparkContext's conf, so every
+    // session of the test JVM inherits it, `newSession()`s included
+    sys.props("spark.sql.codegen.fallback") = "false"
+    SessionTuning.local(4)
   }
 }

@@ -109,9 +109,14 @@ class PartitionPathSpec extends SparkSpec {
     val plain = tmpDir("partition_boot_")
     both.write.mode("overwrite").partitionBy(partCols: _*).parquet(plain)
     val boot = jobsOf(Merge.bootstrap(spark, plain, partCols))
+    val merged = tmpDir("partition_merge_")
+    Merge.upsert(spark, both, merged, keyCols, "v", partCols)
+    val merge = jobsOf(Merge.mergeInto(spark, update, merged, keyCols, "v",
+      partCols))
     (Map("mor first upsert" -> first, "mor upsert" -> upsert,
       "mor delete" -> delete, "mor compact" -> compact,
-      "first upsertVersioned" -> cowFirst, "bootstrap" -> boot),
+      "first upsertVersioned" -> cowFirst, "bootstrap" -> boot,
+      "mergeInto" -> merge),
       mor, cow, plain)
   }
 
@@ -123,6 +128,29 @@ class PartitionPathSpec extends SparkSpec {
     assert(recorded(plain) === Seq(s"$p1,$p2"))
     assert(MorTable.read(spark, mor).select("k", "v").as[(String, Double)]
       .collect().toSeq === Seq(("k1", 3.0)))
+  }
+
+  test("a MOR write records its partitions at the batch's types; an " +
+      "empty string records the directory it is stored under") {
+    val path = tmpDir("partition_types_")
+    MorTable.upsert(spark, rows(("k1", d1, t1, 1.0)), path, keyCols, "v",
+      partCols)
+    // the table stores date/timestamp; this batch carries them as text
+    val asText = Seq(("k1", d1, t1, 2.0)).toDF("k", "d", "ts", "v")
+    MorTable.upsert(spark, asText, path, keyCols, "v", partCols)
+    MorTable.delete(spark, asText.select("k", "d", "ts"), path)
+    assert(recorded(path) === Seq(p1, s"$d1/$t1", s"$d1/$t1"))
+    // "" is stored under __HIVE_DEFAULT_PARTITION__, the directory of a
+    // null, so the path cannot tell the two apart: the timeline records
+    // the directory (a distinct collect of the batch recorded "")
+    val empty = tmpDir("partition_empty_")
+    MorTable.upsert(spark, Seq(("k1", "", 1.0), ("k2", "x", 1.0))
+      .toDF("k", "p", "v"), empty, keyCols, "v", Seq("p"))
+    MorTable.upsert(spark, Seq(("k1", "", 2.0)).toDF("k", "p", "v"), empty,
+      keyCols, "v", Seq("p"))
+    MorTable.delete(spark, Seq(("k1", "")).toDF("k", "p"), empty)
+    assert(recorded(empty) === Seq("__HIVE_DEFAULT_PARTITION__,x",
+      "__HIVE_DEFAULT_PARTITION__", "__HIVE_DEFAULT_PARTITION__"))
   }
 
   test("each write that takes its partitions from file paths runs fewer " +
@@ -137,6 +165,9 @@ class PartitionPathSpec extends SparkSpec {
     withCollect.foreach { case (w, n) =>
       assert(jobs(w) < n, s"$w ran ${jobs(w)} jobs")
     }
+    // mergeInto reads its partitions off the keyed write's key collect,
+    // one job as the distinct collect was: 13 jobs either way
+    assert(jobs("mergeInto") <= 13, s"mergeInto ran ${jobs("mergeInto")} jobs")
   }
 
   test("building a MOR snapshot plan with live deltas runs no job") {
