@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -119,8 +119,4 @@ object AsofJoin {
       col(s"_asof.$c").as(s"$rightPrefix$c"))
     bounded.select(leftCols ++ asofCols: _*)
   }
-
-  /** Column helper for ad-hoc use. */
-  def asofTs(prefix: String = "asof_", tsCol: String = "ts"): Column =
-    col(s"$prefix$tsCol")
 }

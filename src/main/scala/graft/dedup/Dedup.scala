@@ -1314,21 +1314,17 @@ object Dedup {
       docs.filter(col("doc_id") % 5 === 0)
         .repartition(3).write.mode("overwrite").parquet(inDir)
       val schema = s.read.parquet(inDir).schema
-      val q = graft.util.StreamTuning.startAdapted(s, inDir) {
+      graft.util.StreamTuning.drain(s, inDir,
+        graft.util.Scratch.fresh("graft_e20c_")) {
         s.readStream.schema(schema)
           .option("maxFilesPerTrigger", 1).parquet(inDir)
           .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation",
-            graft.util.Scratch.fresh("graft_e20c_"))
           .foreachBatch { (batch: DataFrame, bid: Long) =>
             dsirScore(batch, "doc_id", "text", pb, nm)
               .withColumn("kept", col("qlogw") >= 0)
               .write.mode("overwrite").parquet(s"$outDir/b=$bid")
           }
-          .start()
       }
-      q.awaitTermination()
       s.read.parquet(outDir)
         .select("doc_id", "n_grams", "qlogw", "kept")
         .orderBy("doc_id")

@@ -2,7 +2,6 @@ package graft.merge
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 /** Streaming incremental pull over a merge table's commit timeline —
   * the engine's analogue of Hudi's incremental streaming read (Hudi
@@ -21,6 +20,12 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
   * [[foreachIncrement]] turns each micro-batch of commit records into
   * the rows those commits own (`_commit_ts IN (batch ids)`, a
   * stat-pruned scan like `readBetween`) and hands them to the caller.
+  *
+  * Every consumer here is a finite drain ([[graft.util.StreamTuning.drain]],
+  * partitions sized by the table's bytes): it delivers the commits
+  * recorded so far and returns; a later call with the same checkpoint
+  * delivers only the commits that landed since. A failed batch
+  * surfaces as the query's `StreamingQueryException`.
   *
   * Semantics (exactly Hudi's incremental caveats, stated honestly):
   *
@@ -61,10 +66,7 @@ object IncrementalStream {
   }
 
   /** For every micro-batch of new commits, hand `f` the rows those
-    * commits own (plus the sorted commit ids) and the batch id. Returns
-    * the started [[StreamingQuery]]; `trigger` defaults to
-    * `AvailableNow` (drain-what-exists, the batch-parity mode) — pass
-    * `Trigger.ProcessingTime(...)` to follow the table continuously.
+    * commits own (plus the sorted commit ids) and the batch id.
     *
     * The id filter is an explicit IN over THIS batch's ids (pushed to
     * the parquet scan), not a range: rollback gaps or out-of-order file
@@ -73,12 +75,17 @@ object IncrementalStream {
   def foreachIncrement(
       spark: SparkSession,
       path: String,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow())(
-      f: (DataFrame, Seq[Long], Long) => Unit): StreamingQuery =
-    writer(spark, path, trigger)(f)
-      .option("checkpointLocation", checkpointDir)
-      .start()
+      checkpointDir: String)(
+      f: (DataFrame, Seq[Long], Long) => Unit): Unit =
+    drainCommits(spark, path, checkpointDir) { (ids, batchId) =>
+      // MOR tables share the COW timeline but keep fresh rows in
+      // delta files — pull increments from the SNAPSHOT view there
+      // (winners stamped by their last writer, same ownership
+      // contract), or a delta commit's rows would never stream
+      val rows = Merge.readState(spark, TableState.load(spark, path),
+        None).filter(col(Merge.commitCol).isin(ids: _*))
+      f(rows, ids, batchId)
+    }
 
   /** Streaming change-data-capture: like [[foreachIncrement]], but each
     * micro-batch hands `f` the CHANGES its commits applied
@@ -106,23 +113,14 @@ object IncrementalStream {
       spark: SparkSession,
       path: String,
       checkpointDir: String,
-      keyCols: Seq[String],
-      trigger: Trigger = Trigger.AvailableNow())(
-      f: (DataFrame, Seq[Long], Long) => Unit): StreamingQuery =
-    commitStream(spark, path).writeStream
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val ids = batch.select("commit_ts")
-          .collect().map(_.getLong(0)).distinct.sorted.toIndexedSeq
-        if (ids.nonEmpty) {
-          val changes = ids
-            .map(id => Merge.readChanges(spark, path, id - 1, id, keyCols))
-            .reduce(_.unionByName(_))
-          f(changes, ids, batchId)
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+      keyCols: Seq[String])(
+      f: (DataFrame, Seq[Long], Long) => Unit): Unit =
+    drainCommits(spark, path, checkpointDir) { (ids, batchId) =>
+      val changes = ids
+        .map(id => Merge.readChanges(spark, path, id - 1, id, keyCols))
+        .reduce(_.unionByName(_))
+      f(changes, ids, batchId)
+    }
 
   /** CDC replication: maintain `dstPath` as a live replica of
     * `srcPath` purely from the change stream — the proof that
@@ -145,10 +143,9 @@ object IncrementalStream {
       checkpointDir: String,
       keyCols: Seq[String],
       precombine: String,
-      partitionCols: Seq[String],
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+      partitionCols: Seq[String]): Unit =
     replicateTransformed(spark, srcPath, dstPath, checkpointDir, keyCols,
-      precombine, partitionCols, identity, trigger)
+      precombine, partitionCols, identity)
 
   /** [[replicateTo]] with a ROW-LOCAL transform applied to every
     * post-image before it lands — a feature table / projection
@@ -175,10 +172,9 @@ object IncrementalStream {
       keyCols: Seq[String],
       precombine: String,
       partitionCols: Seq[String],
-      transform: DataFrame => DataFrame,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+      transform: DataFrame => DataFrame): Unit =
     foreachChanges(spark, srcPath, checkpointDir,
-      keyCols ++ partitionCols, trigger) { (ch, ids, _) =>
+      keyCols ++ partitionCols) { (ch, ids, _) =>
       val cached = ch.cache()
       try ids.foreach { id =>
         val c = cached.filter(col("_change_commit") === id)
@@ -223,36 +219,28 @@ object IncrementalStream {
       spark: SparkSession,
       srcPath: String,
       viewPath: String,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    commitStream(spark, srcPath).writeStream
-      .trigger(trigger)
-      .foreachBatch { (_: DataFrame, _: Long) =>
-        IncrementalView.refresh(spark, viewPath)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
+      checkpointDir: String): Unit =
+    graft.util.StreamTuning.drain(spark, srcPath, checkpointDir) {
+      commitStream(spark, srcPath).writeStream
+        .foreachBatch { (_: DataFrame, _: Long) =>
+          IncrementalView.refresh(spark, viewPath)
+          ()
+        }
+    }
 
-  private def writer(
+  /** Drain `path`'s commit stream, handing `f` each non-empty
+    * micro-batch's sorted commit ids and its batch id. */
+  private def drainCommits(
       spark: SparkSession,
       path: String,
-      trigger: Trigger)(
-      f: (DataFrame, Seq[Long], Long) => Unit)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    commitStream(spark, path).writeStream
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val ids = batch.select("commit_ts")
-          .collect().map(_.getLong(0)).distinct.sorted.toIndexedSeq
-        if (ids.nonEmpty) {
-          // MOR tables share the COW timeline but keep fresh rows in
-          // delta files — pull increments from the SNAPSHOT view there
-          // (winners stamped by their last writer, same ownership
-          // contract), or a delta commit's rows would never stream
-          val rows = Merge.readState(spark, TableState.load(spark, path),
-            None).filter(col(Merge.commitCol).isin(ids: _*))
-          f(rows, ids, batchId)
+      checkpointDir: String)(
+      f: (Seq[Long], Long) => Unit): Unit =
+    graft.util.StreamTuning.drain(spark, path, checkpointDir) {
+      commitStream(spark, path).writeStream
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          val ids = batch.select("commit_ts")
+            .collect().map(_.getLong(0)).distinct.sorted.toIndexedSeq
+          if (ids.nonEmpty) f(ids, batchId)
         }
-      }
+    }
 }

@@ -2723,11 +2723,10 @@ object Merge {
       upsertVersioned(s, replayBatch(s, dir, 1), path, keyCols, "pre", "part")
       upsertVersioned(s, replayBatch(s, dir, 2), path, keyCols, "pre", "part")
       val sink = scratchTable("graft_x03sink_")
-      val q = IncrementalStream.foreachIncrement(s, path,
+      IncrementalStream.foreachIncrement(s, path,
         scratchTable("graft_x03ckpt_")) { (inc, _, _) =>
         inc.write.mode("append").parquet(sink)
       }
-      q.awaitTermination()
       s.read.parquet(sink)
         .select(col("okey"), col("part"), col("price"), col("pre"),
           col(commitCol).as("commit_ts"))
@@ -2913,14 +2912,11 @@ object Merge {
         .filter(col("pre") % 3 === 0).select("okey", "part"),
         path, keyCols, Seq("part"))
       val dst = scratchTable("graft_x13dst_")
-      val q = graft.util.StreamTuning.startAdapted(s, path) {
-        IncrementalStream.replicateTransformed(s, path, dst,
-          scratchTable("graft_x13ckpt_"), keyCols, "pre", Seq("part"),
-          df => df.select(col("okey"), col("part"), col("pre"),
-            floor(col("price") / 500).cast("long").as("band"),
-            (graft.Tables.dec(col("price")) * 100).cast("long").as("cents")))
-      }
-      q.awaitTermination()
+      IncrementalStream.replicateTransformed(s, path, dst,
+        scratchTable("graft_x13ckpt_"), keyCols, "pre", Seq("part"),
+        df => df.select(col("okey"), col("part"), col("pre"),
+          floor(col("price") / 500).cast("long").as("band"),
+          (graft.Tables.dec(col("price")) * 100).cast("long").as("cents")))
       readTable(s, dst)
         .select("okey", "part", "pre", "band", "cents")
         .orderBy("part", "okey")
@@ -2934,11 +2930,8 @@ object Merge {
         .filter(col("pre") % 3 === 0).select("okey", "part"),
         path, keyCols, Seq("part"))
       val dst = scratchTable("graft_x07dst_")
-      val q = graft.util.StreamTuning.startAdapted(s, path) {
-        IncrementalStream.replicateTo(s, path, dst,
-          scratchTable("graft_x07ckpt_"), keyCols, "pre", Seq("part"))
-      }
-      q.awaitTermination()
+      IncrementalStream.replicateTo(s, path, dst,
+        scratchTable("graft_x07ckpt_"), keyCols, "pre", Seq("part"))
       readTable(s, dst)
         .select("okey", "part", "price", "pre")
         .orderBy("part", "okey")
@@ -2957,11 +2950,8 @@ object Merge {
         .filter(col("pre") % 3 === 0).select("okey", "part"),
         path, keyCols, Seq("part"))
       val dst = scratchTable("graft_x07wdst_")
-      val q = graft.util.StreamTuning.startAdapted(s, path) {
-        IncrementalStream.replicateTo(s, path, dst,
-          scratchTable("graft_x07wckpt_"), keyCols, "pre", Seq("part"))
-      }
-      q.awaitTermination()
+      IncrementalStream.replicateTo(s, path, dst,
+        scratchTable("graft_x07wckpt_"), keyCols, "pre", Seq("part"))
       readTable(s, dst)
         .select("okey", "part", "price", "pre")
         .orderBy("part", "okey")
@@ -3015,13 +3005,10 @@ object Merge {
         .filter(col("pre") % 3 === 0).select("okey", "part"),
         path, keyCols, Seq("part"))
       val sink = scratchTable("graft_x06sink_")
-      val q = graft.util.StreamTuning.startAdapted(s, path) {
-        IncrementalStream.foreachChanges(s, path,
-          scratchTable("graft_x06ckpt_"), Seq("okey", "part")) {
-          (ch, _, _) => ch.write.mode("append").parquet(sink)
-        }
+      IncrementalStream.foreachChanges(s, path,
+        scratchTable("graft_x06ckpt_"), Seq("okey", "part")) {
+        (ch, _, _) => ch.write.mode("append").parquet(sink)
       }
-      q.awaitTermination()
       s.read.parquet(sink)
         .orderBy("_change_commit", "_change_type", "part", "okey")
     }),
@@ -3112,11 +3099,7 @@ object Merge {
       upsertVersioned(s, b(1), src, Seq("okey"), "pre", "part")
       deleteVersioned(s, b(0).filter(col("pre") % 3 === 0)
         .select("okey", "part"), src, Seq("okey"), Seq("part"))
-      val q = graft.util.StreamTuning.startAdapted(s, src) {
-        IncrementalStream.maintainView(s, src, vw,
-          scratchTable("graft_x09ck_"))
-      }
-      q.awaitTermination()
+      IncrementalStream.maintainView(s, src, vw, scratchTable("graft_x09ck_"))
       IncrementalView.readView(s, vw)
         .select(col("part"), col("bucket"),
           graft.Tables.d(col("sum_v")).as("sum_v"), col("n_rows"))
@@ -3216,18 +3199,15 @@ object Merge {
           col("o_totalprice").as("price"),
           col("o_orderkey").as("pre"))
       rows.repartition(8).write.parquet(inDir)
-      val q = graft.util.StreamTuning.startAdapted(s, inDir) {
+      graft.util.StreamTuning.drain(s, inDir,
+        scratchTable("graft_x04ckpt_")) {
         s.readStream.schema(rows.schema)
           .option("maxFilesPerTrigger", 3).parquet(inDir)
           .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", scratchTable("graft_x04ckpt_"))
           .foreachBatch { (batch: DataFrame, _: Long) =>
             upsertOrdered(s, batch, path, Seq("okey"), "pre", Seq("part"))
           }
-          .start()
       }
-      q.awaitTermination()
       readTable(s, path)
         .select("okey", "part", "price", "pre")
         .orderBy("part", "okey")
@@ -3247,7 +3227,8 @@ object Merge {
           col("o_totalprice").as("price"),
           col("o_orderkey").as("pre"))
       rows.repartition(8).write.parquet(inDir)
-      val q = graft.util.StreamTuning.startAdapted(s, inDir) {
+      graft.util.StreamTuning.drain(s, inDir,
+        scratchTable("graft_e18ckpt_")) {
         s.readStream.schema(rows.schema)
           .option("maxFilesPerTrigger", 3).parquet(inDir)
           .writeStream
@@ -3257,11 +3238,7 @@ object Merge {
           .option("keys", "okey")
           .option("precombine", "pre")
           .option("partition", "part")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", scratchTable("graft_e18ckpt_"))
-          .start()
       }
-      q.awaitTermination()
       readTable(s, path)
         .select("okey", "part", "price", "pre")
         .orderBy("part", "okey")

@@ -551,20 +551,16 @@ object MorTable {
           org.apache.spark.sql.functions.col("o_totalprice").as("price"),
           org.apache.spark.sql.functions.col("o_orderkey").as("pre"))
       rows.repartition(8).write.parquet(inDir)
-      val q = graft.util.StreamTuning.startAdapted(s, inDir) {
+      graft.util.StreamTuning.drain(s, inDir,
+        Merge.scratchTable("graft_x05ckpt_")) {
         s.readStream.schema(rows.schema)
           .option("maxFilesPerTrigger", 3).parquet(inDir)
           .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation",
-            Merge.scratchTable("graft_x05ckpt_"))
           .foreachBatch { (batch: DataFrame, _: Long) =>
             MorTable.upsertOrdered(s, batch, path,
               Seq("okey"), "pre", Seq("part")): Unit
           }
-          .start()
       }
-      q.awaitTermination()
       MorTable.read(s, path)
         .select("okey", "part", "price", "pre")
         .orderBy("part", "okey")

@@ -102,18 +102,12 @@ object Expectations {
     Expectation("value_cap", col("value") <= 100.0))
 
   private def drainStreamReport(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val in = graft.streaming.EventStreams.prepareDrainInput(s, dir, 1,
       Seq(col("event_id") % 2 === 0, col("event_id") % 2 === 1))
-    val run = java.nio.file.Files.createTempDirectory("graft_p06").toString
+    val run = graft.util.Scratch.fresh("graft_p06")
     val outDir = s"$run/out"
-    val src = s.readStream
-      .schema(graft.streaming.EventStreams.eventSchema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-    val q = graft.util.StreamTuning.startAdapted(s, in) {
-      src.writeStream
-        .option("checkpointLocation", s"$run/ckpt")
-        .trigger(Trigger.AvailableNow())
+    graft.util.StreamTuning.drain(s, in, s"$run/ckpt") {
+      graft.streaming.EventStreams.eventsFrom(s, in).writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val real = batch.filter(col("event_id") =!= -1L)
           if (!real.isEmpty)
@@ -121,10 +115,8 @@ object Expectations {
               .write.mode("append").parquet(outDir)
           ()
         }
-        .start()
     }
-    q.awaitTermination()
-    val out = s.read.parquet(outDir)
+    s.read.parquet(outDir)
       .groupBy("rule")
       .agg(
         count(lit(1)).as("n_batches"),
@@ -132,13 +124,6 @@ object Expectations {
         sum(col("n_violations")).as("n_violations"),
         (sum(col("n_violations")) === 0).as("pass"))
       .orderBy("rule")
-    val rows = out.collect()
-    val schema = out.schema
-    val runPath = new org.apache.hadoop.fs.Path(run)
-    runPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .delete(runPath, true)
-    import scala.jdk.CollectionConverters._
-    s.createDataFrame(rows.toSeq.asJava, schema)
   }
 
   val queries: Map[String, Q] = Map(

@@ -205,58 +205,10 @@ object IngestDedup {
     * discipline). The step is retry-idempotent (landed-partition skip
     * + strictly-earlier screen + Overwrite verdicts), so an
     * at-least-once replay of any micro-batch converges. */
-  /** Ordered document file drops (doc_id % nBatches = drop index),
-    * mtime-pinned so the file source's arrival order IS the chain
-    * order; JVM-cached per shape (deterministic content — the same
-    * reuse contract as the event-drain inputs). Shared by e17 and e25
-    * (identical input, different chains), hence the e17 cache key. */
-  private def orderedDocDrops(s: SparkSession, dir: String,
-      nBatches: Int): String = {
-    val docs = Tables.documents(s, dir)
-    graft.util.Scratch.cached(s"e17:$dir:$nBatches",
-      "graft_e17_in_") { base =>
-      val inDir = base + "/in"
-      docs.filter(col("doc_id") % nBatches === 0)
-        .coalesce(1).write.parquet(inDir)
-      val p = new org.apache.hadoop.fs.Path(inDir)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val maxM = fs.listStatus(p).map(_.getModificationTime).max
-      var known = fs.listStatus(p).map(_.getPath.getName).toSet
-      (1 until nBatches).foreach { b =>
-        docs.filter(col("doc_id") % nBatches === b)
-          .coalesce(1).write.mode(SaveMode.Append).parquet(inDir)
-        // pin each later drop STRICTLY after the previous: mtime is
-        // the file source's arrival order, clock granularity can tie
-        fs.listStatus(p)
-          .filterNot(st => known.contains(st.getPath.getName))
-          .foreach(st => fs.setTimes(st.getPath, maxM + b * 60000L, -1))
-        known = fs.listStatus(p).map(_.getPath.getName).toSet
-      }
-    } + "/in"
-  }
-
   def streamIngestDedup(s: SparkSession, dir: String,
       nBatches: Int = 4): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val docs = Tables.documents(s, dir)
-    val in = orderedDocDrops(s, dir, nBatches)
-    val stateTable = "e17_bands"
-    Scale.dropBucketedTable(s, stateTable)
-    val root = graft.util.Scratch.fresh("graft_e17_")
-    val flagsPath = root + "/flags"
-    val src = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-    val q = graft.util.StreamTuning.startAdapted(s, in) {
-      src.writeStream
-        .option("checkpointLocation", root + "/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          ingestStep(batch, "doc_id", "text", stateTable, flagsPath,
-            batchId.toInt)
-        }
-        .start()
-    }
-    q.awaitTermination()
+    val flagsPath = runChainStream(s, dir, nBatches, "e17_bands",
+      "graft_e17_")(ingestStep(_, "doc_id", "text", _, _, _))
     collectFlags(s, flagsPath, "doc_id", nBatches)
   }
 
@@ -464,7 +416,7 @@ object IngestDedup {
       Seq("ingest_batch", "n_tokens", "n_grams", "dup_grams",
         "dup_tokens"))
 
-  /** The batch twin of [[runSpanStream]]: fresh state table, one
+  /** The batch twin of [[runChainStream]]: fresh state table, one
     * `step` per deterministic ingest (batch = idCol % nBatches);
     * returns the flags path. */
   private def runSpanChainBatch(docs: DataFrame, idCol: String,
@@ -501,7 +453,7 @@ object IngestDedup {
     * parity by construction: e25 shares p10's oracle verbatim. */
   def streamSpanDedup(s: SparkSession, dir: String, nBatches: Int = 4,
       n: Int = 8): DataFrame = {
-    val flagsPath = runSpanStream(s, dir, nBatches, "e25_grams",
+    val flagsPath = runChainStream(s, dir, nBatches, "e25_grams",
       "graft_e25_")(spanStep(_, "doc_id", "text", _, _, _, n))
     collectSpanFlags(s, flagsPath, "doc_id", nBatches)
   }
@@ -529,34 +481,36 @@ object IngestDedup {
     * verbatim (the e25/p10 parity argument, rewrite emission). */
   def streamScrub(s: SparkSession, dir: String, nBatches: Int = 4,
       n: Int = 8): DataFrame = {
-    val flagsPath = runSpanStream(s, dir, nBatches, "e26_grams",
+    val flagsPath = runChainStream(s, dir, nBatches, "e26_grams",
       "graft_e26_")(scrubStep(_, "doc_id", "text", _, _, _, n))
     collectScrubFlags(s, flagsPath, "doc_id", nBatches)
   }
 
-  /** Run one of the span-family steps per micro-batch over the
-    * ordered document drops; returns the flags path. */
-  private def runSpanStream(s: SparkSession, dir: String, nBatches: Int,
+  /** Run one chain `step` per micro-batch over ordered document drops
+    * (doc_id % nBatches = drop index, [[graft.util.StreamTuning.orderedDrops]]
+    * — the file source's arrival order IS the chain order), against a
+    * fresh `stateTable`; returns the flags path. The drops are
+    * JVM-cached per shape and shared by e17, e25 and e26 (identical
+    * input, different chains), hence the e17 cache key. */
+  private def runChainStream(s: SparkSession, dir: String, nBatches: Int,
       stateTable: String, scratchPrefix: String)(
       step: (DataFrame, String, String, Int) => Unit): String = {
-    import org.apache.spark.sql.streaming.Trigger
     val docs = Tables.documents(s, dir)
-    val in = orderedDocDrops(s, dir, nBatches)
+    val in = graft.util.StreamTuning.orderedDrops(s,
+      s"e17:$dir:$nBatches", "graft_e17_in_") {
+      (0 until nBatches).map(b => docs.filter(col("doc_id") % nBatches === b))
+    }
     Scale.dropBucketedTable(s, stateTable)
     val root = graft.util.Scratch.fresh(scratchPrefix)
     val flagsPath = root + "/flags"
-    val src = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-    val q = graft.util.StreamTuning.startAdapted(s, in) {
-      src.writeStream
-        .option("checkpointLocation", root + "/ckpt")
-        .trigger(Trigger.AvailableNow())
+    graft.util.StreamTuning.drain(s, in, root + "/ckpt") {
+      s.readStream.schema(docs.schema)
+        .option("maxFilesPerTrigger", 1).parquet(in)
+        .writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           step(batch, stateTable, flagsPath, batchId.toInt)
         }
-        .start()
     }
-    q.awaitTermination()
     flagsPath
   }
 

@@ -1274,11 +1274,6 @@ object Similarity {
   def maxDriftE6(spark: SparkSession, path: String): Long =
     maxE6(ivfDriftStats(spark, path))
 
-  /** [[maxDriftE6]] for the compound index — the s20 statistic reduced
-    * to the one number the PQ policy loop compares to its bar. */
-  def maxPqDriftE6(spark: SparkSession, path: String): Long =
-    maxE6(ivfPqDriftStats(spark, path))
-
   private def maxE6(stats: DataFrame): Long = {
     val r = stats.agg(max(col("drift_e6"))).head()
     if (r.isNullAt(0)) 0L else r.getLong(0)
@@ -1645,20 +1640,16 @@ object Similarity {
       val outDir = graft.util.Scratch.fresh("graft_e19o_")
       queriesOf(s, dir).repartition(3).write.mode("overwrite").parquet(qDir)
       val qSchema = s.read.parquet(qDir).schema
-      val stream = graft.util.StreamTuning.startAdapted(s, qDir) {
+      graft.util.StreamTuning.drain(s, qDir,
+        graft.util.Scratch.fresh("graft_e19c_")) {
         s.readStream.schema(qSchema)
           .option("maxFilesPerTrigger", 1).parquet(qDir)
           .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation",
-            graft.util.Scratch.fresh("graft_e19c_"))
           .foreachBatch { (batch: DataFrame, bid: Long) =>
             ivfTopKServed(s, idx, batch, 10, nProbe = 4)
               .write.mode("overwrite").parquet(s"$outDir/b=$bid")
           }
-          .start()
       }
-      stream.awaitTermination()
       s.read.parquet(outDir)
         .select("query_id", "rank", "corpus_id", "cos_sim")
         .orderBy("query_id", "rank")
@@ -1687,22 +1678,18 @@ object Similarity {
         transform(col("embedding"), x => -x).as("embedding"))
         .coalesce(1).write.parquet(inDir + "/f=1")
       val schema = s.read.parquet(inDir).schema
-      val q = graft.util.StreamTuning.startAdapted(s, inDir) {
+      graft.util.StreamTuning.drain(s, inDir,
+        graft.util.Scratch.fresh("graft_e23c_")) {
         s.readStream.schema(schema)
           .option("maxFilesPerTrigger", 1).parquet(inDir)
           .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation",
-            graft.util.Scratch.fresh("graft_e23c_"))
           .foreachBatch { (batch: DataFrame, _: Long) =>
             appendWithRetrainPolicy(s, idx, batch.drop("f"),
               nCentroids = 10, retrainAboveE6 = 1000L,
               maxTrainVectors = 256)
             ()
           }
-          .start()
       }
-      q.awaitTermination()
       ivfTopKServed(s, idx, queriesOf(s, dir), 10, nProbe = 4)
         .orderBy("query_id", "rank")
     }),
@@ -1874,22 +1861,18 @@ object Similarity {
           .as("embedding"))
         .coalesce(1).write.parquet(inDir + "/f=1")
       val schema = s.read.parquet(inDir).schema
-      val q = graft.util.StreamTuning.startAdapted(s, inDir) {
+      graft.util.StreamTuning.drain(s, inDir,
+        graft.util.Scratch.fresh("graft_e27c_")) {
         s.readStream.schema(schema)
           .option("maxFilesPerTrigger", 1).parquet(inDir)
           .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation",
-            graft.util.Scratch.fresh("graft_e27c_"))
           .foreachBatch { (batch: DataFrame, _: Long) =>
             appendToIvfPqWithRetrainPolicy(s, idx, batch.drop("f"),
               nCentroids = 10, excessAboveE6 = 150000L,
               maxTrainVectors = 256)
             ()
           }
-          .start()
       }
-      q.awaitTermination()
       ivfPqTopKServed(s, idx, queriesOf(s, dir), 10, nProbe = 4)
         .orderBy("query_id", "rank")
     }),

@@ -801,19 +801,15 @@ object GraftSourceQueries {
           Seq("okey"), "pre", "part")
         ()
       }
-      val q = graft.util.StreamTuning.startAdapted(s, path) {
+      graft.util.StreamTuning.drain(s, path,
+        graft.util.Scratch.fresh("graft_e21c_")) {
         s.readStream.format("graft").load(path)
           .writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation",
-            graft.util.Scratch.fresh("graft_e21c_"))
           .foreachBatch { (batch: DataFrame, bid: Long) =>
             batch.write.mode(SaveMode.Overwrite)
               .parquet(s"$outDir/b=$bid")
           }
-          .start()
       }
-      q.awaitTermination()
       s.read.parquet(outDir)
         .select("okey", "price", "pre", "part")
         .orderBy("part", "okey")
@@ -857,7 +853,8 @@ object GraftSourceQueries {
           partitionCol = "part")
         ()
       }
-      val q = graft.util.StreamTuning.startAdapted(s, src) {
+      graft.util.StreamTuning.drain(s, src,
+        graft.util.Scratch.fresh("graft_e22c_")) {
         s.readStream.format("graft").load(src)
           .withColumnRenamed(graft.merge.Merge.commitCol, "src_commit")
           .writeStream
@@ -867,12 +864,7 @@ object GraftSourceQueries {
           .option("keys", "okey")
           .option("precombine", "src_commit")
           .option("partition", "part")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation",
-            graft.util.Scratch.fresh("graft_e22c_"))
-          .start()
       }
-      q.awaitTermination()
       graft.merge.Merge.readTable(s, dst)
         .select("okey", "price", "pre", "part")
         .orderBy("part", "okey")
@@ -912,18 +904,14 @@ object GraftSourceQueries {
           .drop(graft.merge.Merge.commitCol)
       val joined = graft.streaming.EventStreams.intervalJoin(
         tail(clicksT), tail(buysT))
-      val q = graft.util.StreamTuning.startAdapted(s, clicksT) {
+      graft.util.StreamTuning.drain(s, clicksT,
+        graft.util.Scratch.fresh("graft_e24k_")) {
         joined.writeStream
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation",
-            graft.util.Scratch.fresh("graft_e24k_"))
           .foreachBatch { (batch: DataFrame, bid: Long) =>
             batch.write.mode(SaveMode.Overwrite)
               .parquet(s"$outDir/b=$bid")
           }
-          .start()
       }
-      q.awaitTermination()
       s.read.parquet(outDir)
         .select("l_id", "r_id", "user_id", "l_ts", "r_ts")
         .orderBy("l_id", "r_id")

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 import org.apache.spark.sql.types._
 import graft.Tables
 
@@ -293,17 +293,14 @@ object EventStreams {
   /** Drain a parquet events directory through the windowed aggregation
     * into an in-memory table (deterministic test/batch-parity runs). */
   def runWindowedAvailableNow(spark: SparkSession, inputDir: String,
-      checkpointDir: String, sinkTable: String): StreamingQuery = {
-    val src = spark.readStream.schema(eventSchema).parquet(inputDir)
-    windowedCounts(src)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .format("memory")
-      .queryName(sinkTable)
-      .start()
-  }
+      checkpointDir: String, sinkTable: String): Unit =
+    graft.util.StreamTuning.drain(spark, inputDir, checkpointDir) {
+      windowedCounts(spark.readStream.schema(eventSchema).parquet(inputDir))
+        .writeStream
+        .outputMode(OutputMode.Append())
+        .format("memory")
+        .queryName(sinkTable)
+    }
 
   // ---- query inventory ----
 
@@ -312,40 +309,12 @@ object EventStreams {
     * append-mode state is fully flushed before the query terminates. */
   private val sentinelTs = java.sql.Timestamp.valueOf("2035-01-01 00:00:00")
 
-  /** Prepared drain-input dirs, one per source sfDir: the input is a
-    * deterministic function of the source table, so repeated drains in
-    * one JVM (bench warmup + two timed passes) reuse it — only the
-    * checkpoint and sink are per-run. */
-  private val drainInputs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Cached drain-input dirs live for the JVM (reused across bench
-    * passes) — sweep them on exit so repeated runs don't accumulate
-    * temp trees. Per-run checkpoint dirs are removed eagerly instead
-    * (see [[drainAvailableNow]]). */
-  private lazy val sweepDrainInputsOnExit: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      drainInputs.values.foreach { in =>
-        val root = new java.io.File(in).getParentFile
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(); ()
-        }
-        try rm(root) catch { case _: Throwable => () }
-      }))
-
-  /** Run `build(stream)` over the events table via Trigger.AvailableNow
-    * and return the fully-flushed result (batch parity for the driver's
-    * oracle). Mechanics: the real events are ONE file (so no event is
-    * late vs a watermark raised by an earlier batch), the sentinel row
-    * is a SECOND file, and maxFilesPerTrigger=1 forces it into a later
-    * micro-batch — watermarks only advance between batches, and Spark's
-    * no-data batch then flushes all remaining state. */
-  /** `copies` > 1 feeds the SAME events through the stream that many
-    * times as separate micro-batches — the at-least-once replay shape
-    * the dedup drain (e05) must collapse back to exactly-once. */
-  /** Prepare (and cache per shape) a drain-input directory: each batch
-    * lands as one mtime-pinned file, the sentinel last. `parts`
+  /** Prepare (and cache per shape,
+    * [[graft.util.StreamTuning.orderedDrops]]) a drain-input directory:
+    * each batch lands as one mtime-pinned file, the sentinel last — the
+    * input is a deterministic function of the source table, so repeated
+    * drains in one JVM (bench warmup + two timed passes) reuse it; only
+    * the checkpoint and sink are per-run. `parts`
     * (mutually exclusive with `copies` > 1) splits the events into
     * ORDERED arrival batches: partition predicate i's rows arrive as
     * micro-batch i. Rows matching no predicate never arrive; rows
@@ -356,11 +325,10 @@ object EventStreams {
       copies: Int, parts: Seq[Column]): String = {
     require(copies == 1 || parts.isEmpty,
       "copies and parts are alternative batch shapes")
-    val batches: Seq[DataFrame] = {
+    prepareBatches(s, s"$dir#$copies#${parts.mkString(";")}", {
       val ev = Tables.events(s, dir)
       if (parts.nonEmpty) parts.map(ev.filter) else Seq.fill(copies)(ev)
-    }
-    prepareBatches(s, s"$dir#$copies#${parts.mkString(";")}", batches)
+    })
   }
 
   /** Arbitrary-batch drain input: `mkBatches` derives each ordered
@@ -374,44 +342,14 @@ object EventStreams {
       mkBatches(Tables.events(s, dir)))
 
   private def prepareBatches(s: SparkSession, cacheKey: String,
-      batches: Seq[DataFrame]): String = {
-    val in = drainInputs.getOrElseUpdate(cacheKey, {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_drain").toString
-      batches.head.coalesce(1).write.parquet(s"$base/in")
-      val inPath = new org.apache.hadoop.fs.Path(s"$base/in")
-      val fs = inPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val maxMtime = fs.listStatus(inPath).map(_.getModificationTime).max
-      // FileStreamSource orders batches by file mtime: pin each later
-      // file STRICTLY after the previous rather than trusting clock
-      // granularity — a sentinel sorted into batch 0 would raise the
-      // watermark to 2035 before any real event is read and drop
-      // everything as late
-      var known = fs.listStatus(inPath).map(_.getPath.getName).toSet
-      def appendPinned(step: Int)(write: => Unit): Unit = {
-        write
-        fs.listStatus(inPath)
-          .filterNot(st => known.contains(st.getPath.getName))
-          .foreach(st => fs.setTimes(st.getPath, maxMtime + step * 60000L, -1))
-        known = fs.listStatus(inPath).map(_.getPath.getName).toSet
-      }
-      batches.drop(1).zipWithIndex.foreach { case (b, i) =>
-        appendPinned(i + 1) {
-          b.coalesce(1).write.mode("append").parquet(s"$base/in")
-        }
-      }
-      appendPinned(batches.size) {
-        s.range(1).select(
-          lit(-1L).as("event_id"), lit(sentinelTs).as("ts"),
-          lit(-1L).as("user_id"), lit("_sentinel").as("event_type"),
-          lit(0.0).as("value"), lit(null).cast("string").as("props"))
-          .coalesce(1).write.mode("append").parquet(s"$base/in")
-      }
-      s"$base/in"
-    })
-    sweepDrainInputsOnExit
-    in
-  }
+      batches: => Seq[DataFrame]): String =
+    graft.util.StreamTuning.orderedDrops(s, "drain:" + cacheKey,
+      "graft_drain") {
+      batches :+ s.range(1).select(
+        lit(-1L).as("event_id"), lit(sentinelTs).as("ts"),
+        lit(-1L).as("user_id"), lit("_sentinel").as("event_type"),
+        lit(0.0).as("value"), lit(null).cast("string").as("props"))
+    }
 
   /** Watermark-window streaming dedup for at-least-once sources that
     * RE-STAMP event time on redelivery (a retried producer stamps send
@@ -432,6 +370,16 @@ object EventStreams {
       .withWatermark("ts", lateness)
       .dropDuplicatesWithinWatermark(keys)
 
+  /** Run `build(stream)` over the events table via Trigger.AvailableNow
+    * and return the fully-flushed result (batch parity for the driver's
+    * oracle). Mechanics: the real events are ONE file (so no event is
+    * late vs a watermark raised by an earlier batch), the sentinel row
+    * is a SECOND file, and maxFilesPerTrigger=1 forces it into a later
+    * micro-batch — watermarks only advance between batches, and Spark's
+    * no-data batch then flushes all remaining state. `copies` > 1 feeds
+    * the SAME events through the stream that many times as separate
+    * micro-batches — the at-least-once replay shape the dedup drain
+    * (e05) must collapse back to exactly-once. */
   private def drainAvailableNow(s: SparkSession, dir: String, name: String,
       copies: Int = 1, parts: Seq[Column] = Nil)(
       build: DataFrame => DataFrame): DataFrame =
@@ -447,29 +395,21 @@ object EventStreams {
 
   private def runDrain(s: SparkSession, in: String, name: String)(
       build: DataFrame => DataFrame): DataFrame = {
-    val run = java.nio.file.Files
-      .createTempDirectory(s"graft_$name").toString
     // state partitions sized from the drain's input bytes, not the core
     // count — see StreamTuning (guide §2.2 for stateful streams)
-    val q = graft.util.StreamTuning.startAdapted(s, in) {
-      val src = s.readStream.schema(eventSchema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-      build(src).writeStream
-        .option("checkpointLocation", s"$run/ckpt")
+    graft.util.StreamTuning.drain(s, in,
+      graft.util.Scratch.fresh(s"graft_$name")) {
+      build(eventsFrom(s, in)).writeStream
         .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .format("memory").queryName(name).start()
+        .format("memory").queryName(name)
     }
-    q.awaitTermination()
-    // the checkpoint/state tree is only needed while the drain runs —
-    // the memory sink holds the result; a bench process drains each
-    // query three times (warmup + two timed passes) and would otherwise
-    // leave 12 checkpoint trees behind per run
-    val runPath = new org.apache.hadoop.fs.Path(run)
-    runPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .delete(runPath, true)
     s.table(name)
   }
+
+  /** The ordered drain input as a stream, one drop per micro-batch. */
+  private[graft] def eventsFrom(s: SparkSession, in: String): DataFrame =
+    s.readStream.schema(eventSchema)
+      .option("maxFilesPerTrigger", 1).parquet(in)
 
   /** e15 machinery: the windowed aggregation drained in UPDATE output
     * mode into a keyed GRAFT table — the "streaming silver table"
@@ -486,15 +426,11 @@ object EventStreams {
   private def drainAggToTable(s: SparkSession, dir: String): DataFrame = {
     import graft.merge.Merge
     val in = prepareDrainInput(s, dir, 1, Nil)
-    val run = java.nio.file.Files.createTempDirectory("graft_e15").toString
+    val run = graft.util.Scratch.fresh("graft_e15")
     val tablePath = s"$run/table"
-    val q = graft.util.StreamTuning.startAdapted(s, in) {
-      val src = s.readStream.schema(eventSchema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-      windowedCounts(src).writeStream
-        .option("checkpointLocation", s"$run/ckpt")
+    graft.util.StreamTuning.drain(s, in, s"$run/ckpt") {
+      windowedCounts(eventsFrom(s, in)).writeStream
         .outputMode(OutputMode.Update())
-        .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           if (!batch.isEmpty) {
             Merge.upsertOrdered(s,
@@ -505,22 +441,11 @@ object EventStreams {
           }
           ()
         }
-        .start()
     }
-    q.awaitTermination()
-    val out = Merge.readTable(s, tablePath)
+    Merge.readTable(s, tablePath)
       .filter(col("event_type") =!= "_sentinel")
       .select("window_start", "event_type", "n_events", "total_value")
       .orderBy("window_start", "event_type")
-    // the report is |windows × types| rows — materialize, then sweep
-    // the run tree (table, checkpoint)
-    val rows = out.collect()
-    val schema = out.schema
-    val runPath = new org.apache.hadoop.fs.Path(run)
-    runPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .delete(runPath, true)
-    import scala.jdk.CollectionConverters._
-    s.createDataFrame(rows.toSeq.asJava, schema)
   }
 
   /** e12 machinery: the even/odd split drained through a foreachBatch
@@ -538,7 +463,7 @@ object EventStreams {
     import graft.merge.Merge
     val in = prepareDrainInput(s, dir, 1,
       Seq(col("event_id") % 2 === 0, col("event_id") % 2 === 1))
-    val run = java.nio.file.Files.createTempDirectory("graft_e12").toString
+    val run = graft.util.Scratch.fresh("graft_e12")
     val dimPath = s"$run/dim"
     val cust = Tables.customer(s, dir)
     Merge.upsert(s,
@@ -547,12 +472,8 @@ object EventStreams {
         lit("all").as("pt")),
       dimPath, Seq("user_id"), "ver", Seq("pt"))
     val outDir = s"$run/out"
-    val q = graft.util.StreamTuning.startAdapted(s, in) {
-      val src = s.readStream.schema(eventSchema)
-        .option("maxFilesPerTrigger", 1).parquet(in)
-      src.writeStream
-        .option("checkpointLocation", s"$run/ckpt")
-        .trigger(Trigger.AvailableNow())
+    graft.util.StreamTuning.drain(s, in, s"$run/ckpt") {
+      eventsFrom(s, in).writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val dim = Merge.readTable(s, dimPath)
             .select(col("user_id"), col("segment"))
@@ -571,24 +492,13 @@ object EventStreams {
           }
           ()
         }
-        .start()
     }
-    q.awaitTermination()
-    val out = s.read.parquet(outDir)
+    s.read.parquet(outDir)
       .filter(col("event_id") =!= -1L)
       .groupBy("segment")
       .agg(count(lit(1)).as("n_events"),
         Tables.d(sum(Tables.dec(col("value")))).as("total_value"))
       .orderBy("segment")
-    // the report is |segments| rows — materialize it, then sweep the
-    // run tree (dim table, checkpoint, batch outputs)
-    val rows = out.collect()
-    val schema = out.schema
-    val runPath = new org.apache.hadoop.fs.Path(run)
-    runPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .delete(runPath, true)
-    import scala.jdk.CollectionConverters._
-    s.createDataFrame(rows.toSeq.asJava, schema)
   }
 
   /** Run `body` with the RocksDB state-store provider active

@@ -21,9 +21,6 @@ package object syntax {
 
     // ---- text analysis ----
 
-    def withTokens(textCol: String, out: String = "tokens"): DataFrame =
-      df.withColumn(out, TextAnalysis.tokens(org.apache.spark.sql.functions.col(textCol)))
-
     def withQualityFeatures(textCol: String): DataFrame =
       TextAnalysis.qualityFeatures(df, textCol)
 
@@ -40,9 +37,6 @@ package object syntax {
     def dropExactDups(idCol: String, textCol: String): DataFrame =
       Dedup.dropExactDups(df, idCol, textCol)
 
-    def exactDupGroups(idCol: String, textCol: String): DataFrame =
-      Dedup.exactGroups(df, idCol, textCol)
-
     def nearDupPairs(idCol: String, textCol: String,
         threshold: Double = 0.8): DataFrame =
       Dedup.jaccardPairs(df, idCol, textCol, threshold)
@@ -52,17 +46,10 @@ package object syntax {
         Dedup.lshBands(Dedup.minhashSignatures(df, idCol, textCol), idCol),
         idCol)
 
-    def withSimhash(idCol: String, textCol: String): DataFrame =
-      Dedup.simhash64(df, idCol, textCol)
-
     // ---- similarity (df = corpus with vec_id + embedding) ----
 
     def knn(queries: DataFrame, k: Int): DataFrame =
       Similarity.bruteTopK(df, queries, k)
-
-    def knnApprox(queries: DataFrame, k: Int, bits: Int = 4,
-        tables: Int = 8): DataFrame =
-      Similarity.lshTopK(df, queries, k, bits, tables)
   }
 
   /** Column-level vector helpers. */

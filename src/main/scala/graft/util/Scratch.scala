@@ -9,8 +9,8 @@ package graft.util
   *  - [[cached]]: the content is a deterministic function of the key
   *    (e.g. the source sfDir), so repeated invocations in one JVM
   *    (bench warmup + two timed passes) reuse the first build — the
-  *    same reuse contract as the streaming drain inputs
-  *    ([[graft.streaming.EventStreams]]).
+  *    ordered streaming drain inputs
+  *    ([[graft.util.StreamTuning.orderedDrops]]) among them.
   *  - [[fresh]]: the invocation mutates the directory (versioned
   *    writes), so every run gets its own tree; sweep happens at exit.
   */

@@ -1,7 +1,8 @@
 package graft.util
 
 import scala.util.control.NonFatal
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 /** Data-derived shuffle/state partitioning for streaming drains
   * (optimization guide §2.2 applied to stateful streams).
@@ -45,8 +46,13 @@ import org.apache.spark.sql.SparkSession
   * maintainView 4.88→5.43 s, e27's in-body retrain +2 s) while the
   * stateful drains won; restoring after start keeps both.
   *
-  * [[startAdapted]] sets and restores the session conf without a lock,
-  * so it assumes one thread starts queries on a session at a time.
+  * Every finite stream in the engine runs through [[drain]]: sized
+  * partitions, `Trigger.AvailableNow`, a checkpoint, start, await. The
+  * conf window is held under one lock per session, so threads that
+  * drain on a shared session neither capture each other's partition
+  * count nor restore a stale value; the await runs outside the lock.
+  * `StreamLoader` keeps its own query: its checkpoint outlives a drain
+  * and its input dir grows with every drop.
   *
   * Results are partition-count-independent by construction (hash
   * aggregation, watermark semantics and join matching do not depend on
@@ -77,12 +83,18 @@ object StreamTuning {
       (bytes + bytesPerPart - 1) / bytesPerPart).toInt
   }
 
+  private val locks = new java.util.WeakHashMap[SparkSession, Object]
+
+  private def lockOf(spark: SparkSession): Object = locks.synchronized {
+    locks.computeIfAbsent(spark, _ => new Object)
+  }
+
   /** Build and `.start()` a streaming query inside `mk` with shuffle
     * partitions sized from `inputDir`; the session value is restored
     * as soon as `mk` returns (the started query's cloned session keeps
     * the adapted value for every micro-batch — see the object doc). */
-  def startAdapted[T](spark: SparkSession, inputDir: String)(
-      mk: => T): T = {
+  private def startAdapted[T](spark: SparkSession, inputDir: String)(
+      mk: => T): T = lockOf(spark).synchronized {
     val before = spark.conf.getOption(confKey)
     spark.conf.set(confKey, streamPartitions(spark, inputDir).toString)
     try mk
@@ -91,4 +103,44 @@ object StreamTuning {
       case None => spark.conf.unset(confKey)
     }
   }
+
+  /** Drain what `writer` reads, as it stands now, and return: the
+    * writer is built with partitions sized from `sizedBy`'s bytes,
+    * started `AvailableNow` with its checkpoint at `checkpoint`, and
+    * awaited. A failed batch surfaces as the query's
+    * `StreamingQueryException`. */
+  def drain(spark: SparkSession, sizedBy: String, checkpoint: String)(
+      writer: => DataStreamWriter[Row]): Unit =
+    startAdapted(spark, sizedBy) {
+      writer.trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", checkpoint)
+        .start()
+    }.awaitTermination()
+
+  /** A drain input of ordered file drops, built once per `key` in this
+    * JVM ([[Scratch.cached]]: the content is a function of the key) and
+    * returned as its `in` dir: batch i lands as one file whose mtime is
+    * pinned STRICTLY after batch i-1's. The file source orders batches
+    * by mtime and clock granularity can tie, so without the pin a late
+    * batch (an event-drain sentinel, say) could be read first. Read it
+    * with `maxFilesPerTrigger=1` to get one micro-batch per drop. */
+  def orderedDrops(spark: SparkSession, key: String, prefix: String)(
+      batches: => Seq[DataFrame]): String =
+    Scratch.cached(key, prefix) { base =>
+      val bs = batches
+      val in = new org.apache.hadoop.fs.Path(base, "in")
+      bs.head.coalesce(1).write.parquet(in.toString)
+      val fs = in.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def names = fs.listStatus(in).map(_.getPath.getName).toSet
+      val maxMtime = fs.listStatus(in).map(_.getModificationTime).max
+      var known = names
+      bs.drop(1).zipWithIndex.foreach { case (b, i) =>
+        b.coalesce(1).write.mode("append").parquet(in.toString)
+        fs.listStatus(in)
+          .filterNot(st => known.contains(st.getPath.getName))
+          .foreach(st =>
+            fs.setTimes(st.getPath, maxMtime + (i + 1) * 60000L, -1))
+        known = names
+      }
+    } + "/in"
 }

@@ -35,6 +35,22 @@ class LoadSpec extends SparkSpec {
     assert(df.count() === 1)
   }
 
+  test("readRawInferred infers the declared types, fields by name (S7)") {
+    val dir = tmpDir("loadinfer")
+    writeJson(dir, "tx.json", rawLine)
+    val df = LoadTransactions.readRawInferred(spark, dir)
+    // JSON inference orders fields by name; quoted money stays a string
+    // and the epochs read as doubles, so the load transform sees the
+    // same values through either scan
+    assert(df.schema ===
+      StructType(Model.orderCompleteRawSchema.sortBy(_.name)))
+    val cols = Model.orderCompleteRawSchema.fieldNames.toSeq.map(col)
+    assert(LoadTransactions.transform(df, Map.empty).select(cols: _*)
+      .collect().toSeq ===
+      LoadTransactions.transform(LoadTransactions.readRaw(spark, dir),
+        Map.empty).select(cols: _*).collect().toSeq)
+  }
+
   test("transform: epoch→timestamp floors sub-seconds (P9, exact chain)") {
     val dir = tmpDir("loadts")
     writeJson(dir, "tx.json", rawLine)

@@ -18,12 +18,11 @@ class IncrementalStreamSpec extends SparkSpec {
   private def drainTo(path: String, sink: String, ckpt: String)
       : Seq[Seq[Long]] = {
     val batches = scala.collection.mutable.ArrayBuffer[Seq[Long]]()
-    val q = IncrementalStream.foreachIncrement(spark, path, ckpt) {
+    IncrementalStream.foreachIncrement(spark, path, ckpt) {
       (inc, ids, _) =>
         batches += ids
         inc.write.mode("append").parquet(sink)
     }
-    q.awaitTermination()
     batches.toSeq
   }
 
@@ -110,12 +109,11 @@ class IncrementalStreamSpec extends SparkSpec {
   private def drainChangesTo(path: String, sink: String, ckpt: String)
       : Seq[Seq[Long]] = {
     val batches = scala.collection.mutable.ArrayBuffer[Seq[Long]]()
-    val q = IncrementalStream.foreachChanges(spark, path, ckpt,
+    IncrementalStream.foreachChanges(spark, path, ckpt,
       keyCols :+ "part") { (ch, ids, _) =>
         batches += ids
         ch.write.mode("append").parquet(sink)
     }
-    q.awaitTermination()
     batches.toSeq
   }
 
@@ -172,11 +170,9 @@ class IncrementalStreamSpec extends SparkSpec {
     Merge.deleteVersioned(spark,
       rows(0 until 5, "a", "x").select("k", "part"), src, keyCols,
       Seq("part"))
-    def sync(): Unit = {
-      val q = IncrementalStream.replicateTo(spark, src, dst, ckpt,
+    def sync(): Unit =
+      IncrementalStream.replicateTo(spark, src, dst, ckpt,
         keyCols, "v", Seq("part"))
-      q.awaitTermination()
-    }
     def state(path: String): Seq[(Long, String, String)] =
       spark.read.parquet(path).select("k", "part", "v")
         .as[(Long, String, String)].collect().toSeq.sorted
@@ -209,7 +205,7 @@ class IncrementalStreamSpec extends SparkSpec {
     Merge.upsertVersioned(spark, rows(0 until 8, "a", "v1"), src,
       keyCols, "v", "part")
     IncrementalStream.replicateTransformed(spark, src, dst, ckpt,
-      keyCols, "v", Seq("part"), transform).awaitTermination()
+      keyCols, "v", Seq("part"), transform)
     assert(featState() === expected())
     // resume the SAME checkpoint over an update + a delete
     Merge.upsertVersioned(spark, rows(4 until 12, "a", "v2"), src,
@@ -218,7 +214,7 @@ class IncrementalStreamSpec extends SparkSpec {
       Seq((0L, "a"), (1L, "a")).toDF("k", "part"), src, keyCols,
       Seq("part"))
     IncrementalStream.replicateTransformed(spark, src, dst, ckpt,
-      keyCols, "v", Seq("part"), transform).awaitTermination()
+      keyCols, "v", Seq("part"), transform)
     assert(featState() === expected())
   }
 
@@ -226,12 +222,11 @@ class IncrementalStreamSpec extends SparkSpec {
     val src = tmpDir("incs_tfbad") + "/src"
     Merge.upsertVersioned(spark, rows(0 until 3, "a", "v1"), src,
       keyCols, "v", "part")
-    val q = IncrementalStream.replicateTransformed(spark, src,
-      tmpDir("incs_tfbad") + "/dst", tmpDir("incs_tfbadck"),
-      keyCols, "v", Seq("part"),
-      df => df.drop("v"))
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      q.awaitTermination()
+      IncrementalStream.replicateTransformed(spark, src,
+        tmpDir("incs_tfbad") + "/dst", tmpDir("incs_tfbadck"),
+        keyCols, "v", Seq("part"),
+        df => df.drop("v"))
     }
     assert(e.getMessage.contains("must preserve") ||
       Option(e.getCause).exists(_.getMessage.contains("must preserve")))
@@ -259,14 +254,14 @@ class IncrementalStreamSpec extends SparkSpec {
     IncrementalView.create(spark, src, vw, Seq("k", "part"),
       Seq("part", "bucket"), "v", "part")
     // a drain with nothing new leaves the view at its created state
-    IncrementalStream.maintainView(spark, src, vw, ckpt).awaitTermination()
+    IncrementalStream.maintainView(spark, src, vw, ckpt)
     assert(viewState() === recompute())
     // two more commits land; the SAME checkpoint drains only them
     Merge.upsertVersioned(spark, batch(5 until 15, "a", 2.0), src,
       keyCols, "pre", "part")
     Merge.deleteVersioned(spark, Seq((0L, "a"), (1L, "a")).toDF("k", "part"),
       src, keyCols, Seq("part"))
-    IncrementalStream.maintainView(spark, src, vw, ckpt).awaitTermination()
+    IncrementalStream.maintainView(spark, src, vw, ckpt)
     assert(viewState() === recompute())
   }
 

@@ -12,9 +12,8 @@ class EventStreamsSpec extends SparkSpec {
     val base = tmpDir("evstream")
     // write the events table (µs timestamps) as the stream input
     Tables.events(spark, sfDir).write.parquet(s"$base/in")
-    val q = EventStreams.runWindowedAvailableNow(spark, s"$base/in",
+    EventStreams.runWindowedAvailableNow(spark, s"$base/in",
       s"$base/ckpt", "win_counts")
-    q.awaitTermination()
     // AvailableNow + watermark: only windows the final watermark passed
     // are emitted in append mode; compare those against batch
     val streamed = spark.table("win_counts")
@@ -174,9 +173,8 @@ class EventStreamsSpec extends SparkSpec {
     try {
       val base = tmpDir("rocksstate")
       Tables.events(spark, sfDir).write.parquet(s"$base/in")
-      val q = EventStreams.runWindowedAvailableNow(spark, s"$base/in",
+      EventStreams.runWindowedAvailableNow(spark, s"$base/in",
         s"$base/ckpt", "rocks_counts")
-      q.awaitTermination()
       val streamed = spark.table("rocks_counts")
       val batch = EventStreams.windowedCounts(Tables.events(spark, sfDir))
       val joined = streamed.alias("s").join(batch.alias("b"),
