@@ -56,8 +56,8 @@ object IncrementalStream {
   def commitStream(spark: SparkSession, path: String): DataFrame = {
     val dir = Timeline.dir(path)
     require(Merge.fsFor(spark, path).exists(dir),
-      s"no commit timeline at $dir — the table has no versioned commits " +
-        "yet (write one with upsertVersioned before tailing it)")
+      s"no commit timeline at $dir — the table has no commits yet " +
+        "(write to it before tailing it)")
     spark.readStream
       .schema(Timeline.recordSchema)
       .option("pathGlobFilter", "*.json")
@@ -103,8 +103,8 @@ object IncrementalStream {
     * added + retired files.
     *
     * COW tables only, and the history window applies: if [[Merge.clean]]
-    * sweeps (or a MOR delta / unversioned mutation voids) a commit's
-    * pre-images before the consumer drains it, the batch fails loudly
+    * sweeps a commit's pre-images before the consumer drains it, the
+    * batch fails loudly
     * with the floor refusal rather than delivering partial changes —
     * size `clean`'s retention to the consumer's maximum lag, exactly
     * like Hudi's cleaner-vs-incremental-consumer contract. Same
@@ -133,9 +133,9 @@ object IncrementalStream {
     * resume of the stream (effective exactly-once from keyed writes,
     * the same argument as StreamLoader).
     *
-    * The replica is written with plain (unversioned) upserts — it has
-    * its own history, not the source's; consumers wanting the source
-    * timeline should read the source. */
+    * The replica's upserts and deletes are commits of its own timeline
+    * — it has its own history, not the source's; consumers wanting the
+    * source timeline should read the source. */
   def replicateTo(
       spark: SparkSession,
       srcPath: String,

@@ -85,7 +85,7 @@ object IncrementalView {
     val ts = c.agg(max("commit_ts")).collect()(0)
     require(!ts.isNullAt(0),
       s"source $src has no recorded commits — incremental views need a " +
-        "versioned source (upsertVersioned/deleteVersioned)")
+        "source with a timeline (write to it first)")
     ts.getLong(0)
   }
 
@@ -166,7 +166,7 @@ object IncrementalView {
               .cast(sumType).as("sum_v"),
             (coalesce(col("n_rows"), lit(0L)) + col("_dn")).as("n_rows"),
             lit(head).as("src_ts")): _*)
-      Merge.upsertVersioned(spark, next, viewPath, spec.keyCols, "src_ts",
+      Merge.upsert(spark, next, viewPath, spec.keyCols, "src_ts",
         Seq(spec.partitionCol))
     } finally { delta.unpersist(); () }
     head

@@ -52,8 +52,8 @@ case class KeySpec(keyCols: Seq[String], partitionCols: Seq[String]) {
   *    cannot skew build/probe parity.
   *
   * Storage: `_graft_index/<entry>.json`, JSON-lines; one entry file
-  * per commit (named by `commit_ts` for versioned commits so
-  * [[Merge.rollback]] can drop it; uniquely otherwise). `add` lines
+  * per commit (named by `commit_ts`, so [[Merge.rollback]] can drop
+  * it), plus [[compactIndex]]'s uniquely named snapshot. `add` lines
   * carry (file, partition dir, row count, base64 bloom); `rm` lines
   * tombstone a superseded file. Live index = adds minus rms — file
   * names are never reused, so ordering is irrelevant. The log grows by
@@ -138,19 +138,16 @@ object KeyIndex {
     TableState.dropKeySpec(st)
   }
 
-  private def entryName(cts: Option[Long]): String = cts match {
-    case Some(c) => f"$c%020d.json"
-    case None => s"u${System.nanoTime()}.json"
-  }
+  private def entryName(cts: Long): String = f"$cts%020d.json"
 
-  /** Drop the index entry of a rolled-back versioned commit (its adds
+  /** Drop the index entry of a rolled-back commit (its adds
     * were un-published, its rms restored — both must un-happen in the
     * index too). Missing entry = the commit crashed before writing one:
     * nothing to do. */
   private[merge] def dropEntry(spark: SparkSession, path: String,
       cts: Long): Unit = {
     Merge.fsFor(spark, path)
-      .delete(new Path(indexDir(path), f"$cts%020d.json"), false)
+      .delete(new Path(indexDir(path), entryName(cts)), false)
     ()
   }
 
@@ -182,7 +179,7 @@ object KeyIndex {
       spark: SparkSession,
       st: TableState,
       schema: StructType,
-      cts: Option[Long],
+      cts: Long,
       added: Seq[String],
       removed: Seq[String]): Unit = {
     val (fs, path, tableRoot) = (st.fs, st.path, st.root)
@@ -377,7 +374,7 @@ object KeyIndex {
         s""""d":${Merge.jsonQuote(r.getAs[String]("d"))},""" +
         s""""n":${r.getAs[Long]("n")},"b":${Merge.jsonQuote(b)}}"""
     }
-    Merge.replaceSmallFile(fs, new Path(dir, entryName(None)),
+    Merge.replaceSmallFile(fs, new Path(dir, s"u${System.nanoTime()}.json"),
       if (lines.isEmpty) """{"op":"rm","f":""}""" else lines.mkString("\n"))
     old.foreach(p => fs.delete(p, false))
     old.size

@@ -76,17 +76,17 @@ import org.apache.spark.unsafe.Platform
   * plan against the same stored file and each retire it; the engine
   * detects the violation (a superseded file that vanished mid-commit
   * fails the commit loudly, before any replacement lands) but does not
-  * arbitrate it — serialize writers externally. [[upsertVersioned]]
+  * arbitrate it — serialize writers externally. Every write
   * additionally claims its commit id via an exclusive-create inflight
-  * marker, so even racing versioned writers can never stamp two batches
-  * with the same commit id.
+  * marker, so even racing writers can never stamp two batches with the
+  * same commit id.
   */
 object Merge {
 
   /** What a merge wrote: deduped batch row count + touched partition
     * tuples as [[renderPartition]] renders them (`1/x` for multi-level
     * partitioning, the bare value for the single-column common case) —
-    * the commit-metadata payload for [[upsertVersioned]]. */
+    * the commit-metadata payload for [[upsert]]. */
   final case class MergeStats(nRows: Long, partitions: Seq[String])
 
   /** The physical outcome of one durable commit: table-relative file
@@ -559,9 +559,10 @@ object Merge {
     new Path(path, f"_graft_rollback/$cts%020d")
 
   /** Drop a commit's working state after it is durably recorded (or
-    * fully rolled back): the staging sibling and, for versioned commits,
-    * the retired-file copy. A failed sweep must be VISIBLE — each leaked
-    * dir holds real data and accumulates silently otherwise. */
+    * fully rolled back): the staging sibling and, for a rolled-back
+    * commit, the retired-file copy. A failed sweep must be VISIBLE —
+    * each leaked dir holds real data and accumulates silently
+    * otherwise. */
   private[merge] def sweepCommitScratch(fs: FileSystem, staging: String,
       rollback: Option[Path]): Unit = {
     val stagingPath = new Path(staging)
@@ -584,13 +585,13 @@ object Merge {
     *     stored file is touched, and the staged file names are the final
     *     table file names — so the full commit plan (files to add, files
     *     to remove) is known before any mutation, and is recorded in a
-    *     plan sibling of the inflight marker when `cts` is set
-    *     ([[rollback]] reads it back).
+    *     plan sibling of the inflight marker ([[rollback]] reads it
+    *     back).
     *  2. RETIRE: unlink each superseded file — MOVED under
-    *     `_graft_rollback/<cts>/` for versioned commits (restorable),
-    *     deleted for plain ones. A superseded file that is already gone
-    *     means a concurrent writer violated the single-writer contract:
-    *     fail loudly here, before any replacement lands.
+    *     `_graft_rollback/<cts>/` (restorable). A superseded file that is
+    *     already gone means a concurrent writer violated the
+    *     single-writer contract: fail loudly here, before any
+    *     replacement lands.
     *  3. PUBLISH: rename each staged file into the table. On HDFS-like
     *     filesystems renames are metadata operations — the merged data
     *     is written exactly once (the previous shape re-read staging
@@ -601,19 +602,19 @@ object Merge {
     *     on rename-atomic storage — operators on S3 should front the
     *     table with a rename-atomic committer or layer.
     *
-    * A crash between 2 and 3 leaves the commit mechanically reversible:
-    * versioned commits via [[rollback]] (the plan sibling holds the
-    * file lists, the rollback dir holds the retired bytes); plain
-    * commits by moving the remaining staged files into place (the
-    * error message says which).
+    * A crash between 2 and 3 leaves the commit mechanically reversible
+    * via [[rollback]] (the plan sibling holds the file lists, the
+    * rollback dir holds the retired bytes), or completable by moving
+    * the remaining staged files into place (the error message says
+    * which).
     *
     * Only delete() can leave a touched partition with no files (a
     * batch-wins upsert always appends the batch's rows back), so the
     * emptied-directory sweep runs only when `dropEmptied` is set.
     *
-    * For versioned commits (`cts` set) the staging + rollback dirs are
-    * left in place — the caller sweeps them AFTER the commit record
-    * lands, so every crash window stays reversible. */
+    * The staging + rollback dirs are left in place — [[versioned]]
+    * sweeps them AFTER the commit record lands, so every crash window
+    * stays reversible. */
   private[merge] def commitFiles(
       spark: SparkSession,
       st: TableState,
@@ -622,13 +623,13 @@ object Merge {
       supersededFiles: Seq[String],
       touched: Seq[Seq[Any]],
       dropEmptied: Boolean,
-      cts: Option[Long] = None): CommitResult = {
+      cts: Long): CommitResult = {
     val (fs, path, tableRoot) = (st.fs, st.path, st.root)
     val removed = supersededFiles
       .map(f => relativize(tableRoot, fs.makeQualified(new Path(f))))
     val Staged(staging, moves, added) = stage(spark, merged, path,
       partitionCols, "_staging_", "", cts, removed)
-    val rb = cts.map(c => rollbackDir(path, c))
+    val rb = rollbackDir(path, cts)
     try {
       supersededFiles.foreach { f =>
         val p = new Path(f)
@@ -636,27 +637,18 @@ object Merge {
           throw new java.io.IOException(
             s"superseded file $p vanished mid-commit — concurrent writer " +
               s"on $path? merge tables are single-writer (Merge scaladoc)")
-        rb match {
-          case Some(dir) =>
-            val dest = new Path(dir, relativize(tableRoot, fs.makeQualified(p)))
-            fs.mkdirs(dest.getParent)
-            if (!fs.rename(p, dest))
-              throw new java.io.IOException(
-                s"failed to retire superseded file $p")
-          case None =>
-            if (!fs.delete(p, false))
-              throw new java.io.IOException(
-                s"failed to delete superseded file $p")
-        }
+        val dest = new Path(rb, relativize(tableRoot, fs.makeQualified(p)))
+        fs.mkdirs(dest.getParent)
+        if (!fs.rename(p, dest))
+          throw new java.io.IOException(s"failed to retire superseded file $p")
       }
     } catch {
       // pre-publish failures: nothing new has landed; staging is the
       // clean recovery copy (and rollback() reverses any retires)
       case e: Throwable =>
         throw new RuntimeException(
-          s"merge commit failed; staged merge result kept at $staging" +
-            cts.map(c => s"; rollback(path, $c) restores the table")
-              .getOrElse(""), e)
+          s"merge commit failed; staged merge result kept at $staging; " +
+            s"rollback(path, $cts) restores the table", e)
     }
     try publish(fs, moves) catch {
       // a publish that dies mid-way has landed SOME replacement files —
@@ -666,9 +658,8 @@ object Merge {
         throw new RuntimeException(
           "merge publish PARTIALLY COMMITTED at " + path +
             s"; unpublished replacement files remain at $staging — " +
-            cts.map(c => s"rollback(path, $c) reverses this commit, or ")
-              .getOrElse("") +
-            "moving the remaining staged files into place completes it", e)
+            s"rollback(path, $cts) reverses this commit, or moving the " +
+            "remaining staged files into place completes it", e)
     }
     val recorded = try {
       if (dropEmptied) {
@@ -700,7 +691,6 @@ object Merge {
           s"after a durable commit at $path (${e.getMessage}); new files " +
           "are unindexed until the next KeyIndex.compactIndex/compact")
     }
-    if (cts.isEmpty) sweepCommitScratch(fs, staging, None)
     CommitResult(added, removed, Some(staging))
   }
 
@@ -709,18 +699,17 @@ object Merge {
   private[merge] final case class Staged(staging: String,
       moves: Seq[(Path, Path)], added: Seq[String])
 
-  /** STAGE (and PLAN, for versioned commits): write `rows` once,
-    * hive-partitioned, into a fresh staging sibling
-    * `<table><tag><nanos>`. The staged file names are the final names
-    * (under `destRel` inside the table), so the full plan is known
-    * before any mutation; for versioned commits it lands in the
-    * timeline's plan SIBLING of the claim (complete-or-absent via
-    * temp+rename), so rollback() after any later crash is mechanical.
+  /** STAGE and PLAN: write `rows` once, hive-partitioned, into a fresh
+    * staging sibling `<table><tag><nanos>`. The staged file names are
+    * the final names (under `destRel` inside the table), so the full
+    * plan is known before any mutation; it lands in the timeline's
+    * plan SIBLING of the claim (complete-or-absent via temp+rename), so
+    * rollback() after any later crash is mechanical.
     * The claim marker itself is never rewritten — it stays the original
     * exclusive-create through every crash window. */
   private[merge] def stage(spark: SparkSession, rows: DataFrame,
       path: String, partitionCols: Seq[String], tag: String,
-      destRel: String, cts: Option[Long], removed: Seq[String]): Staged = {
+      destRel: String, cts: Long, removed: Seq[String]): Staged = {
     val fs = fsFor(spark, path)
     val staging = path.stripSuffix("/") + s"$tag${System.nanoTime()}"
     rows.write.partitionBy(partitionCols: _*).mode(SaveMode.Overwrite)
@@ -735,8 +724,7 @@ object Merge {
       (src, new Path(destRoot, relativize(stagingRoot, src)))
     }
     val added = moves.map { case (_, dest) => relativize(tableRoot, dest) }
-    cts.foreach(c => Timeline.writePlan(fs, path, c,
-      Timeline.Plan(staging, added, removed)))
+    Timeline.writePlan(fs, path, cts, Timeline.Plan(staging, added, removed))
     Staged(staging, moves, added)
   }
 
@@ -749,14 +737,14 @@ object Merge {
         throw new java.io.IOException(s"failed to publish $src to $dest")
     }
 
-  /** The one versioned-commit envelope: claim the next commit id, run
-    * `op` under it (stamping, staging, planning and publishing through
-    * [[commitFiles]]), record the commit, and only then retire its
-    * scratch — the staging sibling is swept and the retired-file copy
-    * becomes the commit's time-travel history. A crash anywhere inside
-    * `op` leaves the claim (and, once written, the plan) for
-    * [[rollback]]; a crash after the record leaves only scratch.
-    * Returns the commit id. */
+  /** The one commit envelope every write runs in: claim the next commit
+    * id, run `op` under it (stamping, staging, planning and publishing
+    * through [[commitFiles]]), record the commit, and only then retire
+    * its scratch — the staging sibling is swept and the retired-file
+    * copy becomes the commit's time-travel history, kept until
+    * [[clean]] sweeps it. A crash anywhere inside `op` leaves the claim
+    * (and, once written, the plan) for [[rollback]]; a crash after the
+    * record leaves only scratch. Returns the commit id. */
   private[merge] def versioned(spark: SparkSession, path: String)(
       op: Long => (MergeStats, Option[CommitResult])): Long = {
     val cts = Timeline.claim(spark, path)
@@ -767,22 +755,47 @@ object Merge {
     cts
   }
 
-  /** O2: plain append (insert — combine-before-insert defaults off in
-    * the reference, so no key reconciliation). */
+  /** `batch` stamped with commit `cts` — the `_commit_ts` every row a
+    * commit writes carries (a stamp the batch already has is replaced). */
+  private def stamp(batch: DataFrame, cts: Long): DataFrame =
+    batch.withColumn(commitCol, lit(cts))
+
+  /** A commit that supersedes nothing (insert, bulkInsert, a keyed
+    * write's first write): stage the stamped `rows(cts)`, record their
+    * count and the partitions of the files they landed in (read at the
+    * types of `batch`). */
+  private def appendCommit(spark: SparkSession, st: TableState,
+      partitionCols: Seq[String], batch: StructType)(
+      rows: Long => DataFrame): Long =
+    versioned(spark, st.path) { cts =>
+      // n_rows is observed on the write plan itself (Observation metrics
+      // count only successful tasks) — no separate count job
+      val obs = org.apache.spark.sql.Observation()
+      val res = commitFiles(spark, st,
+        rows(cts).observe(obs, count(lit(1)).as("n")), partitionCols,
+        supersededFiles = Nil, touched = Nil, dropEmptied = false, cts)
+      (MergeStats(obs.get("n").asInstanceOf[Long],
+        partitionsOf(res.added, partitionCols, batch).map(renderPartition)),
+        Some(res))
+    }
+
+  /** O2: append (insert — combine-before-insert defaults off in the
+    * reference, so no key reconciliation). Returns the commit id. */
   def insert(batch: DataFrame, path: String, partitionCol: String,
       keyCols: Seq[String] = Nil, precombine: String = null,
-      dedup: Boolean = false): Unit =
+      dedup: Boolean = false): Long =
     insert(batch, path, Seq(partitionCol), keyCols, precombine, dedup)
 
   /** [[insert]] with a multi-level (hive-nested) partition layout. */
   def insert(batch: DataFrame, path: String, partitionCols: Seq[String],
       keyCols: Seq[String], precombine: String,
-      dedup: Boolean): Unit = {
-    val st = TableState.load(batch.sparkSession, path)
-    val b = if (dedup) precombineDedup(batch, keyCols, precombine) else batch
-    b.write.partitionBy(partitionCols: _*).mode(SaveMode.Append).parquet(path)
-    updateSchemaMeta(batch.sparkSession, st, batch.schema)
-    voidHistory(batch.sparkSession, path)
+      dedup: Boolean): Long = {
+    val spark = batch.sparkSession
+    appendCommit(spark, TableState.load(spark, path), partitionCols,
+      batch.schema) { cts =>
+      val b = stamp(batch, cts)
+      if (dedup) precombineDedup(b, keyCols, precombine) else b
+    }
   }
 
   /** O2 bulk path: insert with TARGET-FILE-SIZE layout — the honest
@@ -792,17 +805,20 @@ object Merge {
     * regardless of row count, each hive partition's rows land in few
     * sorted files (clustered keys = effective parquet min/max pruning
     * for the later upserts' key scans), and no task writes one file per
-    * partition value the way round-robin repartition would. */
+    * partition value the way round-robin repartition would. With keys,
+    * the table's key spec is recorded and the commit key-indexes the
+    * files it adds (bulk_insert is the canonical way to prime a table
+    * that upserts will then hit). Returns the commit id. */
   def bulkInsert(batch: DataFrame, path: String, partitionCol: String,
       keyCols: Seq[String] = Nil,
       targetFileBytes: Long = 128L * 1024 * 1024,
-      maxFiles: Int = 1 << 20): Unit =
+      maxFiles: Int = 1 << 20): Long =
     bulkInsert(batch, path, Seq(partitionCol), keyCols, targetFileBytes,
       maxFiles)
 
   /** [[bulkInsert]] with a multi-level (hive-nested) partition layout. */
   def bulkInsert(batch: DataFrame, path: String, partitionCols: Seq[String],
-      keyCols: Seq[String], targetFileBytes: Long, maxFiles: Int): Unit = {
+      keyCols: Seq[String], targetFileBytes: Long, maxFiles: Int): Long = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
     require(maxFiles >= 1, "maxFiles must be >= 1")
     // sizeInBytes is a BigInt that Catalyst pins to Long.MaxValue (and
@@ -814,48 +830,34 @@ object Merge {
       .min(BigInt(maxFiles)).max(BigInt(1)).toInt
     val layout = (partitionCols.map(col) ++ keyCols.map(col)).toIndexedSeq
     val spark = batch.sparkSession
-    // key-index the bulk load (bulk_insert is the canonical way to
-    // prime a table that upserts will then hit): a listing diff tells
-    // us which files this append created. The pre-listing is a no-op on
-    // the usual fresh table; on an existing table it is one metadata
-    // listing — the same magnitude as the write's own file operations.
-    val spec = KeySpec(keyCols, partitionCols)
-    val st = if (keyCols.isEmpty) TableState.load(spark, path)
-      else KeyIndex.ensureSpec(TableState.load(spark, path), spec)
-    val indexed = keyCols.nonEmpty && st.keySpec.contains(spec)
-    val (fs, tableRoot) = (st.fs, st.root)
-    val before: Set[String] =
-      if (indexed && st.hasData)
-        listDataFiles(fs, tableRoot).map(p => relativize(tableRoot, p)).toSet
-      else Set.empty
-    batch.repartitionByRange(nFiles, layout: _*)
-      .write.partitionBy(partitionCols: _*).mode(SaveMode.Append).parquet(path)
-    val recorded = updateSchemaMeta(spark, st, batch.schema)
-    if (indexed) {
-      try {
-        val added = listDataFiles(fs, tableRoot)
-          .map(p => relativize(tableRoot, p)).filterNot(before)
-        KeyIndex.recordCommit(spark, recorded, batch.schema, None, added, Nil)
-      } catch {
-        case e: Exception => System.err.println(
-          s"[graft.merge] WARN: key-index update failed after bulkInsert " +
-            s"at $path (${e.getMessage}); the new files stay unindexed")
-      }
-    }
-    voidHistory(spark, path)
+    val loaded = TableState.load(spark, path)
+    val st = if (keyCols.isEmpty) loaded
+      else KeyIndex.ensureSpec(loaded, KeySpec(keyCols, partitionCols))
+    appendCommit(spark, st, partitionCols, batch.schema)(cts =>
+      stamp(batch, cts).repartitionByRange(nFiles, layout: _*))
   }
 
   /** O1: key-reconciled upsert at file-group granularity (see the
     * object scaladoc for the write-amplification argument). Record
     * identity is (key, partition) — Hudi's partition-scoped index
-    * semantics: the same key in two partitions is two records. */
+    * semantics: the same key in two partitions is two records.
+    *
+    * The batch is stamped with a fresh monotonic commit id, so
+    * surviving stored rows keep the stamp of the commit that last wrote
+    * THEM (exactly Hudi's per-record `_hoodie_commit_time` semantics
+    * under OverwriteWithLatestAvroPayload). The commit is recorded in
+    * the timeline only after the data commit succeeds — the timeline
+    * lists durable commits. Returns the commit id, or 0 for an empty
+    * batch, which claims no id and records nothing. Rows a table held
+    * before its first stamped write read back with a NULL stamp
+    * ("before the timeline") and never match an incremental pull. */
   def upsert(
       spark: SparkSession,
       batch: DataFrame,
       path: String,
       keyCols: Seq[String],
       precombine: String,
-      partitionCol: String): Unit =
+      partitionCol: String): Long =
     upsert(spark, batch, path, keyCols, precombine, Seq(partitionCol))
 
   /** [[upsert]] over a multi-level (hive-nested) partition layout —
@@ -867,11 +869,9 @@ object Merge {
       path: String,
       keyCols: Seq[String],
       precombine: String,
-      partitionCols: Seq[String]): Unit = {
+      partitionCols: Seq[String]): Long =
     upsertImpl(spark, batch, path, keyCols, precombine, partitionCols,
-      cts = None, ordered = false)
-    voidHistory(spark, path)
-  }
+      ordered = false)
 
   /** O1 with ordered-payload semantics — Hudi's
     * `DefaultHoodieRecordPayload` (shipped in the pinned 0.10.0) vs the
@@ -882,18 +882,17 @@ object Merge {
     * written — INVARIANT to batch boundaries and arrival order, which
     * is what makes it the safe payload for streaming ingestion where
     * late or replayed micro-batches must not regress a key (the
-    * x04_stream_upsert driver key proves exactly that). */
+    * x04_stream_upsert driver key proves exactly that). Returns the
+    * commit id (0 for an empty batch, as [[upsert]]). */
   def upsertOrdered(
       spark: SparkSession,
       batch: DataFrame,
       path: String,
       keyCols: Seq[String],
       precombine: String,
-      partitionCols: Seq[String]): Unit = {
+      partitionCols: Seq[String]): Long =
     upsertImpl(spark, batch, path, keyCols, precombine, partitionCols,
-      cts = None, ordered = true)
-    voidHistory(spark, path)
-  }
+      ordered = true)
 
   /** Conditional merge — MERGE INTO semantics (Delta/Hudi's
     * WHEN MATCHED [AND cond] THEN UPDATE/DELETE, WHEN NOT MATCHED
@@ -1000,20 +999,21 @@ object Merge {
   /** What a keyed write (upsert / insertOverwrite) plans its rewrite
     * against: the batch keys at the stored types, the stored and target
     * schemas (stored columns plus the batch's additive ones), and
-    * `newRows` — the deduped batch aligned to the target and, on the
-    * versioned path, observed for the timeline's row count. */
+    * `newRows` — the stamped, deduped batch aligned to the target and
+    * observed for the timeline's row count. */
   private final case class KeyedWrite(st: TableState, keys: BatchKeys,
       stored: StructType, target: Seq[(String, DataType)], spec: KeySpec,
       newRows: DataFrame)
 
   /** The shared frame of the keyed writes: record the key spec, take
     * the staged first write on a new table, collect the batch keys (job
-    * 1), no-op on an empty batch, precombine-dedup only when a key
-    * repeats, enforce the additive-evolution contract, then commit the
+    * 1), no-op on an empty batch, enforce the additive-evolution
+    * contract — all before the commit id is claimed — then, under the
+    * claim, precombine-dedup only when a key repeats and commit the
     * rows `plan` returns in place of the stored files it supersedes.
     * The batch is read twice (keys, rows): it is cached unless the
-    * caller cached it, and only a cache made here is dropped here. The
-    * timeline's stats are only observed on the versioned path. */
+    * caller cached it, and only a cache made here is dropped here.
+    * Returns the commit id, or 0 when the batch is empty. */
   private def keyedWrite(
       spark: SparkSession,
       batch: DataFrame,
@@ -1021,10 +1021,8 @@ object Merge {
       keyCols: Seq[String],
       precombine: String,
       partitionCols: Seq[String],
-      cts: Option[Long],
       op: String)(
-      plan: KeyedWrite => (DataFrame, Seq[String]))
-      : (MergeStats, Option[CommitResult]) = {
+      plan: KeyedWrite => (DataFrame, Seq[String])): Long = {
     val spec = KeySpec(keyCols, partitionCols)
     val owned = batch.storageLevel == StorageLevel.NONE
     if (owned) batch.persist(StorageLevel.MEMORY_AND_DISK)
@@ -1033,52 +1031,45 @@ object Merge {
       // commit — including table services that take no keys — can
       // maintain the file-level key index
       val st = KeyIndex.ensureSpec(TableState.load(spark, path), spec)
-      // n_rows for the timeline is observed on the batch branch of the
-      // write plan itself (Observation metrics count only successful
-      // tasks) — no separate count job per commit
-      val obs = cts.map(_ => org.apache.spark.sql.Observation())
-      def observed(df: DataFrame): DataFrame =
-        obs.fold(df)(o => df.observe(o, count(lit(1)).as("n")))
-      def stats(parts: Seq[String]): MergeStats =
-        MergeStats(obs.map(_.get("n").asInstanceOf[Long]).getOrElse(0L), parts)
-      if (!st.hasData) {
+      if (!st.hasData)
         // initial write: the same staged commit as every other write —
         // the staging + rename publish knows its added-file plan before
-        // any file lands, so even a FIRST versioned commit rolls back.
-        // No key collect: a bulk load's keys need not fit the driver,
-        // so the window always runs (dedup keeps every partition).
-        val res = commitFiles(spark, st,
-          observed(precombineDedup(batch, spec.scoped, precombine)),
-          partitionCols, supersededFiles = Nil, touched = Nil,
-          dropEmptied = false, cts)
-        return (stats(if (cts.isEmpty) Nil
-          else partitionsOf(res.added, partitionCols, batch.schema)
-            .map(renderPartition)), Some(res))
-      }
+        // any file lands, so even a FIRST commit rolls back. No key
+        // collect: a bulk load's keys need not fit the driver, so the
+        // window always runs (dedup keeps every partition).
+        return appendCommit(spark, st, partitionCols, batch.schema)(cts =>
+          precombineDedup(stamp(batch, cts), spec.scoped, precombine))
       val keys = batchKeys(batch, spec)
-      if (keys.rows.isEmpty) return (MergeStats(0L, Nil), None)
-      val deduped = if (!keys.repeats) batch
-        else precombineDedup(batch, spec.scoped, precombine)
+      if (keys.rows.isEmpty) return 0L
       val stored = storedSchema(spark, st, partitionCols)
       // a batch may ADD columns (additive evolution) but never DROP
       // them: silently selecting the batch's columns out of a wider
-      // stored schema would STRIP the extra columns (e.g. _commit_ts on
-      // a table built by upsertVersioned) from every rewritten file
-      val missing = stored.fieldNames.toSet -- deduped.columns.toSet
+      // stored schema would STRIP the extra columns from every
+      // rewritten file
+      val batchCols = batch.columns.toSeq :+ commitCol
+      val missing = stored.fieldNames.toSet -- batchCols
       require(missing.isEmpty,
         s"$op batch schema mismatch vs stored table at $path: " +
-          s"batch lacks ${missing.mkString(",")} " +
-          s"(a versioned table must be written via ${op}Versioned)")
-      val target: Seq[(String, DataType)] =
-        (stored.fields ++ deduped.schema.fields
-          .filterNot(f => stored.fieldNames.contains(f.name)))
-          .map(f => f.name -> f.dataType).toIndexedSeq
+          s"batch lacks ${missing.mkString(",")}")
       val typed = keys.typed(stored)
-      val (rows, superseded) = plan(KeyedWrite(st, typed, stored, target,
-        spec, observed(alignTo(deduped, target))))
-      val res = commitFiles(spark, st, rows, partitionCols, superseded,
-        typed.parts, dropEmptied = false, cts)
-      (stats(keys.parts.map(renderPartition)), Some(res))
+      versioned(spark, path) { cts =>
+        val stamped = stamp(batch, cts)
+        val deduped = if (!keys.repeats) stamped
+          else precombineDedup(stamped, spec.scoped, precombine)
+        val target: Seq[(String, DataType)] =
+          (stored.fields ++ deduped.schema.fields
+            .filterNot(f => stored.fieldNames.contains(f.name)))
+            .map(f => f.name -> f.dataType).toIndexedSeq
+        // n_rows is observed on the batch branch of the write plan
+        // itself — no separate count job per commit
+        val obs = org.apache.spark.sql.Observation()
+        val (rows, superseded) = plan(KeyedWrite(st, typed, stored, target,
+          spec, alignTo(deduped, target).observe(obs, count(lit(1)).as("n"))))
+        val res = commitFiles(spark, st, rows, partitionCols, superseded,
+          typed.parts, dropEmptied = false, cts)
+        (MergeStats(obs.get("n").asInstanceOf[Long],
+          keys.parts.map(renderPartition)), Some(res))
+      }
     } finally if (owned) batch.unpersist()
   }
 
@@ -1136,9 +1127,8 @@ object Merge {
       keyCols: Seq[String],
       precombine: String,
       partitionCols: Seq[String],
-      cts: Option[Long],
-      ordered: Boolean): (MergeStats, Option[CommitResult]) =
-    keyedWrite(spark, batch, path, keyCols, precombine, partitionCols, cts,
+      ordered: Boolean): Long =
+    keyedWrite(spark, batch, path, keyCols, precombine, partitionCols,
         "upsert") { w =>
       val matched = matchedFiles(spark, w.st, w.stored, w.spec, w.keys)
       val merged =
@@ -1176,14 +1166,14 @@ object Merge {
   /** Metadata-only adoption of an existing PLAIN parquet layout into
     * the commit timeline — Hudi's METADATA_ONLY bootstrap: not one data
     * byte is rewritten; the adoption commit simply records every
-    * current data file as added, so versioned upserts/deletes, time
+    * current data file as added, so upserts/deletes, time
     * travel back to the adoption point, CDC and the incremental
     * streams all work from here on. The one-time cost is a single
     * column-pruned count (the timeline's n_rows), deliberate: adoption
     * happens once per table. The partitions come from the listing.
     *
     * Bootstrapped rows carry NO `_commit_ts` stamp (their files predate
-    * the timeline; after the first versioned write the column appears
+    * the timeline; after the next write the column appears
     * and they read back null) — so incremental pulls exclude them, the
     * honest semantics for rows that predate the timeline: a consumer
     * starting from 0 sees every post-adoption change, and a snapshot
@@ -1221,14 +1211,19 @@ object Merge {
     * listing, the property that makes reprocessing a bad day's
     * partition cheap at 100 TB). Untouched partitions are untouched
     * files. Same staged commit + additive-evolution contract as
-    * [[upsert]]. */
+    * [[upsert]]: the replaced partitions' files retire to
+    * `_graft_history/`, so time travel, [[restoreTo]], [[readChanges]]
+    * and the incremental/CDC streams all compose with backfills — a
+    * partition replace surfaces in CDC as exactly its row-level effect
+    * (kept keys update, vanished keys delete, new keys insert). Returns
+    * the commit id (0 for an empty batch). */
   def insertOverwrite(
       spark: SparkSession,
       batch: DataFrame,
       path: String,
       keyCols: Seq[String],
       precombine: String,
-      partitionCol: String): Unit =
+      partitionCol: String): Long =
     insertOverwrite(spark, batch, path, keyCols, precombine,
       Seq(partitionCol))
 
@@ -1239,38 +1234,8 @@ object Merge {
       path: String,
       keyCols: Seq[String],
       precombine: String,
-      partitionCols: Seq[String]): Unit = {
-    insertOverwriteImpl(spark, batch, path, keyCols, precombine,
-      partitionCols, cts = None)
-    ()
-  }
-
-  /** [[insertOverwrite]] as a recorded timeline commit: the replaced
-    * partitions' files retire to `_graft_history/`, so time travel,
-    * [[restoreTo]], [[readChanges]] and the incremental/CDC streams all
-    * compose with backfills — a partition replace surfaces in CDC as
-    * exactly its row-level effect (kept keys update, vanished keys
-    * delete, new keys insert). Returns the commit id. */
-  def insertOverwriteVersioned(
-      spark: SparkSession,
-      batch: DataFrame,
-      path: String,
-      keyCols: Seq[String],
-      precombine: String,
       partitionCols: Seq[String]): Long =
-    versioned(spark, path)(cts => insertOverwriteImpl(spark,
-      batch.withColumn(commitCol, lit(cts)), path, keyCols, precombine,
-      partitionCols, Some(cts)))
-
-  private def insertOverwriteImpl(
-      spark: SparkSession,
-      batch: DataFrame,
-      path: String,
-      keyCols: Seq[String],
-      precombine: String,
-      partitionCols: Seq[String],
-      cts: Option[Long]): (MergeStats, Option[CommitResult]) =
-    keyedWrite(spark, batch, path, keyCols, precombine, partitionCols, cts,
+    keyedWrite(spark, batch, path, keyCols, precombine, partitionCols,
         "insertOverwrite") { w =>
       // EVERY data file in a touched partition is superseded — this is
       // a metadata listing, not a scan
@@ -1279,13 +1244,21 @@ object Merge {
     }
 
   /** O3: delete by key — file-group rewrite of only the parquet files
-    * that contain a matched key; emptied partition dirs are dropped. */
+    * that contain a matched key; emptied partition dirs are dropped.
+    * A timeline event like every write: the commit metadata names the
+    * files it rewrote or removed, and the retired originals move into
+    * `_graft_history/`, so [[readAsOf]] can see through it and
+    * [[rollback]] can reverse a crashed one. A delete commit owns no
+    * rows: `n_rows` is 0 in the timeline and no incremental pull ever
+    * returns it — deleted rows simply stop appearing, Hudi's COW
+    * caveat. Returns the commit id, or 0 when there is nothing to
+    * delete from or no key to delete (no id claimed). */
   def delete(
       spark: SparkSession,
       keys: DataFrame,
       path: String,
       keyCols: Seq[String],
-      partitionCol: String): Unit =
+      partitionCol: String): Long =
     delete(spark, keys, path, keyCols, Seq(partitionCol))
 
   /** [[delete]] over a multi-level (hive-nested) partition layout. */
@@ -1294,26 +1267,15 @@ object Merge {
       keys: DataFrame,
       path: String,
       keyCols: Seq[String],
-      partitionCols: Seq[String]): Unit = {
-    deleteImpl(spark, keys, path, keyCols, partitionCols, cts = None)
-    voidHistory(spark, path)
-  }
-
-  private def deleteImpl(
-      spark: SparkSession,
-      keys: DataFrame,
-      path: String,
-      keyCols: Seq[String],
-      partitionCols: Seq[String],
-      cts: Option[Long]): (MergeStats, Option[CommitResult]) = {
+      partitionCols: Seq[String]): Long = {
     val loaded = TableState.load(spark, path)
-    if (!loaded.hasData) return (MergeStats(0L, Nil), None)
+    if (!loaded.hasData) return 0L
     // key scope includes the partition path (Hudi ComplexKeyGenerator
     // semantics): a delete key only removes rows in ITS partition, never
     // a same-keyed row in another touched partition
     val spec = KeySpec(keyCols, partitionCols)
     val collected = batchKeys(keys, spec)
-    if (collected.rows.isEmpty) return (MergeStats(0L, Nil), None)
+    if (collected.rows.isEmpty) return 0L
     val rendered = collected.parts.map(renderPartition)
     // same index-pruned candidate discovery as upsert (delete keys
     // are partition-scoped, i.e. exactly the indexed scoped key)
@@ -1321,13 +1283,15 @@ object Merge {
     val stored = storedSchema(spark, st, partitionCols)
     val typed = collected.typed(stored)
     val matched = matchedFiles(spark, st, stored, spec, typed)
-    if (matched.isEmpty) return (MergeStats(0L, rendered), None)
-    val remaining = readFiles(spark, st, stored, matched).filter(!typed.in)
-    val res = commitFiles(spark, st, remaining, partitionCols,
-      matched, typed.parts, dropEmptied = true, cts)
     // a delete commit WRITES no rows (n_rows 0 in the timeline); its
     // effect is rows vanishing from every later read
-    (MergeStats(0L, rendered), Some(res))
+    versioned(spark, path) { cts =>
+      (MergeStats(0L, rendered),
+        if (matched.isEmpty) None
+        else Some(commitFiles(spark, st,
+          readFiles(spark, st, stored, matched).filter(!typed.in),
+          partitionCols, matched, typed.parts, dropEmptied = true, cts)))
+    }
   }
 
   /** Small-file compaction — the Hudi clustering analogue, and the
@@ -1338,45 +1302,31 @@ object Merge {
     * files than their bytes justify (`> ceil(bytes/targetFileBytes)`)
     * are rewritten into target-sized files, range-laid-out on
     * (partition, key) so keys cluster — which is what keeps the upsert
-    * key scan's parquet min/max pruning effective afterwards. Rows pass
-    * through untouched (including `_commit_ts` stamps — incremental
-    * pulls are compaction-invariant), partitions already compact are not
-    * read at all, and the rewrite goes through the same staged durable
-    * commit as upsert/delete. Returns the number of files compacted
-    * away (0 = nothing to do). */
+    * key scan's parquet min/max pruning effective afterwards. Partitions
+    * already compact are not read at all.
+    *
+    * Compaction is a table SERVICE on the timeline (Hudi's
+    * compaction/clustering are timeline actions for the same reason).
+    * The rewrite preserves every row's `_commit_ts` stamp, so the
+    * commit owns NO rows: incremental pulls re-emit nothing, the CDC
+    * stream classifies zero changes for it (every pre-image survives
+    * into the post set with its old stamp), and [[diffSnapshots]]
+    * across it is empty — while [[readAsOf]] before the compaction
+    * still reconstructs the old small-file state from
+    * `_graft_history/`, and [[rollback]]/[[restoreTo]] reverse it
+    * mechanically like any other commit. Returns the number of small
+    * files replaced (0 = nothing to do, no commit claimed). */
   def compact(
       spark: SparkSession,
       path: String,
-      partitionCol: String,
+      partitionCols: Seq[String],
       keyCols: Seq[String] = Nil,
       targetFileBytes: Long = 128L * 1024 * 1024,
-      maxFiles: Int = 1 << 20): Long =
-    compact(spark, path, Seq(partitionCol), keyCols, targetFileBytes, maxFiles)
-
-  /** [[compact]] over a multi-level (hive-nested) partition layout. */
-  def compact(
-      spark: SparkSession,
-      path: String,
-      partitionCols: Seq[String],
-      keyCols: Seq[String],
-      targetFileBytes: Long,
-      maxFiles: Int): Long =
-    compactImpl(spark, path, partitionCols, keyCols, targetFileBytes,
-      maxFiles, recorded = false)
-
-  private def compactImpl(
-      spark: SparkSession,
-      path: String,
-      partitionCols: Seq[String],
-      keyCols: Seq[String],
-      targetFileBytes: Long,
-      maxFiles: Int,
-      recorded: Boolean): Long = {
+      maxFiles: Int = 1 << 20): Long = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
     require(maxFiles >= 1, "maxFiles must be >= 1")
     val st = TableState.load(spark, path)
     if (!st.hasData) return 0L
-    if (recorded) requireStamped(st, "compact")
     val (files, totalBytes) =
       compactionCandidates(st.fs, path, partitionCols, targetFileBytes)
     if (files.isEmpty) return 0L
@@ -1388,56 +1338,41 @@ object Merge {
       .toInt
     val layout = (partitionCols.map(col) ++ keyCols.map(col)).toIndexedSeq
     commitRewrite(spark, st, partitionCols,
-      rows.repartitionByRange(nFiles, layout: _*), files, recorded)
+      rows.repartitionByRange(nFiles, layout: _*), files)
   }
 
-  /** The versioned table services preserve history, so the table must
-    * have some: a recorded schema carrying the stamp column. */
-  private def requireStamped(st: TableState, plain: String): Unit =
-    require(st.schema.exists(_.fieldNames.contains(commitCol)),
-      s"${st.path} carries no $commitCol stamps (no versioned write yet) " +
-        s"— there is no history to preserve; use $plain")
-
   /** Shared tail of every layout rewrite (compaction / clustering):
-    * stage + publish the rewritten rows superseding `files`, then run
-    * index maintenance. Versioned rewrites land as recorded service
-    * commits (stats say 0 rows — bytes moved, not state) with their
-    * retired originals preserved in `_graft_history/`; unversioned
-    * ones void history, because an unrecorded rewrite makes older
-    * snapshots unreconstructable and the floor must say so.
+    * stage + publish the rewritten rows superseding `files` as a
+    * recorded service commit (stats say 0 rows — bytes moved, not
+    * state) with the retired originals preserved in `_graft_history/`,
+    * then run index maintenance.
     *
     * A rewrite is ALSO the key index's maintenance moment: the
-    * per-commit entry log folds into one snapshot, and files from
-    * plain inserts that predated the index get indexed by riding
-    * through commitFiles. */
+    * per-commit entry log folds into one snapshot, and files that
+    * predate the index get indexed by riding through commitFiles. */
   private def commitRewrite(
       spark: SparkSession,
       st: TableState,
       partitionCols: Seq[String],
       rewritten: DataFrame,
-      files: IndexedSeq[String],
-      recorded: Boolean): Long = {
+      files: IndexedSeq[String]): Long = {
     val path = st.path
-    if (recorded) versioned(spark, path) { cts =>
+    versioned(spark, path) { cts =>
       (MergeStats(0L, Nil), Some(commitFiles(spark, st, rewritten,
-        partitionCols, files, touched = Nil, dropEmptied = false, Some(cts))))
+        partitionCols, files, touched = Nil, dropEmptied = false, cts)))
     }
-    else commitFiles(spark, st, rewritten, partitionCols, files,
-      touched = Nil, dropEmptied = false)
     try KeyIndex.compactIndex(spark, path)
     catch {
       case e: Exception => System.err.println(
         s"[graft.merge] WARN: key-index fold failed at $path " +
           s"(${e.getMessage}); the entry log keeps working, just longer")
     }
-    if (!recorded) voidHistory(spark, path)
     files.length.toLong
   }
 
-  /** Small-file candidate selection shared by [[compact]] and
-    * [[compactVersioned]]: every leaf partition holding more files
-    * than its byte size justifies contributes all of them. A metadata
-    * listing — no data is read. */
+  /** Small-file candidate selection for [[compact]]: every leaf
+    * partition holding more files than its byte size justifies
+    * contributes all of them. A metadata listing — no data is read. */
   private def compactionCandidates(fs: FileSystem, path: String,
       partitionCols: Seq[String], targetFileBytes: Long)
       : (IndexedSeq[String], Long) = {
@@ -1463,33 +1398,6 @@ object Merge {
       candidates.map(_._2).sum)
   }
 
-  /** [[compact]] recorded on the commit timeline — compaction as a
-    * table SERVICE instead of a history-voiding mutation (Hudi's
-    * compaction/clustering are timeline actions for the same reason).
-    * The rewrite preserves every row's `_commit_ts` stamp, so the
-    * commit owns NO rows: incremental pulls re-emit nothing, the CDC
-    * stream classifies zero changes for it (every pre-image survives
-    * into the post set with its old stamp), and [[diffSnapshots]]
-    * across it is empty — while [[readAsOf]] before the compaction
-    * still reconstructs the old small-file state from
-    * `_graft_history/`, and [[rollback]]/[[restoreTo]] reverse it
-    * mechanically like any other commit.
-    *
-    * Requires a table whose recorded schema carries the stamp column
-    * (at least one versioned write) — on a plain table there is no
-    * history to preserve and [[compact]] is the right (cheaper) tool.
-    * Returns the number of small files replaced (0 = nothing to do,
-    * no commit claimed). */
-  def compactVersioned(
-      spark: SparkSession,
-      path: String,
-      partitionCols: Seq[String],
-      keyCols: Seq[String] = Nil,
-      targetFileBytes: Long = 128L * 1024 * 1024,
-      maxFiles: Int = 1 << 20): Long =
-    compactImpl(spark, path, partitionCols, keyCols, targetFileBytes,
-      maxFiles, recorded = true)
-
   /** Z-order clustering — the multi-column analogue of [[compact]]'s
     * linear key layout, and the clustering table service Hudi shipped
     * in exactly the release the reference pins (`hudi-spark3-bundle
@@ -1507,57 +1415,29 @@ object Merge {
     * from its observed min/max, both derived IN-PLAN (a broadcast
     * one-row aggregate, like the tf-idf corpus count) — the whole
     * service is one staged-commit job, no separate stats action. Rows,
-    * including `_commit_ts` stamps, pass through untouched (incremental
-    * pulls are clustering-invariant, same contract as compact).
-    * Numeric zCols only — hash non-numeric columns to a number first
-    * (e.g. `xxhash64`); silent coercion of strings would z-order on
-    * dictionary ids the caller never sees. Nulls collapse to cell 0.
-    * Goes through the same durable staged commit as every other write;
-    * voids history like [[compact]] (use [[clusterZOrderVersioned]] on
-    * a versioned table). Returns the number of files rewritten. */
+    * including `_commit_ts` stamps, pass through untouched, so the
+    * commit has the same contract as [[compact]]: it owns no rows (no
+    * CDC, no incremental re-emission, empty [[diffSnapshots]]),
+    * pre-cluster snapshots stay reconstructable from `_graft_history/`,
+    * and rollback/restore reverse it mechanically — exactly Hudi 0.10's
+    * clustering-as-timeline-action. Numeric zCols only — hash
+    * non-numeric columns to a number first (e.g. `xxhash64`); silent
+    * coercion of strings would z-order on dictionary ids the caller
+    * never sees. Nulls collapse to cell 0. Returns the number of files
+    * rewritten. */
   def clusterZOrder(
       spark: SparkSession,
       path: String,
       partitionCols: Seq[String],
       zCols: Seq[String],
       targetFileBytes: Long = 128L * 1024 * 1024,
-      maxFiles: Int = 1 << 20): Long =
-    clusterZOrderImpl(spark, path, partitionCols, zCols, targetFileBytes,
-      maxFiles, recorded = false)
-
-  /** [[clusterZOrder]] recorded on the commit timeline — clustering as
-    * a table service with the same contract as [[compactVersioned]]:
-    * stamps pass through untouched so the commit owns no rows (no CDC,
-    * no incremental re-emission, empty [[diffSnapshots]]), pre-cluster
-    * snapshots stay reconstructable from `_graft_history/`, and
-    * rollback/restore reverse it mechanically — exactly Hudi 0.10's
-    * clustering-as-timeline-action. Requires at least one versioned
-    * write, as for [[compactVersioned]]. */
-  def clusterZOrderVersioned(
-      spark: SparkSession,
-      path: String,
-      partitionCols: Seq[String],
-      zCols: Seq[String],
-      targetFileBytes: Long = 128L * 1024 * 1024,
-      maxFiles: Int = 1 << 20): Long =
-    clusterZOrderImpl(spark, path, partitionCols, zCols, targetFileBytes,
-      maxFiles, recorded = true)
-
-  private def clusterZOrderImpl(
-      spark: SparkSession,
-      path: String,
-      partitionCols: Seq[String],
-      zCols: Seq[String],
-      targetFileBytes: Long,
-      maxFiles: Int,
-      recorded: Boolean): Long = {
+      maxFiles: Int = 1 << 20): Long = {
     require(zCols.size >= 2,
       "z-order needs >= 2 columns (one column is a plain sort — use " +
         "compact's key layout for that)")
     require(targetFileBytes > 0, "targetFileBytes must be positive")
     require(maxFiles >= 1, "maxFiles must be >= 1")
     val st = TableState.load(spark, path)
-    if (recorded) requireStamped(st, "clusterZOrder")
     if (!st.hasData) return 0L
     val fs = st.fs
     val files = listDataFiles(fs, st.root).map(_.toString).toIndexedSeq
@@ -1590,7 +1470,7 @@ object Merge {
       .repartitionByRange(nFiles, layout: _*)
       .sortWithinPartitions(layout: _*)
       .select(rows.columns.toIndexedSeq.map(col): _*)
-    commitRewrite(spark, st, partitionCols, clustered, files, recorded)
+    commitRewrite(spark, st, partitionCols, clustered, files)
   }
 
   /** Remove leaked staging siblings — the table-sized recovery copies a
@@ -1635,7 +1515,7 @@ object Merge {
   private[merge] def jsonArray(xs: Seq[String]): String =
     xs.map(jsonQuote).mkString("[", ",", "]")
 
-  /** Mechanically reverse a crashed (inflight) versioned commit from
+  /** Mechanically reverse a crashed (inflight) commit from
     * the plan recorded in the marker's `.plan` sibling: un-publish the
     * files it added, restore the files it retired (from the
     * `_graft_rollback/<cts>/` copy the commit made before touching
@@ -1732,76 +1612,13 @@ object Merge {
     }
   }
 
-  /** O1 with a commit timeline: the batch is stamped with a fresh
-    * monotonic commit id before the upsert, so surviving stored rows
-    * keep the stamp of the commit that last wrote THEM (exactly Hudi's
-    * per-record `_hoodie_commit_time` semantics under
-    * OverwriteWithLatestAvroPayload). The commit is recorded in the
-    * timeline metadata only after the data commit succeeds — the
-    * timeline lists durable commits. Returns the commit id.
-    *
-    * A first versioned upsert onto a table built by plain upsert is an
-    * additive evolution: pre-existing rows carry a NULL stamp ("before
-    * the timeline") and never match an incremental pull. */
-  def upsertVersioned(
-      spark: SparkSession,
-      batch: DataFrame,
-      path: String,
-      keyCols: Seq[String],
-      precombine: String,
-      partitionCol: String): Long =
-    upsertVersioned(spark, batch, path, keyCols, precombine,
-      Seq(partitionCol))
-
-  /** [[upsertVersioned]] over a multi-level partition layout. */
-  def upsertVersioned(
-      spark: SparkSession,
-      batch: DataFrame,
-      path: String,
-      keyCols: Seq[String],
-      precombine: String,
-      partitionCols: Seq[String]): Long =
-    versioned(spark, path)(cts => upsertImpl(spark,
-      batch.withColumn(commitCol, lit(cts)), path, keyCols, precombine,
-      partitionCols, Some(cts), ordered = false))
-
-  /** [[upsertVersioned]] with ordered-payload semantics (see
-    * [[upsertOrdered]]). */
-  def upsertOrderedVersioned(
-      spark: SparkSession,
-      batch: DataFrame,
-      path: String,
-      keyCols: Seq[String],
-      precombine: String,
-      partitionCols: Seq[String]): Long =
-    versioned(spark, path)(cts => upsertImpl(spark,
-      batch.withColumn(commitCol, lit(cts)), path, keyCols, precombine,
-      partitionCols, Some(cts), ordered = true))
-
-  /** Versioned delete — [[delete]] recorded as a timeline event: the
-    * commit metadata names the files it rewrote or removed, and the
-    * retired originals move into `_graft_history/`, so [[readAsOf]]
-    * can see through it and [[rollback]] can reverse a crashed one.
-    * (Plain [[delete]] stays timeline-silent — q22's contract — but
-    * voids time travel.) A delete commit owns no rows: `n_rows` is 0
-    * in the timeline and no incremental pull ever returns it —
-    * deleted rows simply stop appearing, Hudi's COW caveat. */
-  def deleteVersioned(
-      spark: SparkSession,
-      keys: DataFrame,
-      path: String,
-      keyCols: Seq[String],
-      partitionCols: Seq[String]): Long =
-    versioned(spark, path)(cts => deleteImpl(spark, keys, path, keyCols,
-      partitionCols, Some(cts)))
-
   /** The commit timeline as a DataFrame: one row per recorded commit —
     * (commit_ts, n_rows written, comma-joined sorted partition list).
     * Commit enumeration is what the reference's users get from Hudi's
     * timeline via Athena (`glue/interactive.sh:21-23`), beyond plain
-    * "since X" pulls. Deletes are not timeline events in this engine
-    * (they version no rows); their effect is visible as rows vanishing
-    * from every subsequent read. */
+    * "since X" pulls. Every write is one row; a delete's row says
+    * `n_rows` 0 (it versions no rows — its effect is rows vanishing
+    * from every subsequent read). */
   def commits(spark: SparkSession, path: String): DataFrame = {
     // RECORDED entries only: inflight markers, `.plan` siblings (which
     // carry a commit_ts and would surface as phantom rows), rolled-back
@@ -1881,16 +1698,17 @@ object Merge {
   // ---- time travel (Hudi `as.of.instant` analogue) ----
   // The reference pins hudi 0.10.0 (`glue/interactive.sh:12`), the
   // release that shipped time-travel queries. The engine's analogue:
-  // every versioned commit RETAINS the files it superseded under
+  // every commit RETAINS the files it superseded under
   // `_graft_history/<cts>/` (a rename of the crash-recovery copy the
   // commit already made — no extra bytes written), and the recorded
   // commit metadata already names exactly which table-relative files
   // each commit added and removed. Any past snapshot is then a pure
   // METADATA reconstruction: start from the current listing and replay
-  // the recorded commits backwards. Retention is bounded by [[clean]]
-  // (Hudi's cleaner); any unversioned mutation voids history (it moves
-  // files without recording them), so a stale snapshot can never be
-  // served silently wrong — [[readAsOf]] refuses instead.
+  // the recorded commits backwards. Every write is a recorded commit,
+  // so history stays whole until [[clean]] (Hudi's cleaner) bounds it:
+  // each commit's superseded files stay in `_graft_history/` until
+  // clean sweeps them, and below the floor clean raises [[readAsOf]]
+  // refuses rather than serve a snapshot it cannot rebuild.
 
   private def historyRoot(path: String) = new Path(path, "_graft_history")
 
@@ -1898,7 +1716,7 @@ object Merge {
     new Path(historyRoot(path), f"$cts%020d")
 
   /** Oldest valid `asOf` — monotonic; raised by [[clean]] (history
-    * swept past it) and by unversioned mutations (history void). */
+    * swept past it). */
   private def floorFile(path: String) = new Path(historyRoot(path), "_floor")
 
   /** The oldest commit id [[readAsOf]] can still serve (0 = the full
@@ -1917,7 +1735,7 @@ object Merge {
       replaceSmallFile(fs, floorFile(path), to.toString)
     }
 
-  /** Move a versioned commit's retired-file copy from the rollback
+  /** Move a commit's retired-file copy from the rollback
     * scratch into durable history (a rename — metadata-priced on
     * HDFS-like stores), then sweep the staging sibling. Pure-insert
     * commits retire nothing and leave no history dir. */
@@ -1934,29 +1752,6 @@ object Merge {
     staging.foreach(sweepCommitScratch(fs, _, None))
   }
 
-  /** Unversioned mutations (plain upsert/delete, insert, bulkInsert,
-    * compact, clusterZOrder) move or add files the timeline never
-    * records, so NO recorded commit — not even the newest — describes
-    * the table anymore. Void honestly: raise the floor PAST every
-    * issued id (time travel refuses entirely until the next versioned
-    * commit re-anchors the timeline) and drop the now-useless history
-    * dirs. No-op on tables with no timeline (nothing to void, no floor
-    * file written). */
-  private[merge] def voidHistory(spark: SparkSession, path: String): Unit = {
-    val fs = fsFor(spark, path)
-    val issued = Timeline.list(spark, path).issued
-    if (issued.isEmpty) return
-    raiseFloor(fs, path, issued.max + 1)
-    val root = historyRoot(path)
-    // savepoint markers go too: a pin below the voided floor would be a
-    // standing lie (the pinned snapshot is no longer reconstructable)
-    if (fs.exists(root)) fs.listStatus(root).foreach { st =>
-      if (st.isDirectory || st.getPath.getName.startsWith("_savepoint_"))
-        fs.delete(st.getPath, true)
-      ()
-    }
-  }
-
   private def savepointFile(path: String, cts: Long) =
     new Path(historyRoot(path), f"_savepoint_$cts%020d")
 
@@ -1964,9 +1759,7 @@ object Merge {
     * pin exists, clean never raises the history floor past `cts`, so
     * `readAsOf(cts)` / `restoreTo(cts)` stay serviceable however small
     * the retention window gets (the disaster-recovery anchor). Requires
-    * a recorded, still-travelable commit. Unversioned mutations still
-    * void pins along with the history they pinned — a savepoint
-    * guarantees retention, not immunity from unrecorded rewrites. */
+    * a recorded, still-travelable commit. */
   def savepoint(spark: SparkSession, path: String, cts: Long): Unit = {
     val fs = fsFor(spark, path)
     require(fs.exists(Timeline.recordFile(path, cts)),
@@ -2017,8 +1810,7 @@ object Merge {
     * schema the same way).
     *
     * Fails loudly — never serves a wrong snapshot — when `asOf`
-    * predates [[historyFloor]] (history cleaned past it, or voided by
-    * an unversioned mutation). */
+    * predates [[historyFloor]] (history cleaned past it). */
   def readAsOf(spark: SparkSession, path: String, asOf: Long): DataFrame = {
     val st = TableState.load(spark, path)
     require(st.mor.isEmpty,
@@ -2053,9 +1845,7 @@ object Merge {
     if (asOf < floor)
       throw new IllegalStateException(
         s"cannot time-travel to commit $asOf at $path: history floor is " +
-          s"$floor (older snapshots were cleaned, or voided by an " +
-          "unversioned mutation — plain upsert/delete/insert/compact/" +
-          "clusterZOrder do not record file movements)")
+          s"$floor (older snapshots were cleaned)")
   }
 
   /** The COW snapshot reconstruction (no MOR guard): ROOT-namespace
@@ -2140,8 +1930,8 @@ object Merge {
     * deletes and update pre-images carry the pre-change payload.
     *
     * Like [[readAsOf]], requires `afterTs >= historyFloor` and refuses
-    * rather than serving incomplete changes when history was cleaned or
-    * voided by an unversioned mutation. [[readSince]] stays the cheap
+    * rather than serving incomplete changes when history was cleaned.
+    * [[readSince]] stays the cheap
     * path when deletes and pre-images don't matter. */
   def readChanges(spark: SparkSession, path: String, afterTs: Long,
       untilTs: Long, keyCols: Seq[String]): DataFrame = {
@@ -2157,8 +1947,7 @@ object Merge {
     if (afterTs < floor)
       throw new IllegalStateException(
         s"cannot read changes after commit $afterTs at $path: history " +
-          s"floor is $floor (older pre-images were cleaned, or voided " +
-          "by an unversioned mutation — see readAsOf)")
+          s"floor is $floor (older pre-images were cleaned — see readAsOf)")
     val (fs, tableRoot) = (st.fs, st.root)
     val all = Timeline.records(spark, path, afterTs)
     val inRange = all.filter(_.cts <= untilTs)
@@ -2453,7 +2242,7 @@ object Merge {
       upsert(s, replayBatch(s, dir, 1, 50000), path, keyCols, "pre", "part")
       delete(s, replayBatch(s, dir, 0, 50000).filter(col("pre") % 3 === 0)
         .select("okey", "part"), path, keyCols, "part")
-      compact(s, path, "part", keyCols)
+      compact(s, path, Seq("part"), keyCols)
       readTable(s, path)
         .select("okey", "part", "price", "pre")
         .orderBy("part", "okey")
@@ -2481,7 +2270,7 @@ object Merge {
     // graft_clean('<path>', retain_last) procedure. Cleaning sweeps
     // only reconstruction history; the CURRENT state must be
     // untouched, so the key shares x26's batch-wins replay oracle.
-    // x47: the read-only integrity report over a healthy versioned
+    // x47: the read-only integrity report over a healthy
     // replay — every check row is pinned by the oracle, and the
     // footer_row_count detail is cross-checked against the RELATIONAL
     // count of the same replay (footer sum == count(*), the x40 law
@@ -2492,11 +2281,11 @@ object Merge {
     "x47_sql_fsck" -> ((s, dir) => {
       val path = scratchTable("graft_x47_")
       val keyCols = Seq("okey")
-      upsertVersioned(s, replayBatch(s, dir, 0, 50000), path, keyCols,
+      upsert(s, replayBatch(s, dir, 0, 50000), path, keyCols,
         "pre", "part")
-      upsertVersioned(s, replayBatch(s, dir, 1, 50000), path, keyCols,
+      upsert(s, replayBatch(s, dir, 1, 50000), path, keyCols,
         "pre", "part")
-      deleteVersioned(s, replayBatch(s, dir, 0, 50000)
+      delete(s, replayBatch(s, dir, 0, 50000)
         .filter(col("pre") % 3 === 0).select("okey", "part"),
         path, keyCols, Seq("part"))
       s.sql(s"SELECT * FROM graft_fsck('$path') ORDER BY check_name")
@@ -2504,9 +2293,9 @@ object Merge {
     "x35_sql_clean" -> ((s, dir) => {
       val path = scratchTable("graft_x35_")
       val keyCols = Seq("okey")
-      upsertVersioned(s, replayBatch(s, dir, 0), path, keyCols, "pre", "part")
-      upsertVersioned(s, replayBatch(s, dir, 1), path, keyCols, "pre", "part")
-      upsertVersioned(s, replayBatch(s, dir, 2), path, keyCols, "pre", "part")
+      upsert(s, replayBatch(s, dir, 0), path, keyCols, "pre", "part")
+      upsert(s, replayBatch(s, dir, 1), path, keyCols, "pre", "part")
+      upsert(s, replayBatch(s, dir, 2), path, keyCols, "pre", "part")
       s.sql(s"SELECT * FROM graft_clean('$path', 1)").collect()
       readTable(s, path)
         .select("okey", "part", "price", "pre")
@@ -2540,13 +2329,13 @@ object Merge {
     "x37_sql_restore" -> ((s, dir) => {
       val path = scratchTable("graft_x37_")
       val keyCols = Seq("okey")
-      upsertVersioned(s, replayBatch(s, dir, 0), path, keyCols, "pre", "part")
-      val c2 = upsertVersioned(s, replayBatch(s, dir, 1), path,
+      upsert(s, replayBatch(s, dir, 0), path, keyCols, "pre", "part")
+      val c2 = upsert(s, replayBatch(s, dir, 1), path,
         keyCols, "pre", "part")
-      deleteVersioned(s, replayBatch(s, dir, 0)
+      delete(s, replayBatch(s, dir, 0)
         .filter(col("pre") % 3 === 0).select("okey", "part"),
         path, keyCols, Seq("part"))
-      upsertVersioned(s, replayBatch(s, dir, 2), path, keyCols, "pre", "part")
+      upsert(s, replayBatch(s, dir, 2), path, keyCols, "pre", "part")
       s.sql(s"SELECT * FROM graft_savepoint('$path', $c2)").collect()
       s.sql(s"SELECT * FROM graft_clean('$path', 1)").collect()
       s.sql(s"SELECT * FROM graft_restore('$path', $c2)").collect()
@@ -2593,17 +2382,17 @@ object Merge {
     // registration — graft_snapshot('<path>', commit_ts), the
     // path-based complement of VERSION AS OF. Shares q25's oracle:
     // the as-of read must reconstruct the two-batch snapshot past the
-    // versioned delete and the third upsert.
+    // delete and the third upsert.
     "x39_sql_snapshot" -> ((s, dir) => {
       val path = scratchTable("graft_x39_")
       val keyCols = Seq("okey")
-      upsertVersioned(s, replayBatch(s, dir, 0), path, keyCols, "pre", "part")
-      val c2 = upsertVersioned(s, replayBatch(s, dir, 1), path,
+      upsert(s, replayBatch(s, dir, 0), path, keyCols, "pre", "part")
+      val c2 = upsert(s, replayBatch(s, dir, 1), path,
         keyCols, "pre", "part")
-      deleteVersioned(s, replayBatch(s, dir, 0)
+      delete(s, replayBatch(s, dir, 0)
         .filter(col("pre") % 3 === 0).select("okey", "part"),
         path, keyCols, Seq("part"))
-      upsertVersioned(s, replayBatch(s, dir, 2), path, keyCols, "pre", "part")
+      upsert(s, replayBatch(s, dir, 2), path, keyCols, "pre", "part")
       s.sql(
         s"""SELECT okey, part, price, pre
            |FROM graft_snapshot('$path', $c2)
@@ -2703,13 +2492,13 @@ object Merge {
       upsert(s, replayBatch(s, dir, 1), path, keyCols, "pre", "part")
       delete(s, replayBatch(s, dir, 0).filter(col("pre") % 3 === 0)
         .select("okey", "part"), path, keyCols, "part")
-      compact(s, path, "part", keyCols)
+      compact(s, path, Seq("part"), keyCols)
       upsert(s, replayBatch(s, dir, 2), path, keyCols, "pre", "part")
       readTable(s, path)
         .select("okey", "part", "price", "pre")
         .orderBy("part", "okey")
     }),
-    // x03: streaming incremental pull — three versioned upserts, then
+    // x03: streaming incremental pull — three upserts, then
     // the commit-record stream drained AvailableNow into a parquet
     // sink. Batch boundaries can't change the union (each micro-batch
     // pulls exactly the rows its commit ids own at read time), so the
@@ -2719,9 +2508,9 @@ object Merge {
     "x03_incremental_stream" -> ((s, dir) => {
       val path = scratchTable("graft_x03_")
       val keyCols = Seq("okey")
-      upsertVersioned(s, replayBatch(s, dir, 0), path, keyCols, "pre", "part")
-      upsertVersioned(s, replayBatch(s, dir, 1), path, keyCols, "pre", "part")
-      upsertVersioned(s, replayBatch(s, dir, 2), path, keyCols, "pre", "part")
+      upsert(s, replayBatch(s, dir, 0), path, keyCols, "pre", "part")
+      upsert(s, replayBatch(s, dir, 1), path, keyCols, "pre", "part")
+      upsert(s, replayBatch(s, dir, 2), path, keyCols, "pre", "part")
       val sink = scratchTable("graft_x03sink_")
       IncrementalStream.foreachIncrement(s, path,
         scratchTable("graft_x03ckpt_")) { (inc, _, _) =>
@@ -2732,7 +2521,7 @@ object Merge {
           col(commitCol).as("commit_ts"))
         .orderBy("part", "okey")
     }),
-    // q19: the commit timeline end-to-end — two versioned upserts, then
+    // q19: the commit timeline end-to-end — two upserts, then
     // an incremental pull since commit 1. The pull must return exactly
     // the rows OWNED by commit 2 (batch-2 winners), and none of the
     // batch-1 survivors whose keys batch 2 never touched — that
@@ -2740,9 +2529,9 @@ object Merge {
     "q19_incremental_pull" -> ((s, dir) => {
       val path = scratchTable("graft_q19_")
       val keyCols = Seq("okey")
-      val c1 = upsertVersioned(s, replayBatch(s, dir, 0), path,
+      val c1 = upsert(s, replayBatch(s, dir, 0), path,
         keyCols, "pre", "part")
-      upsertVersioned(s, replayBatch(s, dir, 1), path,
+      upsert(s, replayBatch(s, dir, 1), path,
         keyCols, "pre", "part")
       readSince(s, path, c1)
         .select(col("okey"), col("part"), col("price"), col("pre"),
@@ -2753,19 +2542,20 @@ object Merge {
     // sequence — a delete that removes EVERY row stamped with the
     // latest commit. A data-derived next-commit would reuse id 2 and an
     // incremental consumer would silently miss the reused commit; the
-    // metadata timeline must keep issuing 3. Output = the commits()
-    // enumeration itself, relationally recomputed by the oracle.
+    // metadata timeline issues 3 to the delete and 4 to the upsert
+    // after it. Output = the commits() enumeration itself, relationally
+    // recomputed by the oracle.
     "q22_timeline" -> ((s, dir) => {
       val path = scratchTable("graft_q22_")
       val keyCols = Seq("okey")
-      val c1 = upsertVersioned(s, replayBatch(s, dir, 0), path,
+      val c1 = upsert(s, replayBatch(s, dir, 0), path,
         keyCols, "pre", "part")
-      upsertVersioned(s, replayBatch(s, dir, 1), path,
+      upsert(s, replayBatch(s, dir, 1), path,
         keyCols, "pre", "part")
       // drop every surviving commit-2 row, then commit again
       delete(s, readSince(s, path, c1).select("okey", "part"),
         path, keyCols, "part")
-      upsertVersioned(s, replayBatch(s, dir, 2), path,
+      upsert(s, replayBatch(s, dir, 2), path,
         keyCols, "pre", "part")
       commits(s, path).orderBy("commit_ts")
     }),
@@ -2788,7 +2578,7 @@ object Merge {
         .select("okey", "part", "price", "pre")
         .orderBy("part", "okey", "pre")
     }),
-    // x26: the CLEANER exercised end-to-end — three versioned upserts,
+    // x26: the CLEANER exercised end-to-end — three upserts,
     // then clean(retainLast = 1) sweeps the older commits' history.
     // Contract under oracle: cleaning reclaims HISTORY bytes only; the
     // current state must be bit-identical to the uncleaned replay (the
@@ -2807,7 +2597,7 @@ object Merge {
       val rules = Seq(
         Expectation("price_nonneg", col("price") >= 0),
         Expectation("key_present", col("okey").isNotNull))
-      upsertVersioned(s, replayBatch(s, dir, 0), path, keyCols, "pre", "part")
+      upsert(s, replayBatch(s, dir, 0), path, keyCols, "pre", "part")
       val r1 = Wap.writeAuditPublish(s, replayBatch(s, dir, 1), path,
         keyCols, "pre", Seq("part"), rules)
       require(r1.published, "clean batch 1 must publish")
@@ -2826,9 +2616,9 @@ object Merge {
     "x26_clean_retention" -> ((s, dir) => {
       val path = scratchTable("graft_x26_")
       val keyCols = Seq("okey")
-      upsertVersioned(s, replayBatch(s, dir, 0), path, keyCols, "pre", "part")
-      upsertVersioned(s, replayBatch(s, dir, 1), path, keyCols, "pre", "part")
-      upsertVersioned(s, replayBatch(s, dir, 2), path, keyCols, "pre", "part")
+      upsert(s, replayBatch(s, dir, 0), path, keyCols, "pre", "part")
+      upsert(s, replayBatch(s, dir, 1), path, keyCols, "pre", "part")
+      upsert(s, replayBatch(s, dir, 2), path, keyCols, "pre", "part")
       clean(s, path, retainLast = 1)
       readTable(s, path)
         .select("okey", "part", "price", "pre")
@@ -2837,19 +2627,19 @@ object Merge {
     "x24_sql_commits" -> ((s, dir) => {
       val path = scratchTable("graft_x24_")
       val keyCols = Seq("okey")
-      val c1 = upsertVersioned(s, replayBatch(s, dir, 0), path,
+      val c1 = upsert(s, replayBatch(s, dir, 0), path,
         keyCols, "pre", "part")
-      upsertVersioned(s, replayBatch(s, dir, 1), path,
+      upsert(s, replayBatch(s, dir, 1), path,
         keyCols, "pre", "part")
       delete(s, readSince(s, path, c1).select("okey", "part"),
         path, keyCols, "part")
-      upsertVersioned(s, replayBatch(s, dir, 2), path,
+      upsert(s, replayBatch(s, dir, 2), path,
         keyCols, "pre", "part")
       s.sql(
         s"SELECT * FROM graft_commits('$path') ORDER BY commit_ts")
     }),
     // q25: time travel — the q18-style replay taken two commits PAST
-    // the as-of point (a versioned delete, then a third upsert), then
+    // the as-of point (a delete, then a third upsert), then
     // read back as of commit 2. The reconstruction must restore the
     // delete's victims from history AND drop commit 4's rewrites in
     // favor of their retired predecessors; the oracle recomputes the
@@ -2858,13 +2648,13 @@ object Merge {
     "q25_time_travel" -> ((s, dir) => {
       val path = scratchTable("graft_q25_")
       val keyCols = Seq("okey")
-      upsertVersioned(s, replayBatch(s, dir, 0), path, keyCols, "pre", "part")
-      val c2 = upsertVersioned(s, replayBatch(s, dir, 1), path,
+      upsert(s, replayBatch(s, dir, 0), path, keyCols, "pre", "part")
+      val c2 = upsert(s, replayBatch(s, dir, 1), path,
         keyCols, "pre", "part")
-      deleteVersioned(s, replayBatch(s, dir, 0)
+      delete(s, replayBatch(s, dir, 0)
         .filter(col("pre") % 3 === 0).select("okey", "part"),
         path, keyCols, Seq("part"))
-      upsertVersioned(s, replayBatch(s, dir, 2), path, keyCols, "pre", "part")
+      upsert(s, replayBatch(s, dir, 2), path, keyCols, "pre", "part")
       readAsOf(s, path, c2)
         .select("okey", "part", "price", "pre")
         .orderBy("part", "okey")
@@ -2877,20 +2667,20 @@ object Merge {
     "q26_restore" -> ((s, dir) => {
       val path = scratchTable("graft_q26_")
       val keyCols = Seq("okey")
-      upsertVersioned(s, replayBatch(s, dir, 0), path, keyCols, "pre", "part")
-      val c2 = upsertVersioned(s, replayBatch(s, dir, 1), path,
+      upsert(s, replayBatch(s, dir, 0), path, keyCols, "pre", "part")
+      val c2 = upsert(s, replayBatch(s, dir, 1), path,
         keyCols, "pre", "part")
-      deleteVersioned(s, replayBatch(s, dir, 0)
+      delete(s, replayBatch(s, dir, 0)
         .filter(col("pre") % 3 === 0).select("okey", "part"),
         path, keyCols, Seq("part"))
-      upsertVersioned(s, replayBatch(s, dir, 2), path, keyCols, "pre", "part")
+      upsert(s, replayBatch(s, dir, 2), path, keyCols, "pre", "part")
       restoreTo(s, path, c2)
       readTable(s, path)
         .select("okey", "part", "price", "pre")
         .orderBy("part", "okey")
     }),
     // x07: CDC replication — the q29 3-commit source (two upserts + a
-    // versioned delete) replicated into a SECOND table purely from the
+    // delete) replicated into a SECOND table purely from the
     // change stream. The replica's plain read must equal the q18
     // replay algebra (the source's final state) however the commit
     // stream batched the changes — the proof that the CDC feed carries
@@ -2904,11 +2694,11 @@ object Merge {
     "x13_feature_view" -> ((s, dir) => {
       val path = scratchTable("graft_x13src_")
       val keyCols = Seq("okey")
-      upsertVersioned(s, replayBatch(s, dir, 0, 50000), path, keyCols,
+      upsert(s, replayBatch(s, dir, 0, 50000), path, keyCols,
         "pre", "part")
-      upsertVersioned(s, replayBatch(s, dir, 1, 50000), path, keyCols,
+      upsert(s, replayBatch(s, dir, 1, 50000), path, keyCols,
         "pre", "part")
-      deleteVersioned(s, replayBatch(s, dir, 0, 50000)
+      delete(s, replayBatch(s, dir, 0, 50000)
         .filter(col("pre") % 3 === 0).select("okey", "part"),
         path, keyCols, Seq("part"))
       val dst = scratchTable("graft_x13dst_")
@@ -2924,9 +2714,9 @@ object Merge {
     "x07_cdc_replica" -> ((s, dir) => {
       val path = scratchTable("graft_x07src_")
       val keyCols = Seq("okey")
-      upsertVersioned(s, replayBatch(s, dir, 0), path, keyCols, "pre", "part")
-      upsertVersioned(s, replayBatch(s, dir, 1), path, keyCols, "pre", "part")
-      deleteVersioned(s, replayBatch(s, dir, 0)
+      upsert(s, replayBatch(s, dir, 0), path, keyCols, "pre", "part")
+      upsert(s, replayBatch(s, dir, 1), path, keyCols, "pre", "part")
+      delete(s, replayBatch(s, dir, 0)
         .filter(col("pre") % 3 === 0).select("okey", "part"),
         path, keyCols, Seq("part"))
       val dst = scratchTable("graft_x07dst_")
@@ -2942,11 +2732,11 @@ object Merge {
     "x07w_cdc_replica_wide" -> ((s, dir) => {
       val path = scratchTable("graft_x07wsrc_")
       val keyCols = Seq("okey")
-      upsertVersioned(s, replayBatch(s, dir, 0, 50000), path,
+      upsert(s, replayBatch(s, dir, 0, 50000), path,
         keyCols, "pre", "part")
-      upsertVersioned(s, replayBatch(s, dir, 1, 50000), path,
+      upsert(s, replayBatch(s, dir, 1, 50000), path,
         keyCols, "pre", "part")
-      deleteVersioned(s, replayBatch(s, dir, 0, 50000)
+      delete(s, replayBatch(s, dir, 0, 50000)
         .filter(col("pre") % 3 === 0).select("okey", "part"),
         path, keyCols, Seq("part"))
       val dst = scratchTable("graft_x07wdst_")
@@ -2967,7 +2757,7 @@ object Merge {
       val keyCols = Seq("okey")
       replayBatch(s, dir, 0).write.partitionBy("part").parquet(path)
       bootstrap(s, path, Seq("part"))
-      upsertVersioned(s, replayBatch(s, dir, 1), path, keyCols, "pre", "part")
+      upsert(s, replayBatch(s, dir, 1), path, keyCols, "pre", "part")
       readTable(s, path)
         .select("okey", "part", "price", "pre")
         .orderBy("part", "okey", "pre")
@@ -2980,9 +2770,9 @@ object Merge {
     "q30_insert_overwrite" -> ((s, dir) => {
       val path = scratchTable("graft_q30_")
       val keyCols = Seq("okey")
-      upsertVersioned(s, replayBatch(s, dir, 0), path, keyCols, "pre", "part")
-      upsertVersioned(s, replayBatch(s, dir, 1), path, keyCols, "pre", "part")
-      insertOverwriteVersioned(s,
+      upsert(s, replayBatch(s, dir, 0), path, keyCols, "pre", "part")
+      upsert(s, replayBatch(s, dir, 1), path, keyCols, "pre", "part")
+      insertOverwrite(s,
         replayBatch(s, dir, 2).filter(col("part") === "F"),
         path, keyCols, "pre", Seq("part"))
       readTable(s, path)
@@ -2999,9 +2789,9 @@ object Merge {
     "x06_stream_cdc" -> ((s, dir) => {
       val path = scratchTable("graft_x06_")
       val keyCols = Seq("okey")
-      upsertVersioned(s, replayBatch(s, dir, 0), path, keyCols, "pre", "part")
-      upsertVersioned(s, replayBatch(s, dir, 1), path, keyCols, "pre", "part")
-      deleteVersioned(s, replayBatch(s, dir, 0)
+      upsert(s, replayBatch(s, dir, 0), path, keyCols, "pre", "part")
+      upsert(s, replayBatch(s, dir, 1), path, keyCols, "pre", "part")
+      delete(s, replayBatch(s, dir, 0)
         .filter(col("pre") % 3 === 0).select("okey", "part"),
         path, keyCols, Seq("part"))
       val sink = scratchTable("graft_x06sink_")
@@ -3015,18 +2805,18 @@ object Merge {
     // q29: change-data-capture — the three-commit replay read back as
     // row-level changes in (c1, c3]: batch 2's upserts split into
     // inserts vs update pre/post-image pairs against the batch-1
-    // state, and the versioned delete's victims emitted with their
+    // state, and the delete's victims emitted with their
     // pre-change payload. The oracle recomputes every change class
     // relationally from the same batch algebra; nothing engine-side
     // may leak a carried-over row as a change.
     "q29_cdc" -> ((s, dir) => {
       val path = scratchTable("graft_q29_")
       val keyCols = Seq("okey")
-      val c1 = upsertVersioned(s, replayBatch(s, dir, 0), path,
+      val c1 = upsert(s, replayBatch(s, dir, 0), path,
         keyCols, "pre", "part")
-      upsertVersioned(s, replayBatch(s, dir, 1), path,
+      upsert(s, replayBatch(s, dir, 1), path,
         keyCols, "pre", "part")
-      val c3 = deleteVersioned(s, replayBatch(s, dir, 0)
+      val c3 = delete(s, replayBatch(s, dir, 0)
         .filter(col("pre") % 3 === 0).select("okey", "part"),
         path, keyCols, Seq("part"))
       readChanges(s, path, c1, c3, Seq("okey", "part"))
@@ -3045,13 +2835,13 @@ object Merge {
       val vw = scratchTable("graft_x08v_")
       def b(i: Int): DataFrame = replayBatch(s, dir, i, 50000)
         .withColumn("bucket", col("okey") % 10)
-      upsertVersioned(s, b(0), src, Seq("okey"), "pre", "part")
+      upsert(s, b(0), src, Seq("okey"), "pre", "part")
       IncrementalView.create(s, src, vw, srcKeys = Seq("okey", "part"),
         groupCols = Seq("part", "bucket"), sumCol = "price",
         partitionCol = "part")
-      upsertVersioned(s, b(1), src, Seq("okey"), "pre", "part")
+      upsert(s, b(1), src, Seq("okey"), "pre", "part")
       IncrementalView.refresh(s, vw)
-      deleteVersioned(s, b(0).filter(col("pre") % 3 === 0)
+      delete(s, b(0).filter(col("pre") % 3 === 0)
         .select("okey", "part"), src, Seq("okey"), Seq("part"))
       IncrementalView.refresh(s, vw)
       IncrementalView.readView(s, vw)
@@ -3070,13 +2860,13 @@ object Merge {
       val vw = scratchTable("graft_x48v_")
       def b(i: Int): DataFrame = replayBatch(s, dir, i, 50000)
         .withColumn("bucket", col("okey") % 10)
-      upsertVersioned(s, b(0), src, Seq("okey"), "pre", "part")
+      upsert(s, b(0), src, Seq("okey"), "pre", "part")
       IncrementalView.create(s, src, vw, srcKeys = Seq("okey", "part"),
         groupCols = Seq("part", "bucket"), sumCol = "price",
         partitionCol = "part")
-      upsertVersioned(s, b(1), src, Seq("okey"), "pre", "part")
+      upsert(s, b(1), src, Seq("okey"), "pre", "part")
       s.sql(s"SELECT * FROM graft_refresh_view('$vw')").collect()
-      deleteVersioned(s, b(0).filter(col("pre") % 3 === 0)
+      delete(s, b(0).filter(col("pre") % 3 === 0)
         .select("okey", "part"), src, Seq("okey"), Seq("part"))
       s.sql(s"SELECT * FROM graft_refresh_view('$vw')").collect()
       s.sql(s"SELECT part, bucket, CAST(sum_v AS DOUBLE) AS sum_v, " +
@@ -3092,12 +2882,12 @@ object Merge {
       val vw = scratchTable("graft_x09v_")
       def b(i: Int): DataFrame = replayBatch(s, dir, i, 50000)
         .withColumn("bucket", col("okey") % 10)
-      upsertVersioned(s, b(0), src, Seq("okey"), "pre", "part")
+      upsert(s, b(0), src, Seq("okey"), "pre", "part")
       IncrementalView.create(s, src, vw, srcKeys = Seq("okey", "part"),
         groupCols = Seq("part", "bucket"), sumCol = "price",
         partitionCol = "part")
-      upsertVersioned(s, b(1), src, Seq("okey"), "pre", "part")
-      deleteVersioned(s, b(0).filter(col("pre") % 3 === 0)
+      upsert(s, b(1), src, Seq("okey"), "pre", "part")
+      delete(s, b(0).filter(col("pre") % 3 === 0)
         .select("okey", "part"), src, Seq("okey"), Seq("part"))
       IncrementalStream.maintainView(s, src, vw, scratchTable("graft_x09ck_"))
       IncrementalView.readView(s, vw)
@@ -3112,14 +2902,14 @@ object Merge {
     // deleted keys not re-inserted by batch 2 read delete
     "x11_snapshot_diff" -> ((s, dir) => {
       val path = scratchTable("graft_x11_")
-      upsertVersioned(s, replayBatch(s, dir, 0), path, Seq("okey"),
+      upsert(s, replayBatch(s, dir, 0), path, Seq("okey"),
         "pre", "part")
-      val c2 = upsertVersioned(s, replayBatch(s, dir, 1), path,
+      val c2 = upsert(s, replayBatch(s, dir, 1), path,
         Seq("okey"), "pre", "part")
-      deleteVersioned(s, replayBatch(s, dir, 0)
+      delete(s, replayBatch(s, dir, 0)
         .filter(col("pre") % 3 === 0).select("okey", "part"),
         path, Seq("okey"), Seq("part"))
-      val c4 = upsertVersioned(s, replayBatch(s, dir, 2), path,
+      val c4 = upsert(s, replayBatch(s, dir, 2), path,
         Seq("okey"), "pre", "part")
       diffSnapshots(s, path, c2, c4, Seq("okey", "part"))
         .orderBy("part", "okey")
@@ -3132,19 +2922,19 @@ object Merge {
     "x12_compact_versioned" -> ((s, dir) => {
       val path = scratchTable("graft_x12_")
       fragmented(s) {
-        upsertVersioned(s, replayBatch(s, dir, 0), path, Seq("okey"),
+        upsert(s, replayBatch(s, dir, 0), path, Seq("okey"),
           "pre", "part")
       }
       val c2 = fragmented(s) {
-        upsertVersioned(s, replayBatch(s, dir, 1), path,
+        upsert(s, replayBatch(s, dir, 1), path,
           Seq("okey"), "pre", "part")
       }
       fragmented(s) {
-        deleteVersioned(s, replayBatch(s, dir, 0)
+        delete(s, replayBatch(s, dir, 0)
           .filter(col("pre") % 3 === 0).select("okey", "part"),
           path, Seq("okey"), Seq("part"))
       }
-      val n = compactVersioned(s, path, Seq("part"), Seq("okey"))
+      val n = compact(s, path, Seq("part"), Seq("okey"))
       require(n > 0, "x12 expects the replay layout to need compaction")
       readAsOf(s, path, c2)
         .select("okey", "part", "price", "pre")
@@ -3161,19 +2951,19 @@ object Merge {
     "x12w_compact_versioned_wide" -> ((s, dir) => {
       val path = scratchTable("graft_x12w_")
       fragmented(s) {
-        upsertVersioned(s, replayBatch(s, dir, 0, 50000), path, Seq("okey"),
+        upsert(s, replayBatch(s, dir, 0, 50000), path, Seq("okey"),
           "pre", "part")
       }
       val c2 = fragmented(s) {
-        upsertVersioned(s, replayBatch(s, dir, 1, 50000), path,
+        upsert(s, replayBatch(s, dir, 1, 50000), path,
           Seq("okey"), "pre", "part")
       }
       fragmented(s) {
-        deleteVersioned(s, replayBatch(s, dir, 0, 50000)
+        delete(s, replayBatch(s, dir, 0, 50000)
           .filter(col("pre") % 3 === 0).select("okey", "part"),
           path, Seq("okey"), Seq("part"))
       }
-      val n = compactVersioned(s, path, Seq("part"), Seq("okey"))
+      val n = compact(s, path, Seq("part"), Seq("okey"))
       require(n > 0, "x12w expects the replay layout to need compaction")
       readAsOf(s, path, c2)
         .select("okey", "part", "price", "pre")
@@ -3206,6 +2996,7 @@ object Merge {
           .writeStream
           .foreachBatch { (batch: DataFrame, _: Long) =>
             upsertOrdered(s, batch, path, Seq("okey"), "pre", Seq("part"))
+            ()
           }
       }
       readTable(s, path)
@@ -3591,9 +3382,10 @@ object Merge {
         |      FROM raw WHERE pre % 7 = 1)
         |WHERE rn = 1
         |ORDER BY part, okey""".stripMargin,
-    // the timeline enumeration: per replay batch b ∈ {0,1,2} → commit
-    // b+1 with the DEDUPED row count and sorted distinct partitions;
-    // the mid-sequence delete records no commit and must not shift ids
+    // the timeline enumeration: replay batches 0 and 1 → commits 1 and
+    // 2 with the DEDUPED row count and sorted distinct partitions; the
+    // mid-sequence delete of batch 1's rows is commit 3, owning no rows
+    // and touching batch 1's partitions; batch 2 → commit 4
     "q22_timeline" ->
       """WITH raw AS (SELECT o_orderkey % 7 AS b, o_orderkey % 500 AS okey,
         |               o_orderstatus AS part, o_orderkey AS pre
@@ -3606,11 +3398,15 @@ object Merge {
         |p AS (SELECT b, string_agg(DISTINCT part, ',' ORDER BY part)
         |        AS partitions
         |      FROM raw GROUP BY b)
-        |SELECT CAST(d.b + 1 AS BIGINT) AS commit_ts, d.n_rows, p.partitions
+        |SELECT CAST(CASE WHEN d.b = 2 THEN 4 ELSE d.b + 1 END AS BIGINT)
+        |         AS commit_ts, d.n_rows, p.partitions
         |FROM d JOIN p ON d.b = p.b
+        |UNION ALL
+        |SELECT CAST(3 AS BIGINT), CAST(0 AS BIGINT), p.partitions
+        |FROM p WHERE p.b = 1
         |ORDER BY commit_ts""".stripMargin,
     // the as-of-commit-2 snapshot = the two-batch merge state, before
-    // the versioned delete and the third upsert that q25 replays past
+    // the delete and the third upsert that q25 replays past
     // time travel across a RECORDED compaction lands on the same
     // 2-upsert snapshot as q25 — compaction moved bytes, not state
     "x12_compact_versioned" -> twoBatchSqlMod(500),

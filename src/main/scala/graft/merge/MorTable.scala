@@ -134,8 +134,8 @@ object MorTable {
     st.mor.get
   }
 
-  /** The recorded schema — always includes `_commit_ts` (the first
-    * write was versioned). */
+  /** The recorded schema — always includes `_commit_ts` (every write
+    * stamps its rows). */
   private def recorded(st: TableState): StructType = st.schema.getOrElse(
     throw new IllegalStateException(
       s"MOR table ${st.path} has no recorded schema — was the base " +
@@ -157,7 +157,7 @@ object MorTable {
 
   /** Upsert a batch. First write creates the table: the key spec is
     * recorded and the batch lands as BASE parquet via the same staged
-    * versioned commit as [[Merge.upsertVersioned]]. Every later upsert
+    * commit as [[Merge.upsert]]. Every later upsert
     * appends a delta commit — no base file is read or written
     * (MorSpec asserts base mtimes byte-for-byte untouched): within-batch
     * precombine dedup, `_commit_ts` stamp, staged publish into
@@ -202,7 +202,7 @@ object MorTable {
       // and the base commit leaves a retryable empty table, not a
       // spec-less one
       TableState.writeMor(st, sp)
-      return Merge.upsertVersioned(spark, batch, path, keyCols, precombine,
+      return Merge.upsert(spark, batch, path, keyCols, precombine,
         partitionCols)
     }
     val stored = morSpec(st)
@@ -283,7 +283,7 @@ object MorTable {
       : (Merge.MergeStats, Option[Merge.CommitResult]) = {
     val obs = org.apache.spark.sql.Observation()
     val staged = Merge.stage(spark, body.observe(obs, count(lit(1)).as("n")),
-      path, sp.partitionCols, "_mor_staging_", deltaRel, Some(cts), Nil)
+      path, sp.partitionCols, "_mor_staging_", deltaRel, cts, Nil)
     Merge.publish(Merge.fsFor(spark, path), staged.moves)
     (Merge.MergeStats(obs.get("n").asInstanceOf[Long], Merge.partitionsOf(
       staged.added, sp.partitionCols, batch).map(Merge.renderPartition)),
@@ -376,8 +376,7 @@ object MorTable {
     * [[Merge.snapshotAt]]) merged with the delta files LIVE at that
     * point (present then, not yet folded; deltas consumed by a later
     * compaction read back from that compaction's history dir). Same
-    * floor discipline as COW: [[Merge.clean]] bounds retention, and
-    * any unversioned mutation voids honestly. */
+    * floor discipline as COW: [[Merge.clean]] bounds retention. */
   def readAsOf(spark: SparkSession, path: String, asOf: Long): DataFrame =
     readAsOf(spark, TableState.load(spark, path), asOf)
 
@@ -454,7 +453,7 @@ object MorTable {
       // a delete commit
       (Merge.MergeStats(0L, m.touched.map(Merge.renderPartition)),
         Some(Merge.commitFiles(spark, st, merged, sp.partitionCols,
-          superseded, m.touched, dropEmptied = true, Some(cts))))
+          superseded, m.touched, dropEmptied = true, cts)))
     }
     // the retires left empty delta hive dirs behind — cosmetic sweep
     deltaFiles.foreach { f =>

@@ -42,7 +42,7 @@ object Occ {
       val base = lineitem(s, dir).select(col("l_orderkey"),
         col("l_linenumber"), col("l_extendedprice"), col("l_returnflag"))
       // seed commit: all of lnum <= 2, serially
-      Merge.upsertVersioned(s, base.filter(col("l_linenumber") <= 2), t,
+      Merge.upsert(s, base.filter(col("l_linenumber") <= 2), t,
         keys, "l_extendedprice", Seq("l_returnflag"))
       // two RACING writers on disjoint partition sets: A bumps the
       // 'A' partition, B bumps 'N' + 'R' — their file groups never
@@ -56,9 +56,9 @@ object Occ {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration._
       import scala.concurrent.ExecutionContext.Implicits.global
-      val fa = Future(Merge.upsertVersioned(s, batchA, t, keys,
+      val fa = Future(Merge.upsert(s, batchA, t, keys,
         "l_extendedprice", Seq("l_returnflag")))
-      val fb = Future(Merge.upsertVersioned(s, batchB, t, keys,
+      val fb = Future(Merge.upsert(s, batchB, t, keys,
         "l_extendedprice", Seq("l_returnflag")))
       val ca = Await.result(fa, 10.minutes)
       val cb = Await.result(fb, 10.minutes)
@@ -96,8 +96,7 @@ object Occ {
            |  op 'upsert',
            |  keys 'l_orderkey,l_linenumber',
            |  precombine 'l_extendedprice',
-           |  partition 'l_returnflag',
-           |  versioned 'true')
+           |  partition 'l_returnflag')
            |AS SELECT l_orderkey, l_linenumber, l_extendedprice,
            |          l_returnflag
            |   FROM x30_lineitem WHERE l_linenumber <= 2""".stripMargin)

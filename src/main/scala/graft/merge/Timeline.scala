@@ -15,15 +15,19 @@ import org.apache.spark.sql.functions.{coalesce, col, lit, max}
   *    [[Merge.rollback]] can reverse any crash window;
   *  - `<id>.json` — the RECORD: the commit is durable once it lands,
   *    and the claim and plan go;
-  *  - `<id>.rolledback` — the tombstone of a reversed commit.
+  *  - `<id>.rolledback` — the tombstone of a reversed commit;
+  *  - `_head` — the highest id [[record]] or [[tombstone]] retired,
+  *    where the next [[claim]] starts, so a claim costs the same on
+  *    the thousandth commit as on the first.
   *
   * Crash order: claim → plan → data mutations → record → drop plan and
   * claim. An id is issued from its claim on and is never reissued, even
   * after a rollback or restore. Strictly numeric stems: any other name
   * in the directory (editor backup, `.crc` sibling on checksum
   * filesystems) is FOREIGN and ignored — one junk entry must not brick
-  * every later versioned write. `.plan` siblings are not timeline
-  * entries either: they belong to their commit and go with it. */
+  * every later write. `.plan` siblings are not timeline entries
+  * either: they belong to their commit and go with it; nor is the
+  * head, a hint the claim never trusts alone. */
 private[merge] object Timeline {
 
   def dir(path: String): Path = new Path(path, "_graft_commits")
@@ -39,6 +43,7 @@ private[merge] object Timeline {
   def planFile(path: String, cts: Long): Path = entryFile(path, cts, "plan")
   def tombstoneFile(path: String, cts: Long): Path =
     entryFile(path, cts, "rolledback")
+  def headFile(path: String): Path = new Path(dir(path), "_head")
 
   /** A recorded entry's columns as Spark reads them — the
     * `graft_commits` table and the incremental commit stream. */
@@ -49,8 +54,8 @@ private[merge] object Timeline {
   final case class Entry(id: Long, kind: String, file: Path)
 
   /** One listing of the timeline directory. `foreign` counts names that
-    * are neither entries, `.plan` siblings nor '.'-prefixed filesystem
-    * metadata. */
+    * are neither entries, `.plan` siblings, the head nor '.'-prefixed
+    * filesystem metadata. */
   final case class Listing(entries: Seq[Entry], foreign: Int) {
     def recorded: Seq[Entry] = entries.filter(_.kind == "json")
     /** Every id the timeline has ever ISSUED — recorded commits,
@@ -78,7 +83,8 @@ private[merge] object Timeline {
       })
       val foreign = files.map(_.getName).count {
         case commitEntryRe(_, _) => false
-        case n => !n.endsWith(".plan") && !n.startsWith(".")
+        case n => !n.endsWith(".plan") && !n.startsWith(".") &&
+          n != headFile(path).getName
       }
       Listing(entries, foreign)
     }
@@ -120,17 +126,38 @@ private[merge] object Timeline {
     if (!fs.exists(f)) None else Some(readRecord(fs, Entry(cts, "json", f)))
   }
 
-  /** Next monotonic commit id. The timeline is the source of truth: it
-    * never regresses, even when a delete() removes every surviving row
-    * of the latest commit — a data-only max would then REUSE that
-    * commit id and an incremental consumer tracking `readSince(last)`
-    * would silently miss the reused commit's rows. Because an id is
-    * claimed BEFORE its data lands, a crash mid-commit can't cause
-    * reuse — and a timeline table never needs a data scan here, which
-    * at 100 TB would be a full stamp-column read per commit. The scan
-    * remains only as the one-time floor for tables stamped before the
-    * timeline existed. */
+  /** The head's id; None when it is missing or unreadable. */
+  private def readHead(fs: FileSystem, path: String): Option[Long] =
+    try Some(Merge.readSmallFile(fs, headFile(path)).trim.toLong)
+    catch {
+      case _: java.io.IOException | _: NumberFormatException => None
+    }
+
+  /** Raise the head to `cts` (complete-or-absent, temp + rename); a
+    * lower id leaves it alone. */
+  private def advanceHead(fs: FileSystem, path: String, cts: Long): Unit =
+    if (readHead(fs, path).forall(_ < cts))
+      Merge.replaceSmallFile(fs, headFile(path), cts.toString)
+
+  /** The first candidate for the next commit id: one past the head, so
+    * a claim reads one small file instead of listing every commit. The
+    * head is only a starting point — [[claimFrom]] skips any id already
+    * issued, so a head left behind by a crash or a racing writer costs
+    * a few extra stats, never a reused id. A table without a readable
+    * head (written before the head existed, or damaged) falls back to
+    * one listing. The timeline is the source of truth: it never
+    * regresses, even when a delete() removes every surviving row of the
+    * latest commit — a data-only max would then REUSE that commit id
+    * and an incremental consumer tracking `readSince(last)` would
+    * silently miss the reused commit's rows. Because an id is claimed
+    * BEFORE its data lands, a crash mid-commit can't cause reuse — and
+    * a timeline table never needs a data scan here, which at 100 TB
+    * would be a full stamp-column read per commit. The scan remains
+    * only as the one-time floor for tables stamped before the timeline
+    * existed. */
   private def nextId(spark: SparkSession, path: String): Long = {
+    val head = readHead(Merge.fsFor(spark, path), path)
+    if (head.isDefined) return head.get + 1L
     val issued = list(spark, path).issued
     if (issued.nonEmpty) return issued.max + 1L
     val st = TableState.load(spark, path)
@@ -147,7 +174,7 @@ private[merge] object Timeline {
 
   /** Claim the next commit id by creating its inflight marker with
     * `overwrite = false` — an EXCLUSIVE create, atomic on HDFS-like
-    * stores. Of two racing versioned writers exactly one owns each id;
+    * stores. Of two racing writers exactly one owns each id;
     * the loser observes the collision and claims the next id, so two
     * batches can never land stamped with the same commit. (This
     * serializes id allocation only — concurrent DATA commits remain
@@ -156,7 +183,7 @@ private[merge] object Timeline {
     *
     * Object-store caveat: S3A's `create(path, overwrite = false)` is a
     * check-then-write, not an atomic exclusive create, so on S3 the
-    * claim degrades to best-effort — serialize versioned writers
+    * claim degrades to best-effort — serialize writers
     * externally there (the reference pipeline does exactly that via its
     * single-concurrency job setting). */
   def claim(spark: SparkSession, path: String): Long = {
@@ -226,9 +253,9 @@ private[merge] object Timeline {
     cts
   }
 
-  /** Record commit `cts`, then drop its plan and claim. The record is
-    * complete-or-absent (temp + rename): it is the unit a CONCURRENT
-    * incremental stream tails ([[IncrementalStream]]), so a
+  /** Record commit `cts`, advance the head, then drop its plan and
+    * claim. The record is complete-or-absent (temp + rename): it is
+    * the unit a CONCURRENT incremental stream tails ([[IncrementalStream]]), so a
     * half-written record must never be observable — the dot-prefixed
     * temp sibling is invisible to both the listing and the stream's
     * glob. `wall_ms` is the commit's RECORD wall-clock, written once
@@ -249,6 +276,7 @@ private[merge] object Timeline {
       s""""files_added":${Merge.jsonArray(added)},""" +
       s""""files_removed":${Merge.jsonArray(removed)}}"""
     Merge.replaceSmallFile(fs, recordFile(path, cts), body)
+    advanceHead(fs, path, cts)
     fs.delete(planFile(path, cts), false)
     fs.delete(claimFile(path, cts), false)
   }
@@ -290,11 +318,13 @@ private[merge] object Timeline {
       (j \ "files_removed").extract[Seq[String]])
   }
 
-  /** Reverse id `cts` on the timeline: write its tombstone FIRST, then
-    * drop its plan, claim and record — the id stays issued through
-    * every crash window, so it can never be reused. */
+  /** Reverse id `cts` on the timeline: write its tombstone FIRST and
+    * advance the head, then drop its plan, claim and record — the id
+    * stays issued through every crash window, so it can never be
+    * reused. */
   def tombstone(fs: FileSystem, path: String, cts: Long): Unit = {
     Merge.writeSmallFile(fs, tombstoneFile(path, cts), "")
+    advanceHead(fs, path, cts)
     Seq(planFile(path, cts), claimFile(path, cts), recordFile(path, cts))
       .foreach(fs.delete(_, false))
   }

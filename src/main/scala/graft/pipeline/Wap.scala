@@ -47,7 +47,7 @@ object Wap {
     require(!beforeRow.isNullAt(0),
       s"WAP needs a published base commit at $path to restore to")
     val before = beforeRow.getLong(0)
-    val staged = Merge.upsertVersioned(s, batch, path, keyCols,
+    val staged = Merge.upsert(s, batch, path, keyCols,
       precombine, partitionCols)
     // An audit that THROWS (bad rule, transient job failure) must not
     // leave the staged — possibly poisoned — commit durable: the

@@ -43,7 +43,7 @@ import graft.merge.Merge
   * Layout: `<warehouse>/<namespace dirs>/<table>` holds an ordinary
   * graft table (same bytes as `df.write.format("graft").save(dir)`);
   * `_graft_table` in the table dir records the table options (keys,
-  * precombine, partition, op, versioned) exactly as the v1 surface
+  * precombine, partition, op) exactly as the v1 surface
   * would receive them per-write. Catalog state is therefore pure
   * filesystem metadata — listable, copyable, and shared with any v1
   * reader pointed at the same path.
@@ -128,13 +128,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     require(!schema.fieldNames.exists(_.equalsIgnoreCase(Merge.commitCol)),
       s"'${Merge.commitCol}' is a reserved graft metadata column")
     val dir = tableDir(ident)
-    // versioned-by-default: catalog tables are the managed-table
-    // experience — the timeline (time travel, incremental, CDC) is on
-    // unless the user opts out with OPTIONS (versioned 'false')
     val persisted = opts ++ Map(
       "partition" -> partCols.mkString(","),
-      "op" -> opts.getOrElse("op", "upsert"),
-      "versioned" -> opts.getOrElse("versioned", "true"))
+      "op" -> opts.getOrElse("op", "upsert"))
     val f = fs(dir)
     // the path may pre-exist with data (e.g. an existing v1 graft table
     // being registered) — a failed CREATE must never delete it
@@ -414,7 +410,7 @@ class GraftTable(val path: String, tableName: String,
           org.apache.spark.sql.types.LongType
         override def isNullable: Boolean = true
         override def comment: String =
-          "commit id that last wrote this row (versioned graft tables)"
+          "commit id that last wrote this row"
       })
     else Array.empty
 

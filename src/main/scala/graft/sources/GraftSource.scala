@@ -30,8 +30,8 @@ import graft.merge.{Merge, MorTable, TableState}
   *  - `precombine`: ordering column for same-key ties (precombine.field).
   *  - `partition`: comma-separated hive partition columns
   *    (partitionpath.field).
-  *  - `versioned` = true: record the commit in the timeline (enables
-  *    asOf / incremental / CDC reads).
+  *  - every write is a commit on the table's timeline: it stamps its
+  *    rows with `_commit_ts` and enables asOf / incremental / CDC reads.
   *  - SaveMode.Append applies `op`; SaveMode.Overwrite maps to the
   *    partition-scoped insert-overwrite (Hudi insert_overwrite).
   *
@@ -230,18 +230,13 @@ object GraftSource {
     val keys = cols(parameters, "keys")
     val parts = cols(parameters, "partition")
     val precombine = opt(parameters, "precombine").orNull
-    val versioned = opt(parameters, "versioned").exists(_.toBoolean)
     require(parts.nonEmpty,
       "graft write requires option(\"partition\", \"col[,col...]\")")
     mode match {
       case SaveMode.Overwrite =>
         require(keys.nonEmpty && precombine != null,
           "overwrite (insert_overwrite) requires keys + precombine")
-        if (versioned)
-          Merge.insertOverwriteVersioned(spark, data, path, keys,
-            precombine, parts)
-        else Merge.insertOverwrite(spark, data, path, keys, precombine,
-          parts)
+        Merge.insertOverwrite(spark, data, path, keys, precombine, parts)
       case SaveMode.Append => op match {
         case "insert" =>
           Merge.insert(data, path, parts, keys, precombine,
@@ -254,9 +249,7 @@ object GraftSource {
         case "upsert" =>
           require(keys.nonEmpty && precombine != null,
             "upsert requires keys + precombine")
-          if (versioned)
-            Merge.upsertVersioned(spark, data, path, keys, precombine, parts)
-          else Merge.upsert(spark, data, path, keys, precombine, parts)
+          Merge.upsert(spark, data, path, keys, precombine, parts)
         case "upsert_ordered" =>
           // the ORDERED payload (stored row survives unless the
           // incoming precombine is >= it): per-key argmax over all
@@ -264,13 +257,10 @@ object GraftSource {
           // the safe op for streaming sinks replaying late data (x04)
           require(keys.nonEmpty && precombine != null,
             "upsert_ordered requires keys + precombine")
-          require(!versioned,
-            "upsert_ordered is not yet supported on versioned tables")
           Merge.upsertOrdered(spark, data, path, keys, precombine, parts)
         case "delete" =>
           require(keys.nonEmpty, "delete requires keys")
-          if (versioned) Merge.deleteVersioned(spark, data, path, keys, parts)
-          else Merge.delete(spark, data, path, keys, parts)
+          Merge.delete(spark, data, path, keys, parts)
         case other => throw new IllegalArgumentException(
           s"unknown graft op '$other' " +
             "(insert|bulk_insert|upsert|upsert_ordered|delete)")
@@ -320,8 +310,8 @@ private[sources] class GraftStreamSource(sqlContext: SQLContext,
     val s = Merge.readTable(spark, path).schema
     require(s.fieldNames.contains(Merge.commitCol),
       s"graft streaming source requires a versioned table (rows carry " +
-        s"${Merge.commitCol}); $path has no commit stamps — write with " +
-        "upsertVersioned / a catalog table (versioned by default)")
+        s"${Merge.commitCol}); $path has no commit stamps — write it " +
+        "through graft (every graft write stamps its rows)")
     s
   }
 
@@ -447,7 +437,7 @@ object GraftSourceQueries {
       val b2 = base.filter(col("l_linenumber") === 2)
         .withColumn("l_extendedprice", col("l_extendedprice") + lit(0.25))
       def w(df: DataFrame): Unit = df.write.format("graft")
-        .option("op", "upsert").option("versioned", "true")
+        .option("op", "upsert")
         .option("keys", "l_orderkey,l_linenumber")
         .option("precombine", "l_extendedprice")
         .option("partition", "l_returnflag")
@@ -655,8 +645,7 @@ object GraftSourceQueries {
            |  op 'upsert',
            |  keys 'l_orderkey,l_linenumber',
            |  precombine 'l_extendedprice',
-           |  partition 'l_returnflag',
-           |  versioned 'true')
+           |  partition 'l_returnflag')
            |AS SELECT l_orderkey, l_linenumber, l_extendedprice,
            |          l_returnflag
            |   FROM x23_lineitem WHERE l_linenumber = 1""".stripMargin)
@@ -698,8 +687,7 @@ object GraftSourceQueries {
            |  op 'upsert',
            |  keys 'l_orderkey,l_linenumber',
            |  precombine 'l_extendedprice',
-           |  partition 'l_returnflag',
-           |  versioned 'true')
+           |  partition 'l_returnflag')
            |AS SELECT l_orderkey, l_linenumber, l_extendedprice,
            |          l_returnflag
            |   FROM x29_lineitem WHERE l_linenumber = 1""".stripMargin)
@@ -771,7 +759,7 @@ object GraftSourceQueries {
           |  okey BIGINT, lnum INT, qty DOUBLE, price DOUBLE, part STRING)
           |USING graft
           |PARTITIONED BY (part)
-          |OPTIONS (keys 'okey', versioned 'false')""".stripMargin)
+          |OPTIONS (keys 'okey')""".stripMargin)
       s.sql(
         """SELECT okey, lnum, qty, price, part
           |FROM graft_cat.bench.li32
@@ -796,7 +784,7 @@ object GraftSourceQueries {
           col("o_orderkey").as("pre"),
           col("o_orderstatus").as("part"))
       (0 until 3).foreach { b =>
-        graft.merge.Merge.upsertVersioned(s,
+        graft.merge.Merge.upsert(s,
           rows.filter(col("okey") % 3 === b), path,
           Seq("okey"), "pre", "part")
         ()
@@ -847,7 +835,7 @@ object GraftSourceQueries {
       // three commits, the LAST overwriting keys from the first two —
       // the replica must reflect batch-wins, not just a union
       (0 until 3).foreach { b =>
-        graft.merge.Merge.upsertVersioned(s,
+        graft.merge.Merge.upsert(s,
           rows.filter(col("pre") % 3 === b), path = src,
           keyCols = Seq("okey"), precombine = "pre",
           partitionCol = "part")
@@ -893,7 +881,7 @@ object GraftSourceQueries {
         case (kind, path) =>
           val side = ev.filter(col("event_type") === kind)
           (0 until 2).foreach { b =>
-            graft.merge.Merge.upsertVersioned(s,
+            graft.merge.Merge.upsert(s,
               side.filter(col("event_id") % 2 === b), path,
               Seq("event_id"), "value", "part")
             ()
@@ -957,8 +945,7 @@ object GraftSourceQueries {
         """CREATE TABLE graft_cat.bench.li33 (
           |  okey BIGINT, price DOUBLE, pre BIGINT, part STRING)
           |USING graft PARTITIONED BY (part)
-          |OPTIONS (keys 'okey', precombine 'pre',
-          |         versioned 'false')""".stripMargin)
+          |OPTIONS (keys 'okey', precombine 'pre')""".stripMargin)
       s.sql(
         """SELECT okey, price, pre, part FROM graft_cat.bench.li33
           |WHERE okey = 123 AND part = 'O'
@@ -1400,8 +1387,12 @@ class GraftRelation(override val sqlContext: SQLContext,
     extends BaseRelation with PrunedFilteredScan with InsertableRelation {
 
   // schema is stable across commits (additive evolution widens it only
-  // through writes, which refresh the catalog entry) — resolve once
-  override lazy val schema: StructType = resolve().schema
+  // through writes, which refresh the catalog entry) — resolve once.
+  // The engine's per-row commit stamp is not a user column (the catalog
+  // table serves it as a metadata column): an unnamed INSERT must not
+  // have to supply it
+  override lazy val schema: StructType =
+    StructType(resolve().schema.filterNot(_.name == Merge.commitCol))
 
   /** `INSERT INTO` (append) / `INSERT OVERWRITE` on a catalog-registered
     * graft table: the append op is the table's recorded `op` option

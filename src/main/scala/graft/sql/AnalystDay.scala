@@ -91,13 +91,13 @@ object AnalystDay {
       val vw = Merge.scratchTable("graft_x50v_")
       def b(i: Int): DataFrame = Merge.replayBatch(s, dir, i, 50000)
         .withColumn("bucket", col("okey") % 10)
-      Merge.upsertVersioned(s, b(0), src, Seq("okey"), "pre", "part")
+      Merge.upsert(s, b(0), src, Seq("okey"), "pre", "part")
       IncrementalView.create(s, src, vw, srcKeys = Seq("okey", "part"),
         groupCols = Seq("part", "bucket"), sumCol = "price",
         partitionCol = "part")
-      Merge.upsertVersioned(s, b(1), src, Seq("okey"), "pre", "part")
+      Merge.upsert(s, b(1), src, Seq("okey"), "pre", "part")
       s.sql(s"SELECT * FROM graft_refresh_view('$vw')").collect()
-      Merge.deleteVersioned(s, b(0).filter(col("pre") % 3 === 0)
+      Merge.delete(s, b(0).filter(col("pre") % 3 === 0)
         .select("okey", "part"), src, Seq("okey"), Seq("part"))
       s.sql(s"SELECT * FROM graft_refresh_view('$vw')").collect()
 

@@ -217,8 +217,7 @@ private[sql] object GraftSqlCommands {
     }
 
   /** Commit a staged payload as `op` (`upsert` or `delete`) through the
-    * shared write dispatch [[GraftSource.write]], which takes the
-    * versioned form when the table's options say so; returns the
+    * shared write dispatch [[GraftSource.write]]; returns the
     * payload's row count (0 for no payload). */
   def commit(spark: SparkSession, options: Map[String, String], op: String,
       payload: Option[DataFrame]): Long =

@@ -31,6 +31,12 @@ import graft.merge.Merge
   * and `compactEvery` lets the loader pay its own small-file
   * maintenance; the source lists incrementally (`maxFilesPerTrigger`
   * governs batch size at high arrival rates).
+  *
+  * Every micro-batch and every compaction is a commit on the table's
+  * timeline, so the loaded table serves time travel, incremental pulls
+  * and CDC like any other. Each commit keeps the files it superseded in
+  * the table's `_graft_history/` until [[graft.merge.Merge.clean]]
+  * runs; the loader runs no cleaner itself.
   */
 object StreamLoader {
 
@@ -105,8 +111,8 @@ object StreamLoader {
                   graft.merge.MorTable.compact(spark, args.tablePath)
                 else
                   Merge.compact(spark, args.tablePath,
-                    LoadTransactions.partitionCol, LoadTransactions.keyCols,
-                    args.targetFileBytes)
+                    Seq(LoadTransactions.partitionCol),
+                    LoadTransactions.keyCols, args.targetFileBytes)
               } catch {
                 case e: Exception => System.err.println(
                   s"[stream-loader] compaction after batch $batchId failed: $e")
@@ -167,9 +173,9 @@ object StreamLoader {
   }
 
   /** The table write, dispatched on table type: COW rewrites the
-    * matched file groups; MOR appends a delta commit. Both are
-    * key-reconciled, so the at-least-once replay contract holds
-    * either way. */
+    * matched file groups; MOR appends a delta commit. Either is one
+    * commit on the table's timeline, and both are key-reconciled, so
+    * the at-least-once replay contract holds either way. */
   private def upsertInto(spark: SparkSession, df: DataFrame, args: Args)
       : Unit =
     if (args.mergeOnRead)
@@ -179,5 +185,5 @@ object StreamLoader {
     else
       Merge.upsert(spark, df, args.tablePath,
         LoadTransactions.keyCols, LoadTransactions.precombine,
-        LoadTransactions.partitionCol)
+        LoadTransactions.partitionCol): Unit
 }

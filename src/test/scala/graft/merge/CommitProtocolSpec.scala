@@ -4,7 +4,7 @@ import graft.SparkSpec
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 
-/** The commit protocol, checked the same way at every versioned entry
+/** The commit protocol, checked the same way at every write entry
   * point: after one operation the timeline holds exactly one new
   * recorded entry, no claim/plan/rollback/staging residue is left
   * behind, `graft_fsck` reports nothing to fix, and the recorded
@@ -26,11 +26,11 @@ class CommitProtocolSpec extends SparkSpec {
   /** Three versioned commits: partitions a and b, then disjoint keys in
     * a, so partition a holds several small files. */
   private def versionedTable(path: String): Unit = {
-    Merge.upsertVersioned(spark, rows(0 until 20, "a")
+    Merge.upsert(spark, rows(0 until 20, "a")
       .union(rows(0 until 10, "b")), path, keyCols, "n", parts)
-    Merge.upsertVersioned(spark, rows(100 until 120, "a"), path, keyCols,
+    Merge.upsert(spark, rows(100 until 120, "a"), path, keyCols,
       "n", parts)
-    Merge.upsertVersioned(spark, rows(200 until 220, "a"), path, keyCols,
+    Merge.upsert(spark, rows(200 until 220, "a"), path, keyCols,
       "n", parts)
     ()
   }
@@ -50,23 +50,29 @@ class CommitProtocolSpec extends SparkSpec {
 
   private val cases = Seq(
     Case("Merge.upsertVersioned", versionedTable, p =>
-      Merge.upsertVersioned(spark, rows(10 until 30, "a"), p, keyCols, "n",
+      Merge.upsert(spark, rows(10 until 30, "a"), p, keyCols, "n",
         parts): Unit),
     Case("Merge.upsertOrderedVersioned", versionedTable, p =>
-      Merge.upsertOrderedVersioned(spark, rows(5 until 25, "b"), p, keyCols,
+      Merge.upsertOrdered(spark, rows(5 until 25, "b"), p, keyCols,
         "n", parts): Unit),
     Case("Merge.deleteVersioned", versionedTable, p =>
-      Merge.deleteVersioned(spark, keys(Seq(1, 2, 105), "a"), p, keyCols,
+      Merge.delete(spark, keys(Seq(1, 2, 105), "a"), p, keyCols,
         parts): Unit),
     Case("Merge.insertOverwriteVersioned", versionedTable, p =>
-      Merge.insertOverwriteVersioned(spark, rows(50 until 55, "a"), p,
+      Merge.insertOverwrite(spark, rows(50 until 55, "a"), p,
         keyCols, "n", parts): Unit),
     Case("Merge.compactVersioned", versionedTable, p =>
-      assert(Merge.compactVersioned(spark, p, parts, keyCols) > 0,
+      assert(Merge.compact(spark, p, parts, keyCols) > 0,
         "nothing compacted — the case would prove nothing")),
     Case("Merge.clusterZOrderVersioned", versionedTable, p =>
-      assert(Merge.clusterZOrderVersioned(spark, p, parts, Seq("k", "n"))
+      assert(Merge.clusterZOrder(spark, p, parts, Seq("k", "n"))
         > 0)),
+    Case("Merge.insert", versionedTable, p =>
+      Merge.insert(rows(300 until 305, "a"), p, parts, Nil, null,
+        dedup = false): Unit),
+    Case("Merge.bulkInsert", versionedTable, p =>
+      Merge.bulkInsert(rows(300 until 320, "c"), p, parts, keyCols,
+        targetFileBytes = 1L << 20, maxFiles = 4): Unit),
     Case("Merge.bootstrap",
       p => rows(0 until 20, "a").union(rows(0 until 10, "b"))
         .write.partitionBy("part").parquet(p),

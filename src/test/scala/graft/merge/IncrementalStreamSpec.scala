@@ -28,11 +28,11 @@ class IncrementalStreamSpec extends SparkSpec {
 
   test("AvailableNow drain delivers exactly the table, stamped") {
     val path = tmpDir("incs_drain") + "/t"
-    Merge.upsertVersioned(spark, rows(0 until 30, "a", "v1"), path,
+    Merge.upsert(spark, rows(0 until 30, "a", "v1"), path,
       keyCols, "v", "part")
-    Merge.upsertVersioned(spark, rows(20 until 40, "a", "v2"), path,
+    Merge.upsert(spark, rows(20 until 40, "a", "v2"), path,
       keyCols, "v", "part")
-    Merge.upsertVersioned(spark, rows(35 until 50, "b", "v3"), path,
+    Merge.upsert(spark, rows(35 until 50, "b", "v3"), path,
       keyCols, "v", "part")
     val sink = tmpDir("incs_sink") + "/out"
     val ids = drainTo(path, sink, tmpDir("incs_ckpt"))
@@ -77,16 +77,16 @@ class IncrementalStreamSpec extends SparkSpec {
 
   test("checkpointed resume streams only commits that landed since") {
     val path = tmpDir("incs_resume") + "/t"
-    Merge.upsertVersioned(spark, rows(0 until 10, "a", "v1"), path,
+    Merge.upsert(spark, rows(0 until 10, "a", "v1"), path,
       keyCols, "v", "part")
-    Merge.upsertVersioned(spark, rows(10 until 20, "a", "v2"), path,
+    Merge.upsert(spark, rows(10 until 20, "a", "v2"), path,
       keyCols, "v", "part")
     val sink = tmpDir("incs_rsink") + "/out"
     val ckpt = tmpDir("incs_rckpt")
     assert(drainTo(path, sink, ckpt).flatten.sorted === Seq(1L, 2L))
     // nothing new: a re-drain delivers nothing
     assert(drainTo(path, sink, ckpt).flatten.isEmpty)
-    Merge.upsertVersioned(spark, rows(5 until 8, "a", "v3"), path,
+    Merge.upsert(spark, rows(5 until 8, "a", "v3"), path,
       keyCols, "v", "part")
     assert(drainTo(path, sink, ckpt).flatten === Seq(3L))
     // the sink accumulated an at-least-once-composable history: the
@@ -119,11 +119,11 @@ class IncrementalStreamSpec extends SparkSpec {
 
   test("foreachChanges drain equals the batch readChanges over the range") {
     val path = tmpDir("cdcs_drain") + "/t"
-    Merge.upsertVersioned(spark, rows(0 until 30, "a", "v1"), path,
+    Merge.upsert(spark, rows(0 until 30, "a", "v1"), path,
       keyCols, "v", "part")
-    Merge.upsertVersioned(spark, rows(20 until 40, "a", "v2"), path,
+    Merge.upsert(spark, rows(20 until 40, "a", "v2"), path,
       keyCols, "v", "part")
-    val c3 = Merge.deleteVersioned(spark,
+    val c3 = Merge.delete(spark,
       rows(0 until 5, "a", "x").select("k", "part"), path, keyCols,
       Seq("part"))
     val sink = tmpDir("cdcs_sink") + "/out"
@@ -142,12 +142,12 @@ class IncrementalStreamSpec extends SparkSpec {
 
   test("foreachChanges resume delivers only the new commits' changes") {
     val path = tmpDir("cdcs_resume") + "/t"
-    Merge.upsertVersioned(spark, rows(0 until 10, "a", "v1"), path,
+    Merge.upsert(spark, rows(0 until 10, "a", "v1"), path,
       keyCols, "v", "part")
     val sink = tmpDir("cdcs_rsink") + "/out"
     val ckpt = tmpDir("cdcs_rckpt")
     assert(drainChangesTo(path, sink, ckpt).flatten === Seq(1L))
-    Merge.upsertVersioned(spark, rows(5 until 8, "a", "v2"), path,
+    Merge.upsert(spark, rows(5 until 8, "a", "v2"), path,
       keyCols, "v", "part")
     assert(drainChangesTo(path, sink, ckpt).flatten === Seq(2L))
     // the second drain appended exactly commit 2's changes: 3 updated
@@ -165,9 +165,9 @@ class IncrementalStreamSpec extends SparkSpec {
     val src = tmpDir("repl_src") + "/t"
     val dst = tmpDir("repl_dst") + "/t"
     val ckpt = tmpDir("repl_ckpt")
-    Merge.upsertVersioned(spark, rows(0 until 20, "a", "v1"), src,
+    Merge.upsert(spark, rows(0 until 20, "a", "v1"), src,
       keyCols, "v", "part")
-    Merge.deleteVersioned(spark,
+    Merge.delete(spark,
       rows(0 until 5, "a", "x").select("k", "part"), src, keyCols,
       Seq("part"))
     def sync(): Unit =
@@ -179,9 +179,9 @@ class IncrementalStreamSpec extends SparkSpec {
     sync()
     assert(state(dst) === state(src))
     // new source commits; a RESUMED replication applies only them
-    Merge.upsertVersioned(spark, rows(10 until 25, "b", "v2"), src,
+    Merge.upsert(spark, rows(10 until 25, "b", "v2"), src,
       keyCols, "v", "part")
-    Merge.deleteVersioned(spark,
+    Merge.delete(spark,
       rows(5 until 8, "a", "x").select("k", "part"), src, keyCols,
       Seq("part"))
     sync()
@@ -202,15 +202,15 @@ class IncrementalStreamSpec extends SparkSpec {
       Merge.readTable(spark, src)
         .select(col("k"), col("v"), (col("k") * 2))
         .as[(Long, String, Long)].collect().toSet
-    Merge.upsertVersioned(spark, rows(0 until 8, "a", "v1"), src,
+    Merge.upsert(spark, rows(0 until 8, "a", "v1"), src,
       keyCols, "v", "part")
     IncrementalStream.replicateTransformed(spark, src, dst, ckpt,
       keyCols, "v", Seq("part"), transform)
     assert(featState() === expected())
     // resume the SAME checkpoint over an update + a delete
-    Merge.upsertVersioned(spark, rows(4 until 12, "a", "v2"), src,
+    Merge.upsert(spark, rows(4 until 12, "a", "v2"), src,
       keyCols, "v", "part")
-    Merge.deleteVersioned(spark,
+    Merge.delete(spark,
       Seq((0L, "a"), (1L, "a")).toDF("k", "part"), src, keyCols,
       Seq("part"))
     IncrementalStream.replicateTransformed(spark, src, dst, ckpt,
@@ -220,7 +220,7 @@ class IncrementalStreamSpec extends SparkSpec {
 
   test("replicateTransformed rejects a transform that drops the key") {
     val src = tmpDir("incs_tfbad") + "/src"
-    Merge.upsertVersioned(spark, rows(0 until 3, "a", "v1"), src,
+    Merge.upsert(spark, rows(0 until 3, "a", "v1"), src,
       keyCols, "v", "part")
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       IncrementalStream.replicateTransformed(spark, src,
@@ -249,7 +249,7 @@ class IncrementalStreamSpec extends SparkSpec {
       IncrementalView.readView(spark, vw).collect()
         .map(r => (r.getString(0), r.getLong(1),
           BigDecimal(r.getDecimal(2)), r.getLong(3))).toSet
-    Merge.upsertVersioned(spark, batch(0 until 10, "a", 1.0), src,
+    Merge.upsert(spark, batch(0 until 10, "a", 1.0), src,
       keyCols, "pre", "part")
     IncrementalView.create(spark, src, vw, Seq("k", "part"),
       Seq("part", "bucket"), "v", "part")
@@ -257,9 +257,9 @@ class IncrementalStreamSpec extends SparkSpec {
     IncrementalStream.maintainView(spark, src, vw, ckpt)
     assert(viewState() === recompute())
     // two more commits land; the SAME checkpoint drains only them
-    Merge.upsertVersioned(spark, batch(5 until 15, "a", 2.0), src,
+    Merge.upsert(spark, batch(5 until 15, "a", 2.0), src,
       keyCols, "pre", "part")
-    Merge.deleteVersioned(spark, Seq((0L, "a"), (1L, "a")).toDF("k", "part"),
+    Merge.delete(spark, Seq((0L, "a"), (1L, "a")).toDF("k", "part"),
       src, keyCols, Seq("part"))
     IncrementalStream.maintainView(spark, src, vw, ckpt)
     assert(viewState() === recompute())
@@ -267,7 +267,7 @@ class IncrementalStreamSpec extends SparkSpec {
 
   test("foreign junk in the timeline dir does not stream") {
     val path = tmpDir("incs_junk") + "/t"
-    Merge.upsertVersioned(spark, rows(0 until 5, "a", "v1"), path,
+    Merge.upsert(spark, rows(0 until 5, "a", "v1"), path,
       keyCols, "v", "part")
     val w = new java.io.PrintWriter(
       s"$path/_graft_commits/editor-backup.json")
@@ -280,12 +280,12 @@ class IncrementalStreamSpec extends SparkSpec {
 
   test("a rolled-back commit id never streams") {
     val path = tmpDir("incs_rb") + "/t"
-    Merge.upsertVersioned(spark, rows(0 until 5, "a", "v1"), path,
+    Merge.upsert(spark, rows(0 until 5, "a", "v1"), path,
       keyCols, "v", "part")
     // claim id 2, crash before any plan lands, roll it back
     assert(Timeline.claim(spark, path) === 2L)
     Merge.rollback(spark, path, 2L)
-    Merge.upsertVersioned(spark, rows(5 until 9, "a", "v2"), path,
+    Merge.upsert(spark, rows(5 until 9, "a", "v2"), path,
       keyCols, "v", "part")
     val sink = tmpDir("incs_rbsink") + "/out"
     val ids = drainTo(path, sink, tmpDir("incs_rbckpt"))

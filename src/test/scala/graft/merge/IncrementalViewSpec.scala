@@ -35,20 +35,20 @@ class IncrementalViewSpec extends SparkSpec {
 
   test("every refresh equals a from-scratch recompute") {
     val (src, vw) = mkSrc()
-    Merge.upsertVersioned(spark, srcBatch(Seq(
+    Merge.upsert(spark, srcBatch(Seq(
       (1L, "a", 10.0, 1L), (2L, "a", 20.0, 1L), (3L, "b", 30.0, 1L))),
       src, Seq("k"), "pre", "part")
     IncrementalView.create(spark, src, vw, Seq("k", "part"),
       Seq("part", "bucket"), "v", "part")
     assert(viewState(vw) === recompute(src))
     // update k=1 (same group), insert k=4 (new group b/0)
-    Merge.upsertVersioned(spark, srcBatch(Seq(
+    Merge.upsert(spark, srcBatch(Seq(
       (1L, "a", 15.0, 2L), (4L, "b", 40.0, 2L))),
       src, Seq("k"), "pre", "part")
     IncrementalView.refresh(spark, vw)
     assert(viewState(vw) === recompute(src))
     // delete k=2
-    Merge.deleteVersioned(spark, Seq((2L, "a")).toDF("k", "part"),
+    Merge.delete(spark, Seq((2L, "a")).toDF("k", "part"),
       src, Seq("k"), Seq("part"))
     IncrementalView.refresh(spark, vw)
     assert(viewState(vw) === recompute(src))
@@ -56,7 +56,7 @@ class IncrementalViewSpec extends SparkSpec {
 
   test("a group-membership move adjusts both groups") {
     val (src, vw) = mkSrc()
-    Merge.upsertVersioned(spark, srcBatch(Seq(
+    Merge.upsert(spark, srcBatch(Seq(
       (1L, "a", 10.0, 1L), (2L, "a", 20.0, 1L))),
       src, Seq("k"), "pre", "part")
     IncrementalView.create(spark, src, vw, Seq("k", "part"),
@@ -64,9 +64,9 @@ class IncrementalViewSpec extends SparkSpec {
     // k=1 moves bucket 1 -> 1 stays; move k=2 (bucket 0) by replacing
     // its row with k=12 semantics is not a move — instead update k=2's
     // value only, and move k=1 across PARTITIONS via delete+insert
-    Merge.deleteVersioned(spark, Seq((1L, "a")).toDF("k", "part"),
+    Merge.delete(spark, Seq((1L, "a")).toDF("k", "part"),
       src, Seq("k"), Seq("part"))
-    Merge.upsertVersioned(spark, srcBatch(Seq((1L, "b", 10.0, 2L))),
+    Merge.upsert(spark, srcBatch(Seq((1L, "b", 10.0, 2L))),
       src, Seq("k"), "pre", "part")
     IncrementalView.refresh(spark, vw)
     assert(viewState(vw) === recompute(src))
@@ -74,12 +74,12 @@ class IncrementalViewSpec extends SparkSpec {
 
   test("an emptied group is tombstoned, hidden, and resurrectable") {
     val (src, vw) = mkSrc()
-    Merge.upsertVersioned(spark, srcBatch(Seq(
+    Merge.upsert(spark, srcBatch(Seq(
       (1L, "a", 10.0, 1L), (2L, "b", 20.0, 1L))),
       src, Seq("k"), "pre", "part")
     IncrementalView.create(spark, src, vw, Seq("k", "part"),
       Seq("part", "bucket"), "v", "part")
-    Merge.deleteVersioned(spark, Seq((1L, "a")).toDF("k", "part"),
+    Merge.delete(spark, Seq((1L, "a")).toDF("k", "part"),
       src, Seq("k"), Seq("part"))
     IncrementalView.refresh(spark, vw)
     // hidden from readView, present as an n_rows=0 tombstone row
@@ -88,7 +88,7 @@ class IncrementalViewSpec extends SparkSpec {
       .filter(col("part") === "a" && col("n_rows") === 0).count()
     assert(tomb === 1)
     // resurrection in place
-    Merge.upsertVersioned(spark, srcBatch(Seq((1L, "a", 11.0, 3L))),
+    Merge.upsert(spark, srcBatch(Seq((1L, "a", 11.0, 3L))),
       src, Seq("k"), "pre", "part")
     IncrementalView.refresh(spark, vw)
     assert(viewState(vw) === recompute(src))
@@ -96,7 +96,7 @@ class IncrementalViewSpec extends SparkSpec {
 
   test("a refresh with nothing new writes nothing") {
     val (src, vw) = mkSrc()
-    Merge.upsertVersioned(spark, srcBatch(Seq((1L, "a", 10.0, 1L))),
+    Merge.upsert(spark, srcBatch(Seq((1L, "a", 10.0, 1L))),
       src, Seq("k"), "pre", "part")
     IncrementalView.create(spark, src, vw, Seq("k", "part"),
       Seq("part", "bucket"), "v", "part")
@@ -109,11 +109,11 @@ class IncrementalViewSpec extends SparkSpec {
 
   test("the cursor rides the view commit: a done refresh never re-applies") {
     val (src, vw) = mkSrc()
-    Merge.upsertVersioned(spark, srcBatch(Seq((1L, "a", 10.0, 1L))),
+    Merge.upsert(spark, srcBatch(Seq((1L, "a", 10.0, 1L))),
       src, Seq("k"), "pre", "part")
     IncrementalView.create(spark, src, vw, Seq("k", "part"),
       Seq("part", "bucket"), "v", "part")
-    Merge.upsertVersioned(spark, srcBatch(Seq((2L, "a", 5.0, 2L))),
+    Merge.upsert(spark, srcBatch(Seq((2L, "a", 5.0, 2L))),
       src, Seq("k"), "pre", "part")
     IncrementalView.refresh(spark, vw)
     val after = viewState(vw)
@@ -125,9 +125,9 @@ class IncrementalViewSpec extends SparkSpec {
 
   test("a rolled-back source refuses refresh with a clear error") {
     val (src, vw) = mkSrc()
-    Merge.upsertVersioned(spark, srcBatch(Seq((1L, "a", 10.0, 1L))),
+    Merge.upsert(spark, srcBatch(Seq((1L, "a", 10.0, 1L))),
       src, Seq("k"), "pre", "part")
-    Merge.upsertVersioned(spark, srcBatch(Seq((2L, "a", 20.0, 2L))),
+    Merge.upsert(spark, srcBatch(Seq((2L, "a", 20.0, 2L))),
       src, Seq("k"), "pre", "part")
     IncrementalView.create(spark, src, vw, Seq("k", "part"),
       Seq("part", "bucket"), "v", "part")
@@ -140,9 +140,9 @@ class IncrementalViewSpec extends SparkSpec {
   test("a view created over an empty source refuses refresh with a " +
       "clear cursor diagnostic (not an opaque null unboxing)") {
     val (src, vw) = mkSrc()
-    Merge.upsertVersioned(spark, srcBatch(Seq((1L, "a", 10.0, 1L))),
+    Merge.upsert(spark, srcBatch(Seq((1L, "a", 10.0, 1L))),
       src, Seq("k"), "pre", "part")
-    Merge.deleteVersioned(spark, Seq((1L, "a")).toDF("k", "part"),
+    Merge.delete(spark, Seq((1L, "a")).toDF("k", "part"),
       src, Seq("k"), Seq("part"))
     IncrementalView.create(spark, src, vw, Seq("k", "part"),
       Seq("part", "bucket"), "v", "part")

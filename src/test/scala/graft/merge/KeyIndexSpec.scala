@@ -131,7 +131,7 @@ class KeyIndexSpec extends SparkSpec {
     Merge.delete(spark, Seq((5L, "a"), (45L, "a")).toDF("k", "part"),
       path, keyCols, "part")
     assert(liveIndexed(path) === listing(path))
-    Merge.compact(spark, path, "part", keyCols, targetFileBytes = 1L << 26)
+    Merge.compact(spark, path, Seq("part"), keyCols, targetFileBytes = 1L << 26)
     assert(liveIndexed(path) === listing(path))
     // compact folds the entry log to (at most) one snapshot file
     val idxFiles = new java.io.File(s"$path/_graft_index").listFiles()
@@ -189,9 +189,9 @@ class KeyIndexSpec extends SparkSpec {
 
   test("rollback drops the crashed commit's index entry") {
     val path = probed("kix_rb")
-    Merge.upsertVersioned(spark, rows(0 until 30, "a"), path, keyCols,
+    Merge.upsert(spark, rows(0 until 30, "a"), path, keyCols,
       "v", "part")
-    Merge.upsertVersioned(spark, rows(30 until 60, "a"), path, keyCols,
+    Merge.upsert(spark, rows(30 until 60, "a"), path, keyCols,
       "v", "part")
     val before = liveIndexed(path)
     assert(before === listing(path))
@@ -253,7 +253,7 @@ class KeyIndexSpec extends SparkSpec {
     // a rewrite (superseded files) and a pure insert (a second file)
     Merge.upsert(spark, rows(20 until 60, "a"), path, keyCols, "v", "part")
     Merge.upsert(spark, rows(100 until 120, "a"), path, keyCols, "v", "part")
-    assert(Merge.compact(spark, path, "part", keyCols,
+    assert(Merge.compact(spark, path, Seq("part"), keyCols,
       targetFileBytes = 1L << 26) > 0)
     assert(TableState.load(spark, path).keySpec.nonEmpty)
     assert(!new java.io.File(s"$path/_graft_index").exists(),

@@ -153,7 +153,8 @@ class KeyedWriteSpec extends SparkSpec {
       }
       assert(jobs <= 4, s"four empty writes ran $jobs jobs ($partitionCols)")
       assert(listing === before, s"an empty write touched files ($partitionCols)")
-      assert(Merge.commits(spark, path).count() === 0)
+      // the set-up upsert's commit only
+      assert(Merge.commits(spark, path).count() === 1)
       assert(Merge.readTable(spark, path).count() === 8)
     }
   }
@@ -195,7 +196,7 @@ class KeyedWriteSpec extends SparkSpec {
     val path = tmpDir("keyed_typed_")
     val at = "2024-01-01 10:30:00"
     // stored: a long key and a string partition
-    Merge.upsertVersioned(spark, Seq((1L, at, 1.0), (2L, at, 2.0))
+    Merge.upsert(spark, Seq((1L, at, 1.0), (2L, at, 2.0))
       .toDF("k", "d", "v"), path, Seq("k"), "v", Seq("d"))
     // the batch: an int key and the same partition as a timestamp
     def batch(k: Int, v: Double): DataFrame =
@@ -203,11 +204,11 @@ class KeyedWriteSpec extends SparkSpec {
     def stored: Seq[(Long, String, Double)] = Merge.readTable(spark, path)
       .select("k", "d", "v").as[(Long, String, Double)].collect().toSeq
       .sortBy(_._1)
-    val jobs = jobsOf(Merge.upsertVersioned(spark, batch(1, 10.0), path,
+    val jobs = jobsOf(Merge.upsert(spark, batch(1, 10.0), path,
       Seq("k"), "v", Seq("d")))
     assert(jobs <= 3, s"a one-row retyped upsert ran $jobs jobs")
     assert(stored === Seq((1L, at, 10.0), (2L, at, 2.0)))
-    Merge.deleteVersioned(spark, batch(2, 0.0).select("k", "d"), path,
+    Merge.delete(spark, batch(2, 0.0).select("k", "d"), path,
       Seq("k"), Seq("d"))
     assert(stored === Seq((1L, at, 10.0)))
     // a keyed write records its partitions as the batch's values render

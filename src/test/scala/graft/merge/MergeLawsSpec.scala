@@ -94,7 +94,7 @@ class MergeLawsSpec extends SparkSpec {
           p, keyCols, "price", "pair")
       }
       val before = readAll(p)
-      Merge.compact(spark, p, "pair", keyCols, targetFileBytes = Long.MaxValue)
+      Merge.compact(spark, p, Seq("pair"), keyCols, targetFileBytes = Long.MaxValue)
       assert(readAll(p) === before, s"seed=$i")
       // and a post-compaction upsert still reconciles correctly
       val rows = sample(400 + i)

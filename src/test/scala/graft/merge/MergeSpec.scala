@@ -183,21 +183,6 @@ class MergeSpec extends SparkSpec {
     assert(spark.read.parquet(path).count() === 2)
   }
 
-  test("plain upsert on a versioned table fails loudly instead of dropping _commit_ts") {
-    val path = tmpDir("mixmode")
-    Merge.upsertVersioned(spark, tx(("T1", "c1", "ADAGBP", 1.0)),
-      path, keyCols, "price", "pair")
-    val e = intercept[IllegalArgumentException] {
-      Merge.upsert(spark, tx(("T1", "c1", "ADAGBP", 2.0)),
-        path, keyCols, "price", "pair")
-    }
-    assert(e.getMessage.contains("_commit_ts"))
-    // and the versioned path still works
-    Merge.upsertVersioned(spark, tx(("T1", "c1", "ADAGBP", 2.0)),
-      path, keyCols, "price", "pair")
-    assert(readTable(path) === Seq(("T1", "c1", "ADAGBP", 2.0)))
-  }
-
   test("null partition values: upsert keeps stored rows, delete removes one key") {
     val path = tmpDir("nullpart")
     val withNull = Seq(
@@ -239,9 +224,9 @@ class MergeSpec extends SparkSpec {
 
   test("commit timeline: readSince returns only later-commit records") {
     val path = tmpDir("timeline")
-    val c1 = Merge.upsertVersioned(spark, tx(("T1", "c1", "ADAGBP", 1.0),
+    val c1 = Merge.upsert(spark, tx(("T1", "c1", "ADAGBP", 1.0),
       ("T2", "c2", "ADAGBP", 2.0)), path, keyCols, "price", "pair")
-    val c2 = Merge.upsertVersioned(spark, tx(("T1", "c1", "ADAGBP", 9.0),
+    val c2 = Merge.upsert(spark, tx(("T1", "c1", "ADAGBP", 9.0),
       ("T3", "c3", "BTCUSD", 3.0)), path, keyCols, "price", "pair")
     assert(c2 === c1 + 1)
     // incremental pull after c1: T1 (rewritten by c2) and T3 (new),
@@ -252,7 +237,7 @@ class MergeSpec extends SparkSpec {
     // full pull from the epoch sees everything
     assert(Merge.readSince(spark, path, 0L).count() === 3)
     // a third upsert keeps the timeline monotonic
-    val c3 = Merge.upsertVersioned(spark, tx(("T2", "c2", "ADAGBP", 5.0)),
+    val c3 = Merge.upsert(spark, tx(("T2", "c2", "ADAGBP", 5.0)),
       path, keyCols, "price", "pair")
     assert(c3 === c2 + 1)
     assert(Merge.readSince(spark, path, c2)
@@ -348,17 +333,19 @@ class MergeSpec extends SparkSpec {
 
   test("timeline stays monotonic when a delete removes the latest commit's rows") {
     val path = tmpDir("monotimeline")
-    val c1 = Merge.upsertVersioned(spark, tx(("T1", "c1", "ADAGBP", 1.0)),
+    val c1 = Merge.upsert(spark, tx(("T1", "c1", "ADAGBP", 1.0)),
       path, keyCols, "price", "pair")
-    val c2 = Merge.upsertVersioned(spark, tx(("T2", "c2", "ADAGBP", 2.0)),
+    val c2 = Merge.upsert(spark, tx(("T2", "c2", "ADAGBP", 2.0)),
       path, keyCols, "price", "pair")
     // remove EVERY row stamped with c2 — a data-derived max would now
     // reuse c2 and an incremental consumer would miss the reused commit
-    Merge.delete(spark, tx(("T2", "c2", "ADAGBP", 0.0)),
+    val cd = Merge.delete(spark, tx(("T2", "c2", "ADAGBP", 0.0)),
       path, keyCols, "pair")
-    val c3 = Merge.upsertVersioned(spark, tx(("T3", "c3", "ADAGBP", 3.0)),
+    val c3 = Merge.upsert(spark, tx(("T3", "c3", "ADAGBP", 3.0)),
       path, keyCols, "price", "pair")
-    assert(c3 === c2 + 1)
+    // the delete is a commit of its own: it takes the next id
+    assert(cd === c2 + 1)
+    assert(c3 === c2 + 2)
     assert(Merge.readSince(spark, path, c2)
       .select("transaction_id").as[String].collect().toSeq === Seq("T3"))
     assert(c1 === 1L)
@@ -366,11 +353,11 @@ class MergeSpec extends SparkSpec {
 
   test("commits() enumerates the timeline; readBetween pulls a commit range") {
     val path = tmpDir("commitlist")
-    Merge.upsertVersioned(spark, tx(("T1", "c1", "ADAGBP", 1.0),
+    Merge.upsert(spark, tx(("T1", "c1", "ADAGBP", 1.0),
       ("T2", "c2", "BTCUSD", 2.0)), path, keyCols, "price", "pair")
-    Merge.upsertVersioned(spark, tx(("T1", "c1", "ADAGBP", 9.0)),
+    Merge.upsert(spark, tx(("T1", "c1", "ADAGBP", 9.0)),
       path, keyCols, "price", "pair")
-    Merge.upsertVersioned(spark, tx(("T3", "c3", "BTCUSD", 3.0)),
+    Merge.upsert(spark, tx(("T3", "c3", "BTCUSD", 3.0)),
       path, keyCols, "price", "pair")
     val listed = Merge.commits(spark, path).orderBy("commit_ts")
       .as[(Long, Long, String)].collect().toSeq
@@ -422,7 +409,7 @@ class MergeSpec extends SparkSpec {
 
   test("corrupt schema metadata degrades to footer merge without narrowing") {
     val path = tmpDir("schemacorrupt") + "/table"
-    Merge.upsertVersioned(spark, tx(("T1", "c1", "ADAGBP", 1.0)),
+    Merge.upsert(spark, tx(("T1", "c1", "ADAGBP", 1.0)),
       path, keyCols, "price", "pair")
     // corrupt the recorded schema, then write a batch WITHOUT _commit_ts
     // through the schema-recording insert path
@@ -463,7 +450,7 @@ class MergeSpec extends SparkSpec {
 
   test("vacuum removes leaked staging siblings, keeps the table and inflight markers") {
     val path = tmpDir("vacuum") + "/table"
-    Merge.upsertVersioned(spark, tx(("T1", "c1", "ADAGBP", 1.0)),
+    Merge.upsert(spark, tx(("T1", "c1", "ADAGBP", 1.0)),
       path, keyCols, "price", "pair")
     // simulate a failed commit's leftovers: a staging sibling and a
     // crashed commit's inflight marker
@@ -475,7 +462,7 @@ class MergeSpec extends SparkSpec {
     assert(!new java.io.File(s"${path}_staging_123").exists())
     assert(inflight.exists()) // the reissue guard survives
     // the skipped id is visible: next commit is 3, not 2
-    val c = Merge.upsertVersioned(spark, tx(("T2", "c2", "ADAGBP", 2.0)),
+    val c = Merge.upsert(spark, tx(("T2", "c2", "ADAGBP", 2.0)),
       path, keyCols, "price", "pair")
     assert(c === 3L)
     assert(readTable(path).size === 2)
@@ -486,11 +473,11 @@ class MergeSpec extends SparkSpec {
     // six single-row versioned upserts with distinct keys → one file per
     // append in pair=ADAGBP (the streaming micro-batch degradation)
     val commits = (1 to 6).map { i =>
-      Merge.upsertVersioned(spark, tx((s"T$i", s"c$i", "ADAGBP", i.toDouble)),
+      Merge.upsert(spark, tx((s"T$i", s"c$i", "ADAGBP", i.toDouble)),
         path, keyCols, "price", "pair")
     }
     // plus an already-compact partition that must not be touched
-    Merge.upsertVersioned(spark, tx(("TX", "cx", "BTCUSD", 9.0)),
+    Merge.upsert(spark, tx(("TX", "cx", "BTCUSD", 9.0)),
       path, keyCols, "price", "pair")
     val adaBefore = parquetFiles(s"$path/pair=ADAGBP")
     val btcBefore = parquetFiles(s"$path/pair=BTCUSD")
@@ -499,7 +486,7 @@ class MergeSpec extends SparkSpec {
       .select("transaction_id", "price", Merge.commitCol)
       .as[(String, Double, Long)].collect().toSet
     Thread.sleep(20)
-    val n = Merge.compact(spark, path, "pair", keyCols)
+    val n = Merge.compact(spark, path, Seq("pair"), keyCols)
     assert(n === 6L) // only the fragmented partition's files
     assert(parquetFiles(s"$path/pair=ADAGBP").size === 1)
     assert(parquetFiles(s"$path/pair=BTCUSD") === btcBefore) // untouched
@@ -511,7 +498,7 @@ class MergeSpec extends SparkSpec {
     assert(Merge.readSince(spark, path, commits(4))
       .select("transaction_id").as[String].collect().toSet === Set("T6", "TX"))
     // idempotent: a second pass finds nothing to do
-    assert(Merge.compact(spark, path, "pair", keyCols) === 0L)
+    assert(Merge.compact(spark, path, Seq("pair"), keyCols) === 0L)
   }
 
   test("bulkInsert respects target file size at both extremes") {
@@ -569,9 +556,9 @@ class MergeSpec extends SparkSpec {
 
   test("rollback restores byte-identical state after a mid-publish crash") {
     val path = tmpDir("rollcrash") + "/table"
-    Merge.upsertVersioned(spark, tx(("T1", "c1", "ADAGBP", 1.0),
+    Merge.upsert(spark, tx(("T1", "c1", "ADAGBP", 1.0),
       ("T2", "c2", "BTCUSD", 2.0)), path, keyCols, "price", "pair")
-    Merge.upsertVersioned(spark, tx(("T3", "c3", "ADAGBP", 3.0)),
+    Merge.upsert(spark, tx(("T3", "c3", "ADAGBP", 3.0)),
       path, keyCols, "price", "pair")
     val snapshot = tableState(path)
     // simulate commit 3 crashing between RETIRE and the end of PUBLISH,
@@ -611,13 +598,13 @@ class MergeSpec extends SparkSpec {
     // the timeline never saw commit 3, and its id is never reissued
     assert(Merge.commits(spark, path).select("commit_ts")
       .as[Long].collect().toSeq.sorted === Seq(1L, 2L))
-    assert(Merge.upsertVersioned(spark, tx(("T4", "c4", "ADAGBP", 4.0)),
+    assert(Merge.upsert(spark, tx(("T4", "c4", "ADAGBP", 4.0)),
       path, keyCols, "price", "pair") === 4L)
   }
 
   test("rollback refuses a recorded commit, tombstones a claim-only crash") {
     val path = tmpDir("rollguard")
-    Merge.upsertVersioned(spark, tx(("T1", "c1", "ADAGBP", 1.0)),
+    Merge.upsert(spark, tx(("T1", "c1", "ADAGBP", 1.0)),
       path, keyCols, "price", "pair")
     val e = intercept[IllegalStateException](Merge.rollback(spark, path, 1L))
     assert(e.getMessage.contains("RECORDED"))
@@ -629,13 +616,13 @@ class MergeSpec extends SparkSpec {
     Merge.rollback(spark, path, 2L)
     assert(tableState(path) === before)
     assert(commitsFile(path, "00000000000000000002.rolledback").exists())
-    assert(Merge.upsertVersioned(spark, tx(("T2", "c2", "ADAGBP", 2.0)),
+    assert(Merge.upsert(spark, tx(("T2", "c2", "ADAGBP", 2.0)),
       path, keyCols, "price", "pair") === 3L)
   }
 
   test("rollback names the manual remedy when the plan is unreadable") {
     val path = tmpDir("rollcorrupt")
-    Merge.upsertVersioned(spark, tx(("T1", "c1", "ADAGBP", 1.0)),
+    Merge.upsert(spark, tx(("T1", "c1", "ADAGBP", 1.0)),
       path, keyCols, "price", "pair")
     assert(Timeline.claim(spark, path) === 2L)
     java.nio.file.Files.writeString(
@@ -677,7 +664,7 @@ class MergeSpec extends SparkSpec {
 
   test("claimFrom advances past issued ids instead of aborting") {
     val path = tmpDir("claimrace")
-    Merge.upsertVersioned(spark, tx(("T1", "c1", "ADAGBP", 1.0)),
+    Merge.upsert(spark, tx(("T1", "c1", "ADAGBP", 1.0)),
       path, keyCols, "price", "pair")
     // another writer claimed 2 (marker) and a third's 3 was rolled back
     // (tombstone only — the exact shape of a completed claim cleanup)
@@ -697,13 +684,13 @@ class MergeSpec extends SparkSpec {
     def mtx(rows: (String, String, String, String, Double)*): DataFrame =
       rows.toDF("transaction_id", "close_time", "day", "pair", "price")
     val parts = Seq("day", "pair")
-    val c1 = Merge.upsertVersioned(spark, mtx(
+    val c1 = Merge.upsert(spark, mtx(
       ("T1", "c1", "2024-01-01", "ADAGBP", 1.0),
       ("T2", "c2", "2024-01-01", "BTCUSD", 2.0),
       ("T3", "c3", "2024-01-02", "ADAGBP", 3.0)), path, keyCols, "price", parts)
     // replace T1 in ITS (day, pair) leaf; same key in another day is a
     // different record and must survive untouched
-    val c2 = Merge.upsertVersioned(spark, mtx(
+    val c2 = Merge.upsert(spark, mtx(
       ("T1", "c1", "2024-01-01", "ADAGBP", 9.0),
       ("T1", "c1", "2024-01-02", "ADAGBP", 8.0)), path, keyCols, "price", parts)
     assert(c2 === c1 + 1)
@@ -722,7 +709,7 @@ class MergeSpec extends SparkSpec {
     assert(new java.io.File(s"$path/day=2024-01-01").exists())
     // fragment one leaf with single-row upserts, then compact only it
     (4 to 8).foreach { i =>
-      Merge.upsertVersioned(spark, mtx(
+      Merge.upsert(spark, mtx(
         (s"T$i", s"c$i", "2024-01-02", "ADAGBP", i.toDouble)),
         path, keyCols, "price", parts)
     }
@@ -760,14 +747,14 @@ class MergeSpec extends SparkSpec {
     // husk would make the next write see an "existing" zero-file table
     // and die on schema inference
     assert(!new java.io.File(s"$path/pair=ADAGBP").exists())
-    assert(Merge.upsertVersioned(spark, tx(("T1", "c1", "ADAGBP", 1.0)),
+    assert(Merge.upsert(spark, tx(("T1", "c1", "ADAGBP", 1.0)),
       path, keyCols, "price", "pair") === 2L)
     assert(readTable(path) === Seq(("T1", "c1", "ADAGBP", 1.0)))
   }
 
   test("rollback honors the legacy plan-in-marker-body format") {
     val path = tmpDir("rolllegacy")
-    Merge.upsertVersioned(spark, tx(("T1", "c1", "ADAGBP", 1.0)),
+    Merge.upsert(spark, tx(("T1", "c1", "ADAGBP", 1.0)),
       path, keyCols, "price", "pair")
     val snapshot = tableState(path)
     // an old-engine crashed commit: the plan JSON is the MARKER body
@@ -797,7 +784,7 @@ class MergeSpec extends SparkSpec {
 
   test("concurrent disjoint versioned upserts both land with distinct ids") {
     val path = tmpDir("occ") + "/table"
-    Merge.upsertVersioned(spark, tx(("T0", "c0", "SEED", 0.5)), path,
+    Merge.upsert(spark, tx(("T0", "c0", "SEED", 0.5)), path,
       keyCols, "price", "pair")
     // two writers racing on DISJOINT partitions: the exclusive-create
     // claim serializes id allocation (the loser's failed create walks
@@ -810,9 +797,9 @@ class MergeSpec extends SparkSpec {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
-    val fa = Future(Merge.upsertVersioned(spark,
+    val fa = Future(Merge.upsert(spark,
       tx(("TA", "c1", "ADAGBP", 1.0)), path, keyCols, "price", "pair"))
-    val fb = Future(Merge.upsertVersioned(spark,
+    val fb = Future(Merge.upsert(spark,
       tx(("TB", "c1", "BTCUSD", 2.0)), path, keyCols, "price", "pair"))
     val ca = Await.result(fa, 180.seconds)
     val cb = Await.result(fb, 180.seconds)
@@ -856,7 +843,7 @@ class MergeSpec extends SparkSpec {
       Merge.commitFiles(spark, TableState.load(spark, path),
         tx(("T1", "c1", "ADAGBP", 2.0)), Seq("pair"),
         supersededFiles = Seq(ghost), touched = Nil,
-        dropEmptied = false)
+        dropEmptied = false, cts = Timeline.claim(spark, path))
     }
     // fails BEFORE any replacement lands, keeps the staged copy, and
     // names the contract being violated
@@ -906,10 +893,10 @@ class MergeSpec extends SparkSpec {
 
   test("clusterZOrder keeps commit stamps (incremental pulls invariant)") {
     val path = tmpDir("zstamps")
-    val c1 = Merge.upsertVersioned(spark,
+    val c1 = Merge.upsert(spark,
       tx(("T1", "c1", "ADAGBP", 1.0), ("T2", "c2", "ADAGBP", 2.0)),
       path, keyCols, "price", "pair")
-    Merge.upsertVersioned(spark, tx(("T3", "c3", "BTCUSD", 3.0)),
+    Merge.upsert(spark, tx(("T3", "c3", "BTCUSD", 3.0)),
       path, keyCols, "price", "pair")
     val before = Merge.readTable(spark, path)
       .select("transaction_id", "price", Merge.commitCol)
@@ -925,7 +912,7 @@ class MergeSpec extends SparkSpec {
 
   test("commits() ignores markers, plans, tombstones and foreign junk") {
     val path = tmpDir("cleantimeline")
-    Merge.upsertVersioned(spark, tx(("T1", "c1", "ADAGBP", 1.0)),
+    Merge.upsert(spark, tx(("T1", "c1", "ADAGBP", 1.0)),
       path, keyCols, "price", "pair")
     // a crashed versioned commit's full residue (its plan carries a
     // commit_ts and would otherwise surface as a phantom row), plus a

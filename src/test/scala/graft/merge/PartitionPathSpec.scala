@@ -104,7 +104,7 @@ class PartitionPathSpec extends SparkSpec {
     val delete = jobsOf(MorTable.delete(spark, gone, mor))
     val compact = jobsOf(MorTable.compact(spark, mor))
     val cow = tmpDir("partition_cow_")
-    val cowFirst = jobsOf(Merge.upsertVersioned(spark, both, cow, keyCols,
+    val cowFirst = jobsOf(Merge.upsert(spark, both, cow, keyCols,
       "v", partCols))
     val plain = tmpDir("partition_boot_")
     both.write.mode("overwrite").partitionBy(partCols: _*).parquet(plain)

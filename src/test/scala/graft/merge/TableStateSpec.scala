@@ -24,7 +24,7 @@ class TableStateSpec extends SparkSpec {
     ks.map(k => (k.toLong, part, k.toLong * 7 % 13, s"v$k"))
       .toDF("k", "part", "n", "v")
 
-  /** Three plain commits of disjoint keys: partition a holds several
+  /** Three commits of disjoint keys: partition a holds several
     * small files (so compaction has work) and every COW sidecar exists. */
   private def cowTable(path: String): Unit = {
     Seq(0 until 20, 100 until 120, 200 until 220).foreach { ks =>
@@ -94,7 +94,9 @@ class TableStateSpec extends SparkSpec {
     val recorded = Merge.updateSchemaMeta(spark, stale,
       StructType(stale.schema.get.fields :+ StructField("y", LongType)))
     val onDisk = TableState.load(spark, path).schema.get.fieldNames.toSeq
-    assert(onDisk === Seq("k", "part", "n", "v", "x", "y"))
+    // every write stamps its rows: the first one recorded the stamp
+    // after the batch's own columns, before x and y
+    assert(onDisk === Seq("k", "part", "n", "v", Merge.commitCol, "x", "y"))
     assert(recorded.schema.get.fieldNames.toSeq === onDisk)
   }
 
@@ -121,7 +123,7 @@ class TableStateSpec extends SparkSpec {
     assert(c.hasData && c.mor.isEmpty)
     assert(c.keySpec === Some(KeySpec(keyCols, parts)))
     assert(c.schema.map(_.fieldNames.toSeq) ===
-      Some(Seq("k", "part", "n", "v")))
+      Some(Seq("k", "part", "n", "v", Merge.commitCol)))
     val mor = FaultFs.tmpDir("tablestate_mor_") + "/table"
     morTable(mor)
     val m = TableState.load(spark, mor)

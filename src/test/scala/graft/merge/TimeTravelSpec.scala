@@ -5,8 +5,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Time travel (`readAsOf` — Hudi 0.10's `as.of.instant` analogue),
-  * history retention + [[Merge.clean]], history voiding by unversioned
-  * mutations, versioned delete as a timeline event, and ordered-payload
+  * history retention + [[Merge.clean]], delete as a timeline event,
+  * and ordered-payload
   * upsert (`DefaultHoodieRecordPayload` semantics). */
 class TimeTravelSpec extends SparkSpec {
   import spark.implicits._
@@ -24,12 +24,12 @@ class TimeTravelSpec extends SparkSpec {
   /** A three-commit versioned table: T1 written at c1, overwritten at
     * c2; T2 added at c2; T3 added at c3 in another partition. */
   private def build3(path: String): (Long, Long, Long) = {
-    val c1 = Merge.upsertVersioned(spark, tx(("T1", "c1", "ADAGBP", 1.0)),
+    val c1 = Merge.upsert(spark, tx(("T1", "c1", "ADAGBP", 1.0)),
       path, keyCols, "price", "pair")
-    val c2 = Merge.upsertVersioned(spark,
+    val c2 = Merge.upsert(spark,
       tx(("T1", "c1", "ADAGBP", 2.0), ("T2", "c2", "ADAGBP", 3.0)),
       path, keyCols, "price", "pair")
-    val c3 = Merge.upsertVersioned(spark, tx(("T3", "c3", "BTCUSD", 4.0)),
+    val c3 = Merge.upsert(spark, tx(("T3", "c3", "BTCUSD", 4.0)),
       path, keyCols, "price", "pair")
     (c1, c2, c3)
   }
@@ -105,7 +105,7 @@ class TimeTravelSpec extends SparkSpec {
   test("readAsOf sees through a versioned delete") {
     val path = tmpDir("ttdel") + "/table"
     val (_, c2, _) = build3(path)
-    Merge.deleteVersioned(spark, Seq(("T1", "c1", "ADAGBP")).toDF(
+    Merge.delete(spark, Seq(("T1", "c1", "ADAGBP")).toDF(
       "transaction_id", "close_time", "pair"),
       path, keyCols, Seq("pair"))
     // current state lost T1; the pre-delete snapshot still has it
@@ -116,13 +116,13 @@ class TimeTravelSpec extends SparkSpec {
 
   test("readChanges classifies inserts/updates/deletes; carried rows never leak") {
     val path = tmpDir("cdc") + "/table"
-    val c1 = Merge.upsertVersioned(spark,
+    val c1 = Merge.upsert(spark,
       tx(("T0", "c0", "ADAGBP", 0.5), ("T1", "c1", "ADAGBP", 1.0)),
       path, keyCols, "price", "pair")
-    Merge.upsertVersioned(spark,
+    Merge.upsert(spark,
       tx(("T1", "c1", "ADAGBP", 2.0), ("T2", "c2", "ADAGBP", 3.0)),
       path, keyCols, "price", "pair")
-    val c3 = Merge.deleteVersioned(spark,
+    val c3 = Merge.delete(spark,
       Seq(("T0", "c0", "ADAGBP")).toDF("transaction_id", "close_time", "pair"),
       path, keyCols, Seq("pair"))
     val fullKey = keyCols :+ "pair"
@@ -145,11 +145,11 @@ class TimeTravelSpec extends SparkSpec {
 
   test("versioned insertOverwrite composes with time travel, CDC, restore") {
     val path = tmpDir("iowv") + "/table"
-    val c1 = Merge.upsertVersioned(spark,
+    val c1 = Merge.upsert(spark,
       tx(("T1", "c1", "ADAGBP", 1.0), ("T2", "c1", "ADAGBP", 2.0),
         ("T3", "c1", "BTCUSD", 3.0)),
       path, keyCols, "price", "pair")
-    val c2 = Merge.insertOverwriteVersioned(spark,
+    val c2 = Merge.insertOverwrite(spark,
       tx(("T1", "c1", "ADAGBP", 5.0), ("T4", "c4", "ADAGBP", 4.0)),
       path, keyCols, "price", Seq("pair"))
     // current state: the replace landed, BTCUSD untouched
@@ -186,7 +186,7 @@ class TimeTravelSpec extends SparkSpec {
     // adopting again, or adopting a timeline'd table, refuses
     intercept[IllegalArgumentException](
       Merge.bootstrap(spark, path, Seq("pair")))
-    val c2 = Merge.upsertVersioned(spark, tx(("T1", "c1", "ADAGBP", 9.0)),
+    val c2 = Merge.upsert(spark, tx(("T1", "c1", "ADAGBP", 9.0)),
       path, keyCols, "price", "pair")
     assert(snap(Merge.readTable(spark, path)) === Seq(
       ("T1", "c1", "ADAGBP", 9.0), ("T2", "c1", "BTCUSD", 2.0)))
@@ -205,14 +205,14 @@ class TimeTravelSpec extends SparkSpec {
 
   test("readChanges × ordered payload: a losing batch row emits NO change") {
     val path = tmpDir("cdcord") + "/table"
-    val c1 = Merge.upsertOrderedVersioned(spark,
+    val c1 = Merge.upsertOrdered(spark,
       tx(("T1", "c1", "ADAGBP", 9.0), ("T2", "c1", "ADAGBP", 1.0)),
       path, keyCols, "price", Seq("pair"))
     // T1's update LOSES on precombine (5.0 < 9.0): its file group is
     // rewritten but the stored row — and stamp — carry through, so CDC
     // must see only T2's win; a naive rewrote-therefore-changed CDC
     // would fabricate a phantom T1 update
-    val c2 = Merge.upsertOrderedVersioned(spark,
+    val c2 = Merge.upsertOrdered(spark,
       tx(("T1", "c1", "ADAGBP", 5.0), ("T2", "c1", "ADAGBP", 7.0)),
       path, keyCols, "price", Seq("pair"))
     val ch = Merge.readChanges(spark, path, c1, c2, keyCols :+ "pair")
@@ -224,10 +224,10 @@ class TimeTravelSpec extends SparkSpec {
 
   test("readChanges across additive evolution: pre-images null-fill") {
     val path = tmpDir("cdcevo") + "/table"
-    val c1 = Merge.upsertVersioned(spark, tx(("T1", "c1", "ADAGBP", 1.0)),
+    val c1 = Merge.upsert(spark, tx(("T1", "c1", "ADAGBP", 1.0)),
       path, keyCols, "price", "pair")
     // commit 2's batch carries a column commit 1 never had
-    val c2 = Merge.upsertVersioned(spark,
+    val c2 = Merge.upsert(spark,
       Seq(("T1", "c1", "ADAGBP", 2.0, "b2")).toDF(
         "transaction_id", "close_time", "pair", "price", "src"),
       path, keyCols, "price", "pair")
@@ -254,10 +254,9 @@ class TimeTravelSpec extends SparkSpec {
   test("readChanges refuses once history is voided or cleaned past the range") {
     val path = tmpDir("cdcvoid") + "/table"
     val (c1, _, c3) = build3(path)
-    // an unversioned (timeline-silent) delete voids history → the
-    // pre-images readChanges needs are gone
-    Merge.delete(spark, Seq(("T1", "c1", "ADAGBP")).toDF(
-      "transaction_id", "close_time", "pair"), path, keyCols, Seq("pair"))
+    // cleaning to the last commit sweeps the pre-images readChanges
+    // needs for (c1, c3]
+    Merge.clean(spark, path, retainLast = 1)
     val e = intercept[IllegalStateException](
       Merge.readChanges(spark, path, c1, c3, keyCols :+ "pair"))
     assert(e.getMessage.contains("history floor"))
@@ -266,7 +265,7 @@ class TimeTravelSpec extends SparkSpec {
   test("deleteVersioned is a timeline event that owns no rows") {
     val path = tmpDir("ttdelc") + "/table"
     build3(path)
-    val cd = Merge.deleteVersioned(spark, Seq(("T2", "c2", "ADAGBP")).toDF(
+    val cd = Merge.delete(spark, Seq(("T2", "c2", "ADAGBP")).toDF(
       "transaction_id", "close_time", "pair"),
       path, keyCols, Seq("pair"))
     val row = Merge.commits(spark, path)
@@ -316,54 +315,13 @@ class TimeTravelSpec extends SparkSpec {
       Merge.savepoint(spark, path, c3 + 10))
   }
 
-  test("a void sweeps savepoint markers too (no standing lies)") {
-    val path = tmpDir("ttspvoid") + "/table"
-    val (c1, _, _) = build3(path)
-    Merge.savepoint(spark, path, c1)
-    Merge.delete(spark, Seq(("T1", "c1", "ADAGBP")).toDF(
-      "transaction_id", "close_time", "pair"), path, keyCols, Seq("pair"))
-    assert(Merge.savepoints(spark, path).isEmpty,
-      "a pin below the voided floor would be a standing lie")
-  }
-
-  test("unversioned mutations void history instead of lying") {
-    val path = tmpDir("ttvoid") + "/table"
-    val (_, c2, c3) = build3(path)
-    // a plain (timeline-silent) delete moves files the timeline never
-    // recorded — afterwards NO recorded commit describes the table, so
-    // every as-of read refuses until a versioned commit re-anchors it
-    Merge.delete(spark, Seq(("T1", "c1", "ADAGBP")).toDF(
-      "transaction_id", "close_time", "pair"), path, keyCols, Seq("pair"))
-    assert(Merge.historyFloor(spark, path) === c3 + 1)
-    val e = intercept[IllegalStateException](Merge.readAsOf(spark, path, c2))
-    assert(e.getMessage.contains("history floor"))
-    intercept[IllegalStateException](Merge.readAsOf(spark, path, c3))
-    // the next versioned commit re-anchors time travel
-    val c4 = Merge.upsertVersioned(spark, tx(("T4", "c4", "ADAGBP", 6.0)),
-      path, keyCols, "price", "pair")
-    assert(snap(Merge.readAsOf(spark, path, c4)) ===
-      snap(Merge.readTable(spark, path)))
-  }
-
-  test("compact voids history too (it rewrites unrecorded)") {
-    val path = tmpDir("ttcompact") + "/table"
-    val (_, c2, _) = build3(path)
-    // a second ADAGBP file group, so the partition is genuinely
-    // over-filed and compact has something to rewrite
-    val c4 = Merge.upsertVersioned(spark, tx(("T4", "c4", "ADAGBP", 6.0)),
-      path, keyCols, "price", "pair")
-    assert(Merge.compact(spark, path, "pair", keyCols) > 0L)
-    assert(Merge.historyFloor(spark, path) === c4 + 1)
-    intercept[IllegalStateException](Merge.readAsOf(spark, path, c2))
-  }
-
   test("q25 shape: travel past a versioned delete AND a later upsert") {
     val path = tmpDir("ttq25") + "/table"
     val (_, c2, _) = build3(path)
-    Merge.deleteVersioned(spark, Seq(("T2", "c2", "ADAGBP")).toDF(
+    Merge.delete(spark, Seq(("T2", "c2", "ADAGBP")).toDF(
       "transaction_id", "close_time", "pair"), path, keyCols, Seq("pair"))
     // commit 5 rewrites T1's file group again
-    Merge.upsertVersioned(spark, tx(("T1", "c1", "ADAGBP", 7.0)),
+    Merge.upsert(spark, tx(("T1", "c1", "ADAGBP", 7.0)),
       path, keyCols, "price", "pair")
     // as-of c2 must drop commit 5's rewrite (restoring its retired
     // predecessor) and restore the delete's victim
@@ -373,10 +331,10 @@ class TimeTravelSpec extends SparkSpec {
 
   test("readAsOf serves pre-evolution snapshots through the current schema") {
     val path = tmpDir("ttevo") + "/table"
-    val c1 = Merge.upsertVersioned(spark, tx(("T1", "c1", "ADAGBP", 1.0)),
+    val c1 = Merge.upsert(spark, tx(("T1", "c1", "ADAGBP", 1.0)),
       path, keyCols, "price", "pair")
     // commit 2 carries a column commit 1 never had (additive evolution)
-    Merge.upsertVersioned(spark,
+    Merge.upsert(spark,
       Seq(("T2", "c2", "ADAGBP", 2.0, "b2")).toDF(
         "transaction_id", "close_time", "pair", "price", "src"),
       path, keyCols, "price", "pair")
@@ -401,7 +359,7 @@ class TimeTravelSpec extends SparkSpec {
     assert(Merge.commits(spark, path).agg(max(col("commit_ts")))
       .head().getLong(0) === c2)
     // …but its id is tombstoned, never reissued
-    val c4 = Merge.upsertVersioned(spark, tx(("T9", "c9", "ADAGBP", 1.0)),
+    val c4 = Merge.upsert(spark, tx(("T9", "c9", "ADAGBP", 1.0)),
       path, keyCols, "price", "pair")
     assert(c4 === c3 + 1)
     // time travel within the surviving range still works
@@ -480,9 +438,9 @@ class TimeTravelSpec extends SparkSpec {
 
   test("upsertOrderedVersioned: a losing batch does not advance stamps") {
     val path = tmpDir("ordver") + "/table"
-    val c1 = Merge.upsertOrderedVersioned(spark,
+    val c1 = Merge.upsertOrdered(spark,
       tx(("T1", "c1", "ADAGBP", 9.0)), path, keyCols, "price", Seq("pair"))
-    Merge.upsertOrderedVersioned(spark,
+    Merge.upsertOrdered(spark,
       tx(("T1", "c1", "ADAGBP", 1.0)), path, keyCols, "price", Seq("pair"))
     // the stored row won, so its stamp is still c1 — the late batch's
     // commit owns nothing and incremental consumers correctly see no
@@ -507,7 +465,7 @@ class TimeTravelSpec extends SparkSpec {
     // c1→c3: T1's overwrite is an update, T2 and T3 are inserts
     assert(diffSet(path, c1, c3) ===
       Set(("T1", "update"), ("T2", "insert"), ("T3", "insert")))
-    val c4 = Merge.deleteVersioned(spark,
+    val c4 = Merge.delete(spark,
       tx(("T2", "c2", "ADAGBP", 0.0)).select("transaction_id",
         "close_time", "pair"), path, keyCols, Seq("pair"))
     assert(diffSet(path, c3, c4) === Set(("T2", "delete")))
@@ -515,12 +473,12 @@ class TimeTravelSpec extends SparkSpec {
 
   test("diffSnapshots is state-based: identical re-insert nets to nothing") {
     val path = tmpDir("diffnet") + "/table"
-    val c1 = Merge.upsertVersioned(spark, tx(("T1", "c1", "ADAGBP", 1.0),
+    val c1 = Merge.upsert(spark, tx(("T1", "c1", "ADAGBP", 1.0),
       ("T2", "c1", "ADAGBP", 2.0)), path, keyCols, "price", "pair")
-    Merge.deleteVersioned(spark,
+    Merge.delete(spark,
       tx(("T1", "c1", "ADAGBP", 0.0)).select("transaction_id",
         "close_time", "pair"), path, keyCols, Seq("pair"))
-    val c3 = Merge.upsertVersioned(spark, tx(("T1", "c1", "ADAGBP", 1.0)),
+    val c3 = Merge.upsert(spark, tx(("T1", "c1", "ADAGBP", 1.0)),
       path, keyCols, "price", "pair")
     // the CDC stream reports both events; the state diff reports none
     assert(Merge.readChanges(spark, path, c1, c3, diffKeys)
@@ -564,7 +522,7 @@ class TimeTravelSpec extends SparkSpec {
     }
     val before = snap(Merge.readTable(spark, path))
     val filesBefore = dataFiles()
-    val n = Merge.compactVersioned(spark, path, Seq("pair"), keyCols)
+    val n = Merge.compact(spark, path, Seq("pair"), keyCols)
     assert(n > 0 && dataFiles() < filesBefore, "no files were merged")
     // state identical; the service commit owns no rows anywhere
     assert(snap(Merge.readTable(spark, path)) === before)
@@ -586,32 +544,25 @@ class TimeTravelSpec extends SparkSpec {
   test("compactVersioned composes with restoreTo; refuses plain tables") {
     val path = tmpDir("cvr") + "/table"
     val (_, c2, _) = build3(path)
-    Merge.compactVersioned(spark, path, Seq("pair"), keyCols)
+    Merge.compact(spark, path, Seq("pair"), keyCols)
     // physical revert back across the compaction AND commit 3
     Merge.restoreTo(spark, path, c2)
     assert(snap(Merge.readTable(spark, path)) === Seq(
       ("T1", "c1", "ADAGBP", 2.0), ("T2", "c2", "ADAGBP", 3.0)))
-    val plain = tmpDir("cvp") + "/table"
-    Merge.upsert(spark, tx(("T1", "c1", "ADAGBP", 1.0)), plain,
-      keyCols, "price", "pair")
-    val e = intercept[IllegalArgumentException] {
-      Merge.compactVersioned(spark, plain, Seq("pair"), keyCols)
-    }
-    assert(e.getMessage.contains("use compact"))
   }
 
   test("clusterZOrderVersioned: a recorded no-row commit, history intact") {
     val path = tmpDir("zv") + "/table"
     def batch(ks: Range, v: Double): DataFrame =
       ks.map(k => (k.toLong, "p1", k.toDouble, v)).toDF("k", "part", "x", "y")
-    val c1 = Merge.upsertVersioned(spark, batch(0 until 20, 1.0), path,
+    val c1 = Merge.upsert(spark, batch(0 until 20, 1.0), path,
       Seq("k"), "y", "part")
-    val c2 = Merge.upsertVersioned(spark, batch(10 until 30, 2.0), path,
+    val c2 = Merge.upsert(spark, batch(10 until 30, 2.0), path,
       Seq("k"), "y", "part")
     def state(df: DataFrame): Set[(Long, Double, Double)] =
       df.select("k", "x", "y").as[(Long, Double, Double)].collect().toSet
     val before = state(Merge.readTable(spark, path))
-    val n = Merge.clusterZOrderVersioned(spark, path, Seq("part"),
+    val n = Merge.clusterZOrder(spark, path, Seq("part"),
       zCols = Seq("x", "y"))
     assert(n > 0)
     assert(state(Merge.readTable(spark, path)) === before)
@@ -623,9 +574,9 @@ class TimeTravelSpec extends SparkSpec {
 
   test("diffSnapshots across additive evolution reads new columns as updates") {
     val path = tmpDir("diffevo") + "/table"
-    val c1 = Merge.upsertVersioned(spark, tx(("T1", "c1", "ADAGBP", 1.0)),
+    val c1 = Merge.upsert(spark, tx(("T1", "c1", "ADAGBP", 1.0)),
       path, keyCols, "price", "pair")
-    val c2 = Merge.upsertVersioned(spark,
+    val c2 = Merge.upsert(spark,
       tx(("T1", "c1", "ADAGBP", 1.0)).withColumn("venue", lit("LSE")),
       path, keyCols, "price", "pair")
     // same price; the evolved column's value is the only change

@@ -21,7 +21,7 @@ class WapSpec extends SparkSpec {
 
   test("failed audit restores the exact pre-stage state and timeline") {
     val path = freshTable()
-    Merge.upsertVersioned(spark,
+    Merge.upsert(spark,
       Seq((1L, "a", 10.0, 1L), (2L, "a", 20.0, 1L))
         .toDF("k", "part", "v", "pre"),
       path, Seq("k"), "pre", Seq("part"))
@@ -50,7 +50,7 @@ class WapSpec extends SparkSpec {
 
   test("passing audit publishes; the table keeps accepting commits") {
     val path = freshTable()
-    Merge.upsertVersioned(spark,
+    Merge.upsert(spark,
       Seq((1L, "a", 10.0, 1L)).toDF("k", "part", "v", "pre"),
       path, Seq("k"), "pre", Seq("part"))
     val r1 = Wap.writeAuditPublish(spark,
@@ -76,7 +76,7 @@ class WapSpec extends SparkSpec {
     // fail — the error path must restore just like the rules-fail path,
     // or a poisoned batch becomes durable state.
     val path = freshTable()
-    Merge.upsertVersioned(spark,
+    Merge.upsert(spark,
       Seq((1L, "a", 10.0, 1L)).toDF("k", "part", "v", "pre"),
       path, Seq("k"), "pre", Seq("part"))
     val beforeRows = Merge.readTable(spark, path)

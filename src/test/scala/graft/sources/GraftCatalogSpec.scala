@@ -52,6 +52,28 @@ class GraftCatalogSpec extends SparkSpec {
       Row(3L, 30.0, "a")))
   }
 
+  test("op 'upsert_ordered': a late row with a lower precombine does not " +
+      "regress its key, and each write records a commit") {
+    warehouse
+    spark.sql("DROP TABLE IF EXISTS gcat.ns.t_ordered")
+    spark.sql(
+      """CREATE TABLE gcat.ns.t_ordered (
+        |  id BIGINT, v DOUBLE, part STRING)
+        |USING graft
+        |PARTITIONED BY (part)
+        |OPTIONS (keys 'id', precombine 'v', op 'upsert_ordered')""".stripMargin)
+    val path = s"$warehouse/ns/t_ordered"
+    spark.sql("INSERT INTO gcat.ns.t_ordered VALUES (1, 20.0, 'a')")
+    val c1 = graft.merge.Merge.latestCommit(spark, path)
+    assert(c1.isDefined, "the first write recorded no commit")
+    // the late row for key 1 carries a lower precombine: it loses
+    spark.sql(
+      "INSERT INTO gcat.ns.t_ordered VALUES (1, 10.0, 'a'), (2, 5.0, 'a')")
+    assert(spark.sql("SELECT id, v, part FROM gcat.ns.t_ordered ORDER BY id")
+      .collect().toSeq == Seq(Row(1L, 20.0, "a"), Row(2L, 5.0, "a")))
+    assert(graft.merge.Merge.latestCommit(spark, path).exists(_ > c1.get))
+  }
+
   test("native VERSION AS OF resolves through loadTable(ident, version)") {
     val t = freshTable("t_ver")
     spark.sql(s"INSERT INTO $t VALUES (1, 10.0, 'a')")

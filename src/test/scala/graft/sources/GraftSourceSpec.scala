@@ -283,9 +283,9 @@ class GraftSourceSpec extends SparkSpec {
     val out = tmpDir("graft_srcstream_out_")
     def batch(rows: (Long, Double, Long, String)*) =
       rows.toDF("okey", "price", "pre", "part")
-    Merge.upsertVersioned(spark, batch((1L, 10.0, 1L, "A"),
+    Merge.upsert(spark, batch((1L, 10.0, 1L, "A"),
       (2L, 20.0, 2L, "A")), path, Seq("okey"), "pre", "part")
-    Merge.upsertVersioned(spark, batch((3L, 30.0, 3L, "B")),
+    Merge.upsert(spark, batch((3L, 30.0, 3L, "B")),
       path, Seq("okey"), "pre", "part")
     def drain(): Unit = {
       val q = spark.readStream.format("graft").load(path)
@@ -309,7 +309,7 @@ class GraftSourceSpec extends SparkSpec {
     assert(first.size === 3)
     // a new commit overwriting okey=1: the RESUMED stream must deliver
     // exactly that commit's rows (incremental, not a rescan)
-    Merge.upsertVersioned(spark, batch((1L, 11.0, 9L, "A")),
+    Merge.upsert(spark, batch((1L, 11.0, 9L, "A")),
       path, Seq("okey"), "pre", "part")
     val before = spark.read.parquet(out).count()
     drain()
@@ -319,10 +319,11 @@ class GraftSourceSpec extends SparkSpec {
     assert(delivered.size === before + 1,
       s"resume must add exactly the new commit's one row: $delivered")
     assert(delivered.contains((1L, 11.0, 9L, "A")))
-    // schema refuses an unversioned table
+    // schema refuses an unstamped table (a parquet layout no graft
+    // write produced)
     val plain = tmpDir("graft_srcstream_plain_")
-    Merge.upsert(spark, batch((1L, 1.0, 1L, "A")), plain,
-      Seq("okey"), "pre", "part")
+    batch((1L, 1.0, 1L, "A")).write.mode("overwrite").partitionBy("part")
+      .parquet(plain)
     val err = intercept[IllegalArgumentException] {
       new GraftStreamSource(spark.sqlContext, plain).schema
     }
@@ -355,13 +356,13 @@ class GraftSourceSpec extends SparkSpec {
     def state(path: String) = Merge.readTable(spark, path)
       .select("okey", "price", "pre", "part")
       .as[(Long, Double, Long, String)].collect().toSeq.sorted
-    Merge.upsertVersioned(spark, batch((1L, 10.0, 1L, "A"),
+    Merge.upsert(spark, batch((1L, 10.0, 1L, "A"),
       (2L, 20.0, 2L, "B")), src, Seq("okey"), "pre", "part")
     drain()
     assert(state(dst) === state(src))
     // source key 1 overwritten + key 3 added -> the NEXT drain must
     // converge the replica again (only the new commit streams)
-    Merge.upsertVersioned(spark, batch((1L, 11.0, 5L, "A"),
+    Merge.upsert(spark, batch((1L, 11.0, 5L, "A"),
       (3L, 30.0, 6L, "C")), src, Seq("okey"), "pre", "part")
     drain()
     assert(state(dst) === state(src))
@@ -371,7 +372,7 @@ class GraftSourceSpec extends SparkSpec {
     // overwrites key 1 with a LOWER pre (5 -> 2). A replica ordered by
     // the business precombine keeps the stale pre=5 row and diverges
     // permanently; ordered by the delivered commit stamp it converges.
-    Merge.upsertVersioned(spark, batch((1L, 12.0, 2L, "A")),
+    Merge.upsert(spark, batch((1L, 12.0, 2L, "A")),
       src, Seq("okey"), "pre", "part")
     drain()
     assert(state(dst) === state(src),
@@ -393,9 +394,9 @@ class GraftSourceSpec extends SparkSpec {
     def batch(rows: (Long, Long, java.sql.Timestamp)*) =
       rows.toDF("event_id", "user_id", "ts")
         .withColumn("value", lit(1.0)).withColumn("part", lit("p"))
-    Merge.upsertVersioned(spark, batch((101L, 1L, ts(10, 0))), clicksT,
+    Merge.upsert(spark, batch((101L, 1L, ts(10, 0))), clicksT,
       Seq("event_id"), "value", "part")
-    Merge.upsertVersioned(spark, batch((201L, 1L, ts(10, 30))), buysT,
+    Merge.upsert(spark, batch((201L, 1L, ts(10, 30))), buysT,
       Seq("event_id"), "value", "part")
     def drain(): Unit = {
       val l = spark.readStream.format("graft").load(clicksT)
@@ -422,9 +423,9 @@ class GraftSourceSpec extends SparkSpec {
     // is only emittable if the stateful join's store survived the
     // restart; a rescanning or state-losing source would either
     // duplicate (101, 201) or miss (101, 202)
-    Merge.upsertVersioned(spark, batch((102L, 1L, ts(11, 0))), clicksT,
+    Merge.upsert(spark, batch((102L, 1L, ts(11, 0))), clicksT,
       Seq("event_id"), "value", "part")
-    Merge.upsertVersioned(spark, batch((202L, 1L, ts(11, 30))), buysT,
+    Merge.upsert(spark, batch((202L, 1L, ts(11, 30))), buysT,
       Seq("event_id"), "value", "part")
     drain()
     // (102, 201) is correctly absent: purchases must not precede clicks

@@ -212,6 +212,22 @@ class GraftSqlSpec extends SparkSpec {
     assert(after === before + added)
   }
 
+  test("an unnamed INSERT INTO a v1 table with a timeline succeeds") {
+    val path = freshTable("sql_ins_tl")
+    ctas("sql_ins_tl", path)
+    val c1 = graft.merge.Merge.latestCommit(spark, path)
+    assert(c1.isDefined, "the CTAS recorded no commit")
+    val before = spark.sql("SELECT count(*) FROM sql_ins_tl").head.getLong(0)
+    // no column list: the commit stamp is not a column of the relation
+    spark.sql(
+      """INSERT INTO sql_ins_tl
+        |SELECT l_orderkey, l_linenumber, l_extendedprice, l_returnflag
+        |FROM li_src WHERE l_linenumber = 3""".stripMargin)
+    assert(spark.sql("SELECT count(*) FROM sql_ins_tl").head.getLong(0) >
+      before)
+    assert(graft.merge.Merge.latestCommit(spark, path).exists(_ > c1.get))
+  }
+
   test("ALTER TABLE ADD COLUMNS: metadata-only evolution, nulls for old rows") {
     val path = freshTable("sql_alter")
     ctas("sql_alter", path)
@@ -261,17 +277,17 @@ class GraftSqlSpec extends SparkSpec {
     val c1 = graft.merge.Merge.commits(spark, path)
       .agg(max(col("commit_ts"))).head.getLong(0)
     val n1 = spark.sql("SELECT count(*) FROM sql_tt").head.getLong(0)
-    // a versioned table exposes its _commit_ts meta column (Hudi's
-    // _hoodie_commit_time analogue), so the insert names its columns;
-    // the engine re-stamps _commit_ts with the real commit id
+    // the engine stamps _commit_ts (Hudi's _hoodie_commit_time
+    // analogue) with the real commit id
     spark.sql(
       """INSERT INTO sql_tt
         |  (l_orderkey, l_linenumber, l_extendedprice, l_returnflag)
         |SELECT l_orderkey, l_linenumber, l_extendedprice, l_returnflag
         |FROM li_src WHERE l_linenumber = 2""".stripMargin)
-    // the stamp is the engine's, not the null placeholder
+    // the stamp is the engine's, not a null placeholder (read through
+    // graft_snapshot: the v1 relation serves user columns only)
     assert(spark.sql(
-      "SELECT count(*) FROM sql_tt WHERE _commit_ts IS NULL")
+      s"SELECT count(*) FROM graft_snapshot('$path') WHERE _commit_ts IS NULL")
       .head.getLong(0) === 0)
     val nNow = spark.sql("SELECT count(*) FROM sql_tt").head.getLong(0)
     assert(nNow > n1)
@@ -439,7 +455,7 @@ class GraftSqlSpec extends SparkSpec {
         col("o_totalprice").as("price"), col("o_orderkey").as("pre"),
         col("o_orderstatus").as("part"))
     (0 until 3).foreach { b =>
-      graft.merge.Merge.upsertVersioned(spark,
+      graft.merge.Merge.upsert(spark,
         rows.filter($"pre" % 3 === b), path, Seq("okey"), "pre", "part")
     }
     val content = graft.merge.Merge.readTable(spark, path)
@@ -543,13 +559,13 @@ class GraftSqlSpec extends SparkSpec {
       .select((col("o_orderkey") % 20).as("okey"),
         col("o_totalprice").as("price"), col("o_orderkey").as("pre"),
         col("o_orderstatus").as("part"))
-    val c1 = graft.merge.Merge.upsertVersioned(spark,
+    val c1 = graft.merge.Merge.upsert(spark,
       rows.filter($"pre" % 3 === 0), path, Seq("okey"), "pre", "part")
     val asOfC1 = graft.merge.Merge.readAsOf(spark, path, c1)
       .select("okey", "price", "pre", "part")
       .collect().map(_.toString).sorted.toSeq
     (1 until 3).foreach { b =>
-      graft.merge.Merge.upsertVersioned(spark,
+      graft.merge.Merge.upsert(spark,
         rows.filter($"pre" % 3 === b), path, Seq("okey"), "pre", "part")
     }
     val stats = spark.sql(
@@ -580,13 +596,13 @@ class GraftSqlSpec extends SparkSpec {
       .select((col("o_orderkey") % 20).as("okey"),
         col("o_totalprice").as("price"), col("o_orderkey").as("pre"),
         col("o_orderstatus").as("part"))
-    val c1 = graft.merge.Merge.upsertVersioned(spark,
+    val c1 = graft.merge.Merge.upsert(spark,
       rows.filter($"pre" % 3 === 0), path, Seq("okey"), "pre", "part")
     val asOfC1 = graft.merge.Merge.readAsOf(spark, path, c1)
       .select("okey", "price", "pre", "part")
       .collect().map(_.toString).sorted.toSeq
     (1 until 3).foreach { b =>
-      graft.merge.Merge.upsertVersioned(spark,
+      graft.merge.Merge.upsert(spark,
         rows.filter($"pre" % 3 === b), path, Seq("okey"), "pre", "part")
     }
     val commitsBefore = graft.merge.Merge.commits(spark, path).count()
@@ -622,9 +638,9 @@ class GraftSqlSpec extends SparkSpec {
       .select((col("o_orderkey") % 20).as("okey"),
         col("o_totalprice").as("price"), col("o_orderkey").as("pre"),
         col("o_orderstatus").as("part"))
-    val c1 = graft.merge.Merge.upsertVersioned(spark,
+    val c1 = graft.merge.Merge.upsert(spark,
       rows.filter($"pre" % 2 === 0), path, Seq("okey"), "pre", "part")
-    graft.merge.Merge.upsertVersioned(spark,
+    graft.merge.Merge.upsert(spark,
       rows.filter($"pre" % 2 === 1), path, Seq("okey"), "pre", "part")
     def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.select("okey", "price", "pre", "part")
@@ -803,7 +819,7 @@ class GraftSqlSpec extends SparkSpec {
       .select(col("o_orderkey").as("okey"),
         col("o_totalprice").as("price"), col("o_orderkey").as("pre"),
         col("o_orderstatus").as("part"))
-    graft.merge.Merge.upsertVersioned(spark, rows, path, Seq("okey"),
+    graft.merge.Merge.upsert(spark, rows, path, Seq("okey"),
       "pre", "part")
     def report(): Map[String, (String, String)] =
       spark.sql(s"SELECT * FROM graft_fsck('$path')").collect()
@@ -1111,11 +1127,11 @@ class GraftSqlSpec extends SparkSpec {
         col("o_totalprice").as("price"),
         col("o_orderkey").as("pre"))
       .withColumn("bucket", col("okey") % 10)
-    Merge.upsertVersioned(spark, b(0), src, Seq("okey"), "pre", "part")
+    Merge.upsert(spark, b(0), src, Seq("okey"), "pre", "part")
     IncrementalView.create(spark, src, vw,
       srcKeys = Seq("okey", "part"), groupCols = Seq("part", "bucket"),
       sumCol = "price", partitionCol = "part")
-    Merge.upsertVersioned(spark, b(1), src, Seq("okey"), "pre", "part")
+    Merge.upsert(spark, b(1), src, Seq("okey"), "pre", "part")
     // EXPLAIN over the procedure must not move the cursor
     spark.sql(s"EXPLAIN SELECT * FROM graft_refresh_view('$vw')")
       .collect()
