@@ -5,12 +5,13 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{BloomMaybe, DotProduct, NormalizeNfc}
 
-/** SparkSessionExtensions entry point: enables the engine's native
-  * functions for any session via
-  * `spark.sql.extensions=graft.GraftExtensions` (spark-submit /
-  * cluster deployments; in-process users get the same registration
-  * lazily through [[graft.functions.VectorFunctions.register]] /
-  * [[graft.functions.BloomFunctions.register]]).
+/** SparkSessionExtensions entry point: enables the engine's SQL
+  * surface — the native `graft_*` scalar functions, the table functions
+  * and the MERGE / time-travel rules — for any session via
+  * `spark.sql.extensions=graft.GraftExtensions`
+  * ([[SessionTuning]] sets it for every session the engine builds).
+  * The DataFrame builders (`VectorFunctions.dotProduct`, …) wrap the
+  * expressions directly and need no registration.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -1,12 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.{Column, Encoder, Encoders}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.{call_function, udaf}
+import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.graftshim.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, LongType}
 
 /** Self-describing bloom-filter bitmaps over 64-bit key hashes — the
@@ -167,27 +167,15 @@ class BloomBuildAgg(mBits: Int, kHashes: Int)
   override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
 }
 
-/** Session registration + Column builders for the bloom functions. */
+/** Column builders for the bloom functions (the SQL name is injected
+  * by [[graft.GraftExtensions]]). */
 object BloomFunctions {
 
   val maybeName = "graft_bloom_maybe"
 
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(maybeName))) {
-      registry.registerFunction(
-        FunctionIdentifier(maybeName),
-        new ExpressionInfo(classOf[BloomMaybe].getName, maybeName),
-        (children: Seq[Expression]) => BloomMaybe(children(0), children(1)))
-    }
-  }
-
-  /** Codegen'd membership probe (registers on the active session on
-    * first use — idempotent). */
-  def bloomMaybe(filter: Column, hash: Column): Column = {
-    register(SparkSession.active)
-    call_function(maybeName, filter, hash)
-  }
+  /** Codegen'd membership probe. */
+  def bloomMaybe(filter: Column, hash: Column): Column =
+    column(BloomMaybe(expression(filter), expression(hash)))
 
   /** Bloom-build aggregate over a bigint hash column, sized `(mBits,
     * kHashes)` for every group of this aggregation (callers size from

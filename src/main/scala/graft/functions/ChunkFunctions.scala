@@ -1,12 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftshim.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType}
 
 /** Content-defined chunk boundaries as a native expression.
@@ -89,8 +88,8 @@ object CdcBounds {
   }
 }
 
-/** Session registration (the `SparkSessionExtensions` path lives in
-  * [[graft.GraftExtensions]]). */
+/** The SQL builder [[graft.GraftExtensions]] injects, and the Column
+  * builder that goes through it. */
 object ChunkFunctions {
 
   val cdcName = "graft_cdc_bounds"
@@ -108,25 +107,9 @@ object ChunkFunctions {
       intArg(children(3), "modulus"), intArg(children(4), "divisor"))
   }
 
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(cdcName))) {
-      registry.registerFunction(
-        FunctionIdentifier(cdcName),
-        new ExpressionInfo(classOf[CdcBounds].getName, cdcName),
-        builder _)
-    }
-  }
-
-  /** Codegen'd content-defined boundary positions (registers on the
-    * active session on first use — idempotent). */
+  /** Codegen'd content-defined boundary positions. */
   def cdcBounds(payload: Column, k: Int = 8, base: Int = 31,
-      modulus: Int = 1 << 20, divisor: Int = 16): Column = {
-    register(SparkSession.active)
-    call_function(cdcName, payload,
-      org.apache.spark.sql.functions.lit(k),
-      org.apache.spark.sql.functions.lit(base),
-      org.apache.spark.sql.functions.lit(modulus),
-      org.apache.spark.sql.functions.lit(divisor))
-  }
+      modulus: Int = 1 << 20, divisor: Int = 16): Column =
+    column(builder(expression(payload) +:
+      Seq(k, base, modulus, divisor).map(Literal(_))))
 }

@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftshim.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -62,26 +61,12 @@ object NormalizeNfc {
   }
 }
 
-/** Session registration (the `SparkSessionExtensions` path lives in
+/** Column builder (the SQL name is injected by
   * [[graft.GraftExtensions]]). */
 object TextFunctions {
 
   val nfcName = "graft_nfc"
 
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(nfcName))) {
-      registry.registerFunction(
-        FunctionIdentifier(nfcName),
-        new ExpressionInfo(classOf[NormalizeNfc].getName, nfcName),
-        (children: Seq[Expression]) => NormalizeNfc(children.head))
-    }
-  }
-
-  /** Codegen'd NFC normalization (registers on the active session on
-    * first use — idempotent). */
-  def nfcNormalize(c: Column): Column = {
-    register(SparkSession.active)
-    call_function(nfcName, c)
-  }
+  /** Codegen'd NFC normalization. */
+  def nfcNormalize(c: Column): Column = column(NormalizeNfc(expression(c)))
 }

@@ -1,12 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graftshim.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native dot product over two `array<double>` columns.
@@ -69,27 +68,13 @@ case class DotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Session registration for the native vector functions (the
-  * `SparkSessionExtensions` injection path for spark-submit users lives
-  * in [[graft.GraftExtensions]]). */
+/** Column builder for the native vector functions (the SQL name is
+  * injected by [[graft.GraftExtensions]]). */
 object VectorFunctions {
 
   val dotName = "graft_dot"
 
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(dotName))) {
-      registry.registerFunction(
-        FunctionIdentifier(dotName),
-        new ExpressionInfo(classOf[DotProduct].getName, dotName),
-        (children: Seq[Expression]) => DotProduct(children(0), children(1)))
-    }
-  }
-
-  /** Codegen'd dot product (registers on the active session on first
-    * use — idempotent). */
-  def dotProduct(a: Column, b: Column): Column = {
-    register(SparkSession.active)
-    call_function(dotName, a, b)
-  }
+  /** Codegen'd dot product. */
+  def dotProduct(a: Column, b: Column): Column =
+    column(DotProduct(expression(a), expression(b)))
 }

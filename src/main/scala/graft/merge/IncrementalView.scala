@@ -79,15 +79,13 @@ object IncrementalView {
       (j \ "partition_col").extract[String])
   }
 
-  /** The source's latest recorded commit — what a refresh can see. */
-  private def srcHead(spark: SparkSession, src: String): Long = {
-    val c = Merge.commits(spark, src)
-    val ts = c.agg(max("commit_ts")).collect()(0)
-    require(!ts.isNullAt(0),
-      s"source $src has no recorded commits — incremental views need a " +
-        "source with a timeline (write to it first)")
-    ts.getLong(0)
-  }
+  /** The source's latest recorded commit — what a refresh can see
+    * (one driver listing, no Spark job). */
+  private def srcHead(spark: SparkSession, src: String): Long =
+    Merge.latestCommit(spark, src).getOrElse(
+      throw new IllegalArgumentException(
+        s"source $src has no recorded commits — incremental views " +
+          "need a source with a timeline (write to it first)"))
 
   private def aggOf(rows: DataFrame, spec: ViewSpec): DataFrame =
     rows.groupBy(spec.groupCols.map(col): _*)

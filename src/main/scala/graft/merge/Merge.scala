@@ -1689,11 +1689,11 @@ object Merge {
     readState(spark, st, None).filter(col(commitCol) > sinceTs)
 
   /** Incremental pull between two commits: rows last written by a
-    * commit in (afterTs, untilTs]. */
+    * commit in (afterTs, untilTs] — [[readSince]] bounded above, so on
+    * a MOR table the rows of delta-resident commits count too. */
   def readBetween(spark: SparkSession, path: String, afterTs: Long,
       untilTs: Long): DataFrame =
-    readTable(spark, path)
-      .filter(col(commitCol) > afterTs && col(commitCol) <= untilTs)
+    readSince(spark, path, afterTs).filter(col(commitCol) <= untilTs)
 
   // ---- time travel (Hudi `as.of.instant` analogue) ----
   // The reference pins hudi 0.10.0 (`glue/interactive.sh:12`), the

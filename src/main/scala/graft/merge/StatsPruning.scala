@@ -71,6 +71,31 @@ object StatsPruning {
     * the distributed path at toy scale. */
   @volatile var distributeFooterReadsAbove: Int = 2048
 
+  /** The ONE footer sweep: `per` over every file, as a driver loop at
+    * or below [[distributeFooterReadsAbove]] files, one Spark map job
+    * above it. The job ships the conf as plain entries (Configuration
+    * itself is not serializable; rebuilding it per partition is
+    * metadata-cheap). Results come back in file order. */
+  private def footerSweep[T: scala.reflect.ClassTag](spark: SparkSession,
+      files: Seq[String])(per: (Configuration, String) => T): Seq[T] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    if (files.size <= distributeFooterReadsAbove) files.map(per(conf, _))
+    else {
+      import scala.jdk.CollectionConverters._
+      val entries = conf.iterator().asScala
+        .map(e => (e.getKey, e.getValue)).toArray
+      val bc = spark.sparkContext.broadcast(entries)
+      val slices = math.min(
+        files.size / 64 + 1, spark.sparkContext.defaultParallelism * 4)
+      spark.sparkContext.parallelize(files, math.max(slices, 1))
+        .mapPartitions { fs =>
+          val c = new Configuration(false)
+          bc.value.foreach { case (k, v) => c.set(k, v) }
+          fs.map(per(c, _))
+        }.collect().toSeq
+    }
+  }
+
   /** A comparison bound: exact numeric (BigDecimal) or string. */
   private[merge] sealed trait Bound extends Serializable
   private[merge] final case class NumB(v: java.math.BigDecimal) extends Bound
@@ -214,28 +239,10 @@ object StatsPruning {
     val fs = Merge.fsFor(spark, path)
     val root = fs.makeQualified(new Path(path))
     val all = Merge.listDataStatuses(fs, root).map(_.getPath.toString)
-    val conf = spark.sparkContext.hadoopConfiguration
-    def rowsOf(c: Configuration, f: String): Long = {
+    val total = footerSweep(spark, all) { (c, f) =>
       val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), c))
       try r.getRecordCount finally r.close()
-    }
-    val total =
-      if (all.size <= distributeFooterReadsAbove)
-        all.map(f => rowsOf(conf, f)).sum
-      else {
-        import scala.jdk.CollectionConverters._
-        val entries = conf.iterator().asScala
-          .map(e => (e.getKey, e.getValue)).toArray
-        val bc = spark.sparkContext.broadcast(entries)
-        val slices = math.min(
-          all.size / 64 + 1, spark.sparkContext.defaultParallelism * 4)
-        spark.sparkContext.parallelize(all, math.max(slices, 1))
-          .mapPartitions { files =>
-            val c = new Configuration(false)
-            bc.value.foreach { case (k, v) => c.set(k, v) }
-            files.map(f => rowsOf(c, f))
-          }.sum().toLong
-      }
+    }.sum
     (total, all.size.toLong)
   }
 
@@ -251,26 +258,9 @@ object StatsPruning {
     val fs = Merge.fsFor(spark, path)
     val root = fs.makeQualified(new Path(path))
     val all = Merge.listDataStatuses(fs, root).map(_.getPath.toString)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val kept =
-      if (all.size <= distributeFooterReadsAbove)
-        all.filterNot(f => provablyEmpty(conf, f, column, loB, hiB))
-      else {
-        // ship the conf as plain entries (Configuration itself is not
-        // serializable); rebuilding it per partition is metadata-cheap
-        import scala.jdk.CollectionConverters._
-        val entries = conf.iterator().asScala
-          .map(e => (e.getKey, e.getValue)).toArray
-        val bc = spark.sparkContext.broadcast(entries)
-        val slices = math.min(
-          all.size / 64 + 1, spark.sparkContext.defaultParallelism * 4)
-        spark.sparkContext.parallelize(all, math.max(slices, 1))
-          .mapPartitions { files =>
-            val c = new Configuration(false)
-            bc.value.foreach { case (k, v) => c.set(k, v) }
-            files.filterNot(f => provablyEmpty(c, f, column, loB, hiB))
-          }.collect().toIndexedSeq
-      }
+    val kept = footerSweep(spark, all) { (c, f) =>
+      Option.unless(provablyEmpty(c, f, column, loB, hiB))(f)
+    }.flatten
     (kept, all.size)
   }
 
@@ -447,7 +437,6 @@ object StatsPruning {
       s"columnStats: unknown column(s) ${unknown.mkString(", ")} at " +
         s"$path — not in the table schema or recorded partition spec")
     val (partCols, dataCols) = cols.partition(partitionCols.contains)
-    val conf = spark.sparkContext.hadoopConfiguration
     val (totalRows, merged): (Long, Map[String, ColAcc]) = {
       // even when only partition columns are asked for, the row count
       // still comes from footers — run the pass with an empty col list
@@ -459,24 +448,8 @@ object StatsPruning {
       val zero: (Long, Map[String, ColAcc]) =
         (0L, dataCols.map(_ -> ColAcc(0L, None, None, exact = true)).toMap)
       if (all.isEmpty) zero
-      else if (all.size <= distributeFooterReadsAbove)
-        all.map(f => fileColumnStats(conf, f, dataCols))
-          .foldLeft(zero)(combine)
-      else {
-        import scala.jdk.CollectionConverters._
-        val entries = conf.iterator().asScala
-          .map(e => (e.getKey, e.getValue)).toArray
-        val bc = spark.sparkContext.broadcast(entries)
-        val colsB = dataCols
-        val slices = math.min(
-          all.size / 64 + 1, spark.sparkContext.defaultParallelism * 4)
-        spark.sparkContext.parallelize(all, math.max(slices, 1))
-          .mapPartitions { files =>
-            val c = new Configuration(false)
-            bc.value.foreach { case (k, v) => c.set(k, v) }
-            files.map(f => fileColumnStats(c, f, colsB))
-          }.fold(zero)(combine)
-      }
+      else footerSweep(spark, all)(fileColumnStats(_, _, dataCols))
+        .foldLeft(zero)(combine)
     }
     // partition values from the directory segments of the live files.
     // Plain string prefix-stripping, NOT java.net.URI: both `all` and
@@ -502,7 +475,8 @@ object StatsPruning {
       val nullFiles = fileSegs.collect {
         case (f, segs) if segs.contains((c, null)) => f
       }
-      c -> nullFiles.map(f => fileColumnStats(conf, f, Nil)._1).sum
+      c -> footerSweep(spark, nullFiles)((cf, f) =>
+        fileColumnStats(cf, f, Nil)._1).sum
     }.toMap
     cols.map { c =>
       if (partCols.contains(c)) {

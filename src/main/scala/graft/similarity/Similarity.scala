@@ -1,5 +1,6 @@
 package graft.similarity
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -45,6 +46,25 @@ object Similarity {
       }
     }
 
+  /** The `vec_id`/`embedding` projection every operator starts from:
+    * the id as `id`, the embedding cast to array<double> and passed
+    * through `f` as `v`. */
+  private def vecs(df: DataFrame, id: String = "vec_id", v: String = "v",
+      f: Column => Column = identity): DataFrame =
+    df.select(col("vec_id").as(id),
+      f(col("embedding").cast("array<double>")).as(v))
+
+  /** The ONE per-query top-k ranking every search tier ends in: score
+    * (query, corpus) pairs by `sim`, keep each query's k best by the
+    * (cos_sim desc, corpus_id asc) total order [[topKOrder]] mirrors. */
+  private def ranked(pairs: DataFrame, sim: Column, k: Int): DataFrame =
+    pairs.select(col("query_id"), col("corpus_id"), sim.as("cos_sim"))
+      .withColumn("rank", row_number().over(Window.partitionBy("query_id")
+        .orderBy(col("cos_sim").desc, col("corpus_id"))))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("rank").cast("long").as("rank"),
+        col("corpus_id"), col("cos_sim"))
+
   /** Exact cosine top-k: for each query vector, the k nearest corpus
     * vectors. Broadcast-join of the (small) query side, so scoring is a
     * narrow map over the corpus scan; a typed per-partition heap then
@@ -59,11 +79,9 @@ object Similarity {
   def bruteTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val c = corpus.select(col("vec_id").as("corpus_id"),
-      col("embedding").cast("array<double>").as("cv"))
-    val q = queries.select(col("vec_id").as("query_id"),
-      col("embedding").cast("array<double>").as("qv"))
-    val scored = c.join(broadcast(q), col("corpus_id") =!= col("query_id"))
+    val scored = vecs(corpus, "corpus_id", "cv")
+      .join(broadcast(vecs(queries, "query_id", "qv")),
+        col("corpus_id") =!= col("query_id"))
       .select(col("query_id"), col("corpus_id"),
         cosine(col("qv"), col("cv")).as("cos_sim"))
     // local top-k: a bounded max-heap per query (head = worst kept row)
@@ -79,12 +97,7 @@ object Similarity {
       }
       heaps.valuesIterator.flatMap(_.iterator)
     }.toDF("query_id", "corpus_id", "cos_sim")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos_sim").desc, col("corpus_id"))
-    localTopK.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("corpus_id"), col("cos_sim"))
+    ranked(localTopK, col("cos_sim"), k)
   }
 
   /** Filtered vector search: exact cosine top-k restricted to the
@@ -115,20 +128,10 @@ object Similarity {
       candidateFactor: Int = 4): DataFrame = {
     val cand = sqTopK(corpus, queries, k * candidateFactor)
       .select(col("query_id"), col("corpus_id"))
-    val c = corpus.select(col("vec_id").as("corpus_id"),
-      col("embedding").cast("array<double>").as("cv"))
-    val q = queries.select(col("vec_id").as("query_id"),
-      col("embedding").cast("array<double>").as("qv"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos_sim").desc, col("corpus_id"))
-    c.join(broadcast(cand), Seq("corpus_id"))
-      .join(broadcast(q), Seq("query_id"))
-      .select(col("query_id"), col("corpus_id"),
-        cosine(col("qv"), col("cv")).as("cos_sim"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("corpus_id"),
-        col("cos_sim"))
+    ranked(vecs(corpus, "corpus_id", "cv")
+      .join(broadcast(cand), Seq("corpus_id"))
+      .join(broadcast(vecs(queries, "query_id", "qv")), Seq("query_id")),
+      cosine(col("qv"), col("cv")), k)
   }
 
   /** Hybrid lexical + vector retrieval fused by Reciprocal Rank Fusion
@@ -196,8 +199,7 @@ object Similarity {
     * as literals, the same pattern as the LSH hyperplanes. */
   def sqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       levels: Int = 127): DataFrame = {
-    val c = corpus.select(col("vec_id"),
-      col("embedding").cast("array<double>").as("v"))
+    val c = vecs(corpus)
     val stats = c.select(posexplode(col("v")).as(Seq("i", "val")))
       .groupBy("i").agg(min("val").as("mn"), max("val").as("mx"))
       .orderBy("i").collect()
@@ -251,16 +253,12 @@ object Similarity {
     * Output is EXPLODED to (vec_id, dim, value) — scalar rows, so the
     * driver's hash compare covers every coordinate. */
   def randomProjection(df: DataFrame, outDims: Int, dims: Int = 64,
-      seed0: Int = 1000): DataFrame = {
-    val proj = array((0 until outDims).map { j =>
-      dot(col("v"), typedLit(plane(seed0 + j, dims)))
-    }: _*)
-    df.select(col("vec_id"),
-        col("embedding").cast("array<double>").as("v"))
-      .select(col("vec_id"), posexplode(proj).as(Seq("dim", "value")))
+      seed0: Int = 1000): DataFrame =
+    randomProjectionVectors(df, outDims, dims, seed0)
+      .select(col("vec_id"),
+        posexplode(col("embedding")).as(Seq("dim", "value")))
       .select(col("vec_id"), col("dim").cast("long").as("dim"),
         col("value"))
-  }
 
   /** The projected corpus re-shaped as an embedding table (for feeding
     * projected vectors back through the ANN operators). */
@@ -269,26 +267,20 @@ object Similarity {
     val proj = array((0 until outDims).map { j =>
       dot(col("v"), typedLit(plane(seed0 + j, dims)))
     }: _*)
-    df.select(col("vec_id"),
-        col("embedding").cast("array<double>").as("v"))
-      .select(col("vec_id"), proj.as("embedding"))
+    vecs(df).select(col("vec_id"), proj.as("embedding"))
   }
 
   /** Corpus bucketed by LSH signature (single table). */
   def lshBuckets(corpus: DataFrame, bits: Int): DataFrame =
-    corpus.select(col("vec_id"),
-      col("embedding").cast("array<double>").as("v"))
-      .withColumn("bucket", lshBucket(col("v"), bits))
+    vecs(corpus).withColumn("bucket", lshBucket(col("v"), bits))
 
   /** Multi-table bucketing: `tables` independent hash tables (the
     * standard LSH recall lever) — each row lands in one bucket per
     * table, so storage/probe cost is ×tables, recall approaches 1. */
   def lshBucketsMulti(df: DataFrame, bits: Int, tables: Int): DataFrame = {
-    val e = df.select(col("vec_id"),
-      col("embedding").cast("array<double>").as("v"))
     val buckets = array((0 until tables).map(t =>
       lshBucket(col("v"), bits, seed0 = t * bits)): _*)
-    e.select(col("vec_id"), col("v"),
+    vecs(df).select(col("vec_id"), col("v"),
       posexplode(buckets).as(Seq("table", "bucket")))
   }
 
@@ -303,19 +295,10 @@ object Similarity {
     val candidates = c.join(broadcast(q), Seq("table", "bucket"))
       .filter(col("corpus_id") =!= col("query_id"))
       .select("query_id", "corpus_id").distinct()
-    val cv = corpus.select(col("vec_id").as("corpus_id"),
-      normalized(col("embedding").cast("array<double>")).as("cv"))
-    val qv = queries.select(col("vec_id").as("query_id"),
-      normalized(col("embedding").cast("array<double>")).as("qv"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos_sim").desc, col("corpus_id"))
-    candidates.join(cv, Seq("corpus_id")).join(broadcast(qv), Seq("query_id"))
-      .select(col("query_id"), col("corpus_id"),
-        dot(col("qv"), col("cv")).as("cos_sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("corpus_id"), col("cos_sim"))
+    ranked(candidates
+      .join(vecs(corpus, "corpus_id", "cv", normalized), Seq("corpus_id"))
+      .join(broadcast(vecs(queries, "query_id", "qv", normalized)),
+        Seq("query_id")), dot(col("qv"), col("cv")), k)
   }
 
   /** Deterministic k-means (Lloyd) coarse quantizer: centroids start at
@@ -531,8 +514,7 @@ object Similarity {
       dims: Int = 64, maxTrainVectors: Int = 100000): DataFrame = {
     require(dims % subspaces == 0, "dims must divide evenly into subspaces")
     val subLen = dims / subspaces
-    val e = corpus.select(col("vec_id"),
-      col("embedding").cast("array<double>").as("v"))
+    val e = vecs(corpus)
     // all subspace codebooks train in ONE batched Lloyd loop (3 driver
     // jobs instead of 12; see kmeansCentroidsGrouped's equivalence note)
     val trained = kmeansCentroidsGrouped(e,
@@ -577,8 +559,7 @@ object Similarity {
       maxTrainVectors: Int = 100000): Unit = {
     require(dims % subspaces == 0, "dims must divide evenly into subspaces")
     val subLen = dims / subspaces
-    val e = corpus.select(col("vec_id"),
-      col("embedding").cast("array<double>").as("v"))
+    val e = vecs(corpus)
     // coarse quantizer + every subspace codebook train in ONE batched
     // Lloyd loop: 4 driver jobs + 1 corpus sample scan instead of 16 + 5
     // (gid -1 = coarse over the full vector; gid m = subspace m's slice;
@@ -600,7 +581,7 @@ object Similarity {
   }
 
   /** The ONE coding tail both [[buildIvfPqIndex]] and
-    * [[appendToIvfPqIndex]] run (build trains the codebooks it passes;
+    * [[appendToIvfIndex]] run (build trains the codebooks it passes;
     * append reads the stored ones): coarse assignment, per-subspace
     * nearest-codeword coding, sub-order codes array, cid-partitioned
     * write. A single implementation so a layout change (ordering,
@@ -661,23 +642,15 @@ object Similarity {
     (local, subspaces, lens.head, codebook)
   }
 
-  /** The ONE decode of a codes layout back to reconstructed vectors —
-    * `subspaces` broadcast joins against the tiny codebook relation,
-    * sub-order concat — shared by serve (asymmetric scoring), drift
-    * (reconstruction means) and retrain (reconstructed holdings), so
-    * the three lifecycle consumers can never disagree about what a
-    * code means. Narrow map over the cells scan: no corpus-side
-    * shuffle. Emits (cid, corpus_id, dv). */
-  private def reconstructCells(cells: DataFrame, cb: DataFrame,
-      subspaces: Int): DataFrame =
-    decodeCodes(cells, cb, subspaces)
-      .select(col("cid"), col("corpus_id"), col("dv"))
-
-  /** The decode itself, over ANY relation carrying a `codes` column
-    * (other columns pass through): [[reconstructCells]] applies it per
-    * stored row; the drift statistic applies it per DISTINCT code
-    * word ([[ivfPqDriftStatsImpl]]) — one implementation so the two
-    * can never disagree about what a code means. */
+  /** The ONE decode of a codes layout back to reconstructed vectors
+    * `dv`, over ANY relation carrying a `codes` column (other columns
+    * pass through) — `subspaces` broadcast joins against the tiny
+    * codebook relation, sub-order concat. Serve (asymmetric scoring)
+    * and retrain (reconstructed holdings) decode per stored row; the
+    * drift statistic decodes per DISTINCT code word ([[pqDriftStats]])
+    * — one implementation so the lifecycle consumers can never
+    * disagree about what a code means. Narrow map over the cells scan:
+    * no corpus-side shuffle. */
   private def decodeCodes(df: DataFrame, cb: DataFrame,
       subspaces: Int): DataFrame = {
     val withSubs = (0 until subspaces).foldLeft(df) { (d, m) =>
@@ -691,98 +664,58 @@ object Similarity {
       .drop((0 until subspaces).map(m => s"_cv_$m"): _*)
   }
 
-  /** Update half of the IVF-PQ lifecycle: append a new batch WITHOUT
-    * retraining either quantizer level — coarse assignment against the
-    * stored centroids, codes against the stored per-subspace
-    * codebooks (both tiny broadcast relations), one O(batch) append
-    * into the cid-partitioned layout. This is exactly why
-    * [[buildIvfPqIndex]] codes raw vectors instead of residuals:
-    * residual codes would couple every code to its coarse centroid,
-    * so no frozen-codebook append could exist. Same collapse law as
-    * s13: build(base) + append(batch) ≡ assigning base ∪ batch
-    * against the base-trained quantizers, per-vector, so appends
-    * commute and the s18 oracle is one relational statement.
-    *
-    * Geometry (subspaces, dims) comes from the STORED codebooks via
-    * [[loadCodebooks]], never from the caller; a batch whose vectors
-    * don't match the index's dims fails loudly in-plan (raise_error)
-    * instead of writing truncated codes. */
-  def appendToIvfPqIndex(spark: SparkSession, path: String,
-      batch: DataFrame): Unit = {
-    val (cb, subspaces, subLen, _) = loadCodebooks(spark, path)
-    appendToIvfPqIndexLoaded(path, batch,
-      spark.read.parquet(path + "/centroids"), cb, subspaces, subLen)
-  }
+  private def fsOf(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** [[appendToIvfPqIndex]] with the stored centroids/codebooks already
-    * loaded — the retrain-policy drain loads them once and runs both
-    * the append and the drift statistic against the same relations
-    * (one codebook collect per drain instead of two). */
-  private def appendToIvfPqIndexLoaded(path: String, batch: DataFrame,
-      cents: DataFrame, cb: DataFrame, subspaces: Int,
-      subLen: Int): Unit = {
-    val dims = subspaces * subLen
-    val e = batch.select(col("vec_id"),
-      col("embedding").cast("array<double>").as("v"))
-      .withColumn("v", when(size(col("v")) === dims, col("v"))
-        .otherwise(raise_error(concat(
-          lit(s"appendToIvfPqIndex: index at $path codes $dims-dim " +
-            "vectors; batch vec_id "), col("vec_id").cast("string"),
-          lit(" has "), size(col("v")).cast("string"), lit(" dims")))))
-    val cbs = (0 until subspaces).map { m =>
-      cb.filter(col("sub") === m).select(col("code").as("cid"), col("cv"))
-    }
-    codeAndWriteCells(e, cents, cbs, subLen, path + "/cells",
-      SaveMode.Append)
-  }
+  /** The layout a persisted index records: PQ codes when
+    * `<path>/codebooks` exists (the dir [[loadCodebooks]] reads the
+    * geometry from), normalized vectors otherwise. Every lifecycle
+    * step that serves both layouts reads it here, so no caller can
+    * pick the wrong one. */
+  private def isPq(spark: SparkSession, path: String): Boolean =
+    fsOf(spark, path).exists(new Path(path.stripSuffix("/"), "codebooks"))
 
-  /** Serve half of the IVF-PQ index: probe selection and partition
-    * pruning exactly as [[ivfTopKServed]], then ASYMMETRIC scoring —
-    * full-precision queries against the candidates' RECONSTRUCTIONS,
-    * materialized per candidate row by `subspaces` broadcast joins
-    * against the tiny codebook relation (each join keys one code slot
-    * into its sub-centroid; concat restores sub order). No corpus-side
-    * shuffle: the pruned codes scan stays a narrow map — broadcast
-    * code lookups, concat, one dot per (candidate, query) — into the
-    * bounded per-query ranking window. At 100 TB the scan bytes are
-    * the codes, not the vectors: the hot set a serving tier actually
-    * holds. */
-  def ivfPqTopKServed(spark: SparkSession, path: String,
-      queries: DataFrame, k: Int, nProbe: Int): DataFrame = {
-    val cents = spark.read.parquet(path + "/centroids")
-    val q = queries.select(col("vec_id").as("query_id"),
-      col("embedding").cast("array<double>").as("qv"))
-    val cn = cents.select(col("cid"), normalized(col("cv")).as("cvn"))
-    val wProbe = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("cid"))
-    // probes carry the RAW query vector: the final scoring is the
-    // asymmetric cosine against reconstructions (s06's expression),
-    // not the normalized dot the probe ranking uses
-    val probes = q.crossJoin(broadcast(cn))
+  /** The cid-partitioned cells of either layout. The explicit schema
+    * pins the hive partition column back to LONG (dir inference would
+    * narrow it to int), so a `cid IN` lands directly on the partition
+    * column and prunes at the file index. */
+  private def readCells(spark: SparkSession, path: String,
+      pq: Boolean): DataFrame =
+    spark.read.schema(
+      if (pq) "corpus_id LONG, codes ARRAY<LONG>, cid LONG"
+      else "corpus_id LONG, cv ARRAY<DOUBLE>, cid LONG")
+      .parquet(path + "/cells")
+
+  /** The ONE nProbe probe: each query's `nProbe` nearest centroids by
+    * the dot of `qn` (the normalized query) with the normalized
+    * centroid, ties by cid. Probes carry `qv` as given — normalized
+    * for the flat layout, RAW for PQ, whose final scoring is the
+    * asymmetric cosine against reconstructions — so nothing is ever
+    * normalized twice. */
+  private def probe(q: DataFrame, cents: DataFrame, nProbe: Int,
+      qn: Column): DataFrame =
+    q.crossJoin(broadcast(
+        cents.select(col("cid"), normalized(col("cv")).as("cvn"))))
       .select(col("query_id"), col("qv"), col("cid"),
-        dot(normalized(col("qv")), col("cvn")).as("sim"))
-      .withColumn("rn", row_number().over(wProbe))
+        dot(qn, col("cvn")).as("sim"))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("query_id").orderBy(col("sim").desc, col("cid"))))
       .filter(col("rn") <= nProbe)
       .select("query_id", "qv", "cid")
-    val probedCids = probes.select("cid").distinct()
-      .collect().map(_.getLong(0)).sorted
-    val cells = spark.read
-      .schema("corpus_id LONG, codes ARRAY<LONG>, cid LONG")
-      .parquet(path + "/cells")
-      .filter(col("cid").isin(probedCids: _*))
-    val (cb, subspaces, _, _) = loadCodebooks(spark, path)
-    val recon = reconstructCells(cells, cb, subspaces)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos_sim").desc, col("corpus_id"))
-    recon.join(broadcast(probes), Seq("cid"))
-      .filter(col("corpus_id") =!= col("query_id"))
-      .select(col("query_id"), col("corpus_id"),
-        cosine(col("qv"), col("dv")).as("cos_sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("corpus_id"), col("cos_sim"))
-  }
+
+  /** Exact ranking over the probed cells only: each cell row meets the
+    * probes that chose its cid (self matches excluded). */
+  private def rankProbed(cells: DataFrame, probes: DataFrame, k: Int,
+      sim: Column): DataFrame =
+    ranked(cells.join(broadcast(probes), Seq("cid"))
+      .filter(col("corpus_id") =!= col("query_id")), sim, k)
+
+  /** Flat-layout cells: `e` (vec_id, v) assigned against `cents`, the
+    * stored vector `cv(v)`. */
+  private def flatCells(e: DataFrame, cents: DataFrame,
+      cv: Column => Column): DataFrame =
+    assign(e, cents)
+      .select(col("cid"), col("vec_id").as("corpus_id"), cv(col("v")).as("cv"))
 
   /** IVF ANN: corpus pre-assigned to centroids; each query probes its
     * `nProbe` nearest centroids and exact-ranks within those cells. */
@@ -790,32 +723,11 @@ object Similarity {
       nCentroids: Int, nProbe: Int, iters: Int = 3,
       maxTrainVectors: Int = 100000): DataFrame = {
     val cents = kmeansCentroids(corpus, nCentroids, iters, maxTrainVectors)
-    val e = corpus.select(col("vec_id"),
-      col("embedding").cast("array<double>").as("v"))
     // cells keep the normalized vector: the probe-stage scoring is a dot
-    val cells = assign(e, cents)
-      .select(col("cid"), col("vec_id").as("corpus_id"),
-        normalized(col("v")).as("cv"))
-    val q = queries.select(col("vec_id").as("query_id"),
-      normalized(col("embedding").cast("array<double>")).as("qv"))
-    val cn = cents.select(col("cid"), normalized(col("cv")).as("cvn"))
-    val wProbe = Window.partitionBy("query_id").orderBy(col("sim").desc, col("cid"))
-    val probes = q.crossJoin(broadcast(cn))
-      .select(col("query_id"), col("qv"), col("cid"),
-        dot(col("qv"), col("cvn")).as("sim"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nProbe)
-      .select("query_id", "qv", "cid")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos_sim").desc, col("corpus_id"))
-    cells.join(broadcast(probes), Seq("cid"))
-      .filter(col("corpus_id") =!= col("query_id"))
-      .select(col("query_id"), col("corpus_id"),
-        dot(col("qv"), col("cv")).as("cos_sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("corpus_id"), col("cos_sim"))
+    val cells = flatCells(vecs(corpus), cents, normalized)
+    val probes = probe(vecs(queries, "query_id", "qv", normalized), cents,
+      nProbe, col("qv"))
+    rankProbed(cells, probes, k, dot(col("qv"), col("cv")))
   }
 
   /** Build-once half of the IVF index LIFECYCLE: the trained coarse
@@ -831,139 +743,134 @@ object Similarity {
     * s03's oracle verbatim, the d15↔d04 guarantee: the lifecycle
     * split can never silently change answers. */
   def buildIvfIndex(corpus: DataFrame, path: String, nCentroids: Int,
-      iters: Int = 3, maxTrainVectors: Int = 100000): Unit = {
+      iters: Int = 3, maxTrainVectors: Int = 100000): Unit =
+    writeIvfIndex(corpus, path, nCentroids, iters, maxTrainVectors,
+      normalized)
+
+  /** Train, assign and write a flat index; the stored vector is
+    * `cv(v)` — normalized on build, as-is on retrain. */
+  private def writeIvfIndex(corpus: DataFrame, path: String,
+      nCentroids: Int, iters: Int, maxTrainVectors: Int,
+      cv: Column => Column): Unit = {
     val cents = kmeansCentroids(corpus, nCentroids, iters, maxTrainVectors)
-    val e = corpus.select(col("vec_id"),
-      col("embedding").cast("array<double>").as("v"))
-    assign(e, cents)
-      .select(col("cid"), col("vec_id").as("corpus_id"),
-        normalized(col("v")).as("cv"))
-      .write.mode("overwrite").partitionBy("cid").parquet(path + "/cells")
-    cents.write.mode("overwrite").parquet(path + "/centroids")
+    flatCells(vecs(corpus), cents, cv)
+      .write.mode(SaveMode.Overwrite).partitionBy("cid")
+      .parquet(path + "/cells")
+    cents.write.mode(SaveMode.Overwrite).parquet(path + "/centroids")
   }
 
-  /** Serve-many half: probe selection against the tiny stored centroid
-    * relation, then exact ranking over ONLY the probed cells. The
-    * probed list ids are collected to the driver (metadata-scale:
-    * ≤ |queries|×nProbe ints, same class as Merge's partition-value
-    * collects) and pushed as a STATIC `cid IN (...)` partition filter —
-    * the cells scan reads nProbe/nCentroids of the index files, which
-    * is the entire point of IVF at 100 TB (spec-asserted on the
-    * physical plan). Scoring is [[ivfTopK]]'s expression verbatim. */
+  /** Serve-many half of either layout: probe selection against the
+    * tiny stored centroid relation, then exact ranking over ONLY the
+    * probed cells. The probed list ids are collected to the driver
+    * (metadata-scale: ≤ |queries|×nProbe ints, same class as Merge's
+    * partition-value collects) and pushed as a STATIC `cid IN (...)`
+    * partition filter — the cells scan reads nProbe/nCentroids of the
+    * index files, which is the entire point of IVF at 100 TB
+    * (spec-asserted on the physical plan). Flat cells score with
+    * [[ivfTopK]]'s expression verbatim. PQ cells score ASYMMETRICALLY
+    * — full-precision queries against the candidates'
+    * reconstructions ([[decodeCodes]]) — so at 100 TB the scan bytes
+    * are the codes, not the vectors: the hot set a serving tier
+    * actually holds. */
   def ivfTopKServed(spark: SparkSession, path: String, queries: DataFrame,
       k: Int, nProbe: Int): DataFrame = {
-    val cents = spark.read.parquet(path + "/centroids")
-    val q = queries.select(col("vec_id").as("query_id"),
-      normalized(col("embedding").cast("array<double>")).as("qv"))
-    val cn = cents.select(col("cid"), normalized(col("cv")).as("cvn"))
-    val wProbe = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("cid"))
-    val probes = q.crossJoin(broadcast(cn))
-      .select(col("query_id"), col("qv"), col("cid"),
-        dot(col("qv"), col("cvn")).as("sim"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nProbe)
-      .select("query_id", "qv", "cid")
-    val probedCids = probes.select("cid").distinct()
-      .collect().map(_.getLong(0)).sorted
-    // explicit schema pins the hive partition column back to LONG (dir
-    // inference would narrow it to int), so the IN lands directly on
-    // the partition column and prunes at the file index
-    val cells = spark.read
-      .schema("corpus_id LONG, cv ARRAY<DOUBLE>, cid LONG")
-      .parquet(path + "/cells")
-      .filter(col("cid").isin(probedCids: _*))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos_sim").desc, col("corpus_id"))
-    cells.join(broadcast(probes), Seq("cid"))
-      .filter(col("corpus_id") =!= col("query_id"))
-      .select(col("query_id"), col("corpus_id"),
-        dot(col("qv"), col("cv")).as("cos_sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("corpus_id"), col("cos_sim"))
+    val pq = isPq(spark, path)
+    val q = vecs(queries, "query_id", "qv", if (pq) identity else normalized)
+    val probes = probe(q, spark.read.parquet(path + "/centroids"), nProbe,
+      if (pq) normalized(col("qv")) else col("qv"))
+    val cells = readCells(spark, path, pq).filter(col("cid").isin(
+      probes.select("cid").distinct().collect().map(_.getLong(0)).sorted: _*))
+    if (!pq) rankProbed(cells, probes, k, dot(col("qv"), col("cv")))
+    else {
+      val (cb, subspaces, _, _) = loadCodebooks(spark, path)
+      rankProbed(decodeCodes(cells, cb, subspaces), probes, k,
+        cosine(col("qv"), col("dv")))
+    }
   }
 
   /** Update-many half of the index lifecycle: append a NEW embedding
-    * batch to a persisted IVF index WITHOUT retraining — assign the
-    * batch against the STORED centroids (a broadcast of k tiny rows)
-    * and append the normalized cells into the partitioned layout.
+    * batch to a persisted index of either layout WITHOUT retraining —
+    * assign the batch against the STORED centroids (a broadcast of k
+    * tiny rows) and append its cells into the partitioned layout.
     * O(batch) work, no existing index file touched (spec-asserted), no
     * quantizer drift: the streaming-embeddings reality where vectors
     * arrive continuously but retraining is a scheduled, rarer event.
     * Assignment is per-vector, so build(base) + append(batch) equals
-    * assigning base∪batch at once against the same centroids — appends
-    * commute (spec-asserted), and the served results stay exactly the
-    * relational collapse the s13 oracle states. */
+    * assigning base∪batch at once against the same quantizers —
+    * appends commute (spec-asserted), and the served results stay
+    * exactly the relational collapse the s13/s18 oracles state. A PQ
+    * index codes the batch against its stored codebooks too
+    * ([[appendCodes]]). */
   def appendToIvfIndex(spark: SparkSession, path: String,
       batch: DataFrame): Unit = {
     val cents = spark.read.parquet(path + "/centroids")
-    val e = batch.select(col("vec_id"),
-      col("embedding").cast("array<double>").as("v"))
-    assign(e, cents)
-      .select(col("cid"), col("vec_id").as("corpus_id"),
-        normalized(col("v")).as("cv"))
-      .write.mode(SaveMode.Append).partitionBy("cid")
-      .parquet(path + "/cells")
+    if (isPq(spark, path)) {
+      val (cb, subspaces, subLen, _) = loadCodebooks(spark, path)
+      appendCodes(path, batch, cents, cb, subspaces, subLen)
+    } else
+      flatCells(vecs(batch), cents, normalized)
+        .write.mode(SaveMode.Append).partitionBy("cid")
+        .parquet(path + "/cells")
+  }
+
+  /** The PQ append against already-loaded centroids/codebooks (the
+    * retrain-policy drain loads them once and runs both the append and
+    * the drift statistic against the same relations): coarse
+    * assignment and per-subspace coding through the build's own
+    * [[codeAndWriteCells]]. This is exactly why [[buildIvfPqIndex]]
+    * codes raw vectors instead of residuals: residual codes would
+    * couple every code to its coarse centroid, so no frozen-codebook
+    * append could exist. Geometry (subspaces, dims) comes from the
+    * STORED codebooks via [[loadCodebooks]], never from the caller; a
+    * batch whose vectors don't match the index's dims fails loudly
+    * in-plan (raise_error) instead of writing truncated codes. */
+  private def appendCodes(path: String, batch: DataFrame,
+      cents: DataFrame, cb: DataFrame, subspaces: Int,
+      subLen: Int): Unit = {
+    val dims = subspaces * subLen
+    val e = vecs(batch)
+      .withColumn("v", when(size(col("v")) === dims, col("v"))
+        .otherwise(raise_error(concat(
+          lit(s"appendToIvfIndex: index at $path codes $dims-dim " +
+            "vectors; batch vec_id "), col("vec_id").cast("string"),
+          lit(" has "), size(col("v")).cast("string"), lit(" dims")))))
+    val cbs = (0 until subspaces).map { m =>
+      cb.filter(col("sub") === m).select(col("code").as("cid"), col("cv"))
+    }
+    codeAndWriteCells(e, cents, cbs, subLen, path + "/cells",
+      SaveMode.Append)
   }
 
   /** Delete half of the index lifecycle (GDPR erasure, corpus
-    * re-curation): remove `deleteIds` from a persisted IVF index by
-    * rewriting ONLY the touched cid partitions — the O3
+    * re-curation), either layout: remove `deleteIds` from a persisted
+    * index by rewriting ONLY the touched cid partitions — the O3
     * delete-at-file-group-granularity shape. The touched-cell set is
     * found with one partition-pruned semi-join (≤ nCentroids ids
     * collected), survivors of those cells are anti-joined and written
     * to a staging dir, and the swap is per-partition directory
     * replacement; untouched cells' files are never read or rewritten
-    * (spec-asserted). Centroids stay frozen — like [[appendToIvfIndex]]
-    * this commutes with build: delete(build(corpus)) equals
-    * build-assign over corpus∖deleted against the same centroids, so
-    * the served results stay the relational collapse the s14 oracle
-    * states. A cell whose last vector is deleted becomes an empty
-    * partition (visible as n_vecs=0 in [[ivfDriftStats]]). */
+    * (spec-asserted). Quantizers stay frozen — like
+    * [[appendToIvfIndex]] this commutes with build:
+    * delete(build(corpus)) equals build-assign over corpus∖deleted
+    * against the same quantizers, so the served results stay the
+    * relational collapse the s14/s19 oracles state. A cell whose last
+    * vector is deleted becomes an empty partition (visible as
+    * n_vecs=0 in [[ivfDriftStats]]). */
   def removeFromIvfIndex(spark: SparkSession, path: String,
-      deleteIds: DataFrame): Unit =
-    removeFromCells(spark, path + "/cells",
-      "corpus_id LONG, cv ARRAY<DOUBLE>, cid LONG",
-      Seq("corpus_id", "cv", "cid"), deleteIds)
-
-  /** Delete half of the IVF-PQ lifecycle (s19) — [[removeFromIvfIndex]]
-    * over the CODES layout: only touched cid partitions rewritten,
-    * centroids and codebooks frozen, so delete commutes with build
-    * exactly as in the full-vector index (the served answers are the
-    * relational collapse with the index's holdings scoped to the kept
-    * vectors). Completes build → serve → append → delete for the
-    * compound index. */
-  def removeFromIvfPqIndex(spark: SparkSession, path: String,
-      deleteIds: DataFrame): Unit =
-    removeFromCells(spark, path + "/cells",
-      "corpus_id LONG, codes ARRAY<LONG>, cid LONG",
-      Seq("corpus_id", "codes", "cid"), deleteIds)
-
-  /** Shared no-retrain erasure over a cid-partitioned cells layout:
-    * touched-cell set via a partition-pruned semi-join, survivors
-    * anti-joined into a staging dir, per-partition directory swap —
-    * untouched cells' files are never read or rewritten. */
-  private def removeFromCells(spark: SparkSession, cellsPath: String,
-      schemaDdl: String, dataCols: Seq[String],
       deleteIds: DataFrame): Unit = {
-    import org.apache.hadoop.fs.Path
+    val cellsPath = path + "/cells"
     val ids = broadcast(
       deleteIds.select(col(deleteIds.columns.head).as("_del_id")))
-    val cells = spark.read.schema(schemaDdl).parquet(cellsPath)
+    val cells = readCells(spark, path, isPq(spark, path))
     val touched = cells
       .join(ids, col("corpus_id") === col("_del_id"), "left_semi")
       .select("cid").distinct().collect().map(_.getLong(0)).sorted
     if (touched.isEmpty) return
-    val survivors = cells.filter(col("cid").isin(touched: _*))
-      .join(ids, col("corpus_id") === col("_del_id"), "left_anti")
-      .select(dataCols.map(col): _*)
     val staging = cellsPath + "_rewrite_tmp"
-    survivors.write.mode(SaveMode.Overwrite).partitionBy("cid")
-      .parquet(staging)
-    val fs = new Path(cellsPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    cells.filter(col("cid").isin(touched: _*))
+      .join(ids, col("corpus_id") === col("_del_id"), "left_anti")
+      .write.mode(SaveMode.Overwrite).partitionBy("cid").parquet(staging)
+    val fs = fsOf(spark, cellsPath)
     touched.foreach { c =>
       val dst = new Path(cellsPath, s"cid=$c")
       fs.delete(dst, true)
@@ -979,17 +886,11 @@ object Similarity {
     * crossing a deployment's bar triggers: retrain the coarse
     * quantizer on the index's CURRENT contents (the same deterministic
     * md5-sampled Lloyd as build — spherical k-means over the stored
-    * normalized vectors) and migrate every vector to its new cell.
-    * The rewrite lands under `retrain_tmp/` first and swaps in with
-    * the same two-phase rename discipline as [[retrainIvfPqIndex]]
-    * (old generation steps aside to `retrain_old/`, new one moves in;
-    * [[recoverRetrainResidue]] self-heals any crash window on the
-    * next retrain), so a crashed retrain can never be read as a
-    * half-migrated or mixed-generation index. O(corpus) once per
-    * retrain by
-    * design — the scheduled, rare event appends/deletes amortize
-    * against (the s13/s14 no-retrain contract is what makes THIS cost
-    * acceptable).
+    * normalized vectors) and migrate every vector to its new cell,
+    * staged and swapped in by [[retrainSwap]]. O(corpus) once per
+    * retrain by design — the scheduled, rare event appends/deletes
+    * amortize against (the s13/s14 no-retrain contract is what makes
+    * THIS cost acceptable).
     *
     * Stored vectors migrate AS-IS (they are already normalized — the
     * build/append invariant), never re-normalized: n(n(v)) differs
@@ -999,95 +900,66 @@ object Similarity {
     * over the normalized contents, however many times it fires: what
     * e23's online policy loop relies on) and retrain idempotence. */
   def retrainIvfIndex(spark: SparkSession, path: String, nCentroids: Int,
-      iters: Int = 3, maxTrainVectors: Int = 100000): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new Path(path, "retrain_tmp")
-    val aside = new Path(path, "retrain_old")
-    val dirs = Seq("cells", "centroids")
-    recoverRetrainResidue(fs, path, staging, aside, dirs)
-    fs.delete(staging, true) // residue from a crashed previous attempt
-    fs.delete(aside, true)
-    val corpus = spark.read
-      .schema("corpus_id LONG, cv ARRAY<DOUBLE>, cid LONG")
-      .parquet(path + "/cells")
-      .select(col("corpus_id").as("vec_id"), col("cv").as("embedding"))
-    val cents = kmeansCentroids(corpus, nCentroids, iters, maxTrainVectors)
-    val e = corpus.select(col("vec_id"),
-      col("embedding").cast("array<double>").as("v"))
-    assign(e, cents)
-      .select(col("cid"), col("vec_id").as("corpus_id"),
-        col("v").as("cv"))
-      .write.mode(SaveMode.Overwrite).partitionBy("cid")
-      .parquet(new Path(staging, "cells").toString)
-    cents.write.mode(SaveMode.Overwrite)
-      .parquet(new Path(staging, "centroids").toString)
-    fs.mkdirs(aside)
-    // the same two-phase swap as the PQ retrain: the complete old
-    // generation steps aside intact, then the new one moves in — a
-    // crash at any window is healed by recoverRetrainResidue on the
-    // next retrain, never read as mixed generations
-    dirs.foreach(d => fs.rename(new Path(path, d), new Path(aside, d)))
-    dirs.foreach(d => fs.rename(new Path(staging, d), new Path(path, d)))
-    fs.delete(staging, true)
-    fs.delete(aside, true)
-    ()
-  }
+      iters: Int = 3, maxTrainVectors: Int = 100000): Unit =
+    retrainSwap(spark, path, Seq("cells", "centroids")) { staging =>
+      writeIvfIndex(readCells(spark, path, pq = false)
+        .select(col("corpus_id").as("vec_id"), col("cv").as("embedding")),
+        staging, nCentroids, iters, maxTrainVectors, identity)
+    }
 
   /** [[retrainIvfIndex]] for the COMPOUND index (s21): retrain BOTH
     * quantizer levels over the index's current holdings and re-code —
     * which is, by construction, exactly ONE [[buildIvfPqIndex]] over
     * the RECONSTRUCTED contents (the only vectors a PQ index still
-    * has; geometry from the stored codebooks via [[loadCodebooks]]). That
-    * identity IS the s21 collapse law the oracle states — build over
-    * the decode of the drifted index — and it makes the lossy step
-    * honest: each retrain re-quantizes reconstructions, so quality is
-    * bounded by the codes it started from. A deployment that wants
-    * codes re-trained against ORIGINAL vectors rebuilds from source —
-    * the index cannot recover information it never stored.
+    * has). That identity IS the s21 collapse law the oracle states —
+    * build over the decode of the drifted index — and it makes the
+    * lossy step honest: each retrain re-quantizes reconstructions, so
+    * quality is bounded by the codes it started from. A deployment
+    * that wants codes re-trained against ORIGINAL vectors rebuilds
+    * from source — the index cannot recover information it never
+    * stored.
     *
     * EVERY piece of geometry — subspaces, dims, and the codebook size
     * — comes from the STORED codebooks relation ([[loadCodebooks]]),
     * never from the caller: a retrain cannot silently change the
-    * index's code width any more than it can its dimensionality.
-    *
-    * Staged like the IVF retrain: the new build lands under
-    * `retrain_tmp/` first, then the three layout dirs swap in with a
-    * two-phase rename — every live dir steps ASIDE to `retrain_old/`
-    * before any new dir moves in, so a crash mid-swap never leaves
-    * mixed-generation dirs: the unserveable window is the renames
-    * themselves (the swap is not crash-ATOMIC — rename sequences on a
-    * filesystem never are — but it is crash-RECOVERABLE at every
-    * window, and a fresh retrain SELF-HEALS on entry via
-    * [[recoverRetrainResidue]]: rolled FORWARD from `retrain_tmp/`
-    * once the old generation has fully stepped aside, rolled BACK
-    * from `retrain_old/` otherwise — never a mixed-generation read,
-    * and `retrain_old/` is never deleted while it is the only copy of
-    * a layout dir). The O(corpus) cost is the same scheduled,
-    * rare event the s18/s19 no-retrain append/delete contracts
-    * amortize against. */
+    * index's code width any more than it can its dimensionality. The
+    * O(corpus) cost is the same scheduled, rare event the s18/s19
+    * no-retrain append/delete contracts amortize against. */
   def retrainIvfPqIndex(spark: SparkSession, path: String,
       nCentroids: Int, coarseIters: Int = 3,
-      pqIters: Int = 2, maxTrainVectors: Int = 100000): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      pqIters: Int = 2, maxTrainVectors: Int = 100000): Unit =
+    retrainSwap(spark, path, Seq("cells", "centroids", "codebooks")) {
+      staging =>
+        val (cb, subspaces, subLen, codebook) = loadCodebooks(spark, path)
+        val recon = decodeCodes(readCells(spark, path, pq = true), cb,
+          subspaces)
+          .select(col("corpus_id").as("vec_id"), col("dv").as("embedding"))
+        buildIvfPqIndex(recon, staging, nCentroids, subspaces, codebook,
+          coarseIters, pqIters, subspaces * subLen, maxTrainVectors)
+    }
+
+  /** The ONE retrain swap of both layouts: `build` writes the new
+    * generation's layout `dirs` under `retrain_tmp/`, then they swap in
+    * with a two-phase rename — every live dir steps ASIDE to
+    * `retrain_old/` before any new dir moves in, so a crash mid-swap
+    * never leaves mixed-generation dirs: the unserveable window is the
+    * renames themselves (the swap is not crash-ATOMIC — rename
+    * sequences on a filesystem never are — but it is crash-RECOVERABLE
+    * at every window, and a fresh retrain SELF-HEALS on entry via
+    * [[recoverRetrainResidue]]: rolled FORWARD from `retrain_tmp/` once
+    * the old generation has fully stepped aside, rolled BACK from
+    * `retrain_old/` otherwise — never a mixed-generation read, and
+    * `retrain_old/` is never deleted while it is the only copy of a
+    * layout dir). `build` reads the live index only after the heal. */
+  private def retrainSwap(spark: SparkSession, path: String,
+      dirs: Seq[String])(build: String => Unit): Unit = {
+    val fs = fsOf(spark, path)
     val staging = new Path(path, "retrain_tmp")
     val aside = new Path(path, "retrain_old")
-    recoverRetrainResidue(fs, path, staging, aside,
-      Seq("cells", "centroids", "codebooks"))
+    recoverRetrainResidue(fs, path, staging, aside, dirs)
     fs.delete(staging, true) // residue from a crashed previous attempt
     fs.delete(aside, true)
-    val (cb, subspaces, subLen, codebook) = loadCodebooks(spark, path)
-    val cells = spark.read
-      .schema("corpus_id LONG, codes ARRAY<LONG>, cid LONG")
-      .parquet(path + "/cells")
-    val recon = reconstructCells(cells, cb, subspaces)
-      .select(col("corpus_id").as("vec_id"), col("dv").as("embedding"))
-    buildIvfPqIndex(recon, staging.toString, nCentroids, subspaces,
-      codebook, coarseIters, pqIters, subspaces * subLen, maxTrainVectors)
-    val dirs = Seq("cells", "centroids", "codebooks")
+    build(staging.toString)
     fs.mkdirs(aside)
     // phase 1: the complete old generation steps aside intact
     dirs.foreach(d => fs.rename(new Path(path, d), new Path(aside, d)))
@@ -1113,10 +985,8 @@ object Similarity {
     * by construction. If a missing dir exists in neither source the
     * index is genuinely damaged: fail naming `retrain_old` as the
     * manual restore source instead of deleting it. */
-  private def recoverRetrainResidue(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, staging: org.apache.hadoop.fs.Path,
-      aside: org.apache.hadoop.fs.Path, dirs: Seq[String]): Unit = {
-    import org.apache.hadoop.fs.Path
+  private def recoverRetrainResidue(fs: FileSystem, path: String,
+      staging: Path, aside: Path, dirs: Seq[String]): Unit = {
     val missing = dirs.filterNot(d => fs.exists(new Path(path, d)))
     if (missing.isEmpty) return
     val asideComplete = dirs.forall(d => fs.exists(new Path(aside, d)))
@@ -1153,38 +1023,36 @@ object Similarity {
     * drift≈0 case (a cell whose mean IS its centroid direction, where
     * 1 − dot can land an ulp on either side of zero) to exactly 0. An
     * emptied cell surfaces with n_vecs=0 and a NULL drift_e6 — never
-    * silently dropped. */
+    * silently dropped.
+    *
+    * A PQ index's cells hold codes, so its means are taken over the
+    * NORMALIZED RECONSTRUCTIONS ([[pqDriftStats]], s20) — the only
+    * holdings the index can still see, and exactly what the serve path
+    * scores against. */
   def ivfDriftStats(spark: SparkSession, path: String): DataFrame = {
     val cents = spark.read.parquet(path + "/centroids")
-    val cells = spark.read
-      .schema("corpus_id LONG, cv ARRAY<DOUBLE>, cid LONG")
-      .parquet(path + "/cells")
-    driftStatsOver(cents, cells.select(col("cid"), col("cv").as("nv")))
+    if (isPq(spark, path)) {
+      val (cb, subspaces, _, _) = loadCodebooks(spark, path)
+      pqDriftStats(spark, path, None, cents, cb, subspaces)
+    } else
+      driftStatsOver(cents, readCells(spark, path, pq = false)
+        .select(col("cid"), col("cv").as("nv"), lit(1L).as("cnt")))
   }
 
-  /** The ONE drift tail shared by [[ivfDriftStats]] and
-    * [[ivfPqDriftStats]] — per-cell exact-decimal per-dimension means
-    * of the normalized holdings `vecs (cid, nv)`, displacement vs the
-    * stored centroid on the 10^6 integer grid. One implementation so
-    * the full-vector and compound indexes can never disagree about
-    * what "drift" means (both policy loops compare it to the same kind
-    * of bar). */
-  private def driftStatsOver(cents: DataFrame, vecs: DataFrame)
-      : DataFrame =
-    driftStatsWeighted(cents, vecs.withColumn("cnt", lit(1L)))
-
-  /** [[driftStatsOver]] with a multiplicity column `cnt`: each (cid,
-    * nv) row stands for `cnt` identical holdings. The decimal mean is
-    * BIT-IDENTICAL to summing the row `cnt` times — `cnt` copies of
-    * one decimal sum to exactly value × cnt (decimal arithmetic is
-    * exact within precision, and the widened decimal(38,20) product
-    * cannot overflow: |component| ≤ 1 after normalization, counts fit
-    * in 10 digits), and decimal addition is order-free — so the PQ
-    * path can aggregate DISTINCT code words instead of rows (a PQ
-    * index has at most codebook^subspaces distinct reconstructions;
-    * see [[ivfPqDriftStatsImpl]]) without moving a single bit of the
+  /** The ONE drift tail of both layouts — per-cell exact-decimal
+    * per-dimension means of the normalized holdings `vecs (cid, nv,
+    * cnt)`, displacement vs the stored centroid on the 10^6 integer
+    * grid, so the full-vector and compound indexes can never disagree
+    * about what "drift" means. Each row stands for `cnt` identical
+    * holdings. The decimal mean is BIT-IDENTICAL to summing the row
+    * `cnt` times — `cnt` copies of one decimal sum to exactly value ×
+    * cnt (decimal arithmetic is exact within precision, and the
+    * widened decimal(38,20) product cannot overflow: |component| ≤ 1
+    * after normalization, counts fit in 10 digits), and decimal
+    * addition is order-free — so the PQ path can aggregate DISTINCT
+    * code words instead of rows without moving a single bit of the
     * emitted statistic. */
-  private def driftStatsWeighted(cents: DataFrame, vecs: DataFrame)
+  private def driftStatsOver(cents: DataFrame, vecs: DataFrame)
       : DataFrame = {
     val perDim = vecs
       .select(col("cid"), col("cnt"),
@@ -1208,62 +1076,28 @@ object Similarity {
       .orderBy("cid")
   }
 
-  /** [[ivfDriftStats]] for the COMPOUND index (s20): the cells hold PQ
-    * codes, so the per-cell means are taken over the NORMALIZED
-    * RECONSTRUCTIONS — the only holdings the index can still see (the
-    * raw vectors are gone by design; that lossy residency is the whole
-    * point of PQ). Same emission contract as s15: (cid, n_vecs,
-    * drift_e6 on the 10^6 integer grid), emptied cells surface with
-    * n_vecs=0 and NULL drift. The statistic stays an honest retrain
-    * trigger: reconstructions are what the serve path actually scores
-    * against, so "the coarse quantizer stopped describing the
-    * reconstructions" is exactly the staleness that degrades served
-    * answers. Metadata-priced at scale: the only corpus-sized work is
-    * a map-side-partial count over (cid, codes) — the decode and the
-    * exact-decimal means run over DISTINCT code words (≤
-    * codebook^subspaces rows), weighted by those counts, which is
-    * bit-identical to the per-row aggregation (decimal arithmetic is
-    * exact and order-free; spec-pinned). */
-  def ivfPqDriftStats(spark: SparkSession, path: String): DataFrame =
-    ivfPqDriftStatsImpl(spark, path, None)
-
-  /** [[ivfPqDriftStats]] restricted to `only` cells — the policy's
-    * incremental update path: an append changes ONLY the cells it
-    * lands in (untouched cells' holdings and centroid are both
-    * unchanged, so their drift provably isn't), and the cid-partitioned
-    * cells layout makes the restricted decode a partition-pruned scan
-    * of just those cells. */
-  private def ivfPqDriftStatsImpl(spark: SparkSession, path: String,
-      only: Option[Seq[Long]]): DataFrame = {
-    val (cb, subspaces, _, _) = loadCodebooks(spark, path)
-    ivfPqDriftStatsLoaded(spark, path, only,
-      spark.read.parquet(path + "/centroids"), cb, subspaces)
-  }
-
-  /** [[ivfPqDriftStatsImpl]] against already-loaded centroids/codebooks
-    * (see [[appendToIvfPqIndexLoaded]]'s one-load-per-drain note). */
-  private def ivfPqDriftStatsLoaded(spark: SparkSession, path: String,
-      only: Option[Seq[Long]], cents0: DataFrame, cb: DataFrame,
+  /** The PQ drift statistic against already-loaded centroids/codebooks,
+    * optionally restricted to `only` cells — the policy's incremental
+    * update path: an append changes ONLY the cells it lands in
+    * (untouched cells' holdings and centroid are both unchanged, so
+    * their drift provably isn't), and the cid-partitioned cells layout
+    * makes the restricted decode a partition-pruned scan of just those
+    * cells. Metadata-priced at scale: a PQ cell holds at most
+    * codebook^subspaces DISTINCT reconstructions, so the corpus-sized
+    * pass is ONE count aggregate over (cid, codes) — map-side partial,
+    * a few-thousand-row shuffle — and the decode + normalize runs over
+    * the distinct code words only, never per stored row
+    * ([[driftStatsOver]]'s weighted means are bit-identical to the
+    * per-row aggregation; spec-pinned). */
+  private def pqDriftStats(spark: SparkSession, path: String,
+      only: Option[Seq[Long]], cents: DataFrame, cb: DataFrame,
       subspaces: Int): DataFrame = {
-    val cents = only.map(c => cents0.filter(col("cid").isin(c: _*)))
-      .getOrElse(cents0)
-    val cells0 = spark.read
-      .schema("corpus_id LONG, codes ARRAY<LONG>, cid LONG")
-      .parquet(path + "/cells")
-    val cells = only.map(c => cells0.filter(col("cid").isin(c: _*)))
-      .getOrElse(cells0)
-    // A PQ cell holds at most codebook^subspaces DISTINCT
-    // reconstructions, so the corpus-sized pass is ONE count aggregate
-    // over (cid, codes) — map-side partial, a few-thousand-row shuffle
-    // — and the decode + normalize runs over the distinct code words
-    // only, never per stored row. driftStatsWeighted's decimal means
-    // are bit-identical to the per-row aggregation (exact arithmetic,
-    // order-free; spec-pinned), so the emitted statistic is unchanged.
-    val combos = cells.groupBy(col("cid"), col("codes"))
-      .agg(count(lit(1)).as("cnt"))
-    val nv = decodeCodes(combos, cb, subspaces)
-      .select(col("cid"), normalized(col("dv")).as("nv"), col("cnt"))
-    driftStatsWeighted(cents, nv)
+    def scoped(df: DataFrame) =
+      only.fold(df)(c => df.filter(col("cid").isin(c: _*)))
+    val combos = scoped(readCells(spark, path, pq = true))
+      .groupBy(col("cid"), col("codes")).agg(count(lit(1)).as("cnt"))
+    driftStatsOver(scoped(cents), decodeCodes(combos, cb, subspaces)
+      .select(col("cid"), normalized(col("dv")).as("nv"), col("cnt")))
   }
 
   /** The retrain-trigger scalar: max per-cell [[ivfDriftStats]]
@@ -1271,11 +1105,8 @@ object Similarity {
     * ignored — an emptied cell needs compaction, not retraining; an
     * index with NO populated cells reports 0). One number a serving
     * loop compares against its staleness bar. */
-  def maxDriftE6(spark: SparkSession, path: String): Long =
-    maxE6(ivfDriftStats(spark, path))
-
-  private def maxE6(stats: DataFrame): Long = {
-    val r = stats.agg(max(col("drift_e6"))).head()
+  def maxDriftE6(spark: SparkSession, path: String): Long = {
+    val r = ivfDriftStats(spark, path).agg(max(col("drift_e6"))).head()
     if (r.isNullAt(0)) 0L else r.getLong(0)
   }
 
@@ -1361,23 +1192,18 @@ object Similarity {
       batch: DataFrame, nCentroids: Int, excessAboveE6: Long,
       coarseIters: Int = 3, pqIters: Int = 2,
       maxTrainVectors: Int = 100000): Boolean = {
-    import org.apache.hadoop.fs.Path
     val statePath = path + "/drift_state"
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    ensurePqDriftState(spark, path, fs)
+    ensurePqDriftState(spark, path, fsOf(spark, path))
     // ONE load of the stored quantizers per drain: append, the touched
     // assignment and the restricted drift statistic all run against
     // the same collected codebooks/centroid relations (two codebook
     // collects and a second centroid read per drain otherwise)
     val (cb, subspaces, subLen, _) = loadCodebooks(spark, path)
     val cents = spark.read.parquet(path + "/centroids")
-    appendToIvfPqIndexLoaded(path, batch, cents, cb, subspaces, subLen)
-    val touched = assign(
-      batch.select(col("vec_id"),
-        col("embedding").cast("array<double>").as("v")), cents)
+    appendCodes(path, batch, cents, cb, subspaces, subLen)
+    val touched = assign(vecs(batch), cents)
       .select("cid").distinct().collect().map(_.getLong(0)).toSeq.sorted
-    val fresh = ivfPqDriftStatsLoaded(spark, path, Some(touched),
+    val fresh = pqDriftStats(spark, path, Some(touched),
       cents, cb, subspaces).collect()
       .map(r => r.getLong(0) ->
         (if (r.isNullAt(2)) None else Some(r.getLong(2)))).toMap
@@ -1410,7 +1236,7 @@ object Similarity {
   private def writePqDriftState(spark: SparkSession, path: String,
       statePath: String): Unit =
     writeStateAtomic(spark, statePath,
-      ivfPqDriftStats(spark, path)
+      ivfDriftStats(spark, path)
         .select(col("cid"), col("drift_e6").as("baseline_e6"),
           col("drift_e6")))
 
@@ -1423,18 +1249,17 @@ object Similarity {
     * must not read `statePath` lazily — callers collect it first. */
   private def writeStateAtomic(spark: SparkSession, statePath: String,
       df: DataFrame): Unit = {
-    import org.apache.hadoop.fs.Path
     val dst = new Path(statePath)
     val tmp = new Path(statePath + "__tmp")
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, statePath)
     df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     fs.delete(dst, true)
     fs.rename(tmp, dst)
     ()
   }
 
-  private def driftMarker(path: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(path, "drift_adopted")
+  private def driftMarker(path: String): Path =
+    new Path(path, "drift_adopted")
 
   /** Baseline presence/adoption protocol for the PQ retrain policy.
     * The `drift_adopted` marker (stamped once, at first adoption)
@@ -1449,8 +1274,7 @@ object Similarity {
     * counts as lost (partial = a torn legacy write; the atomic writer
     * never leaves one). */
   private def ensurePqDriftState(spark: SparkSession, path: String,
-      fs: org.apache.hadoop.fs.FileSystem): Unit = {
-    import org.apache.hadoop.fs.Path
+      fs: FileSystem): Unit = {
     val statePath = path + "/drift_state"
     val present = fs.exists(new Path(statePath, "_SUCCESS"))
     val marker = driftMarker(path)
@@ -1483,9 +1307,7 @@ object Similarity {
     * index accumulated before the loss stops being detectable; doing
     * that must be a decision, never a silent side effect of a drain. */
   def readoptPqDriftBaseline(spark: SparkSession, path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, path)
     writePqDriftState(spark, path, path + "/drift_state")
     if (!fs.exists(driftMarker(path))) fs.create(driftMarker(path)).close()
   }
@@ -1765,7 +1587,7 @@ object Similarity {
         p => buildIvfPqIndex(corpusOf(s, dir), p, nCentroids = 10,
           subspaces = 4, codebook = 16, maxTrainVectors = 256)
       }
-      ivfPqTopKServed(s, idx, queriesOf(s, dir), 10, nProbe = 4)
+      ivfTopKServed(s, idx, queriesOf(s, dir), 10, nProbe = 4)
         .orderBy("query_id", "rank")
     }),
     // s18: the s13 frozen-quantizer append applied to BOTH levels of
@@ -1778,10 +1600,10 @@ object Similarity {
           buildIvfPqIndex(all.filter(col("vec_id") % 10 =!= 9), p,
             nCentroids = 10, subspaces = 4, codebook = 16,
             maxTrainVectors = 256)
-          appendToIvfPqIndex(s, p,
+          appendToIvfIndex(s, p,
             all.filter(col("vec_id") % 10 === 9))
       }
-      ivfPqTopKServed(s, idx, queriesOf(s, dir), 10, nProbe = 4)
+      ivfTopKServed(s, idx, queriesOf(s, dir), 10, nProbe = 4)
         .orderBy("query_id", "rank")
     }),
     // s19: the no-retrain erasure on the compound index — build on
@@ -1792,10 +1614,10 @@ object Similarity {
           val all = corpusOf(s, dir)
           buildIvfPqIndex(all, p, nCentroids = 10, subspaces = 4,
             codebook = 16, maxTrainVectors = 256)
-          removeFromIvfPqIndex(s, p,
+          removeFromIvfIndex(s, p,
             all.filter(col("vec_id") % 10 === 7).select("vec_id"))
       }
-      ivfPqTopKServed(s, idx, queriesOf(s, dir), 10, nProbe = 4)
+      ivfTopKServed(s, idx, queriesOf(s, dir), 10, nProbe = 4)
         .orderBy("query_id", "rank")
     }),
     // s20: the staleness statistic over the COMPOUND index — s18's
@@ -1810,10 +1632,10 @@ object Similarity {
           buildIvfPqIndex(all.filter(col("vec_id") % 10 =!= 9), p,
             nCentroids = 10, subspaces = 4, codebook = 16,
             maxTrainVectors = 256)
-          appendToIvfPqIndex(s, p,
+          appendToIvfIndex(s, p,
             all.filter(col("vec_id") % 10 === 9))
       }
-      ivfPqDriftStats(s, idx)
+      ivfDriftStats(s, idx)
     }),
     // s21: the RETRAIN path closing the compound lifecycle — build on
     // the base, append the drifted slice frozen, then retrain BOTH
@@ -1827,12 +1649,12 @@ object Similarity {
           buildIvfPqIndex(all.filter(col("vec_id") % 10 =!= 9), p,
             nCentroids = 10, subspaces = 4, codebook = 16,
             maxTrainVectors = 256)
-          appendToIvfPqIndex(s, p,
+          appendToIvfIndex(s, p,
             all.filter(col("vec_id") % 10 === 9))
           retrainIvfPqIndex(s, p, nCentroids = 10,
             maxTrainVectors = 256)
       }
-      ivfPqTopKServed(s, idx, queriesOf(s, dir), 10, nProbe = 4)
+      ivfTopKServed(s, idx, queriesOf(s, dir), 10, nProbe = 4)
         .orderBy("query_id", "rank")
     }),
     // e27: e23's online maintenance loop on the COMPOUND index — a
@@ -1873,7 +1695,7 @@ object Similarity {
             ()
           }
       }
-      ivfPqTopKServed(s, idx, queriesOf(s, dir), 10, nProbe = 4)
+      ivfTopKServed(s, idx, queriesOf(s, dir), 10, nProbe = 4)
         .orderBy("query_id", "rank")
     }),
     // x44/x45: ANN serving from SQL — graft_ann_topk over the SAME

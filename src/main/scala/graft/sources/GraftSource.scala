@@ -18,7 +18,7 @@ import graft.merge.{Merge, MorTable, TableState}
   *    the base+delta merge.
   *  - `asOf` = commit id: time travel (COW and MOR).
   *  - `sinceCommit` / plus `untilCommit`: incremental pull of rows last
-  *    written in `(since, until]` (versioned tables).
+  *    written in `(since, until]` (COW and MOR).
   *  - `changesAfter` + `changesUntil` + `keys`: CDC post/pre-image rows
   *    between two commits (COW).
   *  - `optimized` = true: MOR base files only (read-optimized view).
@@ -189,16 +189,7 @@ object GraftSource {
       case (Some(ts), _, _) => Merge.readState(spark, st, Some(ts))
       case (None, Some(s0), _) =>
         opt(parameters, "untilCommit").map(_.toLong) match {
-          case Some(s1) =>
-            // Bounded incremental replays base-file history only; on a
-            // MOR table rows whose winning version sits in unmerged
-            // deltas would silently vanish — refuse rather than lie.
-            if (mor) throw new IllegalArgumentException(
-              "untilCommit is not supported on MOR tables: bounded " +
-                "incremental reads replay base commits only and would " +
-                "miss rows in unmerged delta files (compact first, or " +
-                "use sinceCommit)")
-            Merge.readBetween(spark, path, s0, s1)
+          case Some(s1) => Merge.readBetween(spark, path, s0, s1)
           case None => Merge.readSince(spark, st, s0)
         }
       case (None, None, Some(a)) =>
@@ -326,8 +317,12 @@ private[sources] class GraftStreamSource(sqlContext: SQLContext,
 
   override def getBatch(start: Option[V1Offset], end: V1Offset)
       : DataFrame = {
+    // the engine binds a batch to the declared schema BY POSITION, and
+    // a MOR snapshot orders its columns as its merge emits them
     val df = Merge.readBetween(spark, path,
       start.map(value).getOrElse(0L), value(end))
+      .select(schema.fieldNames.map(n =>
+        col(s"`${n.replace("`", "``")}`")): _*)
     org.apache.spark.sql.graftshim.GraftSqlBridge.asStreamingDataFrame(
       spark, df.queryExecution.toRdd, df.schema)
   }

@@ -397,13 +397,13 @@ object GraftTableFunctions {
   val annDriftName = "graft_ann_drift"
 
   /** `SELECT * FROM graft_ann_drift('<index>')` — the index staleness
-    * statistic from SQL ([[graft.similarity.Similarity.ivfDriftStats]]
-    * / [[graft.similarity.Similarity.ivfPqDriftStats]], layout
-    * auto-detected): per stored centroid, the holdings count and the
-    * displacement of the (reconstruction) mean on the 10^6 integer
-    * grid — the number an operator compares to a retrain bar without
-    * leaving the SQL console. Command node: the means aggregate is a
-    * job; the report is |centroids| rows. Shares s15's oracle (x46). */
+    * statistic from SQL ([[graft.similarity.Similarity.ivfDriftStats]],
+    * which reads the layout from the index): per stored centroid, the
+    * holdings count and the displacement of the (reconstruction) mean
+    * on the 10^6 integer grid — the number an operator compares to a
+    * retrain bar without leaving the SQL console. Command node: the
+    * means aggregate is a job; the report is |centroids| rows. Shares
+    * s15's oracle (x46). */
   def annDriftBuilder(exprs: Seq[Expression]): LogicalPlan = {
     val usage = s"$annDriftName(index_path) expects exactly one string " +
       "literal argument"
@@ -411,12 +411,6 @@ object GraftTableFunctions {
       case Seq(p) => GraftAnnDriftCommand(strLit(p, usage))
       case _ => throw new IllegalArgumentException(usage)
     }
-  }
-
-  private[sql] def isPqIndex(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path.stripSuffix("/"),
-      "codebooks")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
   val fsckName = "graft_fsck"
@@ -594,16 +588,10 @@ case class GraftAnnTopKCommand(indexPath: String, queriesPath: String,
       s"graft_ann_topk would materialize k=$k × $nQueries queries = " +
         s"${k.toLong * nQueries} rows on the driver (cap $cap). Serve " +
         "large batches through the DataFrame API " +
-        "(Similarity.ivfTopKServed / ivfPqTopKServed) and write the " +
+        "(Similarity.ivfTopKServed) and write the " +
         s"result out, or raise ${GraftAnnTopKCommand.capConf}")
-    val served =
-      if (GraftTableFunctions.isPqIndex(spark, indexPath))
-        graft.similarity.Similarity.ivfPqTopKServed(spark, indexPath,
-          queries, k, nProbe)
-      else
-        graft.similarity.Similarity.ivfTopKServed(spark, indexPath,
-          queries, k, nProbe)
-    served.orderBy("query_id", "rank").collect().toSeq
+    graft.similarity.Similarity.ivfTopKServed(spark, indexPath, queries,
+      k, nProbe).orderBy("query_id", "rank").collect().toSeq
   }
 }
 
@@ -615,13 +603,9 @@ case class GraftAnnDriftCommand(indexPath: String)
     AttributeReference("cid", LongType, nullable = false)(),
     AttributeReference("n_vecs", LongType, nullable = false)(),
     AttributeReference("drift_e6", LongType, nullable = true)())
-  override def run(spark: SparkSession): Seq[Row] = {
-    val stats =
-      if (GraftTableFunctions.isPqIndex(spark, indexPath))
-        graft.similarity.Similarity.ivfPqDriftStats(spark, indexPath)
-      else graft.similarity.Similarity.ivfDriftStats(spark, indexPath)
-    stats.collect().toSeq
-  }
+  override def run(spark: SparkSession): Seq[Row] =
+    graft.similarity.Similarity.ivfDriftStats(spark, indexPath)
+      .collect().toSeq
 }
 
 /** The incremental-view refresh as a command (see

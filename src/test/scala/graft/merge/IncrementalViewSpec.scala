@@ -107,6 +107,17 @@ class IncrementalViewSpec extends SparkSpec {
     assert(Merge.commits(spark, vw).count() === commitsBefore)
   }
 
+  test("a no-op refresh reads the source head without a Spark job") {
+    val (src, vw) = mkSrc()
+    Merge.upsert(spark, srcBatch(Seq((1L, "a", 10.0, 1L))),
+      src, Seq("k"), "pre", "part")
+    IncrementalView.create(spark, src, vw, Seq("k", "part"),
+      Seq("part", "bucket"), "v", "part")
+    // the two jobs left are the view's own src_ts cursor aggregate
+    val jobs = jobsOf(IncrementalView.refresh(spark, vw))
+    assert(jobs === 2, s"no-op refresh ran $jobs jobs")
+  }
+
   test("the cursor rides the view commit: a done refresh never re-applies") {
     val (src, vw) = mkSrc()
     Merge.upsert(spark, srcBatch(Seq((1L, "a", 10.0, 1L))),

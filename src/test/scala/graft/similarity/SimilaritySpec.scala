@@ -161,7 +161,7 @@ class SimilaritySpec extends SparkSpec {
     assert(pqBytes * 3 < fullBytes,
       s"PQ cells $pqBytes bytes vs full-vector cells $fullBytes — the " +
         "codes layout must be several times narrower even at toy scale")
-    val served = Similarity.ivfPqTopKServed(spark, idx, queries, 10,
+    val served = Similarity.ivfTopKServed(spark, idx, queries, 10,
       nProbe = 4)
     // the serve plan reads only probed cells (s12's pruning contract)
     val plan = served.queryExecution.executedPlan.toString
@@ -171,7 +171,7 @@ class SimilaritySpec extends SparkSpec {
     assert(rows.groupBy(_.getLong(0)).size === 5)
     assert(rows.forall(r => !r.getDouble(3).isNaN))
     // deterministic: a second serve returns identical bits
-    val again = Similarity.ivfPqTopKServed(spark, idx, queries, 10,
+    val again = Similarity.ivfTopKServed(spark, idx, queries, 10,
       nProbe = 4).collect()
     val key = (r: org.apache.spark.sql.Row) =>
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))
@@ -247,22 +247,22 @@ class SimilaritySpec extends SparkSpec {
     Similarity.buildIvfPqIndex(base, one, nCentroids = 10,
       subspaces = 4, codebook = 16, maxTrainVectors = 256)
     val before = cellFiles(one)
-    Similarity.appendToIvfPqIndex(spark, one, batch)
+    Similarity.appendToIvfIndex(spark, one, batch)
     assert(before.subsetOf(cellFiles(one)))
     assert(cellFiles(one).size > before.size)
     val two = tmpDir("graft_s18_two_")
     Similarity.buildIvfPqIndex(base, two, nCentroids = 10,
       subspaces = 4, codebook = 16, maxTrainVectors = 256)
-    Similarity.appendToIvfPqIndex(spark, two,
+    Similarity.appendToIvfIndex(spark, two,
       batch.filter($"vec_id" % 2 === 0))
-    Similarity.appendToIvfPqIndex(spark, two,
+    Similarity.appendToIvfIndex(spark, two,
       batch.filter($"vec_id" % 2 =!= 0))
     val key = (r: org.apache.spark.sql.Row) =>
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))
     assert(
-      Similarity.ivfPqTopKServed(spark, one, queries, 10, nProbe = 4)
+      Similarity.ivfTopKServed(spark, one, queries, 10, nProbe = 4)
         .collect().map(key).sortBy(t => (t._1, t._2)).toSeq ===
-      Similarity.ivfPqTopKServed(spark, two, queries, 10, nProbe = 4)
+      Similarity.ivfTopKServed(spark, two, queries, 10, nProbe = 4)
         .collect().map(key).sortBy(t => (t._1, t._2)).toSeq)
   }
 
@@ -289,7 +289,7 @@ class SimilaritySpec extends SparkSpec {
       .parquet(idx + "/cells")
       .filter($"corpus_id".isin(delIds.toSeq: _*))
       .select("cid").distinct().as[Long].collect().map(c => s"cid=$c").toSet
-    Similarity.removeFromIvfPqIndex(spark, idx, del)
+    Similarity.removeFromIvfIndex(spark, idx, del)
     val after = filesByCell(idx)
     // untouched cells' files are bit-for-bit the same paths
     for ((cell, fs) <- before if !touched.contains(cell))
@@ -300,7 +300,7 @@ class SimilaritySpec extends SparkSpec {
       .parquet(idx + "/cells").select("corpus_id").as[Long].collect().toSet
     assert(stored.intersect(delIds).isEmpty)
     // ...and from serving
-    val served = Similarity.ivfPqTopKServed(spark, idx, queries, 10,
+    val served = Similarity.ivfTopKServed(spark, idx, queries, 10,
       nProbe = 4).select("corpus_id").as[Long].collect().toSet
     assert(served.intersect(delIds).isEmpty)
   }
@@ -330,7 +330,7 @@ class SimilaritySpec extends SparkSpec {
     val idx = tmpDir("graft_s21_spec_")
     Similarity.buildIvfPqIndex(corpus.filter($"vec_id" % 10 =!= 9), idx,
       nCentroids = 10, subspaces = 4, codebook = 16, maxTrainVectors = 256)
-    Similarity.appendToIvfPqIndex(spark, idx,
+    Similarity.appendToIvfIndex(spark, idx,
       corpus.filter($"vec_id" % 10 === 9))
     val idsBefore = spark.read
       .schema("corpus_id LONG, codes ARRAY<LONG>, cid LONG")
@@ -382,7 +382,7 @@ class SimilaritySpec extends SparkSpec {
     val idx = tmpDir("graft_s20_spec_")
     Similarity.buildIvfPqIndex(corpus, idx, nCentroids = 10,
       subspaces = 4, codebook = 16, maxTrainVectors = 256)
-    val stats = Similarity.ivfPqDriftStats(spark, idx).collect()
+    val stats = Similarity.ivfDriftStats(spark, idx).collect()
     assert(stats.map(_.getLong(1)).sum === corpus.count())
     assert(stats.filter(_.getLong(1) > 0)
       .forall(r => !r.isNullAt(2) && r.getLong(2) >= 0L))
@@ -395,8 +395,8 @@ class SimilaritySpec extends SparkSpec {
       .parquet(idx + "/cells").filter($"cid" === victim)
       .select($"corpus_id".as("vec_id"))
       .as[Long].collect().toSeq.toDF("vec_id")
-    Similarity.removeFromIvfPqIndex(spark, idx, victimIds)
-    val emptied = Similarity.ivfPqDriftStats(spark, idx).collect()
+    Similarity.removeFromIvfIndex(spark, idx, victimIds)
+    val emptied = Similarity.ivfDriftStats(spark, idx).collect()
       .find(_.getLong(0) == victim).get
     assert(emptied.getLong(1) === 0L && emptied.isNullAt(2))
     // the drift-excess policy, both directions at the e27 bar (0.15):
@@ -422,12 +422,12 @@ class SimilaritySpec extends SparkSpec {
     val twin = tmpDir("graft_s20_twin_")
     Similarity.buildIvfPqIndex(corpus, twin, nCentroids = 10,
       subspaces = 4, codebook = 16, maxTrainVectors = 256)
-    Similarity.removeFromIvfPqIndex(spark, twin, victimIds)
-    Similarity.appendToIvfPqIndex(spark, twin, calm)
+    Similarity.removeFromIvfIndex(spark, twin, victimIds)
+    Similarity.appendToIvfIndex(spark, twin, calm)
     val queries = corpus.filter($"vec_id" < 15)
-    assert(Similarity.ivfPqTopKServed(spark, idx, queries, 10, 4)
+    assert(Similarity.ivfTopKServed(spark, idx, queries, 10, 4)
       .orderBy("query_id", "rank").collect().toSeq ===
-      Similarity.ivfPqTopKServed(spark, twin, queries, 10, 4)
+      Similarity.ivfTopKServed(spark, twin, queries, 10, 4)
         .orderBy("query_id", "rank").collect().toSeq,
       "a skipped retrain changed served bits")
     // the incrementally-maintained state equals a full recomputation
@@ -435,7 +435,7 @@ class SimilaritySpec extends SparkSpec {
       .select("cid", "drift_e6").collect()
       .map(r => r.getLong(0) ->
         (if (r.isNullAt(1)) -1L else r.getLong(1))).toMap
-    val full = Similarity.ivfPqDriftStats(spark, idx).collect()
+    val full = Similarity.ivfDriftStats(spark, idx).collect()
       .map(r => r.getLong(0) ->
         (if (r.isNullAt(2)) -1L else r.getLong(2))).toMap
     assert(state === full,
@@ -455,7 +455,7 @@ class SimilaritySpec extends SparkSpec {
       .select(($"vec_id" + 3000000000L).as("vec_id"),
         slice($"embedding", 1, 32).as("embedding"))
     val e = intercept[Exception] {
-      Similarity.appendToIvfPqIndex(spark, idx, skinny)
+      Similarity.appendToIvfIndex(spark, idx, skinny)
     }
     def msgs(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
@@ -902,7 +902,7 @@ class SimilaritySpec extends SparkSpec {
     Similarity.buildIvfPqIndex(corpus, idx, nCentroids = 10,
       subspaces = 4, codebook = 16, maxTrainVectors = 256)
     // force duplicate code words: append the same vectors under new ids
-    Similarity.appendToIvfPqIndex(spark, idx,
+    Similarity.appendToIvfIndex(spark, idx,
       corpus.select(($"vec_id" + 4000000000L).as("vec_id"), $"embedding"))
     val cells = spark.read
       .schema("corpus_id LONG, codes ARRAY<LONG>, cid LONG")
@@ -934,7 +934,7 @@ class SimilaritySpec extends SparkSpec {
         when($"mv".isNotNull, floor(drift * lit(1000000.0)))
           .cast("long").as("drift_e6"))
       .orderBy("cid")
-    val got = Similarity.ivfPqDriftStats(spark, idx)
+    val got = Similarity.ivfDriftStats(spark, idx)
       .collect().map(_.toSeq).toSeq
     assert(got === ref.collect().map(_.toSeq).toSeq)
     assert(got.nonEmpty && got.exists(r =>
@@ -952,7 +952,7 @@ class SimilaritySpec extends SparkSpec {
       p
     }
     def served(p: String) =
-      Similarity.ivfPqTopKServed(spark, p, queries, 10, 4)
+      Similarity.ivfTopKServed(spark, p, queries, 10, 4)
         .orderBy("query_id", "rank").collect().toSeq
     // the deterministic reference: retrain of an intact twin
     val intact = fresh("graft_r14_swap_ref_")

@@ -159,7 +159,7 @@ class GraftSourceSpec extends SparkSpec {
     // commit 1 creates the base; commit 2 lands in UNMERGED delta files
     val c1 = MorTable.upsert(spark, b1, t, keys, "l_extendedprice",
       Seq("l_returnflag"))
-    MorTable.upsert(spark, b2, t, keys, "l_extendedprice",
+    val c2 = MorTable.upsert(spark, b2, t, keys, "l_extendedprice",
       Seq("l_returnflag"))
     // sinceCommit must surface the delta-resident commit-2 rows — the
     // COW reader (base files only) would return zero here
@@ -169,12 +169,14 @@ class GraftSourceSpec extends SparkSpec {
       Seq("l_orderkey", "l_linenumber", "l_returnflag"), "l_extendedprice")
     assert(incr.count() === dedup2.count())
     assert(incr.filter(col("l_quantity") <= 100).isEmpty)
-    // bounded incremental and CDC have no delta-aware reader: refuse
-    // loudly rather than return silently incomplete rows
-    intercept[IllegalArgumentException] {
-      spark.read.format("graft").option("sinceCommit", c1.toString)
-        .option("untilCommit", (c1 + 1).toString).load(t)
-    }
+    // a bounded incremental read merges the deltas too
+    val bounded = spark.read.format("graft")
+      .option("sinceCommit", c1.toString)
+      .option("untilCommit", c2.toString).load(t)
+    assert(bounded.count() === dedup2.count())
+    assert(bounded.filter(col("l_quantity") <= 100).isEmpty)
+    // CDC has no delta-aware reader: refuse loudly rather than return
+    // silently incomplete rows
     intercept[IllegalArgumentException] {
       spark.read.format("graft").option("changesAfter", c1.toString)
         .option("changesUntil", (c1 + 1).toString)
@@ -328,6 +330,35 @@ class GraftSourceSpec extends SparkSpec {
       new GraftStreamSource(spark.sqlContext, plain).schema
     }
     assert(err.getMessage.contains("versioned"), err.getMessage)
+  }
+
+  test("readStream.format(graft) on MOR: a drain delivers the live " +
+      "delta commit's rows, exactly MorTable.read") {
+    import graft.merge.MorTable
+    import spark.implicits._
+    val path = tmpDir("graft_srcstream_mor_")
+    val ckpt = tmpDir("graft_srcstream_mor_ckpt_")
+    val out = tmpDir("graft_srcstream_mor_out_")
+    def batch(rows: (Long, Double, Long, String)*) =
+      rows.toDF("okey", "price", "pre", "part")
+    // commit 1 creates the base; commit 2 lands in an UNMERGED delta
+    MorTable.upsert(spark, batch((1L, 10.0, 1L, "A"), (2L, 20.0, 2L, "A")),
+      path, Seq("okey"), "pre", Seq("part"))
+    MorTable.upsert(spark, batch((2L, 21.0, 5L, "A"), (3L, 30.0, 3L, "B")),
+      path, Seq("okey"), "pre", Seq("part"))
+    spark.readStream.format("graft").load(path)
+      .writeStream
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .option("checkpointLocation", ckpt)
+      .foreachBatch { (b: DataFrame, bid: Long) =>
+        b.write.mode(SaveMode.Overwrite).parquet(s"$out/b=$bid")
+      }
+      .start().awaitTermination()
+    def rows(df: DataFrame) = df.select("okey", "price", "pre", "part")
+      .as[(Long, Double, Long, String)].collect().toSeq.sorted
+    val state = rows(MorTable.read(spark, path))
+    assert(state.size === 3)
+    assert(rows(spark.read.parquet(out)) === state)
   }
 
   test("graft-to-graft replication: replica tracks source state " +

@@ -900,11 +900,11 @@ class GraftSqlSpec extends SparkSpec {
       .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq)
     // the SAME function serves the compound layout (auto-detected)
     assert(viaSql(pq) === graft.similarity.Similarity
-      .ivfPqTopKServed(spark, pq, queries, 10, 4)
+      .ivfTopKServed(spark, pq, queries, 10, 4)
       .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq)
     assert(spark.sql(s"SELECT * FROM graft_ann_drift('$pq')")
       .collect().map(_.toSeq).toSeq ===
-      graft.similarity.Similarity.ivfPqDriftStats(spark, pq)
+      graft.similarity.Similarity.ivfDriftStats(spark, pq)
         .collect().map(_.toSeq).toSeq)
     // command nodes: EXPLAIN must not run the probe/means jobs
     val jobs = jobsOf {
