@@ -71,15 +71,19 @@ object StatsPruning {
     * the distributed path at toy scale. */
   @volatile var distributeFooterReadsAbove: Int = 2048
 
-  /** The ONE footer sweep: `per` over every file, as a driver loop at
-    * or below [[distributeFooterReadsAbove]] files, one Spark map job
-    * above it. The job ships the conf as plain entries (Configuration
-    * itself is not serializable; rebuilding it per partition is
-    * metadata-cheap). Results come back in file order. */
+  /** The ONE footer sweep: `per` over every file, folded in file order
+    * from `zero` by `combine`, as a driver loop at or below
+    * [[distributeFooterReadsAbove]] files, one Spark map job above it.
+    * The job folds on the executors, so the driver receives one value
+    * per partition, never one per file; it ships the conf as plain
+    * entries (Configuration itself is not serializable; rebuilding it
+    * per partition is metadata-cheap). */
   private def footerSweep[T: scala.reflect.ClassTag](spark: SparkSession,
-      files: Seq[String])(per: (Configuration, String) => T): Seq[T] = {
+      files: Seq[String], zero: T)(per: (Configuration, String) => T)(
+      combine: (T, T) => T): T = {
     val conf = spark.sparkContext.hadoopConfiguration
-    if (files.size <= distributeFooterReadsAbove) files.map(per(conf, _))
+    if (files.size <= distributeFooterReadsAbove)
+      files.foldLeft(zero)((acc, f) => combine(acc, per(conf, f)))
     else {
       import scala.jdk.CollectionConverters._
       val entries = conf.iterator().asScala
@@ -91,8 +95,8 @@ object StatsPruning {
         .mapPartitions { fs =>
           val c = new Configuration(false)
           bc.value.foreach { case (k, v) => c.set(k, v) }
-          fs.map(per(c, _))
-        }.collect().toSeq
+          Iterator(fs.foldLeft(zero)((acc, f) => combine(acc, per(c, f))))
+        }.collect().foldLeft(zero)(combine)
     }
   }
 
@@ -239,10 +243,10 @@ object StatsPruning {
     val fs = Merge.fsFor(spark, path)
     val root = fs.makeQualified(new Path(path))
     val all = Merge.listDataStatuses(fs, root).map(_.getPath.toString)
-    val total = footerSweep(spark, all) { (c, f) =>
+    val total = footerSweep(spark, all, 0L) { (c, f) =>
       val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), c))
       try r.getRecordCount finally r.close()
-    }.sum
+    }(_ + _)
     (total, all.size.toLong)
   }
 
@@ -258,9 +262,9 @@ object StatsPruning {
     val fs = Merge.fsFor(spark, path)
     val root = fs.makeQualified(new Path(path))
     val all = Merge.listDataStatuses(fs, root).map(_.getPath.toString)
-    val kept = footerSweep(spark, all) { (c, f) =>
-      Option.unless(provablyEmpty(c, f, column, loB, hiB))(f)
-    }.flatten
+    val kept = footerSweep(spark, all, Vector.empty[String]) { (c, f) =>
+      if (provablyEmpty(c, f, column, loB, hiB)) Vector.empty else Vector(f)
+    }(_ ++ _)
     (kept, all.size)
   }
 
@@ -447,9 +451,7 @@ object StatsPruning {
         }.toMap)
       val zero: (Long, Map[String, ColAcc]) =
         (0L, dataCols.map(_ -> ColAcc(0L, None, None, exact = true)).toMap)
-      if (all.isEmpty) zero
-      else footerSweep(spark, all)(fileColumnStats(_, _, dataCols))
-        .foldLeft(zero)(combine)
+      footerSweep(spark, all, zero)(fileColumnStats(_, _, dataCols))(combine)
     }
     // partition values from the directory segments of the live files.
     // Plain string prefix-stripping, NOT java.net.URI: both `all` and
@@ -475,8 +477,8 @@ object StatsPruning {
       val nullFiles = fileSegs.collect {
         case (f, segs) if segs.contains((c, null)) => f
       }
-      c -> footerSweep(spark, nullFiles)((cf, f) =>
-        fileColumnStats(cf, f, Nil)._1).sum
+      c -> footerSweep(spark, nullFiles, 0L)((cf, f) =>
+        fileColumnStats(cf, f, Nil)._1)(_ + _)
     }.toMap
     cols.map { c =>
       if (partCols.contains(c)) {

@@ -254,21 +254,23 @@ object Similarity {
     * driver's hash compare covers every coordinate. */
   def randomProjection(df: DataFrame, outDims: Int, dims: Int = 64,
       seed0: Int = 1000): DataFrame =
-    randomProjectionVectors(df, outDims, dims, seed0)
-      .select(col("vec_id"),
-        posexplode(col("embedding")).as(Seq("dim", "value")))
+    vecs(df).select(col("vec_id"),
+        posexplode(projected(outDims, dims, seed0)).as(Seq("dim", "value")))
       .select(col("vec_id"), col("dim").cast("long").as("dim"),
         col("value"))
 
   /** The projected corpus re-shaped as an embedding table (for feeding
     * projected vectors back through the ANN operators). */
   def randomProjectionVectors(df: DataFrame, outDims: Int,
-      dims: Int = 64, seed0: Int = 1000): DataFrame = {
-    val proj = array((0 until outDims).map { j =>
+      dims: Int = 64, seed0: Int = 1000): DataFrame =
+    vecs(df).select(col("vec_id"),
+      projected(outDims, dims, seed0).as("embedding"))
+
+  /** `v` projected onto `outDims` md5-seeded planes. */
+  private def projected(outDims: Int, dims: Int, seed0: Int): Column =
+    array((0 until outDims).map { j =>
       dot(col("v"), typedLit(plane(seed0 + j, dims)))
     }: _*)
-    vecs(df).select(col("vec_id"), proj.as("embedding"))
-  }
 
   /** Corpus bucketed by LSH signature (single table). */
   def lshBuckets(corpus: DataFrame, bits: Int): DataFrame =
@@ -667,13 +669,20 @@ object Similarity {
   private def fsOf(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** The layout a persisted index records: PQ codes when
-    * `<path>/codebooks` exists (the dir [[loadCodebooks]] reads the
+  /** The layout a persisted index records: PQ codes when a
+    * `codebooks` dir exists (the dir [[loadCodebooks]] reads the
     * geometry from), normalized vectors otherwise. Every lifecycle
     * step that serves both layouts reads it here, so no caller can
-    * pick the wrong one. */
-  private def isPq(spark: SparkSession, path: String): Boolean =
-    fsOf(spark, path).exists(new Path(path.stripSuffix("/"), "codebooks"))
+    * pick the wrong one. A crashed or running [[retrainSwap]] may hold
+    * the codebooks in `retrain_tmp/` or `retrain_old/` while PQ cells
+    * are live; they count too, so such an index reads as PQ and its
+    * serve, append and drift fail in [[loadCodebooks]] instead of
+    * reading codes as vectors (or appending vectors to codes). */
+  private def isPq(spark: SparkSession, path: String): Boolean = {
+    val fs = fsOf(spark, path)
+    Seq("", "retrain_tmp/", "retrain_old/").exists(d =>
+      fs.exists(new Path(path.stripSuffix("/") + "/" + d + "codebooks")))
+  }
 
   /** The cid-partitioned cells of either layout. The explicit schema
     * pins the hive partition column back to LONG (dir inference would

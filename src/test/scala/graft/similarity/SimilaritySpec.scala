@@ -1000,6 +1000,40 @@ class SimilaritySpec extends SparkSpec {
     assert(e.getMessage.contains("retrain_old"))
   }
 
+  test("a PQ index left mid-swap with its codebooks still staged is " +
+      "refused by serve, append and drift; append writes nothing") {
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = tmpDir("graft_r14_swap_staged_cb_")
+    Similarity.buildIvfPqIndex(corpus, p, nCentroids = 10,
+      subspaces = 4, codebook = 16, maxTrainVectors = 256)
+    // phase 2 interrupted after cells and centroids moved in: the live
+    // dirs hold PQ codes while `codebooks` exists only under retrain_tmp
+    val fs = new Path(p).getFileSystem(conf)
+    fs.mkdirs(new Path(p, "retrain_tmp"))
+    fs.mkdirs(new Path(p, "retrain_old"))
+    Seq("cells", "centroids", "codebooks").foreach { d =>
+      FileUtil.copy(fs, new Path(p, d),
+        fs, new Path(p + "/retrain_tmp/" + d), false, conf)
+      fs.rename(new Path(p, d), new Path(p + "/retrain_old/" + d))
+    }
+    Seq("cells", "centroids").foreach(d =>
+      fs.rename(new Path(p + "/retrain_tmp/" + d), new Path(p, d)))
+    def cellFiles = FileUtil.listFiles(new java.io.File(p, "cells"))
+      .flatMap(d => Option(d.list()).toSeq.flatten.map(d.getName + "/" + _))
+      .toSet
+    val before = cellFiles
+    def refused(what: String)(f: => Any): Unit = {
+      val e = intercept[Exception](f)
+      assert(e.getMessage.contains("codebooks"), s"$what: ${e.getMessage}")
+    }
+    refused("serve")(
+      Similarity.ivfTopKServed(spark, p, queries, 10, 4).collect())
+    refused("append")(Similarity.appendToIvfIndex(spark, p, corpus.limit(8)))
+    refused("drift")(Similarity.ivfDriftStats(spark, p).collect())
+    assert(cellFiles === before, "a refused append wrote into the cells")
+  }
+
   test("retrainIvfIndex: the two-phase swap self-heals a phase-1 " +
       "crash window (no mixed-generation read)") {
     import org.apache.hadoop.fs.Path
