@@ -2,7 +2,9 @@ package graft
 
 import scala.collection.mutable
 import org.apache.spark.SparkContext
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
@@ -12,7 +14,10 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   * listener that splits each key's wall time into Spark-job count,
   * summed task time, shuffle bytes and driver-side gap — the number
   * that tells a driver-bound pipeline (many tiny sequential jobs,
-  * metadata ops) apart from an executor-bound one (few fat stages).
+  * metadata ops) apart from an executor-bound one (few fat stages) —
+  * and into the classes Janino compiled for it and their compile time
+  * (JVM-wide counters, so a key that reuses cached generated code
+  * shows 0).
   *
   * Never run by the round driver; purely a diagnosis tool, so it may
   * hard-code local conveniences the bench must not. */
@@ -92,6 +97,12 @@ object Profile {
       .asScala.map(_.getCollectionTime).sum
   }
 
+  /** Classes Janino compiled in this JVM so far, and their compile
+    * nanos (driver == executors in local mode). */
+  private def codegen: (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      CodeGenerator.compileTime)
+
   def main(args: Array[String]): Unit = {
     val keys = args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
@@ -105,30 +116,38 @@ object Profile {
       println(s"[conf] $k = ${spark.conf.getOption(k).getOrElse("<unset>")}"))
     val registry = SparkEntry.queries
     // warmup pass at smoke scale, same as the builder bench regime
+    val (wcg0, wcgNs0) = codegen
     keys.foreach { k =>
       try registry(k)(spark, "/root/testdata/sf0.001")
         .write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => () }
     }
+    val (wcg1, wcgNs1) = codegen
+    println(f"[codegen] warmup compiled ${wcg1 - wcg0} classes in " +
+      f"${(wcgNs1 - wcgNs0) / 1e9}%.2f s")
     println(f"${"key"}%-28s ${"wall_s"}%8s ${"jobs"}%5s ${"stages"}%6s " +
       f"${"tasks"}%6s ${"taskT_s"}%8s ${"jobT_s"}%7s ${"gap_s"}%7s " +
-      f"${"gc_s"}%6s ${"shufW_MB"}%9s ${"shufR_MB"}%9s ${"in_MB"}%8s")
+      f"${"gc_s"}%6s ${"cg_n"}%5s ${"cg_s"}%6s " +
+      f"${"shufW_MB"}%9s ${"shufR_MB"}%9s ${"in_MB"}%8s")
     keys.foreach { k =>
       val acc = new Acc
       spark.sparkContext.addSparkListener(acc)
       spark.sparkContext.setJobDescription(s"profile:$k")
       val gc0 = gcMs
+      val (cg0, cgNs0) = codegen
       val t0 = System.nanoTime()
       registry(k)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
       val gc = (gcMs - gc0) / 1e3
+      val (cg1, cgNs1) = codegen
       drainListenerBus(spark.sparkContext)
       spark.sparkContext.removeSparkListener(acc)
       val gap = wall - acc.jobTimeMs / 1e3
       println(f"$k%-28s $wall%8.2f ${acc.jobs}%5d ${acc.stages}%6d " +
         f"${acc.tasks}%6d ${acc.taskTimeMs / 1e3}%8.2f " +
         f"${acc.jobTimeMs / 1e3}%7.2f $gap%7.2f $gc%6.2f " +
+        f"${cg1 - cg0}%5d ${(cgNs1 - cgNs0) / 1e9}%6.2f " +
         f"${acc.shufWrite / 1e6}%9.1f ${acc.shufRead / 1e6}%9.1f " +
         f"${acc.inputBytes / 1e6}%8.1f")
       acc.stageAgg.toSeq.sortBy(-_._2._3).take(8).foreach {

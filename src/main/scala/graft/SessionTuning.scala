@@ -58,7 +58,29 @@ object SessionTuning {
       "FileSystemBasedCheckpointFileManager"
 
   /** Every setting that changes results or plans, as [[tuned]] applies
-    * them. */
+    * them, and the two that let generated code compile once per JVM:
+    *
+    *  - `spark.sql.artifact.isolation.enabled=false`: with isolation on,
+    *    each session runs its tasks under its own class loader, and a
+    *    streaming query clones its session (a new one per
+    *    `runAvailableNow` drain), so every drain recompiled the classes
+    *    the last drain compiled (14 per one-row `StreamLoader` drain).
+    *    Isolation separates the jars and files sessions add
+    *    (`addArtifact`, Spark Connect); the engine adds none, so every
+    *    session shares the one class loader the classpath gives.
+    *  - `spark.sql.codegen.cache.maxEntries`: how many generated classes
+    *    Spark keeps compiled per JVM (stock 100). A cached class costs
+    *    about 20 KB of heap. The 42 read-only analytics keys
+    *    (`Relational`, `Markets`, `Behavior` minus the table writers)
+    *    need 504 distinct classes at sf0.001 (`graft.Profile`'s warm-up
+    *    count) and about 650 in perfbench's `lake_analytics` round; at
+    *    the stock 100 that round recompiled 614–646 classes, about a
+    *    quarter of its time. The cache is a Guava cache of four
+    *    segments, each evicting at a quarter of the total, so the size
+    *    leaves headroom over the working set: at 1000 a second pass
+    *    over the 42 keys recompiled 8 classes, all of them
+    *    q53_retention's.
+    */
   private[graft] val settings: Seq[(String, String)] = Seq(
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
     "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64m",
@@ -70,7 +92,9 @@ object SessionTuning {
     "spark.sql.extensions" -> "graft.GraftExtensions",
     // no-op on current MICROS-annotated testdata; lets the LongType
     // branch of Tables.events engage if NANOS-annotated data comes back
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    "spark.sql.codegen.cache.maxEntries" -> "1000")
   // deliberately NOT set: spark.sql.streaming.checkpoint.fileChecksum
   // .enabled stays at its stock default (true) — disabling it buys a
   // further ~25% on the stateful-join drains (e10 8.2→6.2 s measured)

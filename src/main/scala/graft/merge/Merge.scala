@@ -8,7 +8,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast,
-  Expression, Literal, Predicate, UnsafeProjection, UnsafeRow}
+  Expression, LeafExpression, Literal, Predicate, UnsafeProjection,
+  UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
   ExprCode, FalseLiteral, GenerateUnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
@@ -17,7 +18,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.GraftSqlBridge
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{DataType, StringType, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StringType,
+  StructType}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.Platform
 
@@ -147,6 +149,25 @@ object Merge {
     override def sql: String = toString
     override protected def withNewChildrenInternal(
         c: IndexedSeq[Expression]): KeyIn = copy(children = c)
+  }
+
+  /** Commit id `cts` as the `_commit_ts` value: generated code reads it
+    * from the class's references, so its source is the same for every
+    * commit and compiles once per JVM (a `lit(cts)` is inlined as a
+    * Java constant: two more classes to compile per commit). Not
+    * foldable, so `ConstantFolding` cannot turn it back into a
+    * [[Literal]]. Filters on `_commit_ts` keep their literals: Parquet
+    * pushdown needs them. */
+  private final case class CommitStamp(cts: Long) extends LeafExpression {
+    override def nullable: Boolean = false
+    override def dataType: DataType = LongType
+    override def eval(input: InternalRow): Any = cts
+    override protected def doGenCode(ctx: CodegenContext,
+        ev: ExprCode): ExprCode = {
+      val ref = ctx.addReferenceObj("cts", java.lang.Long.valueOf(cts))
+      ev.copy(code = code"long ${ev.value} = $ref.longValue();",
+        isNull = FalseLiteral)
+    }
   }
 
   /** The key rows [[KeyIn]] broadcasts, packed into one array (each row
@@ -757,8 +778,8 @@ object Merge {
 
   /** `batch` stamped with commit `cts` — the `_commit_ts` every row a
     * commit writes carries (a stamp the batch already has is replaced). */
-  private def stamp(batch: DataFrame, cts: Long): DataFrame =
-    batch.withColumn(commitCol, lit(cts))
+  private[merge] def stamp(batch: DataFrame, cts: Long): DataFrame =
+    batch.withColumn(commitCol, GraftSqlBridge.column(CommitStamp(cts)))
 
   /** A commit that supersedes nothing (insert, bulkInsert, a keyed
     * write's first write): stage the stamped `rows(cts)`, record their

@@ -211,7 +211,7 @@ object MorTable {
     val scoped = keyCols ++ partitionCols
     val deduped = Merge.precombineDedup(batch, scoped, precombine)
     Merge.versioned(spark, path) { cts =>
-      val stamped = deduped.withColumn(Merge.commitCol, lit(cts))
+      val stamped = Merge.stamp(deduped, cts)
       // widen the recorded schema BEFORE aligning, so a new column in
       // this batch survives the alignment and old rows null-fill
       val target = columns(recorded(
@@ -254,7 +254,7 @@ object MorTable {
           scoped, sp.precombine)
       else keys.select(scoped.map(col): _*).distinct()
     Merge.versioned(spark, path) { cts =>
-      val body = Merge.alignTo(k.withColumn(Merge.commitCol, lit(cts)),
+      val body = Merge.alignTo(Merge.stamp(k, cts),
         columns(recorded(st))).withColumn(deletedCol, lit(true))
       publishDeltas(spark, path, body, sp, cts, k.schema)
     }

@@ -10,7 +10,9 @@ class SessionTuningSpec extends SparkSpec {
       "spark.sql.streaming.checkpointFileManagerClass",
       "spark.sql.session.timeZone",
       "spark.sql.extensions",
-      "spark.sql.legacy.parquet.nanosAsLong"))
+      "spark.sql.legacy.parquet.nanosAsLong",
+      "spark.sql.artifact.isolation.enabled",
+      "spark.sql.codegen.cache.maxEntries"))
     SessionTuning.settings.foreach { case (k, v) =>
       assert(spark.conf.get(k) === v, k)
     }

@@ -18,6 +18,27 @@ class SimilaritySpec extends SparkSpec {
     df.select("query_id", "corpus_id").as[(Long, Long)].collect()
       .groupBy(_._1).map { case (q, ns) => q -> ns.map(_._2).toSet }
 
+  /** A served top-10 checked against a reference, not against a second
+    * index made the same way (a layout misread both share would pass):
+    * every served score is a finite number, and recall@10 against the
+    * exact top-10 over `holdings` (the index's holdings, or a part of
+    * them serving must reach) stays above `floor`. */
+  private def assertServesHoldings(served: org.apache.spark.sql.DataFrame,
+      holdings: org.apache.spark.sql.DataFrame, floor: Double): Unit = {
+    val rows = served.collect()
+    assert(rows.nonEmpty)
+    rows.foreach(r => assert(!r.isNullAt(3) &&
+      java.lang.Double.isFinite(r.getDouble(3)), s"served score in $r"))
+    val got = rows.groupBy(_.getLong(0))
+      .map { case (q, rs) => q -> rs.map(_.getLong(2)).toSet }
+    val exact = neighborSets(Similarity.bruteTopK(holdings, queries, 10))
+    val recall = exact.keys.toSeq.map { q =>
+      (got.getOrElse(q, Set.empty) & exact(q)).size.toDouble / 10
+    }.sum / exact.size
+    info(s"recall@10=$recall")
+    assert(recall > floor, s"recall@10=$recall")
+  }
+
   test("bruteTopK: k rows per query, ranks contiguous, sims descending") {
     val top = Similarity.bruteTopK(corpus, queries, 10)
     val byQ = top.collect().groupBy(_.getLong(0))
@@ -264,6 +285,12 @@ class SimilaritySpec extends SparkSpec {
         .collect().map(key).sortBy(t => (t._1, t._2)).toSeq ===
       Similarity.ivfTopKServed(spark, two, queries, 10, nProbe = 4)
         .collect().map(key).sortBy(t => (t._1, t._2)).toSeq)
+    // against all holdings, and against the pre-append ones alone: a
+    // serve that ranks only the appended rows (base cells misread as
+    // null vectors rank last) reaches none of the latter
+    val served = Similarity.ivfTopKServed(spark, one, queries, 10, nProbe = 4)
+    assertServesHoldings(served, corpus, floor = 0.1)
+    assertServesHoldings(served, base, floor = 0.05)
   }
 
   test("removeFromIvfPqIndex: only touched cells rewritten; deleted " +
@@ -301,8 +328,11 @@ class SimilaritySpec extends SparkSpec {
     assert(stored.intersect(delIds).isEmpty)
     // ...and from serving
     val served = Similarity.ivfTopKServed(spark, idx, queries, 10,
-      nProbe = 4).select("corpus_id").as[Long].collect().toSet
-    assert(served.intersect(delIds).isEmpty)
+      nProbe = 4)
+    assert(served.select("corpus_id").as[Long].collect().toSet
+      .intersect(delIds).isEmpty)
+    assertServesHoldings(served, corpus.filter($"vec_id" % 10 =!= 7),
+      floor = 0.1)
   }
 
   /** The spec's own decode of a compound index's holdings — the same
